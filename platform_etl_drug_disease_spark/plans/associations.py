@@ -1,5 +1,5 @@
 """Association scoring (reference parity with Builder.makeAssociations,
-sim.sc:292-338, and the evidence-score pivot, sim.sc:431-437).
+sim.sc:292-338, and the per-datasource evidence scores, sim.sc:431-437).
 
 Per group (parameterized grouping columns, like the reference's only
 parameterized operator): evidence count, top-100 descending score list per
@@ -20,15 +20,20 @@ EVIDENCE_DATASOURCES = ["europepmc", "genetics"]
 
 
 def pivot_evidence_scores(evs: DataFrame) -> DataFrame:
-    """evs_id → wide per-datasource score matrix, missing → 0.0
-    (sim.sc:433-437). Explicit pivot values: the reference's value-less pivot
-    triggers a full distinct-scan pre-job — wrong at 100 TB."""
-    return (
-        evs.select("evs_id", "datasource", "score")
-        .groupBy("evs_id")
-        .pivot("datasource", EVIDENCE_DATASOURCES)
-        .agg(F.first("score"))
-        .na.fill(0.0, subset=EVIDENCE_DATASOURCES)
+    """Each evidence row with one score column per datasource in
+    ``EVIDENCE_DATASOURCES``: its own score under its own datasource, 0.0
+    under every other (sim.sc:433-437).
+
+    A per-row projection, not the reference's pivot by ``evs_id`` joined
+    back onto the evidence: with unique ids the two are the same, and the
+    projection needs no shuffle. Under duplicate ids they differ. The pivot
+    gave every row of an id the score of an arbitrary one of them
+    (``first``); here every row keeps its own. A null score becomes 0.0 and
+    a row without an ``evs_id`` is dropped, as in the pivot and its join.
+    """
+    score = F.coalesce(F.col("score"), F.lit(0.0))
+    return evs.where(F.col("evs_id").isNotNull()).withColumns(
+        {d: F.when(F.col("datasource") == d, score).otherwise(0.0) for d in EVIDENCE_DATASOURCES}
     )
 
 
@@ -36,7 +41,7 @@ def make_associations(evidences: DataFrame, group_cols: list[Column]) -> DataFra
     """Grouped association scores (sim.sc:293-337).
 
     ``evidences`` must carry ``evs_id``, ``genetics``, ``europepmc`` columns
-    (the pivoted form). Note the score lists keep the zeros the pivot
+    (see :func:`pivot_evidence_scores`). Note the score lists keep the zeros
     introduced for the *other* datasource's evidence rows — they sort last
     and contribute nothing to the harmonic, preserving reference semantics
     exactly.
@@ -56,11 +61,9 @@ def make_associations(evidences: DataFrame, group_cols: list[Column]) -> DataFra
         ),
         asc=False,
     )
-    # the two independent per-datasource harmonics land in ONE withColumns
-    # (round-11 driver-side op-count cut — one analysis pass instead of two;
-    # same collapsed Project in the optimized plan); the blended harmonic
-    # references both, so it stays a second projection layer exactly as the
-    # optimizer kept it before.
+    # the two independent per-datasource harmonics share one withColumns (one
+    # analysis pass); the blended harmonic reads both, so it is a second
+    # projection.
     return grouped.withColumns(
         {
             "harmonic_genetics": harmonic_sum("genetics_score_list"),

@@ -2,17 +2,23 @@
 sim.sc:341-516, main).
 
 Dataflow: 11 shaped inputs → tissue-filtered interaction network →
-evidence union + per-datasource score pivot → propagation over
+evidence union + per-datasource score columns → propagation over
 neighbours∪self → grouped harmonic association scoring → enrichment joins
 (targets+drugs-by-mechanism+AEs, diseases+drugs-by-disease+aggregations) →
 repurposing hypotheses (``array_except``: drugs known for the target minus
 drugs already used for the disease) → AE-profile overlap scoring →
 two outputs: ``associations`` (parquet) and ``drug_disease`` (JSON).
 
-Scale-deliberate differences from the reference (semantics identical):
-- ``persist()`` at every multi-consumer node — the reference recomputes the
-  entire association lineage for its second output (SURVEY.md C2);
-- explicit pivot values (no distinct pre-scan);
+Scale-deliberate differences from the reference (semantics identical but
+for duplicate evidence ids, see :func:`pivot_evidence_scores`):
+- ``persist()`` only at the nodes with more than one consumer:
+  ``aes_by_drug`` (the drugs-by-disease rollup and the second output),
+  ``df_t`` (propagation and the enrichment join), ``associations`` (both
+  outputs; the reference recomputes its whole lineage for the second one,
+  SURVEY.md C2) and, with a whitelist, the exploded whitelist (read before
+  and after the grouping). Every other node stays in one plan for Catalyst;
+- per-datasource evidence scores as a per-row projection instead of the
+  reference's pivot by ``evs_id`` and self-join (no shuffle);
 - broadcast hints on the small dimension joins;
 - no cosmetic global sorts.
 """
@@ -45,15 +51,11 @@ from platform_etl_drug_disease_spark.plans.network import tissue_filtered_networ
 
 
 class PipelineOutputs:
-    """The pipeline's two outputs. ``drug_disease`` is built LAZILY on
-    first attribute access (round-11 optimization, guide §1.2 "don't
-    compute things you throw away" applied to PLAN CONSTRUCTION): its DAG
-    is ~15 eager Catalyst-analysis ops over the pipeline's largest trees
-    (the hypotheses projection with nested transforms, the AE-overlap
-    explode join and scoring chain), and the whitelist catalog query reads
-    only ``associations`` — building the second output there was pure
-    driver-side waste at every scale. Consumers are unchanged: attribute
-    access returns the identical DataFrame the eager form returned."""
+    """The pipeline's two outputs. ``drug_disease`` is built lazily on
+    first attribute access: its DAG is ~15 eager Catalyst-analysis ops over
+    the pipeline's largest trees (the hypotheses projection with nested
+    transforms, the AE-overlap explode join and scoring chain), and the
+    whitelist branch reads only ``associations``."""
 
     def __init__(
         self, associations: DataFrame, drug_disease_fn: Callable[[], DataFrame]
@@ -76,9 +78,8 @@ def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: Data
     enriched = drugs.join(aes_by_drug, "drug_id", "left_outer").join(
         aggregated, "drug_id", "right_outer"
     )
-    # the aes→drug_aes rename happens as the struct field's alias instead of
-    # a withColumnRenamed between the joins (round-11 op-count cut; the
-    # optimizer collapsed the rename into the struct either way)
+    # the aes→drug_aes rename is the struct field's alias: one eager op
+    # fewer than a withColumnRenamed, and the same optimized plan
     return enriched.groupBy("disease_id").agg(
         F.collect_list(
             F.struct(
@@ -145,11 +146,25 @@ def run_pipeline(
     output DataFrames, lazily. Mirrors main (sim.sc:341-516) including the
     whitelist branch: with a whitelist, associations group by
     (neighbour, whitelist_id) and skip the harmonic/new-drug cutoffs."""
+    if whitelist is None:
+        selected = None
+        key = "disease_id"
+        keep_association = F.col("harmonic") > harmonic_cutoff
+        keep_hypotheses = F.col("new_drugs_size") > 0
+    else:
+        # read twice: narrows the evidence before the grouping, then maps
+        # each whitelist_id back to its diseases
+        selected = F.broadcast(
+            whitelist.withColumn("disease_id", F.explode("whitelist")).persist()
+        )
+        key = "whitelist_id"
+        keep_association = keep_hypotheses = F.lit(True)
+
     drugs = shape_drugs(drug)
     expressions = shape_expression(expression)
     targets = shape_targets(target)
     diseases = shape_diseases(disease)
-    network = tissue_filtered_network(interactions, targets, expressions).persist()
+    network = tissue_filtered_network(interactions, targets, expressions)
     aggregated = shape_aggregated_drugs(aggregated_drugs)
     evidences = shape_evidence(evidence)
     genetics = shape_genetics_evidence(studies, predictions)
@@ -157,61 +172,33 @@ def run_pipeline(
     aes_by_target = shape_faers_by_target(faers_by_target)
 
     df_dr = drugs_for_disease(drugs, aes_by_drug, aggregated)
-    df_d = diseases.join(df_dr, "disease_id", "left_outer").persist()
+    df_d = diseases.join(df_dr, "disease_id", "left_outer")
     df_t = (
         targets.join(drugs_for_target(drugs, aes_by_target), "target_id", "left_outer")
         .join(network, "target_id", "left_outer")
         .persist()
     )
 
-    evs = evidences.unionByName(genetics).persist()
-    evs_scores = pivot_evidence_scores(evs)
-    evs_pivoted = evs.join(evs_scores, "evs_id", "inner")
-
-    if whitelist is not None:
-        selected = whitelist.withColumn(
-            "disease_id", F.explode("whitelist")
-        ).persist()
-        prepared = propagate_over_network(evs_pivoted, df_t).join(
-            F.broadcast(selected), "disease_id", "inner"
-        )
-        associations = (
-            make_associations(
-                prepared,
-                [F.col("neighbour").alias("target_id"), F.col("whitelist_id")],
-            )
-            .join(F.broadcast(selected), "whitelist_id", "inner")
-            .join(df_t, "target_id")
-            .join(df_d, "disease_id")
-            .withColumn(
-                "new_drugs",
-                F.array_except(
-                    F.col("drugs_for_target.drug_id"), F.col("drugs_for_disease.drug_id")
-                ),
-            )
-            .withColumn("new_drugs_size", F.size("new_drugs"))
-        )
-    else:
-        prepared = propagate_over_network(evs_pivoted, df_t)
-        associations = (
-            make_associations(
-                prepared,
-                [F.col("neighbour").alias("target_id"), F.col("disease_id")],
-            )
-            .where(F.col("harmonic") > harmonic_cutoff)
-            .join(df_t, "target_id")
-            .join(df_d, "disease_id")
-            .withColumn(
-                "new_drugs",
-                F.array_except(
-                    F.col("drugs_for_target.drug_id"), F.col("drugs_for_disease.drug_id")
-                ),
-            )
-            .withColumn("new_drugs_size", F.size("new_drugs"))
-            .where(F.col("new_drugs_size") > 0)
-        )
-
-    associations = associations.persist()
+    evs = pivot_evidence_scores(evidences.unionByName(genetics))
+    prepared = propagate_over_network(evs, df_t)
+    if selected is not None:
+        prepared = prepared.join(selected, "disease_id")
+    grouped = make_associations(
+        prepared, [F.col("neighbour").alias("target_id"), F.col(key)]
+    )
+    if selected is not None:
+        grouped = grouped.join(selected, "whitelist_id")
+    new_drugs = F.array_except(
+        F.col("drugs_for_target.drug_id"), F.col("drugs_for_disease.drug_id")
+    )
+    associations = (
+        grouped.where(keep_association)
+        .join(df_t, "target_id")
+        .join(df_d, "disease_id")
+        .withColumns({"new_drugs": new_drugs, "new_drugs_size": F.size(new_drugs)})
+        .where(keep_hypotheses)
+        .persist()
+    )
 
     def _build_drug_disease() -> DataFrame:
         return _drug_disease_output(associations, aes_by_drug)
@@ -226,8 +213,7 @@ def _drug_disease_output(
 ) -> DataFrame:
     """The second output's DAG (hypotheses projection → AE-overlap scoring),
     factored out of :func:`run_pipeline` so it can build lazily — see
-    :class:`PipelineOutputs`. Expression-for-expression identical to the
-    former inline chain."""
+    :class:`PipelineOutputs`."""
     hypotheses = associations.select(
         "disease_id",
         "target_id",
@@ -269,12 +255,10 @@ def _drug_disease_output(
         F.col("drug_hypothesis") == F.col("drug_id"),
         "left_outer",
     )
-    # ONE select replaces the rename + the two score withColumns (round-11
-    # driver-side op-count cut: every eager Dataset op re-analyzes the full
-    # tree, and CollapseProject merged these three into a single Project
-    # anyway — the optimized plan is unchanged, only the build cost drops).
-    # The score expressions read `drug_ae_events` directly: it is the same
-    # column the rename aliased, exactly as the collapsed Project computed.
+    # ONE select does the rename and both scores: every eager Dataset op
+    # re-analyzes the full tree, and CollapseProject would merge the three
+    # into one Project anyway. The scores read `drug_ae_events` directly, the
+    # column the rename aliases.
     scored = joined.select(
         *[
             F.col("drug_ae_events").alias("drug_hypothesis_aes")

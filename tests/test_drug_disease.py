@@ -91,6 +91,32 @@ def test_pivot_zero_fills_other_datasource(spark, inputs):
     assert e1["europepmc"] == 0.9 and e1["genetics"] == 0.0
 
 
+def test_evidence_scores_keep_each_row_under_duplicate_ids(spark):
+    """Every evidence row keeps its own score under its own datasource and
+    0.0 under the other, also when rows share an ``evs_id``: two europepmc
+    rows of one id, and one id under both datasources. A pivot by id picks
+    one arbitrary score per id instead."""
+    evs = spark.createDataFrame(
+        [
+            ("europepmc", "D1", "T1", "dup", 0.9),
+            ("europepmc", "D1", "T2", "dup", 0.3),
+            ("europepmc", "D1", "T1", "both", 0.6),
+            ("genetics", "D1", "T1", "both", 0.8),
+        ],
+        "datasource string, disease_id string, target_id string, evs_id string, score double",
+    )
+    got = sorted(
+        (r["evs_id"], r["europepmc"], r["genetics"])
+        for r in pivot_evidence_scores(evs).collect()
+    )
+    assert got == [
+        ("both", 0.0, 0.8),
+        ("both", 0.6, 0.0),
+        ("dup", 0.3, 0.0),
+        ("dup", 0.9, 0.0),
+    ]
+
+
 # ------------------------- end-to-end goldens -------------------------
 
 
@@ -143,61 +169,71 @@ def test_whitelist_branch_keeps_unfiltered(spark, inputs):
     assert rows[("T1", "W1")]["harmonic"] == pytest.approx(0.755)
 
 
+@pytest.mark.parametrize("branch", ["default", "whitelist"])
+def test_pipeline_persists_only_shared_nodes(spark, branch):
+    """The pipeline caches only its multi-consumer nodes: aes_by_drug,
+    df_t and associations, plus the exploded whitelist on that branch. And
+    the evidence scores are a projection: no aggregate and no join keyed on
+    ``evs_id`` anywhere in the associations plan (cached sub-plans
+    included). Cached relations are counted as the persisted RDDs the
+    outputs' jobs add, against the session's count before the call; the
+    cache is cleared first, so no earlier test's identical plan is reused."""
+    import re
+
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    inputs = domain_inputs(spark)
+    if branch == "default":
+        del inputs["whitelist"]
+    out = run_pipeline(**inputs)
+    out.associations.collect()
+    if branch == "default":
+        out.drug_disease.collect()
+    assert persistent().size() - before == (3 if branch == "default" else 4)
+
+    plan = out.associations._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" in plan  # the cached sub-plans are printed
+    assert not re.findall(r"Aggregate(?:\(keys=| )\[[^\]]*\bevs_id#", plan)
+    assert not [ln for ln in plan.splitlines() if "Join" in ln and "evs_id#" in ln]
+    spark.catalog.clearCache()
+
+
 def test_scaled_power_law_fixture_runs_full_dag(spark, tmp_path):
-    """The scale-stress generator (tools/pipeline_scale_stress.py) must stay
-    schema-conforming and non-degenerate: a smoke-size power-law fixture
-    runs the ENTIRE DAG to both outputs, the planted mega-hub dominates the
-    degree distribution (SURVEY §7's hub-target risk is actually present),
-    and both outputs are non-empty. Guards the round-5 PERF.md measurements
-    (wall ratio at 10x, AQE skew engagement) against generator drift."""
-    import pyspark.sql.functions as F
+    """The benchmark's hub fixture generator (perfbench/fixtures.py) must
+    stay schema-conforming and non-degenerate: a 300-target power-law
+    fixture runs the ENTIRE DAG to both outputs, the planted mega-hub
+    dominates the degree distribution (SURVEY §7's hub-target risk is
+    actually present), and both outputs are non-empty."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from tools.pipeline_scale_stress import load_inputs, write_fixture
+    from perfbench.fixtures import domain_tables, read_domain, write_tables
 
-    write_fixture(spark, scale=1, out_dir=str(tmp_path), base_targets=60)
-    inputs = load_inputs(spark, str(tmp_path))
+    tables = domain_tables(7, 300)
+    write_tables(tables, str(tmp_path))
+    inputs = read_domain(spark, str(tmp_path))
 
-    # the planted hub must dominate: P1 appears in >=40% of interaction rows
-    inter = inputs["interactions"]
-    n_edges = inter.count()
-    hub_edges = inter.where(
-        (F.col("interactorA_uniprot_name") == "P1")
-        | (F.col("interactorB_uniprot_name") == "P1")
-    ).count()
-    assert hub_edges >= 0.3 * n_edges, "mega-hub missing from the fixture"
+    # the seed draws the hub, so take it as the max-degree protein; it must
+    # dominate: in >=20% of interaction rows and well above the next one
+    inter = tables["interactions"]
+    ends = pa.concat_arrays(
+        [inter[c].combine_chunks() for c in ("interactorA_uniprot_name", "interactorB_uniprot_name")]
+    )
+    degrees = sorted(pc.value_counts(ends).to_pylist(), key=lambda r: -r["counts"])
+    hub, hub_edges = degrees[0]["values"], degrees[0]["counts"]
+    assert hub_edges >= 0.2 * inter.num_rows, "mega-hub missing from the fixture"
+    assert hub_edges >= 1.5 * degrees[1]["counts"], "mega-hub does not dominate"
 
     batch = {k: v for k, v in inputs.items() if k != "whitelist"}
     out = run_pipeline(**batch)
     assoc = out.associations
-    dd = out.drug_disease
     assert assoc.count() > 0
-    assert dd.count() > 0
-    # the hub target's neighbourhood must actually propagate: T1 appears as
+    assert out.drug_disease.count() > 0
+    # the hub target's neighbourhood must actually propagate: it appears as
     # an association target (it receives evidence from every partner)
-    assert assoc.where(F.col("target_id") == "T1").count() > 0
-
-
-def test_network_shuffle_stats_capture(spark, tmp_path):
-    """The MapOutputStatistics walker (round-6 stress instrument) must find
-    at least one shuffle stage of the network build under the armed SMJ
-    confs and report sane byte stats — guards the PERF.md hub-skew numbers
-    against JVM-API drift (the walker reaches into QueryStageExec/mapStats
-    via py4j, which has no compile-time contract)."""
-    from tools.pipeline_scale_stress import (
-        load_inputs,
-        network_shuffle_stats,
-        write_fixture,
-    )
-
-    write_fixture(spark, scale=1, out_dir=str(tmp_path), base_targets=60)
-    inputs = load_inputs(spark, str(tmp_path))
-    stats = network_shuffle_stats(spark, inputs)
-    assert stats, "no shuffle stage captured under autoBroadcast=-1"
-    for s in stats:
-        assert s["partitions"] > 0
-        assert s["max_bytes"] >= s["median_nonzero_bytes"] >= 0
-    # restored confs: the armed run must not leak into the session
-    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") != "false"
+    hub_target = "T" + hub.removeprefix("P")
+    assert assoc.where(F.col("target_id") == hub_target).count() > 0
 
 
 def test_fixture_inputs_are_local_relations(spark, inputs):

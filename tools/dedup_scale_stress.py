@@ -2,8 +2,9 @@
 
 PERF.md's dedup scaling story at sf0.1→sf≈1 rests on one claim: candidate
 counts (and therefore verify fan-out and wall) track DUPLICATE MASS, not
-corpus² (VERDICT r6 item 5 asks for this measured at 1/10/100×, the way
-`pipeline_scale_stress.py` measures the parity pipeline). This tool plants
+corpus² (VERDICT r6 item 5 asks for this measured at 1/10/100×; the parity
+pipeline's hub fixture is `perfbench/fixtures.py`'s `domain_tables`, which
+`perfbench/run.py --workload pipeline_hub` times). This tool plants
 a corpus whose duplicate mass is CONTROLLED — a fixed fraction of docs in
 near-dup clusters of fixed size, so true pair mass grows exactly linearly
 with scale while the all-pairs count grows quadratically — and measures:
