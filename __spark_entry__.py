@@ -1,12 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Catalog adapter: the query catalog's public surface.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the flagship query as a smoke check; ``queries()`` and
+``oracle_sql()`` expose the merged catalog (``plans.merged_catalog``) by
+name. Its readers are ``perfbench`` (``query_mix`` runs catalog queries and
+checks them against their oracles), ``tools/oracle_check.py`` (every query
+in Spark against its DuckDB oracle at sf0.01: row count, schema and
+order-insensitive values) and the tests.
 
 All real logic lives in ``platform_etl_drug_disease_spark``; this module is
-just the harness adapter.
+just the adapter.
 """
 
 from __future__ import annotations
@@ -41,6 +43,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle for each query (omitted entries are
-    non-SQL-expressible and get the driver's rows-only check)."""
+    non-SQL-expressible and get a rows-only check)."""
     _, o = merged_catalog()
     return o

@@ -239,7 +239,7 @@ def minhash_lsh_dedup(
     This is the load-bearing scale property of MinHash+LSH: exact-verify work
     is O(candidates), never O(shingle-sharing pairs). (An earlier version
     verified against the full shared-shingle pair table and was ~50× slower
-    at sf0.1 — caught by bench.py.)
+    at sf0.1 — caught by a catalog timing run.)
 
     The shingle table is built ONCE and persisted — it feeds the banded
     self-join (2 consumers) and the exploded verify; without the persist the

@@ -192,7 +192,8 @@ def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles over an ALREADY-MATERIALIZED token array
     column. ``tok_col`` must be a plain column reference: inlining the
     tokenizer expression here makes every element_at re-run the split —
-    quadratic in document length (a 20× slowdown caught by bench.py)."""
+    quadratic in document length (a 20× slowdown caught by a catalog
+    timing run)."""
     t = F.col(tok_col) if isinstance(tok_col, str) else tok_col
     gram = F.transform(
         F.sequence(F.lit(0), F.size(t) - n),

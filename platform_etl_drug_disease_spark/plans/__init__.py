@@ -2,43 +2,16 @@
 
 Each catalog module exposes ``QUERIES: dict[str, (spark, sf_dir) -> DataFrame]``
 and ``ORACLES: dict[str, str]`` (DuckDB ANSI SQL over the same parquet
-tables). ``__spark_entry__.py`` merges them for the driver's correctness gate.
-
-Ordering matters: the driver records CORRECTNESS rows for the FIRST 50
-``queries()`` entries only. ``_DRIVER_WINDOW`` pins those 50 explicitly.
-
-Rotation policy (live; per-round history lives in COVERAGE.md §Rotation):
-the window is 50/round; each round keeps 5 pinned gates (the
-reference-parity pipeline, its whitelist variant, the flagship, the
-LLM-side flagship DAG, and the sink round-trip). ADD-THEN-FREEZE
-(standing, test-enforced by `test_window_includes_all_unproven`): new
-catalog queries land BEFORE the window rotates, and the rotation includes
-EVERY oracled query with no strict green driver row yet — no addition
-ever waits a round for driver proof. Remaining slots are re-greens filled
-oldest-driver-evidence-first (latest strict green round per query,
-computed from the committed CORRECTNESS_r0N.json artifacts). SURVEY §2
-operator ids exercised only by rotated-out queries stay driver-proven via
-those committed artifacts; tests/test_catalog_contract.py asserts every
-§2 id keeps an exercising query in (window ∪ ever-driver-proven). Every
-window entry carries a full value-hash oracle (WINDOW_ROWS_ONLY_OK is
-retired — the 4 rows-only sketch/greedy originals live in the catalog
-tail with pytest-pinned accuracy and hash-provable audit twins). The
-whole catalog — window and tail — is verified every round by
-``tools/oracle_check.py``.
-
-Round-11 window (current; rotated exactly as pre-staged by round 10 and
-ordered by VERDICT r10 item 7): the 5 pins; round 11 is an optimization
-round so there are NO new catalog queries (add-then-freeze is vacuously
-satisfied); then ALL 40 queries whose latest strict green driver row is
-round 6 (the oldest cohort after a fully-green r10, computed from the
-committed CORRECTNESS_r0N.json artifacts), then the 5
-alphabetically-first of the r7-latest cohort.
-
-Pre-staged round-12 rotation: land round-12 additions FIRST
-(add-then-freeze), bump WINDOW_ROUND to 12, keep the 5 pins, fill the
-remaining slots oldest-driver-evidence-first — after a green
-CORRECTNESS_r11 the oldest cohort is the ~39 remaining r7-latest
-queries, then r8-latest.
+tables). ``merged_catalog()`` merges them; ``__spark_entry__.py`` serves the
+merged catalog to its readers, which all look queries up by name:
+``perfbench`` (the ``query_mix`` workload and its oracle checks),
+``tools/oracle_check.py`` (every query against its DuckDB oracle) and the
+tests. Every query carries a value-hash oracle except the four rows-only
+sketch/greedy originals (``price_tdigest_quantiles``,
+``adjacency_degree_approx``, ``bpe_encode_stats``, ``hll_user_rollup``),
+whose accuracy is pinned by pytest and whose hash-provable audit twins
+(``tdigest_quantile_audit``, ``adjacency_degree_audit``,
+``bpe_roundtrip_audit``, ``hll_rollup_audit``) are oracled.
 """
 
 from __future__ import annotations
@@ -49,90 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# The round whose CORRECTNESS artifact the current _DRIVER_WINDOW targets.
-# tests/test_catalog_contract.py uses this to compare the window only against
-# artifacts from rounds STRICTLY BEFORE it — otherwise the rotation test goes
-# red the moment the driver deposits the in-flight round's own artifact
-# (VERDICT r3 "What's wrong" #1). Bump this together with every rotation.
-WINDOW_ROUND = 11
-
-# RETIRED round 6 (VERDICT r5 item 2): every window entry now carries a full
-# value-hash oracle. The rows-only sketch/greedy originals
-# (price_tdigest_quantiles, adjacency_degree_approx, bpe_encode_stats,
-# hll_user_rollup) live in the catalog TAIL with pytest-pinned accuracy and
-# hash-provable audit twins (tdigest_quantile_audit, adjacency_degree_audit,
-# bpe_roundtrip_audit, hll_rollup_audit) carrying their driver proof.
-WINDOW_ROWS_ONLY_OK: frozenset[str] = frozenset()
-
-# The 50 driver-scored queries, in scoring order. Round-11 rotation
-# (optimization round — no new catalog queries, so add-then-freeze is
-# vacuously satisfied): 5 pinned gates + 45 oldest-evidence re-greens
-# (the entire r6-latest cohort of 40, then the 5 alphabetically-first of
-# the r7-latest cohort). Every entry carries a full value-hash oracle.
-_DRIVER_WINDOW = [
-    # pinned gates (sim.sc:476, 511 parity; flagship; LLM-side flagship DAG;
-    # S5/S6 write->read-back)
-    "drug_disease_pipeline",
-    "drug_disease_pipeline_whitelist",
-    "flagship_harmonic_topk",
-    "corpus_release_pipeline",
-    "sink_roundtrip",
-    # re-greens: every query whose latest strict green driver row is
-    # ROUND 6 (the oldest remaining cohort after a fully-green r10),
-    # all 40
-    "corpus_split_stats",
-    "curation_funnel_stats",
-    "customers_without_orders",
-    "daily_event_type_pivot",
-    "dedup_cluster_components",
-    "dedup_containment_topk",
-    "dedup_exact",
-    "dedup_ngram_jaccard_topk",
-    "dedup_quality_keeper",
-    "dedup_recall_audit",
-    "doremi_mixture_stats",
-    "doremi_token_quota",
-    "dsir_importance_stats",
-    "embedding_near_dup",
-    "event_interarrival_stats",
-    "hll_rollup_audit",
-    "hourly_windows",
-    "jl_projection_recall",
-    "knn_cosine_bruteforce",
-    "knn_cosine_ivf",
-    "knn_pq_adc",
-    "order_case_buckets",
-    "order_lineitem_right",
-    "order_priority_rollup",
-    "order_value_buckets",
-    "pii_scrub_stats",
-    "price_quantiles_per_flag",
-    "price_quantity_corr",
-    "propagate_scores",
-    "quantity_unpivot",
-    "salted_supplier_revenue",
-    "semantic_dedup_cells",
-    "sliding_windows",
-    "status_priority_cube",
-    "streaming_hourly_windows",
-    "supplier_score_blend",
-    "tdigest_quantile_audit",
-    "top_customers_per_nation",
-    "two_hop_reach",
-    "typed_json_histogram",
-    # re-greens: the 5 alphabetically-first of the r7-latest cohort
-    "asof_latest_click",
-    "bm25_search",
-    "bpe_merge_pair_stats",
-    "containment_incremental",
-    "corpus_mix_stats",
-]
-
-
 def merged_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """Merge all catalog modules; late import so a broken module is obvious.
-
-    Returns queries ordered driver-window-first (see module docstring)."""
+    """Merge all catalog modules, in module order; late import so a broken
+    module is obvious."""
     from platform_etl_drug_disease_spark.plans import (
         arrays_hof,
         dedup_text,
@@ -150,7 +42,7 @@ def merged_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:
         streaming_media,
     )
 
-    all_queries: dict[str, QueryFn] = {}
+    queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
     for mod in (
         relational,
@@ -168,14 +60,6 @@ def merged_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:
         scale_joins,
         sinks,
     ):
-        all_queries.update(mod.QUERIES)
+        queries.update(mod.QUERIES)
         oracles.update(mod.ORACLES)
-
-    missing = [n for n in _DRIVER_WINDOW if n not in all_queries]
-    if missing:
-        raise RuntimeError(f"_DRIVER_WINDOW names not in catalog: {missing}")
-    queries: dict[str, QueryFn] = {n: all_queries[n] for n in _DRIVER_WINDOW}
-    for n, fn in all_queries.items():
-        if n not in queries:
-            queries[n] = fn
     return queries, oracles

@@ -42,6 +42,7 @@ from platform_etl_drug_disease_spark.operators.dedup import (
     simhash64,
 )
 from platform_etl_drug_disease_spark.plans._util import arr_join, dround
+from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
 from platform_etl_drug_disease_spark.schemas import (
     ensure_compute_partitions,
     load_table,
@@ -113,7 +114,7 @@ def token_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint (whitespace tokens tokenized once, *_of form)."""
     # compute-shaped partitioning: the per-token fold below is the cost,
     # and a single-file corpus scan would run it on one core (21x wall at
-    # 10x data in BENCH_sf1 before this fix).
+    # 10x data at sf≈1 before this fix).
     docs = ensure_compute_partitions(
         load_table(spark, sf_dir, "documents", ["doc_id", "text"]), "doc_id"
     )
@@ -355,7 +356,7 @@ FROM (
 # call operators/dedup.containment_topk with IDENTICAL knobs (trigrams,
 # τ=0.8, k=3, lang block, df≤256) — ~30 s of prefix/verify pipeline at sf≈1,
 # previously run twice. The artifact is an eager localCheckpoint (so reuse
-# survives bench's clearCache between runs), keyed by session + corpus
+# survives a clearCache between runs), keyed by session + corpus
 # fingerprint like the suffix cache, two snapshots max.
 # tests/test_extensions.py::test_containment_topk_artifact_reuse pins
 # hook == standalone.
@@ -388,9 +389,7 @@ def _containment_topk_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", shingle_n=3, threshold=0.8, k=3,
         block_col="lang", max_shingle_df=256,
     ).localCheckpoint()
-    while len(_CONTAINMENT_TOPK_CACHE) >= 2:  # evict oldest snapshot
-        _CONTAINMENT_TOPK_CACHE.pop(next(iter(_CONTAINMENT_TOPK_CACHE)))
-    _CONTAINMENT_TOPK_CACHE[key] = top
+    memo_put(_CONTAINMENT_TOPK_CACHE, key, top)
     return top
 
 
@@ -411,9 +410,8 @@ def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes intra-cluster candidates genuine verify mass); sf0.1 → sf≈1 on
     non-adversarial axes is 1.2× (PERF table). The relation comes from the
     session-memoized ``_containment_topk_artifact`` shared with
-    ``quoted_span_stats`` (round 9) — this query is the designated owner
-    of the pipeline's headline cost (bench resets the memo before its
-    runs)."""
+    ``quoted_span_stats`` (round 9) — this query is the memo's owner in
+    plans/memo_owners.py."""
     top = _containment_topk_artifact(spark, sf_dir)
     w = Window.partitionBy("id_a").orderBy(F.col("containment").desc(), "id_b")
     return top.select(
@@ -481,13 +479,13 @@ FROM (
 # connected components over its pairs. Both relations are dup-mass-bounded
 # (pairs ≤ verified near-dups; components ≤ clustered docs), so an eager
 # checkpoint is cheap to hold; keyed by session + corpus fingerprint, two
-# snapshots max, exactly like `_SUFFIX_ARTIFACT_CACHE`. Bench cost owners
-# (memo reset before each of their runs, bench._pre_run_reset):
-# `dedup_minhash_lsh` owns the pair pipeline, `dedup_cluster_components`
-# owns the hash-min CC; the star twin recomputes its OWN components (the
-# two CC algorithms cross-validating is that query's point) over the shared
-# pairs. tests/test_extensions.py::test_lsh_artifacts_reuse pins
-# hook == standalone for both.
+# snapshots max, exactly like `_SUFFIX_ARTIFACT_CACHE`. Memo owners
+# (plans/memo_owners.py): `dedup_minhash_lsh` owns the pair pipeline,
+# `dedup_cluster_components` owns the hash-min CC; the star twin
+# recomputes its OWN components (the two CC algorithms cross-validating is
+# that query's point) over the shared pairs.
+# tests/test_extensions.py::test_lsh_artifacts_reuse pins hook == standalone
+# for both.
 _LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
 _LSH_COMPONENTS_CACHE: dict[tuple, DataFrame] = {}
 
@@ -522,9 +520,7 @@ def _lsh_pairs_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", shingle_n=3, n_hashes=16, n_bands=4,
         threshold=0.5,
     ).localCheckpoint()
-    while len(_LSH_PAIRS_CACHE) >= 2:  # evict oldest snapshot
-        _LSH_PAIRS_CACHE.pop(next(iter(_LSH_PAIRS_CACHE)))
-    _LSH_PAIRS_CACHE[key] = pairs
+    memo_put(_LSH_PAIRS_CACHE, key, pairs)
     return pairs
 
 
@@ -539,17 +535,15 @@ def _lsh_components_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = connected_components(
         _lsh_pairs_artifact(spark, sf_dir), "id_a", "id_b"
     )
-    while len(_LSH_COMPONENTS_CACHE) >= 2:  # evict oldest snapshot
-        _LSH_COMPONENTS_CACHE.pop(next(iter(_LSH_COMPONENTS_CACHE)))
-    _LSH_COMPONENTS_CACHE[key] = comp
+    memo_put(_LSH_COMPONENTS_CACHE, key, comp)
     return comp
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)+LSH(4 bands × 4 rows) candidates verified with exact
     Jaccard ≥ 0.5 (per-candidate array intersection — O(candidates) verify
-    cost, the property that makes LSH the scale path). Serves (and owns the
-    bench cost of) the session-memoized `_lsh_pairs_artifact` shared with
+    cost, the property that makes LSH the scale path). Serves (and is the
+    memo owner of) the session-memoized `_lsh_pairs_artifact` shared with
     the cluster/split/keeper family."""
     return _lsh_pairs_artifact(spark, sf_dir)
 
@@ -831,8 +825,8 @@ FROM (
 #: (the serve path) and `containment_recall_audit` (which audits exactly
 #: that configuration). Same memo discipline as every other artifact
 #: (eager localCheckpoint, content-fingerprinted key, 2-snapshot
-#: eviction); bench cost owner: `dedup_containment_minhash_topk`
-#: (plans/memo_owners.py clears both caches before its timed runs).
+#: eviction); memo owner: `dedup_containment_minhash_topk`
+#: (plans/memo_owners.py clears both caches together).
 _CTM_SHINGLES_CACHE: dict[tuple, DataFrame] = {}
 _CTM_CANDS_CACHE: dict[tuple, DataFrame] = {}
 
@@ -859,9 +853,7 @@ def _ctm_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     sh = _shingle_table(docs, "doc_id", "text", shingle_n=3).localCheckpoint()
-    while len(_CTM_SHINGLES_CACHE) >= 2:
-        _CTM_SHINGLES_CACHE.pop(next(iter(_CTM_SHINGLES_CACHE)))
-    _CTM_SHINGLES_CACHE[key] = sh
+    memo_put(_CTM_SHINGLES_CACHE, key, sh)
     return sh
 
 
@@ -882,9 +874,7 @@ def _ctm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_shingle_df=256,
         max_slot_df=32,
     ).localCheckpoint()
-    while len(_CTM_CANDS_CACHE) >= 2:
-        _CTM_CANDS_CACHE.pop(next(iter(_CTM_CANDS_CACHE)))
-    _CTM_CANDS_CACHE[key] = cands
+    memo_put(_CTM_CANDS_CACHE, key, cands)
     return cands
 
 
@@ -1436,8 +1426,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE — feasible only because the pair graph is small; the Spark side is
     the 100-TB path (per-round equi-join + min-agg, lineage checkpointed).
     Pairs and components come from the session-memoized LSH artifacts
-    (round 9); this query is the designated bench owner of the hash-min
-    CC cost."""
+    (round 9); this query is the memo owner of the hash-min
+    CC artifact."""
     comp = _lsh_components_artifact(spark, sf_dir)
     return comp.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2232,10 +2222,10 @@ _LR_CAP = 512
 # (session, corpus, knobs) and later queries reuse its eagerly-checkpointed
 # per-round frames — the `containment_corpus_index` build-once idiom, memoized
 # here because the catalog entry point is (spark, sf_dir) rather than a
-# caller-held frame. The cache holds at most TWO snapshots — enough for the
-# tools that interleave two scale dirs per session (plan_report audits each
-# query at sf0.01 then sf0.1) — evicting oldest-first so stale checkpoint
-# blocks are released to the ContextCleaner; keys carry the applicationId so
+# caller-held frame. The cache holds at most TWO snapshots (``memo_put``),
+# so a session that alternates between two scale dirs or corpus versions keeps
+# both warm, evicting oldest-first so stale checkpoint blocks are released
+# to the ContextCleaner; keys carry the applicationId so
 # a frame never leaks across Spark sessions, plus a (size, mtime) content
 # fingerprint of the documents table so rewriting the SAME path within one
 # session (a regenerated fixture dir) misses instead of silently serving the
@@ -2249,10 +2239,9 @@ _SUFFIX_ARTIFACT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 #: estimators (`capped_repeat_estimate`, `capped_mass_profile`) — the
 #: tokenize pass + one full-corpus shuffle repeated three times per
 #: session. Memoized exactly like the artifacts above (eager
-#: localCheckpoint, 2-snapshot eviction, content-fingerprinted key); bench
-#: cost owner: `longest_repeat_census` (plans/memo_owners.py clears this
-#: together with _SUFFIX_ARTIFACT_CACHE, so the owner's timed runs always
-#: pay the full tokenize+count build).
+#: localCheckpoint, 2-snapshot eviction, content-fingerprinted key); memo
+#: owner: `longest_repeat_census` (plans/memo_owners.py clears this
+#: together with _SUFFIX_ARTIFACT_CACHE).
 _SUFFIX_BASE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
@@ -2302,9 +2291,7 @@ def _suffix_ranking(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         max_anchor_df=_LR_CAP,
         frames=_suffix_base(spark, sf_dir),
     )
-    while len(_SUFFIX_ARTIFACT_CACHE) >= 2:  # evict oldest snapshot
-        _SUFFIX_ARTIFACT_CACHE.pop(next(iter(_SUFFIX_ARTIFACT_CACHE)))
-    _SUFFIX_ARTIFACT_CACHE[key] = (per_suffix, capped)
+    memo_put(_SUFFIX_ARTIFACT_CACHE, key, (per_suffix, capped))
     return per_suffix, capped
 
 
@@ -2327,9 +2314,7 @@ def _suffix_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     base = suffix_base_plan(docs, "doc_id", "text", _LR_W).localCheckpoint()
     cnt = suffix_anchor_counts(base, "doc_id", _LR_W).localCheckpoint()
-    while len(_SUFFIX_BASE_CACHE) >= 2:  # evict oldest snapshot
-        _SUFFIX_BASE_CACHE.pop(next(iter(_SUFFIX_BASE_CACHE)))
-    _SUFFIX_BASE_CACHE[key] = (base, cnt)
+    memo_put(_SUFFIX_BASE_CACHE, key, (base, cnt))
     return base, cnt
 
 
@@ -2377,9 +2362,7 @@ def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "pos", "repeat_len")
         .localCheckpoint()
     )
-    while len(_LM_STARTS_CACHE) >= 2:
-        _LM_STARTS_CACHE.pop(next(iter(_LM_STARTS_CACHE)))
-    _LM_STARTS_CACHE[key] = starts
+    memo_put(_LM_STARTS_CACHE, key, starts)
     return starts
 
 
@@ -2415,9 +2398,7 @@ def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "pos", "repeat_len")
         .localCheckpoint()
     )
-    while len(_K1_REMOVALS_CACHE) >= 2:
-        _K1_REMOVALS_CACHE.pop(next(iter(_K1_REMOVALS_CACHE)))
-    _K1_REMOVALS_CACHE[key] = removals
+    memo_put(_K1_REMOVALS_CACHE, key, removals)
     return removals
 
 

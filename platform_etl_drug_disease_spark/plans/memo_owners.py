@@ -1,21 +1,18 @@
-"""Bench cost owners for session-memoized plan artifacts.
+"""Registry of the session memo caches, and the one way to fill them.
 
-Several plan families memoize expensive shared derivations per session
-(keyed by ``(applicationId, sf_dir)``, eagerly ``localCheckpoint``'ed,
-2-snapshot eviction). For HONEST bench accounting each artifact has exactly
-ONE designated cost owner: ``bench._pre_run_reset`` clears the artifact's
-cache before each of the owner's timed executions, so the build cost
-appears in the headline exactly once — matching what a real shared-artifact
-DAG pays — while every other family member rides the warm artifact (that
-reuse is the in-suite design being measured, VERDICT r8 item 1).
+Several plan families memoize an expensive shared derivation per session:
+a module-level dict keyed by application id plus the snapshot (sf dir or
+content fingerprint), holding eager ``localCheckpoint``s. ``memo_put``
+inserts into such a cache and keeps at most two snapshots.
 
-This registry lives NEXT TO the caches (in the plans package) so that
-adding a memo only ever touches plans code: bench.py delegates here and
-stays frozen (VERDICT r10 item 1). Rules for adding an entry:
+``OWNERS`` maps each memo to one catalog query that consumes it and to a
+reset that clears its caches. ``perfbench`` clears every memo through it
+before the warm pass (``perfbench.workloads.clear_memos``) and counts the
+artifacts built (``memo_caches``, which reads each reset's closure variables
+``module`` and ``cache_names``). Rules for adding an entry:
 
 - every new session memo MUST appear here under exactly one owner;
-- the owner must be a catalog query that consumes the artifact, so the
-  reset lands strictly before a timed build;
+- the owner must be a catalog query that consumes the artifact;
 - clears must be idempotent and cheap (dict.clear on the module cache).
 
 tests/test_catalog_contract.py::test_memo_owner_registry asserts every
@@ -25,6 +22,14 @@ owner name below is a real catalog query and every reset is callable.
 from __future__ import annotations
 
 from collections.abc import Callable
+
+
+def memo_put(cache: dict, key, value) -> None:
+    """Insert ``value`` under ``key`` and evict oldest-first down to two
+    snapshots."""
+    cache[key] = value
+    while len(cache) > 2:
+        cache.pop(next(iter(cache)))
 
 
 def _dedup_text_caches(*cache_names: str) -> Callable[[], None]:
@@ -51,7 +56,7 @@ def _module_caches(module: str, *cache_names: str) -> Callable[[], None]:
 
 
 #: owner catalog query -> reset of the memo caches it owns (lazy imports so
-#: a bench subset run only pays for the modules it touches)
+#: a reset only loads the module that holds its caches)
 OWNERS: dict[str, Callable[[], None]] = {
     # suffix-ranking doubling-loop artifact (the whole suffix family rides
     # it) + the shared anchor-universe pair (tokenized base + anchor-df
@@ -107,10 +112,3 @@ OWNERS: dict[str, Callable[[], None]] = {
     "kmeans_cells": _module_caches("similarity", "_KMEANS_FIT_CACHE"),
 }
 
-
-def reset_for(name: str) -> None:
-    """Clear the session-memo caches OWNED by catalog query ``name``
-    (no-op for non-owners)."""
-    reset = OWNERS.get(name)
-    if reset is not None:
-        reset()

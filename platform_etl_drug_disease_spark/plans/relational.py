@@ -27,6 +27,7 @@ from platform_etl_drug_disease_spark.operators.joins import (
 )
 from platform_etl_drug_disease_spark.operators.windows import top_n_per_group
 from platform_etl_drug_disease_spark.plans._util import arr_join, davg, dround, dsum
+from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
 from platform_etl_drug_disease_spark.schemas import load_table
 
 
@@ -496,9 +497,8 @@ GROUP BY s_nationkey
 #: histogram — three catalog queries (price_quantiles_per_flag,
 #: tdigest_quantile_audit, price_mad_stats) derive the IDENTICAL histogram
 #: from the identical fact scan (round-10 optimization; same artifact
-#: pattern and 2-snapshot eviction as plans/graph's edge memos). Bench cost
-#: owner: price_mad_stats (bench._pre_run_reset clears this before each of
-#: its executions, so the scan+groupBy build is always timed). The
+#: pattern and 2-snapshot eviction as plans/graph's edge memos). Memo
+#: owner: price_mad_stats (plans/memo_owners.py). The
 #: histogram is value-GRID-bounded (~1 row per distinct (flag, cents)
 #: price), so the checkpoint stays tiny at any corpus size — it is exactly
 #: the reusable statistic a warehouse materializes once per snapshot.
@@ -523,9 +523,7 @@ def _price_flag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = _PRICE_HIST_CACHE.get(key)
     if hit is None:
         hit = _price_flag_histogram_plan(spark, sf_dir).localCheckpoint()
-        while len(_PRICE_HIST_CACHE) >= 2:
-            _PRICE_HIST_CACHE.pop(next(iter(_PRICE_HIST_CACHE)))
-        _PRICE_HIST_CACHE[key] = hit
+        memo_put(_PRICE_HIST_CACHE, key, hit)
     return hit
 
 
@@ -1464,7 +1462,7 @@ def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks 2 and 31 of 32 — ≈ a 90% interval).
 
     Scale form (round-3 rework; the r2 explode form was the worst scaler
-    in BENCH_sf1 at 59× — its cost was one md5 per (replica, row), 48 M
+    of the sf≈1 run at 59× — its cost was one md5 per (replica, row), 48 M
     hashes at sf≈1): each md5 now yields EIGHT independent 16-bit draws,
     so a row hashes 4× instead of 32×. The four hex digests concatenate
     into one 128-char string, `regexp_extract_all('.{4}')` slices out the
@@ -1946,7 +1944,7 @@ def price_mad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # ONE fact-table pass (now the memoized _price_flag_histogram artifact —
-    # this query is its bench cost owner): everything downstream — the
+    # this query is its memo owner): everything downstream — the
     # residual histogram included — is pure arithmetic over the value
     # histogram (|x−med| carries each bucket's count unchanged). The median
     # is defined over NON-NULL values on both engines (a NULL bucket would

@@ -25,6 +25,7 @@ from platform_etl_drug_disease_spark.operators.similarity import (
     semantic_dedup,
 )
 from platform_etl_drug_disease_spark.plans._util import dround
+from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
 from platform_etl_drug_disease_spark.schemas import (
     ensure_compute_partitions,
     load_table,
@@ -402,9 +403,9 @@ _KM_K, _KM_ITERS = 16, 2
 #: session memo for the 2-iteration spherical k-means fit over the
 #: embeddings (round-10 optimization; same artifact pattern / 2-snapshot
 #: eviction as the graph edge memos). ``kmeans_cells`` (the index-build
-#: query, bench cost owner — bench._pre_run_reset clears this before its
-#: runs) and ``knn_cosine_ivf_kmeans`` (build + serve composition) run the
-#: IDENTICAL fit: same stride seeds, same _KM_ITERS, same input. At scale
+#: query and its memo owner in plans/memo_owners.py) and
+#: ``knn_cosine_ivf_kmeans`` (build + serve composition) run the IDENTICAL
+#: fit: same stride seeds, same _KM_ITERS, same input. At scale
 #: the fitted centroid table is exactly the artifact an ANN platform
 #: materializes once and serves from — holds (centroids, assignments),
 #: both eagerly checkpointed (centroids: K rows; assignments: one
@@ -433,9 +434,7 @@ def _kmeans_fit_artifact(
     cents, assigned = kmeans_fit(emb, seeds, n_iters=_KM_ITERS)
     out = (cents.localCheckpoint(), assigned.localCheckpoint())
     emb.unpersist()
-    while len(_KMEANS_FIT_CACHE) >= 2:
-        _KMEANS_FIT_CACHE.pop(next(iter(_KMEANS_FIT_CACHE)))
-    _KMEANS_FIT_CACHE[key] = out
+    memo_put(_KMEANS_FIT_CACHE, key, out)
     return out
 
 

@@ -1,34 +1,16 @@
-"""Catalog/window/bench lockstep contracts (VERDICT r2 items 2 and 5).
+"""Catalog contracts: oracle coverage and the session memo registry.
 
-The driver scores only the first 50 ``queries()`` entries per round, so the
-window rotates (plans/__init__.py docstring). These tests pin the rotation
-invariants so a future edit can't silently regress them:
+These tests pin invariants of the merged query catalog so a future edit
+can't silently regress them:
 
-- every in-window query carries a full value-hash oracle;
-- the window is ≥80% first-time-checked vs the committed CORRECTNESS
-  artifacts (the whole point of rotating);
-- every SURVEY §2 operator id keeps an exercising query in
-  (window ∪ ever-driver-proven) — rotation must never orphan an id;
-- bench.py's timed headline covers the ENTIRE catalog (minus explicitly
-  excluded, reasoned entries), so BENCH can't lag the catalog again;
-- the generated PERF.md plan-audit table covers the full headline.
+- every SURVEY §2 operator id keeps an exercising catalog query that
+  carries a DuckDB value oracle (``oracle_sql()``);
+- the only queries without a value oracle are the four rows-only sketch
+  originals, so a new query without an oracle fails here;
+- every session memo owner in ``plans.memo_owners`` is a catalog query.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import re
-
-import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _window():
-    from platform_etl_drug_disease_spark.plans import _DRIVER_WINDOW
-
-    return list(_DRIVER_WINDOW)
 
 
 def _catalog():
@@ -37,101 +19,28 @@ def _catalog():
     return merged_catalog()
 
 
-def _ever_proven(before_round: int | None = None) -> set[str]:
-    """Queries with a green driver CORRECTNESS row in any committed round.
-
-    ``before_round`` restricts to artifacts from rounds STRICTLY BEFORE it.
-    The rotation test must pass it (plans.WINDOW_ROUND): the driver deposits
-    CORRECTNESS_r{WINDOW_ROUND}.json covering exactly the current window, so
-    counting that artifact would flip "first-time" to 0 the moment the round
-    is scored (the r3 post-scoring red, VERDICT r3 "What's wrong" #1).
-    """
-    names: set[str] = set()
-    for fname in sorted(os.listdir(REPO)):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
-        if m:
-            if before_round is not None and int(m.group(1)) >= before_round:
-                continue
-            rows = json.load(open(os.path.join(REPO, fname)))
-            for name, rec in rows.items():
-                ok = (
-                    rec.get("rows_match")
-                    and rec.get("schema_match") is not False
-                    and rec.get("hash_match") is not False
-                    and not rec.get("err")
-                )
-                if ok:
-                    names.add(name)
-    return names
+#: the rows-only sketch/greedy originals: their accuracy is pinned by
+#: pytest, and each has a hash-provable audit twin that is oracled
+#: (tdigest_quantile_audit, adjacency_degree_audit, bpe_roundtrip_audit,
+#: hll_rollup_audit)
+ROWS_ONLY = {
+    "adjacency_degree_approx",
+    "bpe_encode_stats",
+    "hll_user_rollup",
+    "price_tdigest_quantiles",
+}
 
 
-def test_window_is_50_and_fully_oracled():
-    from platform_etl_drug_disease_spark.plans import WINDOW_ROWS_ONLY_OK
-
+def test_unoracled_queries_are_the_rows_only_sketches():
     q, o = _catalog()
-    w = _window()
-    assert len(w) == 50
-    assert len(set(w)) == 50
-    missing = [n for n in w if n not in q]
-    assert not missing, f"window names absent from catalog: {missing}"
-    # every window entry carries a full value oracle, except the explicit
-    # rows-only-by-design allowlist (sketch/greedy queries whose accuracy
-    # is pinned by pytest; the driver records their weaker rows-only check)
-    unoracled = [n for n in w if n not in o and n not in WINDOW_ROWS_ONLY_OK]
-    assert not unoracled, f"window entries without a value oracle: {unoracled}"
-    ghost_allow = [n for n in WINDOW_ROWS_ONLY_OK if n in o]
-    assert not ghost_allow, (
-        f"rows-only allowlist entries that HAVE an oracle (remove them): "
-        f"{ghost_allow}"
+    assert set(q) - set(o) == ROWS_ONLY, (
+        f"queries without a value oracle: {sorted(set(q) - set(o))}"
     )
-
-
-def test_window_includes_all_unproven():
-    """Saturated-regime rotation contract (round 6+): ever-driver-proven
-    reached ~the full catalog in r5, so "≥80% first-time" is arithmetically
-    impossible and the binding invariant becomes the ADD-THEN-FREEZE policy
-    (VERDICT r5 item 5): EVERY oracled catalog query with no strict green
-    driver row in rounds < WINDOW_ROUND must be in the window — no addition
-    ever waits a round for driver proof — and the leftover slots are
-    re-greens (which the oldest-evidence-first policy in plans/__init__.py
-    allocates)."""
-    from platform_etl_drug_disease_spark.plans import WINDOW_ROUND
-
-    q, o = _catalog()
-    w = set(_window())
-    # Compare only against rounds before the window's own round — the driver
-    # deposits CORRECTNESS_r{WINDOW_ROUND}.json covering exactly this window,
-    # which must not count as "already proven" for rotation purposes.
-    proven = _ever_proven(before_round=WINDOW_ROUND)
-    unproven_oracled = [n for n in q if n not in proven and n in o]
-    left_out = [n for n in unproven_oracled if n not in w]
-    assert not left_out, (
-        f"add-then-freeze contract: oracled queries with no driver row that "
-        f"the round-{WINDOW_ROUND} window fails to include: {left_out}"
-    )
-
-
-def test_window_round_tracks_artifacts():
-    """WINDOW_ROUND must be bumped with each rotation: it may never lag an
-    artifact that is NOT exactly this window (a stale round number would make
-    the rotation test compare against the wrong artifact set)."""
-    from platform_etl_drug_disease_spark.plans import WINDOW_ROUND
-
-    w = set(_window())
-    for fname in sorted(os.listdir(REPO)):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
-        if m and int(m.group(1)) >= WINDOW_ROUND:
-            rows = json.load(open(os.path.join(REPO, fname)))
-            assert set(rows) == w, (
-                f"{fname} (round {m.group(1)}) >= WINDOW_ROUND "
-                f"{WINDOW_ROUND} but covers a different window — rotate "
-                f"_DRIVER_WINDOW and bump WINDOW_ROUND together"
-            )
 
 
 # SURVEY §2 operator id -> exercising catalog queries (the VERDICT r2
-# coverage table's mapping). Rotation may move the exercising query out of
-# the current window only if it already has a committed green driver row.
+# coverage table's mapping). At least one of each id's queries must carry a
+# value oracle.
 SURVEY_IDS: dict[str, list[str]] = {
     "S1": ["drug_disease_pipeline"],
     "S2": ["flagship_harmonic_topk"],
@@ -208,15 +117,14 @@ SURVEY_IDS: dict[str, list[str]] = {
 }
 
 
-def test_every_survey_id_stays_driver_covered():
-    q, _ = _catalog()
-    covered = set(_window()) | _ever_proven()
+def test_every_survey_id_has_an_oracled_query():
+    q, o = _catalog()
     orphans = {
         op_id: names
         for op_id, names in SURVEY_IDS.items()
-        if not any(n in covered for n in names)
+        if not any(n in o for n in names)
     }
-    assert not orphans, f"SURVEY §2 ids with no driver-covered query: {orphans}"
+    assert not orphans, f"SURVEY §2 ids with no oracled query: {orphans}"
     ghosts = {
         op_id: [n for n in names if n not in q]
         for op_id, names in SURVEY_IDS.items()
@@ -225,94 +133,25 @@ def test_every_survey_id_stays_driver_covered():
     assert not ghosts, f"SURVEY map references unknown queries: {ghosts}"
 
 
-def test_bench_headline_covers_catalog():
-    import bench
-
-    q, _ = _catalog()
-    timed = set(bench.headline_names())
-    excluded = set(bench.EXCLUDED)
-    assert timed | excluded == set(q), (
-        f"catalog queries neither timed nor excluded: "
-        f"{sorted(set(q) - timed - excluded)}; "
-        f"stale headline/excluded names: {sorted((timed | excluded) - set(q))}"
-    )
-    assert not (timed & excluded)
-    for name, reason in bench.EXCLUDED.items():
-        assert reason.strip(), f"exclusion without a reason: {name}"
-
-
-def test_bench_exclusion_list_is_frozen():
-    """The exclusion list is FROZEN at the two exact-truth measurement
-    instruments (VERDICT r6 item 6): `dedup_ngram_jaccard` (the unbounded
-    exact relation, retained only as the recall audits' truth source — its
-    exact-verify cost is carried in the headline by
-    `dedup_ngram_jaccard_topk`) and `dedup_recall_audit` (which composes
-    that same unbounded truth side). Any new exclusion is a silent-basis
-    change for every BENCH artifact consumer and must be a deliberate,
-    reviewed edit of BOTH this test and bench.EXCLUDED — growing the list
-    is how a headline quietly stops covering the catalog."""
-    import bench
-
-    assert set(bench.EXCLUDED) == {"dedup_ngram_jaccard", "dedup_recall_audit"}
-
-
-@pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_PERF_LOCKSTEP", "1") == "0",
-    reason="PERF.md regeneration in progress",
-)
-def test_perf_table_covers_headline():
-    import bench
-
-    perf = open(os.path.join(REPO, "PERF.md")).read()
-    generated = perf.split("<!-- MANUAL SECTIONS BELOW -->")[0]
-    table_names = {
-        line.split("|")[1].strip()
-        for line in generated.splitlines()
-        if line.startswith("| ") and line.count("|") >= 7
-    }
-    missing = [n for n in bench.headline_names() if n not in table_names]
-    assert not missing, (
-        f"PERF.md plan-audit table lags the bench headline by "
-        f"{len(missing)} queries: {missing[:10]}... — regenerate with "
-        f"`python tools/plan_report.py`"
-    )
-
-
 def test_memo_owner_registry():
-    """Every memo cost owner in plans.memo_owners is a real catalog query
-    (so bench's pre-run reset lands before a TIMED build), every reset is
-    callable and idempotent, and bench._pre_run_reset delegates to the
-    registry (bench.py is frozen; memos register owners in plans code)."""
-    import bench
+    """Every memo owner in plans.memo_owners is a real catalog query, and
+    every reset is callable and idempotent."""
     from platform_etl_drug_disease_spark.plans import memo_owners
 
     q, _ = _catalog()
     unknown = [n for n in memo_owners.OWNERS if n not in q]
     assert not unknown, f"memo owners that are not catalog queries: {unknown}"
-    for name, reset in memo_owners.OWNERS.items():
+    for reset in memo_owners.OWNERS.values():
         reset()  # must not raise
         reset()  # idempotent
-        bench._pre_run_reset(name)  # the harness path reaches the same reset
-    bench._pre_run_reset("not_a_catalog_query")  # non-owner: silent no-op
 
 
-def test_bench_detail_path_routing(monkeypatch):
-    """BENCH_DETAIL.json is reserved for full-headline runs at the
-    machine's own core count; subset probes and low-core contract reruns
-    route to suffixed files so they can never clobber the committed
-    full-core detail (VERDICT r10 item 1)."""
-    import bench
+def test_memo_put_keeps_the_two_newest_snapshots():
+    from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
 
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_OUT", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert bench._detail_path(False).endswith("/BENCH_DETAIL.json")
-    assert bench._detail_path(True).endswith("/BENCH_DETAIL_SUBSET.json")
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(os.cpu_count()))
-    assert bench._detail_path(False).endswith("/BENCH_DETAIL.json")
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8" if os.cpu_count() != 8 else "4")
-    low = bench._detail_path(False)
-    assert low.endswith("_C8.json") or low.endswith("_C4.json")
-    assert bench._detail_path(True).endswith("/BENCH_DETAIL_SUBSET.json")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", "/tmp/custom_out.json")
-    assert bench._detail_path(False) == "/tmp/custom_out.json"
-    assert bench._detail_path(True) == "/tmp/custom_out.json"
+    cache: dict = {}
+    for k in "abc":
+        memo_put(cache, k, k.upper())
+    assert cache == {"b": "B", "c": "C"}
+    memo_put(cache, "c", "C2")  # re-put of a held key evicts nothing
+    assert cache == {"b": "B", "c": "C2"}

@@ -96,8 +96,8 @@ def test_catalog_query_lint_clean(spark, name):
     registrations from earlier parametrized queries make the count depend
     on test ORDER (a window rotation reordering the catalog flipped
     knn_eval_metrics between 2 and 4 counted scans with an identical query,
-    round 11). Standalone is also the contract bench measures — it clears
-    the cache between queries."""
+    round 11). Standalone is also how the catalog is timed — with the cache
+    cleared between queries."""
     import __spark_entry__ as entrymod
 
     spark.catalog.clearCache()
@@ -342,7 +342,7 @@ def test_corpus_text_scans_have_compute_partitions(spark):
 
 def _executed_plan_stats(df) -> dict:
     """Join-strategy and shuffle counts from the ACTUAL executed (AQE-final)
-    plan — the tools/plan_report.py audit, in-test."""
+    plan — a join-strategy and shuffle audit, in-test."""
     import re
 
     df.foreach(lambda r: None)  # run, so AQE finalizes the plan
@@ -505,12 +505,11 @@ def test_suffix_round_plan_shape_pinned(spark):
 def test_containment_topk_pipeline_shape_pinned(spark):
     """Pin the exact containment top-k pipeline's plan shape (round 9): the
     `_containment_topk_artifact` memo hides this pipeline behind an eager
-    localCheckpoint, so PERF.md's generated row for `dedup_containment_topk`
-    now audits only the post-artifact rank window — this test keeps the
-    pipeline itself asserted (the r8 PERF row's visibility, as a ceiling
-    per ADVICE r8): hash joins only (the prefix/verify joins broadcast at
-    this scale; a cartesian or nested-loop would mean the df-capped prefix
-    join degenerated), bounded exchanges."""
+    localCheckpoint, so `dedup_containment_topk`'s own plan shows only the
+    post-artifact rank window — this test keeps the pipeline itself
+    asserted (as a ceiling per ADVICE r8): hash joins only (the
+    prefix/verify joins broadcast at this scale; a cartesian or nested-loop
+    would mean the df-capped prefix join degenerated), bounded exchanges."""
     from platform_etl_drug_disease_spark.operators.dedup import (
         containment_topk,
     )
