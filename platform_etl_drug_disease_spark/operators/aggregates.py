@@ -40,18 +40,6 @@ def group_approx_distinct(
     return df.groupBy(*keys).agg(F.approx_count_distinct(value, rsd).alias(out))
 
 
-def group_collect_list(
-    df: DataFrame, keys: list[str], value: Column | str, out: str, sort: bool = True
-) -> DataFrame:
-    """A3/A4: list per group; pass a ``struct(...)`` Column for nested rollups
-    (AEs per drug sim.sc:248-254). Sorting canonicalizes order."""
-    v = F.col(value) if isinstance(value, str) else value
-    arr = F.collect_list(v)
-    if sort:
-        arr = F.sort_array(arr)
-    return df.groupBy(*keys).agg(arr.alias(out))
-
-
 def grouped_top_k(
     df: DataFrame,
     keys: list[str],
@@ -96,13 +84,3 @@ def pivot_scores(
     if fill is not None:
         out = out.na.fill(fill, subset=pivot_values)
     return out
-
-
-def group_count(df: DataFrame, keys: list[str], out: str = "count") -> DataFrame:
-    """A5: evidence_count per association (sim.sc:296)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(out))
-
-
-def distinct_rows(df: DataFrame) -> DataFrame:
-    """A9: dedupe (symmetrized edge list, sim.sc:54)."""
-    return df.distinct()

@@ -39,29 +39,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.join(w_min, on=id_col, how="left_semi")
 
 
-def minhash_signature(shingle_arr: Column, n_hashes: int = 16) -> Column:
-    """MinHash signature as an array of per-seed minima.
-
-    Each hash function is ``md5(seed || '|' || shingle)``; the signature
-    element is the lexicographic minimum — a valid min-wise hash family,
-    portable to any engine with md5. Empty shingle sets → null signature.
-    """
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingle_arr,
-                    lambda s, seed=seed: F.md5(
-                        F.concat_ws("|", F.lit(str(seed)), s)
-                    ),
-                )
-            )
-            for seed in range(n_hashes)
-        ]
-    )
-    return F.when(F.size(shingle_arr) > 0, sig)
-
-
 def lsh_band_keys(signature: Column, n_bands: int, rows_per_band: int) -> Column:
     """Split a signature into bands; each band key is the concatenation of
     its rows. Docs sharing ANY band key become candidate pairs."""

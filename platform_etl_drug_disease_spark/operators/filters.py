@@ -25,8 +25,3 @@ def where(df: DataFrame, predicate: str | Column) -> DataFrame:
 def where_array_nonempty(df: DataFrame, array_col: str) -> DataFrame:
     """P8: keep rows whose array column is non-empty (sim.sc:179)."""
     return df.where(F.size(F.col(array_col)) > 0)
-
-
-def fill_nulls(df: DataFrame, value, subset: list[str] | None = None) -> DataFrame:
-    """P10: ``na.fill`` — the reference zero-fills pivot gaps (sim.sc:437)."""
-    return df.na.fill(value, subset=subset)

@@ -50,12 +50,6 @@ def postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     )
 
 
-def doc_lengths(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, dl): token count per document, computed at the scan — no
-    second tokenization pass over the corpus."""
-    return df.select(F.col(id_col), tx.token_count(text_col).alias("dl"))
-
-
 def doc_frequency(post: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(term, df): number of documents containing each term."""
     return post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

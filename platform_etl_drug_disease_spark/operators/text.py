@@ -50,10 +50,6 @@ def distinct_token_ratio_of(tok_col: Column | str) -> Column:
     )
 
 
-def distinct_token_ratio(text: Column | str) -> Column:
-    return distinct_token_ratio_of(tokens(text))
-
-
 def stopword_ratio_of(
     tok_col: Column | str, stopwords: list[str] | None = None
 ) -> Column:
@@ -73,10 +69,6 @@ def mean_token_length_of(tok_col: Column | str) -> Column:
         F.transform(t, lambda x: F.length(x)), F.lit(0), lambda a, e: a + e
     )
     return total.cast("double") / F.nullif(F.size(t).cast("double"), F.lit(0.0))
-
-
-def mean_token_length(text: Column | str) -> Column:
-    return mean_token_length_of(tokens(text))
 
 
 def quality_score_of(tok_col: Column | str) -> Column:

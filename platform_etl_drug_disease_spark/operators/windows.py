@@ -40,19 +40,6 @@ def top_n_per_group(
     )
 
 
-def lag_over(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[str | Column],
-    value: str,
-    offset: int = 1,
-    out: str = "lagged",
-) -> DataFrame:
-    """lag/lead access for delta computations (sessionization building block)."""
-    w = Window.partitionBy(*keys).orderBy(*_order_cols(order_by))
-    return df.withColumn(out, F.lag(F.col(value), offset).over(w))
-
-
 def running_agg(
     df: DataFrame,
     keys: list[str],

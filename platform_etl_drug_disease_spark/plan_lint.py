@@ -29,12 +29,6 @@ def explain_string(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def has_pushed_filters(df: DataFrame) -> bool:
-    """True if any scan in the plan carries pushed-down filters (a scan with
-    nothing to push does not disqualify the others)."""
-    return bool(scans_with_pushdown(df))
-
-
 def scans_with_pushdown(df: DataFrame) -> list[str]:
     plan = explain_string(df)
     return [

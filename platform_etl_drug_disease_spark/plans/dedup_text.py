@@ -42,7 +42,7 @@ from platform_etl_drug_disease_spark.operators.dedup import (
     simhash64,
 )
 from platform_etl_drug_disease_spark.plans._util import arr_join, dround
-from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
+from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import (
     ensure_compute_partitions,
     load_table,
@@ -350,47 +350,27 @@ FROM (
 )
 
 
-# Session-scoped memo for the lang-blocked exact containment top-3 relation
-# (round 9, the `_suffix_ranking` idiom applied to the round's two largest
-# remaining sf≈1 entries): `dedup_containment_topk` and `quoted_span_stats`
-# call operators/dedup.containment_topk with IDENTICAL knobs (trigrams,
-# τ=0.8, k=3, lang block, df≤256) — ~30 s of prefix/verify pipeline at sf≈1,
-# previously run twice. The artifact is an eager localCheckpoint (so reuse
-# survives a clearCache between runs), keyed by session + corpus
-# fingerprint like the suffix cache, two snapshots max.
-# tests/test_extensions.py::test_containment_topk_artifact_reuse pins
-# hook == standalone.
+# Session memo for the lang-blocked exact containment top-3 relation:
+# `dedup_containment_topk` and `quoted_span_stats` call
+# operators/dedup.containment_topk with IDENTICAL knobs (trigrams, τ=0.8,
+# k=3, lang block, df≤256) — ~30 s of prefix/verify pipeline at sf≈1,
+# otherwise run twice. The eager checkpoint lets reuse survive a clearCache
+# between runs. tests/test_extensions.py::test_containment_topk_artifact_reuse
+# pins hook == standalone.
 _CONTAINMENT_TOPK_CACHE: dict[tuple, DataFrame] = {}
 
 
+@session_memo(_CONTAINMENT_TOPK_CACHE, "documents")
 def _containment_topk_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (id_a, id_b, containment) top-3-containers relation over the
     snapshot's ``documents`` — see the cache comment above. Value-identical
     to a fresh ``containment_topk`` run; consumers pay only checkpoint-block
     reads after the first build."""
-    import os
-
-    table_path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        table_path,
-        _table_fingerprint(table_path),
-        3,
-        0.8,
-        3,
-        "lang",
-        256,
-    )
-    hit = _CONTAINMENT_TOPK_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang"])
-    top = containment_topk(
+    return containment_topk(
         docs, "doc_id", "text", shingle_n=3, threshold=0.8, k=3,
         block_col="lang", max_shingle_df=256,
     ).localCheckpoint()
-    memo_put(_CONTAINMENT_TOPK_CACHE, key, top)
-    return top
 
 
 def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,15 +451,13 @@ FROM (
 """
 
 
-# Session-scoped memos for the repo's most-reused dedup relations (round 9,
-# the `_suffix_ranking` idiom): FIVE catalog queries ran the identical
-# MinHash(16)+LSH(4×4)+verify(J≥0.5) pipeline — `dedup_minhash_lsh`,
-# `dedup_cluster_components`, its star twin, `leakage_safe_split`,
-# `dedup_quality_keeper` — and three of those also the identical hash-min
-# connected components over its pairs. Both relations are dup-mass-bounded
-# (pairs ≤ verified near-dups; components ≤ clustered docs), so an eager
-# checkpoint is cheap to hold; keyed by session + corpus fingerprint, two
-# snapshots max, exactly like `_SUFFIX_ARTIFACT_CACHE`. Memo owners
+# Session memos for the repo's most-reused dedup relations: FIVE catalog
+# queries run the identical MinHash(16)+LSH(4×4)+verify(J≥0.5) pipeline —
+# `dedup_minhash_lsh`, `dedup_cluster_components`, its star twin,
+# `leakage_safe_split`, `dedup_quality_keeper` — and three of those also
+# the identical hash-min connected components over its pairs. Both
+# relations are dup-mass-bounded (pairs ≤ verified near-dups; components ≤
+# clustered docs), so an eager checkpoint is cheap to hold. Memo owners
 # (plans/memo_owners.py): `dedup_minhash_lsh` owns the pair pipeline,
 # `dedup_cluster_components` owns the hash-min CC; the star twin
 # recomputes its OWN components (the two CC algorithms cross-validating is
@@ -490,53 +468,28 @@ _LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
 _LSH_COMPONENTS_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _lsh_key(spark: SparkSession, sf_dir: str) -> tuple:
-    import os
-
-    table_path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    return (
-        spark.sparkContext.applicationId,
-        table_path,
-        _table_fingerprint(table_path),
-        3,
-        16,
-        4,
-        0.5,
-    )
-
-
+@session_memo(_LSH_PAIRS_CACHE, "documents")
 def _lsh_pairs_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized verified near-dup pair set (id_a, id_b, jaccard ≥ 0.5) over
     the snapshot's ``documents`` — see the cache comment above. The eager
     checkpoint also serves what the call sites' per-query
     ``localCheckpoint`` did before: the symmetrizing union inside
     ``connected_components`` consumes the pairs twice."""
-    key = _lsh_key(spark, sf_dir)
-    hit = _LSH_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    pairs = minhash_lsh_dedup(
+    return minhash_lsh_dedup(
         docs, "doc_id", "text", shingle_n=3, n_hashes=16, n_bands=4,
         threshold=0.5,
     ).localCheckpoint()
-    memo_put(_LSH_PAIRS_CACHE, key, pairs)
-    return pairs
 
 
+@session_memo(_LSH_COMPONENTS_CACHE, "documents")
 def _lsh_components_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized hash-min connected components (node, component) over the
     pairs artifact. No extra checkpoint wrap: ``connected_components``
     already returns a projection of its final per-round checkpoint."""
-    key = _lsh_key(spark, sf_dir)
-    hit = _LSH_COMPONENTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    comp = connected_components(
+    return connected_components(
         _lsh_pairs_artifact(spark, sf_dir), "id_a", "id_b"
     )
-    memo_put(_LSH_COMPONENTS_CACHE, key, comp)
-    return comp
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,55 +771,32 @@ FROM (
 )
 
 
-#: shared containment-scale-path artifacts (round 11, VERDICT r10 item 3):
-#: the trigram shingle table and the UNFILTERED single-slot MinHash
-#: candidate pair set at the SHIPPED config (τ=0.8, 16 hashes, df≤256,
-#: slot≤32) are derived identically by `dedup_containment_minhash_topk`
-#: (the serve path) and `containment_recall_audit` (which audits exactly
-#: that configuration). Same memo discipline as every other artifact
-#: (eager localCheckpoint, content-fingerprinted key, 2-snapshot
-#: eviction); memo owner: `dedup_containment_minhash_topk`
-#: (plans/memo_owners.py clears both caches together).
+#: shared containment-scale-path artifacts (VERDICT r10 item 3): the
+#: trigram shingle table and the UNFILTERED single-slot MinHash candidate
+#: pair set at the SHIPPED config (τ=0.8, 16 hashes, df≤256, slot≤32) are
+#: derived identically by `dedup_containment_minhash_topk` (the serve path)
+#: and `containment_recall_audit` (which audits exactly that
+#: configuration); memo owner: `dedup_containment_minhash_topk`.
 _CTM_SHINGLES_CACHE: dict[tuple, DataFrame] = {}
 _CTM_CANDS_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _ctm_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
-    import os
-
-    table_path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    return (
-        spark.sparkContext.applicationId,
-        table_path,
-        _table_fingerprint(table_path),
-        tag,
-    )
-
-
+@session_memo(_CTM_SHINGLES_CACHE, "documents")
 def _ctm_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized trigram shingle table over the snapshot's documents."""
     from platform_etl_drug_disease_spark.operators.dedup import _shingle_table
 
-    key = _ctm_key(spark, sf_dir, "shingle3")
-    hit = _CTM_SHINGLES_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    sh = _shingle_table(docs, "doc_id", "text", shingle_n=3).localCheckpoint()
-    memo_put(_CTM_SHINGLES_CACHE, key, sh)
-    return sh
+    return _shingle_table(docs, "doc_id", "text", shingle_n=3).localCheckpoint()
 
 
+@session_memo(_CTM_CANDS_CACHE, "documents")
 def _ctm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized unfiltered candidate (id_a, id_b) pairs at the shipped
     containment-LSH config, over the memoized shingle table. The pair set
     tracks duplicate mass (bucket-capped), so the checkpoint is small at
     any corpus size while its derivation is the family's big join."""
-    key = _ctm_key(spark, sf_dir, "ctm_cands_0.8_16_256_32")
-    hit = _CTM_CANDS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cands = containment_minhash_candidates(
+    return containment_minhash_candidates(
         _ctm_shingles(spark, sf_dir),
         "doc_id",
         threshold=0.8,
@@ -874,8 +804,6 @@ def _ctm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_shingle_df=256,
         max_slot_df=32,
     ).localCheckpoint()
-    memo_put(_CTM_CANDS_CACHE, key, cands)
-    return cands
 
 
 def dedup_containment_minhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2213,55 +2141,28 @@ ORACLES["substring_dedup_stats"] = _SUBSTR_SQL
 _LR_W = 8
 _LR_CAP = 512
 
-# Session-scoped memo for the suffix-ranking corpus artifact (VERDICT r8
-# item 1): `longest_repeat_census`, `top_repeated_spans`, and
-# `repeat_mass_by_source` all consume the SAME per-suffix exact repeat
-# lengths, and the prefix-doubling loop that computes them is the family's
-# single heaviest stage (~25 s at sf≈1). A real curation run asks all three
-# questions of one corpus snapshot, so the loop runs ONCE per
-# (session, corpus, knobs) and later queries reuse its eagerly-checkpointed
-# per-round frames — the `containment_corpus_index` build-once idiom, memoized
-# here because the catalog entry point is (spark, sf_dir) rather than a
-# caller-held frame. The cache holds at most TWO snapshots (``memo_put``),
-# so a session that alternates between two scale dirs or corpus versions keeps
-# both warm, evicting oldest-first so stale checkpoint blocks are released
-# to the ContextCleaner; keys carry the applicationId so
-# a frame never leaks across Spark sessions, plus a (size, mtime) content
-# fingerprint of the documents table so rewriting the SAME path within one
-# session (a regenerated fixture dir) misses instead of silently serving the
-# previous corpus's artifact.
+# Session memo for the suffix-ranking corpus artifact (VERDICT r8 item 1):
+# `longest_repeat_census`, `top_repeated_spans`, and `repeat_mass_by_source`
+# all consume the SAME per-suffix exact repeat lengths, and the
+# prefix-doubling loop that computes them is the family's single heaviest
+# stage (~25 s at sf≈1). A real curation run asks all three questions of
+# one corpus snapshot, so the loop runs once per snapshot and later queries
+# reuse its eagerly-checkpointed per-round frames — the
+# `containment_corpus_index` build-once idiom, memoized here because the
+# catalog entry point is (spark, sf_dir) rather than a caller-held frame.
 # tests/test_extensions.py::test_suffix_artifact_reuse pins hook == standalone.
 _SUFFIX_ARTIFACT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
-#: shared ANCHOR-UNIVERSE artifact (round 11, VERDICT r10 item 3): the
+#: shared ANCHOR-UNIVERSE artifact (VERDICT r10 item 3): the
 #: tokenized/repartitioned base table and the full-corpus anchor-df count
 #: are computed IDENTICALLY by the exact census build and by both sampled
 #: estimators (`capped_repeat_estimate`, `capped_mass_profile`) — the
-#: tokenize pass + one full-corpus shuffle repeated three times per
-#: session. Memoized exactly like the artifacts above (eager
-#: localCheckpoint, 2-snapshot eviction, content-fingerprinted key); memo
-#: owner: `longest_repeat_census` (plans/memo_owners.py clears this
-#: together with _SUFFIX_ARTIFACT_CACHE).
+#: tokenize pass + one full-corpus shuffle, otherwise repeated three times
+#: per session; memo owner: `longest_repeat_census`.
 _SUFFIX_BASE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
-def _table_fingerprint(path: str) -> tuple:
-    """(name, size, mtime_ns) of a parquet file, or of every entry of a
-    parquet directory — cheap (one listdir) and changes whenever the table
-    is rewritten in place."""
-    import os
-
-    if os.path.isdir(path):
-        return tuple(
-            sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-            )
-        )
-    st = os.stat(path)
-    return (os.path.basename(path), st.st_size, st.st_mtime_ns)
-
-
+@session_memo(_SUFFIX_ARTIFACT_CACHE, "documents")
 def _suffix_ranking(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Memoized ``(per_suffix, capped)`` from
     operators/dedup.longest_repeat_lengths over the snapshot's ``documents``
@@ -2269,21 +2170,8 @@ def _suffix_ranking(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     standalone run: the returned frames are filters over eager
     ``localCheckpoint`` blocks, so a second consumer re-reads cached blocks
     instead of re-running the doubling loop."""
-    import os
-
-    table_path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        table_path,
-        _table_fingerprint(table_path),
-        _LR_W,
-        _LR_CAP,
-    )
-    hit = _SUFFIX_ARTIFACT_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    per_suffix, capped = longest_repeat_lengths(
+    return longest_repeat_lengths(
         docs,
         "doc_id",
         "text",
@@ -2291,10 +2179,9 @@ def _suffix_ranking(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         max_anchor_df=_LR_CAP,
         frames=_suffix_base(spark, sf_dir),
     )
-    memo_put(_SUFFIX_ARTIFACT_CACHE, key, (per_suffix, capped))
-    return per_suffix, capped
 
 
+@session_memo(_SUFFIX_BASE_CACHE, "documents")
 def _suffix_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Memoized ``(base, anchor_counts)`` anchor-universe pair over the
     snapshot's ``documents`` table — see the ``_SUFFIX_BASE_CACHE`` comment.
@@ -2307,14 +2194,9 @@ def _suffix_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         suffix_base_plan,
     )
 
-    key = _artifact_key(spark, sf_dir)
-    hit = _SUFFIX_BASE_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     base = suffix_base_plan(docs, "doc_id", "text", _LR_W).localCheckpoint()
     cnt = suffix_anchor_counts(base, "doc_id", _LR_W).localCheckpoint()
-    memo_put(_SUFFIX_BASE_CACHE, key, (base, cnt))
     return base, cnt
 
 
@@ -2322,19 +2204,7 @@ _LM_STARTS_CACHE: dict[tuple, DataFrame] = {}
 _K1_REMOVALS_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _artifact_key(spark: SparkSession, sf_dir: str) -> tuple:
-    import os
-
-    table_path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    return (
-        spark.sparkContext.applicationId,
-        table_path,
-        _table_fingerprint(table_path),
-        _LR_W,
-        _LR_CAP,
-    )
-
-
+@session_memo(_LM_STARTS_CACHE, "documents")
 def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized LEFT-MAXIMAL repeat-start set — the family artifact's
     fifth consumer surface (VERDICT r9 item 6). One lag-window pass over
@@ -2345,13 +2215,9 @@ def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares ONE checkpointed pass instead of re-running the window.
     Dup-mass-bounded: at most one row per qualifying suffix, in practice
     one per maximal span occurrence."""
-    key = _artifact_key(spark, sf_dir)
-    hit = _LM_STARTS_CACHE.get(key)
-    if hit is not None:
-        return hit
     per_suffix, _capped = _suffix_ranking(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
-    starts = (
+    return (
         per_suffix.withColumn("__ppos", F.lag("pos").over(w))
         .withColumn("__pr", F.lag("repeat_len").over(w))
         .where(
@@ -2362,10 +2228,9 @@ def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "pos", "repeat_len")
         .localCheckpoint()
     )
-    memo_put(_LM_STARTS_CACHE, key, starts)
-    return starts
 
 
+@session_memo(_K1_REMOVALS_CACHE, "documents")
 def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized keep-one REMOVAL occurrence set (doc_id, pos, repeat_len):
     left-maximal spans of ≥ ``_STRIP_LEN`` tokens, identified by the md5
@@ -2376,10 +2241,6 @@ def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``repeat_keep_one_retention``) and the release DAG's ``keep_one``
     strip mode (VERDICT r9 item 4) — the accounting and the action consume
     the SAME checkpointed rows, so they can never diverge."""
-    key = _artifact_key(spark, sf_dir)
-    hit = _K1_REMOVALS_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     starts = _lm_starts(spark, sf_dir).where(
         F.col("repeat_len") >= _STRIP_LEN
@@ -2392,14 +2253,12 @@ def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "pos", "repeat_len", F.md5(span).alias("span_md5")
     )
     kw = Window.partitionBy("span_md5").orderBy("doc_id", "pos")
-    removals = (
+    return (
         occs.withColumn("__rk", F.row_number().over(kw))
         .where(F.col("__rk") > 1)
         .select("doc_id", "pos", "repeat_len")
         .localCheckpoint()
     )
-    memo_put(_K1_REMOVALS_CACHE, key, removals)
-    return removals
 
 
 def _interval_removed(occ: DataFrame) -> DataFrame:

@@ -17,28 +17,26 @@ from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.operators.arrays import flatten_distinct
 from platform_etl_drug_disease_spark.plans._util import arr_join, dround, dsum
-from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
+from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
 
 
-#: session memos for the trade graph's edge derivations (round-10
-#: optimization). Every graph query starts from the same lineitem⋈orders
-#: edge join, and six of them additionally pay the same (src,dst)-distinct
-#: shuffle — at sf0.1 that is ~1.1 s (join) / ~2.7 s (join+distinct) of
-#: identical work repeated per query. Same artifact pattern as
-#: plans/dedup_text's suffix/LSH memos: keyed by (applicationId, sf_dir),
-#: eagerly localCheckpoint'ed so the memo holds materialized rows (not a
-#: lineage that would re-run the join), 2-snapshot eviction
-#: (``memo_put``), owner ``trade_pagerank`` in plans/memo_owners.py. A
-#: 100-TB graph platform materializes the edge list once and runs every
-#: analysis over it — this memo is that design.
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SYM_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
+#: session memos for the trade graph's edge derivations. Every graph query
+#: starts from the same lineitem⋈orders edge join, and six of them
+#: additionally pay the same (src,dst)-distinct shuffle — at sf0.1 that is
+#: ~1.1 s (join) / ~2.7 s (join+distinct) of identical work repeated per
+#: query. The memo holds materialized rows, not a lineage that would re-run
+#: the join; owner ``trade_pagerank``. A 100-TB graph platform materializes
+#: the edge list once and runs every analysis over it — this memo is that
+#: design.
+_EDGES_CACHE: dict[tuple, DataFrame] = {}
+_SYM_EDGES_CACHE: dict[tuple, DataFrame] = {}
 #: support-thresholded co-supplier pair set (triangles / k-core /
 #: clustering); memo owner: supplier_triangles
-_CO_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_CO_PAIRS_CACHE: dict[tuple, DataFrame] = {}
 
 
+@session_memo(_SYM_EDGES_CACHE, "lineitem", "orders")
 def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected trade edges (sim.sc:53-54 semantics). Customer nodes keep
     their key; supplier nodes are offset by 10^12 so the id spaces don't
@@ -48,12 +46,7 @@ def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of union(swap) — the union form scans the upstream join twice
     (caught by plan_lint), which at 100 TB recomputes the whole fact join.
     Session-memoized (see _SYM_EDGES_CACHE above)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SYM_EDGES_CACHE.get(key)
-    if hit is None:
-        hit = _sym_edges_raw(spark, sf_dir).distinct().localCheckpoint()
-        memo_put(_SYM_EDGES_CACHE, key, hit)
-    return hit
+    return _sym_edges_raw(spark, sf_dir).distinct().localCheckpoint()
 
 
 # Supplier node ids are offset into their own id space so customer and
@@ -65,30 +58,24 @@ def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 SUPPLIER_OFFSET = 1_000_000_000_000
 
 
+@session_memo(_EDGES_CACHE, "lineitem", "orders")
 def _directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed (customer → supplier) purchase edges, one row per lineitem
     (NOT distinct). The single definition of the trade graph's edge
     derivation — every graph query (sym/BFS/pagerank/HITS/triangles) builds
     from this, so the join and the id-space offset can never diverge."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
     li = load_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
     orders = load_table(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
-    edges = (
+    return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("src"),
             (F.col("l_suppkey") + F.lit(SUPPLIER_OFFSET)).alias("dst"),
         )
-        # session memo (see _EDGES_CACHE): eager checkpoint so every graph
-        # query after the first rides materialized rows instead of
-        # re-running the fact join
+        # eager checkpoint so every graph query after the first rides
+        # materialized rows instead of re-running the fact join
         .localCheckpoint()
     )
-    memo_put(_EDGES_CACHE, key, edges)
-    return edges
 
 
 def _sym_edges_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -379,22 +366,16 @@ LIMIT 20
 """
 
 
+@session_memo(_CO_PAIRS_CACHE, "lineitem")
 def _co_supplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-thresholded co-supplier edges (u < v, ≥5 shared orders) —
     shared by the triangle and k-core queries; see supplier_triangles for
-    why the threshold is mandatory on a co-occurrence graph."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CO_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # session memo (same pattern as _EDGES_CACHE; memo owner is
-    # supplier_triangles): the thresholded pair set is tiny (≤ a few rows
-    # per recurring supplier pair) while its derivation is a lineitem
-    # self-join — exactly the artifact a graph platform materializes once
-    # for its triangle/k-core/clustering passes
-    pairs = _co_supplier_pairs_plan(spark, sf_dir).localCheckpoint()
-    memo_put(_CO_PAIRS_CACHE, key, pairs)
-    return pairs
+    why the threshold is mandatory on a co-occurrence graph. Memoized: the
+    thresholded pair set is tiny (≤ a few rows per recurring supplier pair)
+    while its derivation is a lineitem self-join — exactly the artifact a
+    graph platform materializes once for its triangle/k-core/clustering
+    passes."""
+    return _co_supplier_pairs_plan(spark, sf_dir).localCheckpoint()
 
 
 def _co_supplier_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ from platform_etl_drug_disease_spark.operators.joins import (
 )
 from platform_etl_drug_disease_spark.operators.windows import top_n_per_group
 from platform_etl_drug_disease_spark.plans._util import arr_join, davg, dround, dsum
-from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
+from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
 
 
@@ -496,13 +496,11 @@ GROUP BY s_nationkey
 #: session memo for the per-(returnflag, extendedprice) lineitem value
 #: histogram — three catalog queries (price_quantiles_per_flag,
 #: tdigest_quantile_audit, price_mad_stats) derive the IDENTICAL histogram
-#: from the identical fact scan (round-10 optimization; same artifact
-#: pattern and 2-snapshot eviction as plans/graph's edge memos). Memo
-#: owner: price_mad_stats (plans/memo_owners.py). The
+#: from the identical fact scan. Memo owner: price_mad_stats. The
 #: histogram is value-GRID-bounded (~1 row per distinct (flag, cents)
 #: price), so the checkpoint stays tiny at any corpus size — it is exactly
 #: the reusable statistic a warehouse materializes once per snapshot.
-_PRICE_HIST_CACHE: dict[tuple[str, str], DataFrame] = {}
+_PRICE_HIST_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _price_flag_histogram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,13 +516,9 @@ def _price_flag_histogram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return value_histogram(li, ["l_returnflag"], "l_extendedprice")
 
 
+@session_memo(_PRICE_HIST_CACHE, "lineitem")
 def _price_flag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PRICE_HIST_CACHE.get(key)
-    if hit is None:
-        hit = _price_flag_histogram_plan(spark, sf_dir).localCheckpoint()
-        memo_put(_PRICE_HIST_CACHE, key, hit)
-    return hit
+    return _price_flag_histogram_plan(spark, sf_dir).localCheckpoint()
 
 
 def price_quantiles_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:

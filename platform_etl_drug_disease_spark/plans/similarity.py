@@ -25,7 +25,7 @@ from platform_etl_drug_disease_spark.operators.similarity import (
     semantic_dedup,
 )
 from platform_etl_drug_disease_spark.plans._util import dround
-from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
+from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import (
     ensure_compute_partitions,
     load_table,
@@ -401,25 +401,20 @@ _KM_K, _KM_ITERS = 16, 2
 
 
 #: session memo for the 2-iteration spherical k-means fit over the
-#: embeddings (round-10 optimization; same artifact pattern / 2-snapshot
-#: eviction as the graph edge memos). ``kmeans_cells`` (the index-build
-#: query and its memo owner in plans/memo_owners.py) and
-#: ``knn_cosine_ivf_kmeans`` (build + serve composition) run the IDENTICAL
-#: fit: same stride seeds, same _KM_ITERS, same input. At scale
-#: the fitted centroid table is exactly the artifact an ANN platform
+#: embeddings. ``kmeans_cells`` (the index-build query and the memo's
+#: owner) and ``knn_cosine_ivf_kmeans`` (build + serve composition) run
+#: the IDENTICAL fit: same stride seeds, same _KM_ITERS, same input. At
+#: scale the fitted centroid table is exactly the artifact an ANN platform
 #: materializes once and serves from — holds (centroids, assignments),
 #: both eagerly checkpointed (centroids: K rows; assignments: one
 #: (vec_id, cent_id) pair per vector).
-_KMEANS_FIT_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+_KMEANS_FIT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
+@session_memo(_KMEANS_FIT_CACHE, "embeddings")
 def _kmeans_fit_artifact(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KMEANS_FIT_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
     stride = emb.agg(
         F.ceil(F.count(F.lit(1)) / F.lit(_KM_K)).cast("bigint").alias("__stride")
@@ -434,7 +429,6 @@ def _kmeans_fit_artifact(
     cents, assigned = kmeans_fit(emb, seeds, n_iters=_KM_ITERS)
     out = (cents.localCheckpoint(), assigned.localCheckpoint())
     emb.unpersist()
-    memo_put(_KMEANS_FIT_CACHE, key, out)
     return out
 
 

@@ -31,7 +31,7 @@ from platform_etl_drug_disease_spark.plans.events_time import (
     _HOURLY_SQL,
     _SESSIONS_SQL,
 )
-from platform_etl_drug_disease_spark.plans.memo_owners import memo_put
+from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
 from platform_etl_drug_disease_spark.streaming.windows import (
     input_scaled_shuffle_partitions,
@@ -251,26 +251,74 @@ _DOCS_SCHEMA = (
 
 _FEED_SCHEMA = "doc_id bigint, text string"
 
-# staged-feed landing dirs, one per (session, corpus dir, n_files) — see
+# staged-feed landing dirs, shared by the two multibatch twins — see
 # _stage_feed's docstring.
-_STAGED_FEED_CACHE: dict[tuple[str, str, int], str] = {}
+_STAGED_FEED_CACHE: dict[tuple, str] = {}
 
-#: session memos for the serve twins' CORPUS SNAPSHOT artifacts (round-10
-#: optimization; same pattern / 2-snapshot eviction as the graph edge
-#: memos). The single-batch and multibatch twins of each family index the
-#: IDENTICAL static corpus — rebuilding the shingle table / band index /
-#: slot-row index per catalog query repeated ~1.5-2 s of identical work.
-#: A serving platform builds the corpus snapshot index once and matches
-#: every feed batch against it; that is exactly this memo. Memo owners
-#: (plans/memo_owners.py): streaming_incremental_dedup (minhash),
-#: streaming_containment_incremental (containment). Eager localCheckpoints
-#: replace the old persist+finally-unpersist lifecycle (ADVICE r8 was
-#: about LEAKED lazy persists; a checkpointed artifact with eviction is a
-#: deliberate retention, not a leak).
-_STREAM_MINHASH_CACHE: dict = {}
-_STREAM_CONTAINMENT_CACHE: dict = {}
+#: session memos for the serve twins' CORPUS SNAPSHOT artifacts. The
+#: single-batch and multibatch twins of each family index the IDENTICAL
+#: static corpus — rebuilding the shingle table / band index / slot-row
+#: index per catalog query repeated ~1.5-2 s of identical work. A serving
+#: platform builds the corpus snapshot index once and matches every feed
+#: batch against it; that is exactly this memo. Memo owners:
+#: streaming_incremental_dedup (minhash), streaming_containment_incremental
+#: (containment). Eager localCheckpoints replace the old
+#: persist+finally-unpersist lifecycle (ADVICE r8 was about LEAKED lazy
+#: persists; a checkpointed artifact with eviction is a deliberate
+#: retention, not a leak).
+_STREAM_MINHASH_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+_STREAM_CONTAINMENT_CACHE: dict[tuple, tuple[DataFrame, ...]] = {}
 
 
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The static corpus the serve twins match against: every document the
+    feed (``doc_id % 10 == 0``) does not carry."""
+    return load_table(spark, sf_dir, "documents", ["doc_id", "text"]).where(
+        F.col("doc_id") % 10 != 0
+    )
+
+
+@session_memo(_STREAM_MINHASH_CACHE, "documents")
+def _minhash_corpus_artifacts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(shingle table, band index) of the corpus snapshot, built once
+    outside the micro-batch loop and shared by the MinHash serve twins."""
+    from platform_etl_drug_disease_spark.operators.dedup import (
+        _shingle_table,
+        banded_signatures,
+    )
+
+    c_sh = _shingle_table(
+        _corpus(spark, sf_dir), "doc_id", "text", 3
+    ).localCheckpoint()
+    return c_sh, banded_signatures(c_sh, "doc_id", 16, 4).localCheckpoint()
+
+
+@session_memo(_STREAM_CONTAINMENT_CACHE, "documents")
+def _containment_corpus_artifacts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(shingles, hot-shingle list, bucket-capped slot-row index) of the
+    corpus snapshot, built once outside the micro-batch loop and shared by
+    the containment serve twins."""
+    from platform_etl_drug_disease_spark.operators.dedup import (
+        _hot_shingle_hashes,
+        _shingle_table,
+        containment_corpus_index,
+    )
+
+    c_sh = _shingle_table(
+        _corpus(spark, sf_dir), "doc_id", "text", 3
+    ).localCheckpoint()
+    c_hot = _hot_shingle_hashes(c_sh, 256).localCheckpoint()
+    c_idx = containment_corpus_index(
+        c_sh, "doc_id", n_hashes=16, max_slot_df=32, hot_shingles=c_hot
+    ).localCheckpoint()
+    return c_sh, c_hot, c_idx
+
+
+@session_memo(_STAGED_FEED_CACHE, "documents")
 def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     """Write the incoming-feed subset (``doc_id % 10 == 0``, the same docs
     the single-batch twins stream) into a fresh landing directory as
@@ -286,8 +334,8 @@ def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     with overwrite mode, so repeated invocations — timed repeats of a
     multibatch query, stream_batch_walls repeats — reuse one directory
     instead of accumulating corpus-sized mkdtemp copies for the life of
-    the box (round-9 review finding). A per-(session, args) memo
-    skips even the overwrite rewrite within one session. (The runners'
+    the box (round-9 review finding). The session memo skips even the
+    overwrite rewrite while the corpus is unchanged. (The runners'
     match OUTPUT dirs stay mkdtemp-fresh on purpose: reusing a streaming
     checkpoint dir would make a new run think the feed was already
     processed.)"""
@@ -295,10 +343,6 @@ def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     import os
     import tempfile
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), n_files)
-    hit = _STAGED_FEED_CACHE.get(key)
-    if hit is not None:
-        return hit
     tag = hashlib.md5(
         f"{os.path.abspath(sf_dir)}|{n_files}".encode()
     ).hexdigest()[:12]
@@ -312,7 +356,6 @@ def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
         .write.mode("overwrite")
         .parquet(feed_dir)
     )
-    _STAGED_FEED_CACHE[key] = feed_dir
     return feed_dir
 
 
@@ -353,40 +396,24 @@ def _minhash_stream_run(
     out_dir) — out_dir keeps the per-batch partition column readable for
     the parity tests. ``batch_log`` (when given) receives one
     ``{batch_id, n_docs, wall_s}`` dict per micro-batch — the
-    flat-per-batch-cost evidence of VERDICT r8 item 3. All session-lifetime
-    persists are released in ``finally`` blocks: a micro-batch that raises
-    must not leak the corpus tables for the rest of the session (ADVICE
-    r8)."""
+    flat-per-batch-cost evidence of VERDICT r8 item 3. The per-batch
+    persist is released in a ``finally`` block: a micro-batch that raises
+    must not leak it for the rest of the session (ADVICE r8)."""
     import tempfile
     import time
 
     from platform_etl_drug_disease_spark.operators.dedup import (
         _shingle_table,
-        banded_signatures,
         incremental_minhash_matches,
     )
     from platform_etl_drug_disease_spark.streaming.windows import (
         write_batch_idempotent,
     )
 
-    corpus = (
-        load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-        .where(F.col("doc_id") % 10 != 0)
-    )
+    corpus = _corpus(spark, sf_dir)
     feed = _feed_stream(spark, sf_dir, feed_dir, max_files_per_trigger)
     out_dir = tempfile.mkdtemp(prefix="stream_incdedup_")
-
-    # corpus snapshot artifacts built ONCE PER SESSION (round-8 finding
-    # moved them outside the micro-batch loop; round 10 memoizes them
-    # across the single-batch/multibatch twins — see _STREAM_MINHASH_CACHE)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _STREAM_MINHASH_CACHE.get(key)
-    if hit is None:
-        c_sh = _shingle_table(corpus, "doc_id", "text", 3).localCheckpoint()
-        c_bands = banded_signatures(c_sh, "doc_id", 16, 4).localCheckpoint()
-        hit = (c_sh, c_bands)
-        memo_put(_STREAM_MINHASH_CACHE, key, hit)
-    corpus_sh, corpus_bands = hit
+    corpus_sh, corpus_bands = _minhash_corpus_artifacts(spark, sf_dir)
 
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -427,8 +454,7 @@ def _minhash_stream_run(
     # shingle joins are compute-bound — core-count partitions win
     # (measured round 10: containment 3.7 s -> 9.4 s when scoped to the
     # bytes-derived count).
-    # No finally-unpersist: the corpus artifacts are session memos now
-    # (checkpointed, evicted by memo_put).
+    # No finally-unpersist: the corpus artifacts are session memos.
     q = (
         feed.writeStream.foreachBatch(match_batch)
         .option("checkpointLocation", f"{out_dir}/_ckpt")
@@ -452,41 +478,24 @@ def _containment_stream_run(
     """Shared runner for the containment streaming serve twins — same shape
     as ``_minhash_stream_run`` with the containment matcher's three corpus
     snapshot artifacts (shingles, hot-shingle list, bucket-capped slot-row
-    index) built once outside the loop and released in ``finally`` (ADVICE
-    r8: a raising micro-batch must not leak them for the session)."""
+    index) built once outside the loop."""
     import tempfile
     import time
 
     from platform_etl_drug_disease_spark.operators.dedup import (
-        _hot_shingle_hashes,
         _shingle_table,
-        containment_corpus_index,
         incremental_containment_matches,
     )
     from platform_etl_drug_disease_spark.streaming.windows import (
         write_batch_idempotent,
     )
 
-    corpus = (
-        load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-        .where(F.col("doc_id") % 10 != 0)
-    )
+    corpus = _corpus(spark, sf_dir)
     feed = _feed_stream(spark, sf_dir, feed_dir, max_files_per_trigger)
     out_dir = tempfile.mkdtemp(prefix="stream_inccont_")
-
-    # corpus snapshot artifacts: session-memoized across the twins (see
-    # _STREAM_CONTAINMENT_CACHE; round 10)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _STREAM_CONTAINMENT_CACHE.get(key)
-    if hit is None:
-        c_sh = _shingle_table(corpus, "doc_id", "text", 3).localCheckpoint()
-        c_hot = _hot_shingle_hashes(c_sh, 256).localCheckpoint()
-        c_idx = containment_corpus_index(
-            c_sh, "doc_id", n_hashes=16, max_slot_df=32, hot_shingles=c_hot
-        ).localCheckpoint()
-        hit = (c_sh, c_hot, c_idx)
-        memo_put(_STREAM_CONTAINMENT_CACHE, key, hit)
-    corpus_sh, corpus_hot, corpus_index = hit
+    corpus_sh, corpus_hot, corpus_index = _containment_corpus_artifacts(
+        spark, sf_dir
+    )
 
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -529,8 +538,7 @@ def _containment_stream_run(
     # shingle joins are compute-bound — core-count partitions win
     # (measured round 10: containment 3.7 s -> 9.4 s when scoped to the
     # bytes-derived count).
-    # No finally-unpersist: the corpus artifacts are session memos now
-    # (checkpointed, evicted by memo_put).
+    # No finally-unpersist: the corpus artifacts are session memos.
     q = (
         feed.writeStream.foreachBatch(match_batch)
         .option("checkpointLocation", f"{out_dir}/_ckpt")

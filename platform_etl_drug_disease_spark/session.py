@@ -27,6 +27,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Half the machine's physical memory, at least 1g and at most the 16g
+    the engine was tuned with — local mode runs everything in the driver
+    JVM, which must leave room for the Python workers and the OS."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16, max(1, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -53,7 +64,10 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         # local mode runs driver+executors in one JVM; the 1g default heap
         # OOMs on self-join expansions long before the data is "big"
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # columnar parquet reads stay vectorized; explicit for clarity.
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))

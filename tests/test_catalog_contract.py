@@ -7,7 +7,8 @@ can't silently regress them:
   carries a DuckDB value oracle (``oracle_sql()``);
 - the only queries without a value oracle are the four rows-only sketch
   originals, so a new query without an oracle fails here;
-- every session memo owner in ``plans.memo_owners`` is a catalog query.
+- every session memo owner in ``plans.memo_owners`` is a catalog query,
+  and every session memo dict under ``plans/`` has an owner.
 """
 
 from __future__ import annotations
@@ -134,16 +135,33 @@ def test_every_survey_id_has_an_oracled_query():
 
 
 def test_memo_owner_registry():
-    """Every memo owner in plans.memo_owners is a real catalog query, and
-    every reset is callable and idempotent."""
+    """Every memo owner in plans.memo_owners is a real catalog query, every
+    reset is callable and idempotent, and some reset clears every
+    module-level ``_*_CACHE`` dict under ``plans/``."""
+    import importlib
+    import pkgutil
+
+    from platform_etl_drug_disease_spark import plans
     from platform_etl_drug_disease_spark.plans import memo_owners
 
     q, _ = _catalog()
     unknown = [n for n in memo_owners.OWNERS if n not in q]
     assert not unknown, f"memo owners that are not catalog queries: {unknown}"
+    caches = {}
+    for m in pkgutil.iter_modules(plans.__path__):
+        mod = importlib.import_module(f"{plans.__name__}.{m.name}")
+        for name, v in vars(mod).items():
+            if name[0] == "_" and name.endswith("_CACHE") and isinstance(v, dict):
+                caches[f"{m.name}.{name}"] = v
+    assert caches
+    probe = object()
+    for c in caches.values():
+        c[probe] = None
     for reset in memo_owners.OWNERS.values():
         reset()  # must not raise
         reset()  # idempotent
+    unowned = sorted(n for n, c in caches.items() if c.pop(probe, 1) is None)
+    assert not unowned, f"memo caches no OWNERS reset clears: {unowned}"
 
 
 def test_memo_put_keeps_the_two_newest_snapshots():

@@ -1904,35 +1904,114 @@ def test_suffix_artifact_reuse(spark, tmp_path):
     dt._SUFFIX_ARTIFACT_CACHE.clear()
 
 
-def test_suffix_artifact_fingerprint_miss(spark, tmp_path):
-    """Rewriting the documents table at the SAME path within one session
-    must MISS the suffix-artifact memo (the key carries a size/mtime
-    fingerprint — round-9 review finding): serving the previous corpus's
-    checkpoint-backed frames would be a silent wrong answer."""
-    from platform_etl_drug_disease_spark.plans import dedup_text as dt
+_P12 = " ".join(f"p{i}" for i in range(12))
+_Q20 = " ".join(f"q{i}" for i in range(20))
+_DOCS_DDL = "doc_id: long, text: string"
+_LI_SUPP_DDL = "l_orderkey: long, l_suppkey: long"
+_EMB_DDL = "vec_id: long, embedding: array<float>"
 
-    p1 = " ".join(f"p{i}" for i in range(12))
-    docs_v1 = [(1, p1 + " a1"), (2, "b1 " + p1)]
-    path = str(tmp_path / "documents.parquet")
-    spark.createDataFrame(docs_v1, "doc_id: long, text: string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
-    n1 = dt._suffix_ranking(spark, str(tmp_path))[0].count()
-    assert n1 > 0
+#: case -> (module, accessor, tables written once {name: (ddl, rows)},
+#: rewritten table (name, ddl, rows_v1, rows_v2), probe of the artifact,
+#: probe on v1, probe on v2). Every memoized accessor must miss when a
+#: table it reads is rewritten in place at the same path.
+_FINGERPRINT_CASES = {
+    # three docs carry the 20-token passage in v2: doc 3 (absent from v1)
+    # must show up in the per-suffix repeats
+    "suffix_ranking": (
+        "dedup_text", "_suffix_ranking", {},
+        ("documents", _DOCS_DDL,
+         [(1, _P12 + " a1"), (2, "b1 " + _P12)],
+         [(1, _Q20 + " a1"), (2, "b1 " + _Q20), (3, _Q20 + " c9")]),
+        lambda a, sf: sorted({r.doc_id for r in a[0].collect()}),
+        [1, 2], [1, 2, 3],
+    ),
+    "directed_edges": (
+        "graph", "_directed_edges",
+        {"orders": ("o_orderkey: long, o_custkey: long", [(1, 7)])},
+        ("lineitem", _LI_SUPP_DDL, [(1, 10)], [(1, 10), (1, 20)]),
+        lambda a, sf: sorted(r.dst - 10**12 for r in a.collect()),
+        [10], [10, 20],
+    ),
+    # support ≥ 5 shared orders: v1 pairs suppliers 1-2, v2 pairs 1-3
+    "co_supplier_pairs": (
+        "graph", "_co_supplier_pairs", {},
+        ("lineitem", _LI_SUPP_DDL,
+         [(o, s) for o in range(5) for s in (1, 2)],
+         [(o, s) for o in range(5) for s in (1, 3)]),
+        lambda a, sf: [tuple(r) for r in a.collect()],
+        [(1, 2)], [(1, 3)],
+    ),
+    "price_flag_histogram": (
+        "relational", "_price_flag_histogram", {},
+        ("lineitem", "l_returnflag: string, l_extendedprice: double",
+         [("A", 1.0)], [("A", 1.0), ("R", 2.0), ("R", 2.0)]),
+        lambda a, sf: sorted(tuple(r) for r in a.collect()),
+        [("A", 1.0, 1)], [("A", 1.0, 1), ("R", 2.0, 2)],
+    ),
+    "kmeans_fit": (
+        "similarity", "_kmeans_fit_artifact", {},
+        ("embeddings", _EMB_DDL,
+         [(i, [1.0, float(i), 0.0]) for i in range(3)],
+         [(i, [1.0, float(i), 0.0]) for i in range(5)]),
+        lambda a, sf: sorted(r.vec_id for r in a[1].collect()),
+        [0, 1, 2], [0, 1, 2, 3, 4],
+    ),
+    # the landing dir's path is the same for both snapshots; its contents
+    # must be re-staged from the rewritten table
+    "stage_feed": (
+        "streaming_media", "_stage_feed", {},
+        ("documents", _DOCS_DDL,
+         [(10, "a b c"), (11, "d e f")], [(10, "a b c"), (20, "g h i")]),
+        lambda a, sf: sorted(
+            r.doc_id for r in sf.read.parquet(a).collect()
+        ),
+        [10], [10, 20],
+    ),
+}
 
-    q1 = " ".join(f"q{i}" for i in range(20))
-    docs_v2 = [(1, q1 + " a1"), (2, "b1 " + q1), (3, q1 + " c9")]
-    spark.createDataFrame(docs_v2, "doc_id: long, text: string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
-    ps2, _ = dt._suffix_ranking(spark, str(tmp_path))
-    # three docs now carry the 20-token passage: more qualifying suffixes,
-    # and doc 3 (absent from v1) must appear — both impossible on a stale
-    # memo hit.
-    assert ps2.count() > n1
-    assert ps2.where("doc_id = 3").count() > 0
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
+
+@pytest.mark.parametrize("case", sorted(_FINGERPRINT_CASES))
+def test_suffix_artifact_fingerprint_miss(spark, tmp_path, case):
+    """Rewriting a table at the SAME path within one session must MISS
+    every session memo that reads it (the key carries a content
+    fingerprint of each table — round-9 review finding): serving the
+    previous snapshot's checkpoint-backed artifact would be a silent wrong
+    answer. On the unchanged table a second call is a memo hit."""
+    import importlib
+
+    mod_name, fn_name, fixed, rewritten, probe, want_v1, want_v2 = (
+        _FINGERPRINT_CASES[case]
+    )
+    mod = importlib.import_module(
+        f"platform_etl_drug_disease_spark.plans.{mod_name}"
+    )
+    accessor = getattr(mod, fn_name)
+    sf = str(tmp_path)
+    args = (3,) if case == "stage_feed" else ()
+
+    def write(name, ddl, rows):
+        spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(tmp_path / f"{name}.parquet"))
+
+    for name, (ddl, rows) in fixed.items():
+        write(name, ddl, rows)
+    name, ddl, rows_v1, rows_v2 = rewritten
+    write(name, ddl, rows_v1)
+    from platform_etl_drug_disease_spark.plans.memo_owners import OWNERS
+
+    for reset in OWNERS.values():
+        reset()
+    a1 = accessor(spark, sf, *args)
+    hit = accessor(spark, sf, *args)
+    pairs = zip(a1, hit) if isinstance(a1, tuple) else [(a1, hit)]
+    assert all(x is y for x, y in pairs)  # memo hit: no rebuild
+    assert probe(a1, spark) == want_v1
+
+    write(name, ddl, rows_v2)
+    assert probe(accessor(spark, sf, *args), spark) == want_v2
+    for reset in OWNERS.values():
+        reset()
 
 
 def test_containment_topk_artifact_reuse(spark, tmp_path):

@@ -138,18 +138,9 @@ def main() -> None:
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
 
-    from pyspark.sql import SparkSession
+    from platform_etl_drug_disease_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .appName("dedup_scale_stress")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="dedup_scale_stress")
     spark.sparkContext.setLogLevel("ERROR")
 
     from platform_etl_drug_disease_spark.operators.dedup import (

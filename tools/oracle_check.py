@@ -1,16 +1,19 @@
-"""Local mirror of the driver's correctness gate.
+"""Correctness gate for the query catalog: every query against its DuckDB
+oracle.
 
 Runs every ``queries()`` entry in Spark and its ``oracle_sql()`` in DuckDB on
-the same sf dir, then compares the way the driver does: both results go
-through pandas (``toPandas()`` / ``rel.df()``), columns sorted by name, rows
-canonically ordered, then exact value AND dtype comparison. This is strictly
-at-least-as-hard as the driver's check, which surfaced two failure classes
-round 1 that a collect()-based compare hid:
+the same sf dir, then compares them strictly: both results go through pandas
+(``toPandas()`` / ``rel.df()``), columns sorted by name, rows canonically
+ordered, then exact value AND dtype comparison. The pandas route catches two
+failure classes a collect()-based compare hides:
 
-- array-typed output columns crash the driver's ``sort_values`` canonicalizer
+- array-typed output columns crash a pandas ``sort_values`` canonicalizer
   (``TypeError: unhashable type: 'list'``) → here an explicit FAIL;
 - DuckDB HUGEINT sums land in pandas as float64 while Spark emits int64 —
   equal values, different hashes → here a dtype FAIL.
+
+Queries without an oracle (the rows-only sketches) print ``ok?`` with their
+row count. The exit status is non-zero when any query fails.
 
 Run before every commit:
 
