@@ -33,13 +33,6 @@ def group_collect_set(
     return df.groupBy(*keys).agg(arr.alias(out))
 
 
-def group_approx_distinct(
-    df: DataFrame, keys: list[str], value: str, out: str, rsd: float = 0.05
-) -> DataFrame:
-    """A2: HLL++ cardinality per group (node degree, sim.sc:74)."""
-    return df.groupBy(*keys).agg(F.approx_count_distinct(value, rsd).alias(out))
-
-
 def grouped_top_k(
     df: DataFrame,
     keys: list[str],

@@ -12,7 +12,7 @@ serialization; SURVEY.md D1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -21,19 +21,6 @@ def flatten_distinct(col: Column | str) -> Column:
     (the reference's genAncestors UDF, sim.sc:171-176)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.array_distinct(F.flatten(c))
-
-
-def explode_col(
-    df: DataFrame, array_col: str | Column, out: str, keep_empty: bool = False, pos: str | None = None
-) -> DataFrame:
-    """F1: array→rows. ``keep_empty`` uses explode_outer (null row for
-    null/empty arrays — the reference's plain explode silently drops them);
-    ``pos`` adds the element index via posexplode."""
-    c = F.col(array_col) if isinstance(array_col, str) else array_col
-    if pos is not None:
-        return df.select("*", F.posexplode(c).alias(pos, out))
-    fn = F.explode_outer if keep_empty else F.explode
-    return df.withColumn(out, fn(c))
 
 
 def overlap_coefficient(a: Column | str, b: Column | str) -> Column:

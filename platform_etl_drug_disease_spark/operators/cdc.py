@@ -16,8 +16,8 @@ The 100-TB shape:
   (key → version desc). Map-side, AQE coalesces/splits the post-shuffle
   partitions; a hot key (many versions of one doc) is bounded by the change
   batch, not the corpus.
-- The base side should arrive partitioned by the merge key (the bucketed /
-  sorted-shard writers in sources/writers.py produce exactly that layout),
+- The base side should arrive partitioned by the merge key
+  (sources/writers.py:write_bucketed_table produces exactly that layout),
   in which case the exchange on the base side disappears and only the small
   change batch shuffles.
 - At real lakehouse scale the base is additionally pruned to the partitions
@@ -68,21 +68,6 @@ def upsert_latest(
             tombstone_col
         )
     return out
-
-
-def changes_only_view(
-    base: DataFrame,
-    changes: DataFrame,
-    keys: Sequence[str],
-    version_col: str = "version",
-) -> DataFrame:
-    """Rows of ``base`` whose key is touched by ``changes`` — the partition
-    prune / conflict-inspection view: what a merge-on-read reader would
-    rewrite. The change-key set is broadcast (a change batch is small
-    relative to the snapshot by definition), so the base never shuffles."""
-    key_cols = [F.col(k) for k in keys]
-    touched = changes.select(*key_cols).distinct()
-    return base.join(F.broadcast(touched), list(keys), "left_semi")
 
 
 def scd2_history(

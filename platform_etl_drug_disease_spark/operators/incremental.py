@@ -16,8 +16,7 @@ merging k states is a unionByName + one groupBy — cost tracks the batch
 and the touched key set, never the history. Land the state with
 sources/writers.py:write_bucketed_table on the state keys and the merge's
 exchange disappears on the state side (only the new batch shuffles); at
-lakehouse scale the rewrite prunes to the buckets the batch touches
-(operators/cdc.py:changes_only_view is the same pattern).
+lakehouse scale the rewrite prunes to the buckets the batch touches.
 
 Readout (counts/sums/averages in user-facing types) happens at query time
 via :func:`readout`; the state itself never leaves decimal/long.

@@ -7,7 +7,9 @@ dimension joins (sim.sc relies on the 10 MB auto-threshold), semi/anti forms
 for membership filtering (the reference emulates a semijoin with an inner join
 at sim.sc:451), and salted joins for skewed keys (hub proteins in the
 interaction network are power-law — a salted broadcast-free fallback matters
-at scale; AQE skew-join handles the sort-merge path).
+at scale; AQE skew-join handles the sort-merge path). ``symmetrize`` is the
+one edge symmetrization every undirected-graph query and the pipeline's
+network use.
 """
 
 from __future__ import annotations
@@ -77,6 +79,24 @@ def annotate_edges(
         .drop("__k")
     )
     return out
+
+
+def symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """U1: undirected closure of an edge table — every row (src, dst, rest)
+    becomes (src, dst, rest) and (dst, src, rest) (sim.sc:53-54).
+
+    One pass: a 2-element explode of ``struct(src, dst)`` and
+    ``struct(dst, src)``. The ``union(swap)`` form references ``edges``
+    twice, so its whole upstream plan (a scan, a fact join, a verify stage)
+    executes twice. No ``distinct``: callers that need set semantics add
+    it, and callers whose next step dedups per group skip the shuffle.
+    Output columns: ``src``, ``dst``, then the other columns in order."""
+    rest = [c for c in edges.columns if c not in (src, dst)]
+    both = F.array(
+        F.struct(F.col(src).alias(src), F.col(dst).alias(dst)),
+        F.struct(F.col(dst).alias(src), F.col(src).alias(dst)),
+    )
+    return edges.select(F.explode(both).alias("__e"), *rest).select("__e.*", *rest)
 
 
 def salted_join(

@@ -1,5 +1,5 @@
-"""Multi-dimensional data layout: Z-order (Morton) interleaving and the
-clustered parquet writer built on it.
+"""Multi-dimensional data layout: Z-order (Morton) interleaving, in Spark
+and in the portable SQL the oracle runs.
 
 Why this exists at 100 TB: partition pruning handles ONE dimension (the
 directory key); every other predicate relies on parquet row-group/file
@@ -8,8 +8,8 @@ useless ones on ``y``; interleaving the bits of both keys into a single
 Morton code and range-partitioning + sorting on it keeps BOTH columns'
 per-file ranges narrow, so a scan with a filter on either dimension skips
 most files. This is the same layout trick Delta/Iceberg expose as
-``OPTIMIZE ... ZORDER BY`` — here expressed as plain Spark expressions plus
-``repartitionByRange``/``sortWithinPartitions``, nothing engine-specific.
+``OPTIMIZE ... ZORDER BY``; ``plans/lakehouse.zorder_locality_stats``
+measures it.
 
 Everything is integer bit arithmetic in JVM-codegen'd expressions
 (``shiftright``/``&``/``*``/``+``) — exactly reproducible in any engine,
@@ -18,7 +18,7 @@ which is what makes the locality statistics oracle-checkable bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -47,32 +47,3 @@ def zvalue_sql(x: str, y: str, bits: int = 8) -> str:
         terms.append(f"((({x} >> {i}) & 1) * {1 << (2 * i)})")
         terms.append(f"((({y} >> {i}) & 1) * {1 << (2 * i + 1)})")
     return "(" + " + ".join(terms) + ")"
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    x: str,
-    y: str,
-    n_files: int = 8,
-    bits: int = 8,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered on the Morton code
-    of ``(x, y)``: range-partition on the z-value (contiguous curve segments
-    per file), sort within each file (monotone row-group stats), drop the
-    helper column before writing.
-
-    ``repartitionByRange`` samples the z-distribution so files are
-    volume-balanced even when the key space is skewed — the property a
-    static ``z >> k`` bucketing wouldn't have. Per-file min-max footers then
-    bound both x and y tightly; asserted against pyarrow-read footers in
-    tests/test_lakehouse.py."""
-    zc = "_zval"
-    (
-        df.withColumn(zc, zvalue(x, y, bits))
-        .repartitionByRange(n_files, F.col(zc))
-        .sortWithinPartitions(zc)
-        .drop(zc)
-        .write.mode("overwrite")
-        .parquet(path)
-    )

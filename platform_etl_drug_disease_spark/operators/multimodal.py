@@ -152,100 +152,3 @@ def sample_frames(
         "frame_digest",
         F.sha2(F.concat(F.col("frame_digest"), F.col("frame_idx").cast("string")), 256),
     )
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int, payload_col: str = "payload", mode: str = "fake"
-) -> DataFrame:
-    """Image resize: ``mode="fake"`` updates metadata to the target
-    dimensions and tags the payload digest (deterministic, oracle-safe);
-    ``mode="real"`` re-encodes payload bytes through pillow inside the same
-    mapInPandas contract as extract_media_features (optional dependency)."""
-    if mode == "real":
-        if not real_decoder_available():
-            raise NotImplementedError(
-                "real image resize requires pillow, which is not installed"
-            )
-        import io
-
-        import pandas as pd
-
-        def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            from PIL import Image  # noqa: PLC0415 — executor-side
-
-            def resize_bytes(payload: bytes) -> bytes:
-                src = Image.open(io.BytesIO(payload))
-                # capture the container format BEFORE resize: PIL's
-                # .resize() returns a new Image with format=None, so
-                # reading it after would silently transcode every input
-                # to the PNG fallback.
-                fmt = src.format or "PNG"
-                buf = io.BytesIO()
-                src.resize((width, height)).save(buf, format=fmt)
-                return buf.getvalue()
-
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf[payload_col] = pdf[payload_col].map(resize_bytes)
-                yield pdf
-
-        resized = df.mapInPandas(fn, df.schema)
-        return resized.withColumn(
-            "meta",
-            F.struct(
-                F.lit(width).alias("width"),
-                F.lit(height).alias("height"),
-                F.col("meta.sample_rate").alias("sample_rate"),
-                F.col("meta.n_frames").alias("n_frames"),
-            ),
-        ).withColumn("resize_digest", F.sha2(F.col(payload_col).cast("string"), 256))
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.n_frames").alias("n_frames"),
-        ),
-    ).withColumn("resize_digest", F.sha2(F.col(payload_col).cast("string"), 256))
-
-
-def extract_media_features_arrow(
-    df: DataFrame, payload_col: str = "payload", mode: str = "fake"
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_media_features` — identical
-    output, different transfer path: batches stay ``pyarrow.RecordBatch``
-    end to end, so binary payloads are never copied into pandas object
-    arrays (one python object + refcount per payload) on the way in. For
-    multimedia columns the pandas hop is pure overhead — the decode
-    consumes raw bytes — which makes this the preferred form when batches
-    are large blobs; the pandas form remains for pipelines that genuinely
-    want a DataFrame per batch. Equality with the pandas path is pinned in
-    tests/test_analytics.py."""
-    import pyarrow as pa
-
-    out_schema = T.StructType(list(df.schema.fields) + FEATURE_FIELDS)
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        if mode == "real" and not real_decoder_available():
-            raise NotImplementedError(
-                "real media decode requires pillow, which is not "
-                "installed; use mode='fake' for the deterministic stub"
-            )
-        decode = _real_decode if mode == "real" else _fake_decode
-        for batch in batches:
-            payloads = batch.column(payload_col).to_pylist()
-            feats = [decode(p) for p in payloads]
-            arrays = list(batch.columns)
-            names = list(batch.schema.names)
-            arrays.append(pa.array([f["payload_bytes"] for f in feats], pa.int64()))
-            names.append("payload_bytes")
-            arrays.append(pa.array([f["content_digest"] for f in feats], pa.string()))
-            names.append("content_digest")
-            arrays.append(
-                pa.array([f["feature_vec"] for f in feats], pa.list_(pa.float32()))
-            )
-            names.append("feature_vec")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.mapInArrow(fn, out_schema)

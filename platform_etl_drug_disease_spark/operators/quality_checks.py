@@ -119,49 +119,3 @@ def key_skew_audit(df: DataFrame, key: str) -> DataFrame:
         (F.col("max_key_rows") * F.lit(1.0) / F.col("n_rows"))
         .alias("top_key_share"),
     )
-
-
-def schema_diff(old, new) -> list[dict]:
-    """Schema-drift report between two StructTypes (or DataFrames): one
-    entry per added / removed / retyped / renullabled column, empty when
-    compatible. The pre-flight gate before a CDC merge or snapshot diff —
-    catching a silently retyped column at plan time costs nothing; catching
-    it after a 100-TB write costs the write.
-
-    Pure driver-side metadata comparison (no jobs)."""
-    o = old.schema if hasattr(old, "schema") else old
-    n = new.schema if hasattr(new, "schema") else new
-    of = {f.name: f for f in o.fields}
-    nf = {f.name: f for f in n.fields}
-    out: list[dict] = []
-    for name in sorted(set(of) | set(nf)):
-        a, b = of.get(name), nf.get(name)
-        if a is None:
-            out.append({"column": name, "change": "added",
-                        "detail": b.dataType.simpleString()})
-        elif b is None:
-            out.append({"column": name, "change": "removed",
-                        "detail": a.dataType.simpleString()})
-        elif a.dataType != b.dataType:
-            out.append({"column": name, "change": "retyped",
-                        "detail": f"{a.dataType.simpleString()} -> "
-                                  f"{b.dataType.simpleString()}"})
-        elif a.nullable != b.nullable:
-            out.append({"column": name, "change": "renullabled",
-                        "detail": f"{a.nullable} -> {b.nullable}"})
-    return out
-
-
-def observe_metrics(df, name: str, **metric_exprs):
-    """Attach in-flight observed metrics to a DataFrame (``df.observe``):
-    the metrics are computed DURING the query's own execution — row counts,
-    null tallies, sums — and read back after the action, so a production
-    write gets its quality counters for free instead of paying a second
-    scan (the at-scale alternative to running dq_audit as a separate job).
-
-    Returns ``(df, observation)``; read ``observation.get`` after an
-    action has executed the returned DataFrame."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *[v.alias(k) for k, v in metric_exprs.items()]), obs

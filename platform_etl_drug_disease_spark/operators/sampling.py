@@ -130,9 +130,7 @@ def training_order(
     pick n_shards large enough that a shard fits an executor (at 100 TB,
     thousands of shards — which is also what the downstream trainer wants).
     The ordering hash is the full md5 while the shard is a 28-bit prefix
-    bucket, so within-shard order is still well-mixed. Pair with
-    ``sources/writers.py:write_sorted_shards`` to land the result as
-    sorted shard files."""
+    bucket, so within-shard order is still well-mixed."""
     from pyspark.sql import Window
 
     c = F.col(id_col)

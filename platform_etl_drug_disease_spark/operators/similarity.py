@@ -47,10 +47,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
-
-
 def with_unit_vec(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     """Append ``out_col`` = unit-normalized ``vec_col`` (double components).
 
@@ -322,24 +318,6 @@ def _assign_cells(
         *extra,
         *[F.first(c).alias(c) for c in carry_cols],
     )
-
-
-def ivf_assign(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: DataFrame,
-    cent_id: str = "cent_id",
-    cent_vec: str = "cent_vec",
-) -> DataFrame:
-    """Assign each vector to its single nearest centroid (max cosine,
-    centroid-id tie-break) — the IVF partitioning step. Returns the input
-    columns plus ``cent_id``; exactly one output row per input row."""
-    carry = [c for c in df.columns if c != id_col]
-    dfn = with_unit_vec(df, vec_col, "__nv")
-    centsn = with_unit_vec(centroids, cent_vec, "__cnv").select(cent_id, "__cnv")
-    out = _assign_cells(dfn, id_col, centsn, cent_id, carry)
-    return out.select(id_col, *carry, cent_id)
 
 
 def knn_ivf(

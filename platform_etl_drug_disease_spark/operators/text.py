@@ -59,10 +59,6 @@ def stopword_ratio_of(
     return n_stop.cast("double") / F.nullif(F.size(t).cast("double"), F.lit(0.0))
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    return stopword_ratio_of(tokens(text), stopwords)
-
-
 def mean_token_length_of(tok_col: Column | str) -> Column:
     t = _as_tokens(tok_col)
     total = F.aggregate(
@@ -105,12 +101,8 @@ def lang_scores_of(tok_col: Column | str) -> dict[str, Column]:
     return out
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    return lang_scores_of(tokens(text))
-
-
 def lang_id_of(tok_col: Column | str) -> Column:
-    """argmax over lang_scores with deterministic alphabetical tie-break;
+    """argmax over lang_scores_of with deterministic alphabetical tie-break;
     'und' (undetermined) when no marker hits at all."""
     scores = lang_scores_of(tok_col)
     pairs = F.array(
@@ -165,10 +157,6 @@ def rolling_hash_of(tok_col: Column | str, base: int = 131, mod: int = 214748364
     )
 
 
-def rolling_hash(text: Column | str, base: int = 131, mod: int = 2147483647) -> Column:
-    return rolling_hash_of(tokens(text), base, mod)
-
-
 def bow_fingerprint_of(tok_col: Column | str) -> Column:
     """Bag-of-words document fingerprint: md5 over the sorted distinct token
     set — robust to token order / repetition, portable across engines."""
@@ -186,16 +174,7 @@ def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
     tokenizer expression here makes every element_at re-run the split —
     quadratic in document length (a 20× slowdown caught by a catalog
     timing run)."""
-    t = F.col(tok_col) if isinstance(tok_col, str) else tok_col
-    gram = F.transform(
-        F.sequence(F.lit(0), F.size(t) - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(t) >= n, F.array_distinct(gram)).otherwise(
-        F.array().cast("array<string>")
-    )
+    return F.array_distinct(raw_shingles_from_tokens(tok_col, n))
 
 
 def raw_shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
@@ -220,19 +199,3 @@ def with_shingles(df, text_col: str, n: int = 3, out: str = "sh"):
     return df.withColumn("__toks", tokens(text_col)).withColumn(
         out, shingles_from_tokens("__toks", n)
     ).drop("__toks")
-
-
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Inline-expression form of shingling — correct but re-evaluates the
-    tokenizer per element access; only safe for tiny inputs/tests. Corpus
-    pipelines use :func:`with_shingles`."""
-    t = tokens(text)
-    gram = F.transform(
-        F.sequence(F.lit(0), F.size(t) - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(t) >= n, F.array_distinct(gram)).otherwise(
-        F.array().cast("array<string>")
-    )

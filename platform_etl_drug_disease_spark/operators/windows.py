@@ -40,24 +40,6 @@ def top_n_per_group(
     )
 
 
-def running_agg(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[str | Column],
-    value: str,
-    out: str,
-    agg: str = "sum",
-) -> DataFrame:
-    """Cumulative aggregate over an ordered group (running totals)."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(*_order_cols(order_by))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fn = getattr(F, agg)
-    return df.withColumn(out, fn(F.col(value)).over(w))
-
-
 def rolling_zscore(
     df: DataFrame,
     keys: list[str],

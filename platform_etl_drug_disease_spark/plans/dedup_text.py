@@ -39,8 +39,8 @@ from platform_etl_drug_disease_spark.operators.dedup import (
     exact_dedup_clusters,
     jaccard_pairs,
     minhash_seeds,
-    simhash64,
 )
+from platform_etl_drug_disease_spark.operators.joins import symmetrize
 from platform_etl_drug_disease_spark.plans._util import arr_join, dround
 from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import (
@@ -301,21 +301,15 @@ def dedup_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrize in ONE pass: a union of two selects over `pairs` would
     # reference the whole candidate/verify subtree twice and execute it
     # twice (measured +12 s at sf≈1 — the same double-subtree cost the HITS
-    # trade-off pinned); a 2-element explode emits both directions from a
+    # trade-off pinned); joins.symmetrize emits both directions from a
     # single execution, no persist needed.
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("doc_id"), F.col("id_b").alias("nbr_id")
-                ),
-                F.struct(
-                    F.col("id_b").alias("doc_id"), F.col("id_a").alias("nbr_id")
-                ),
-            )
-        ).alias("e"),
-        "jaccard",
-    ).select("e.doc_id", "e.nbr_id", "jaccard")
+    sym = symmetrize(
+        pairs.select(
+            F.col("id_a").alias("doc_id"), F.col("id_b").alias("nbr_id"), "jaccard"
+        ),
+        "doc_id",
+        "nbr_id",
+    )
     top = bounded_top_k_rows(
         sym, ["doc_id"], [-F.col("jaccard"), F.col("nbr_id")], k=3
     )
@@ -1390,7 +1384,7 @@ FROM comp GROUP BY cluster_id
 
 
 def _simhash_sql() -> str:
-    """DuckDB mirror of simhash64(prefix_hex=4): 16 generated per-bit
+    """DuckDB mirror of :func:`dedup_simhash`: 16 generated per-bit
     majority expressions over the same md5-derived token hashes — flips
     SimHash from rows-only to a full value-hash oracle."""
     th = "list_transform(t, x -> CAST(('0x' || substr(md5(x), 1, 4)) AS BIGINT))"

@@ -74,9 +74,17 @@ class PipelineOutputs:
 def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: DataFrame) -> DataFrame:
     """Per disease: every known drug with its metadata + AE profile
     (sim.sc:380-399). right_outer keeps aggregation rows whose drug has no
-    metadata in the drug index — reference semantics."""
+    metadata in the drug index — reference semantics.
+
+    A disease has one aggregation row per drug, each with its own
+    ``associated_*`` arrays; the reference keeps an arbitrary one
+    (``first``). Here the row with the smallest (drug_id, arrays) wins, so
+    the output does not depend on row arrival order."""
     enriched = drugs.join(aes_by_drug, "drug_id", "left_outer").join(
         aggregated, "drug_id", "right_outer"
+    )
+    pick = F.min(
+        F.struct("drug_id", "associated_disease_ids", "associated_target_ids")
     )
     # the aes→drug_aes rename is the struct field's alias: one eager op
     # fewer than a withColumnRenamed, and the same optimized plan
@@ -92,8 +100,8 @@ def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: Data
                 "pref_name",
             )
         ).alias("drugs_for_disease"),
-        F.first("associated_disease_ids").alias("associated_disease_ids"),
-        F.first("associated_target_ids").alias("associated_target_ids"),
+        pick["associated_disease_ids"].alias("associated_disease_ids"),
+        pick["associated_target_ids"].alias("associated_target_ids"),
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.operators.arrays import flatten_distinct
+from platform_etl_drug_disease_spark.operators.joins import symmetrize
 from platform_etl_drug_disease_spark.plans._util import arr_join, dround, dsum
 from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
@@ -42,9 +43,9 @@ def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     their key; supplier nodes are offset by 10^12 so the id spaces don't
     collide.
 
-    Scale note: symmetrization here explodes both directions from ONE pass
-    instead of union(swap) — the union form scans the upstream join twice
-    (caught by plan_lint), which at 100 TB recomputes the whole fact join.
+    Scale note: ``joins.symmetrize`` explodes both directions from ONE pass;
+    a union(swap) would scan the upstream join twice (caught by plan_lint),
+    which at 100 TB recomputes the whole fact join.
     Session-memoized (see _SYM_EDGES_CACHE above)."""
     return _sym_edges_raw(spark, sf_dir).distinct().localCheckpoint()
 
@@ -83,15 +84,7 @@ def _sym_edges_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     next step is a set-style aggregation (collect_set / approx_count_distinct
     dedup per group anyway). Feeding them raw edges saves a full (src,dst)
     shuffle whose partitioning the following per-src groupBy couldn't reuse."""
-    both_dirs = F.array(
-        F.struct(F.col("src"), F.col("dst")),
-        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-    )
-    return (
-        _directed_edges(spark, sf_dir)
-        .select(F.explode(both_dirs).alias("e"))
-        .select("e.src", "e.dst")
-    )
+    return symmetrize(_directed_edges(spark, sf_dir), "src", "dst")
 
 
 _SYM_EDGES_CTE = """

@@ -113,9 +113,7 @@ GROUP BY o_orderstatus
 # cut the curve into 64 contiguous segments (z >> 10), and report each
 # segment's row count and per-dimension span. Narrow spans on BOTH x and y
 # in every bucket are exactly the property that makes min-max file skipping
-# work on either predicate — the writer counterpart
-# (operators/layout.py:write_zorder_clustered) is footer-asserted in
-# tests/test_lakehouse.py.
+# work on either predicate.
 
 _ZBITS = 8
 

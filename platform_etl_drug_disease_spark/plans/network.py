@@ -4,11 +4,12 @@ Semantics from the reference's NetworkDB object (sim.sc:13-76) and
 Loaders.loadNetwork (sim.sc:134-157), re-expressed with this engine's
 operator library:
 
-- edges are undirected: symmetrize + distinct (sim.sc:53-54);
+- edges are undirected: ``joins.symmetrize`` + distinct (sim.sc:53-54),
+  one scan of the interactions;
 - endpoints are uniprot names mapped to gene ids by joining the exploded
-  accession dimension once per endpoint (sim.sc:30-40, 64-70) — here via
-  ``annotate_edges`` with an explicit broadcast (the gene dim is small;
-  the edge table at scale is not);
+  accession dimension once per endpoint (sim.sc:64-70) — here via
+  ``joins.annotate_edges`` with an explicit broadcast (the gene dim is
+  small; the edge table at scale is not);
 - adjacency LUT: collect_set of neighbours + HLL++ degree (sim.sc:72-74);
 - the tissue co-expression filter keeps only neighbour pairs that share at
   least one expressed tissue (sim.sc:144-154).
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from platform_etl_drug_disease_spark.operators.joins import annotate_edges
+from platform_etl_drug_disease_spark.operators.joins import annotate_edges, symmetrize
 
 
 def _exploded_accessions(targets: DataFrame) -> DataFrame:
@@ -31,71 +32,28 @@ def _exploded_accessions(targets: DataFrame) -> DataFrame:
     )
 
 
-def symmetrize(edges: DataFrame, src: str = "A", dst: str = "B") -> DataFrame:
-    """Undirected closure: union of both directions, deduped (sim.sc:53-54)."""
-    swapped = edges.select(
-        F.col(dst).alias(src), F.col(src).alias(dst), *[
-            c for c in edges.columns if c not in (src, dst)
-        ]
-    )
-    return edges.select(src, dst, *[c for c in edges.columns if c not in (src, dst)]).union(
-        swapped
-    ).distinct()
-
-
-def build_annotated_network(interactions: DataFrame, targets: DataFrame) -> DataFrame:
-    """Directed edge table annotated with gene metadata per endpoint
-    (sim.sc:14-41): (A, B, score, id/symbol/hgnc per side)."""
-    edges = interactions.select(
-        F.col("interactorA_uniprot_name").alias("A"),
-        F.col("interactorB_uniprot_name").alias("B"),
-        F.col("mi_score").alias("score"),
-    )
-    # raw target dump (id/approved_symbol/hgnc_id), not the shaped form —
-    # the reference's buildAnnotated reads the genes dump directly (sim.sc:20-24)
-    acc = targets.select(
-        F.col("id").alias("target_id"),
-        F.col("approved_symbol").alias("symbol"),
-        "hgnc_id",
-        F.explode("uniprot_accessions").alias("accession"),
-    )
-    return annotate_edges(
-        edges,
-        acc,
-        edge_keys=("A", "B"),
-        dim_key="accession",
-        payload={"target_id": "id", "symbol": "symbol", "hgnc_id": "hgnc_id"},
-    )
-
-
-def build_network_lut(
-    interactions: DataFrame, targets: DataFrame, min_score: float | None = None
-) -> DataFrame:
+def build_network_lut(interactions: DataFrame, targets: DataFrame) -> DataFrame:
     """Adjacency lookup table: target_id → (neighbours, degree)
-    (sim.sc:44-75). ``min_score`` applies the mi_score cutoff the reference
-    defines but leaves commented out (sim.sc:45-49)."""
-    raw = interactions
-    if min_score is not None:
-        raw = raw.where(
-            (F.col("mi_score") > min_score)
-            | (
-                F.array_contains("source_databases", "intact")
-                & (F.size("source_databases") > 1)
-            )
-        )
+    (sim.sc:44-75). The reference's mi_score cutoff is left out, as it is
+    commented out there (sim.sc:45-49)."""
     edges = symmetrize(
-        raw.select(
+        interactions.select(
             F.col("interactorA_uniprot_name").alias("A"),
             F.col("interactorB_uniprot_name").alias("B"),
-        )
+        ),
+        "A",
+        "B",
+    ).distinct()
+    annotated = annotate_edges(
+        edges,
+        _exploded_accessions(targets),
+        edge_keys=("A", "B"),
+        dim_key="accession",
+        payload={"target_id": "id"},
     )
-    acc = F.broadcast(_exploded_accessions(targets))
-    a_side = acc.select(F.col("accession").alias("A"), F.col("target_id").alias("A_id"))
-    b_side = acc.select(F.col("accession").alias("B"), F.col("target_id").alias("B_id"))
-    annotated = edges.join(a_side, "A", "inner").join(b_side, "B", "inner")
-    return annotated.groupBy(F.col("A_id").alias("target_id")).agg(
-        F.collect_set("B_id").alias("neighbours"),
-        F.approx_count_distinct("B_id").alias("degree"),
+    return annotated.groupBy(F.col("id_src").alias("target_id")).agg(
+        F.collect_set("id_dst").alias("neighbours"),
+        F.approx_count_distinct("id_dst").alias("degree"),
     )
 
 

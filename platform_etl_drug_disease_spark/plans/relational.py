@@ -24,6 +24,7 @@ from platform_etl_drug_disease_spark.operators.joins import (
     join_on,
     salted_join,
     semi_join,
+    symmetrize,
 )
 from platform_etl_drug_disease_spark.operators.windows import top_n_per_group
 from platform_etl_drug_disease_spark.plans._util import arr_join, davg, dround, dsum
@@ -295,15 +296,15 @@ WHERE rn <= 3
 
 def symmetric_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1+A9: undirected edge canonicalization — the reference symmetrizes its
-    protein-interaction edges with union(swap)+distinct (sim.sc:53-54)."""
+    protein-interaction edges and takes the distinct set (sim.sc:53-54); here
+    ``joins.symmetrize`` emits both directions from one pass over the join."""
     li = load_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
     orders = load_table(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
     edges = (
         join_on(li, orders, li.l_orderkey == orders.o_orderkey)
         .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
     )
-    swapped = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return edges.union(swapped).distinct()
+    return symmetrize(edges, "src", "dst").distinct()
 
 
 _SYM_EDGES_SQL = """

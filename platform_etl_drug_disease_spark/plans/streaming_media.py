@@ -6,8 +6,9 @@ events table and are checked against the SAME DuckDB oracles as their batch
 twins — the correctness claim is streaming == batch == oracle. Complete
 output mode is used because with AvailableNow the watermark never passes the
 final windows, so append would (correctly) withhold them; the memory sink is
-a test/backfill surface, never the 100-TB path (that is writeStream →
-parquet/Kafka in append mode with watermarks, as in streaming/windows.py).
+a test/backfill surface, never the 100-TB path (that is writeStream in
+append mode with watermarks, landing each micro-batch through
+streaming/windows.py:write_batch_idempotent).
 
 Multimodal entries exercise the binary-payload plumbing of
 operators/multimodal.py end-to-end: documents.text → binary payload + typed

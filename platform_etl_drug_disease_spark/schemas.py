@@ -146,12 +146,8 @@ def domain_schema(name: str) -> T.StructType:
     return T.StructType.fromDDL(DOMAIN_SCHEMAS[name])
 
 
-def _s(ddl: str) -> str:
-    return ddl
-
-
 # drug dump (sim.sc:93-107; nested access sim.sc:100, 409)
-DRUG_SCHEMA = _s(
+DRUG_SCHEMA = (
     "id string, max_clinical_trial_phase int, type string, pref_name string,"
     " number_of_mechanisms_of_action int,"
     " mechanisms_of_action array<struct<target_components: array<struct<ensembl: string>>>>,"
@@ -159,7 +155,7 @@ DRUG_SCHEMA = _s(
 )
 
 # target/gene dump (sim.sc:109-132, 20-24)
-TARGET_SCHEMA = _s(
+TARGET_SCHEMA = (
     "id string, approved_symbol string, biotype string, hgnc_id string,"
     " go array<struct<id: string, value: struct<term: string>>>,"
     " tractability string, uniprot_accessions array<string>,"
@@ -167,59 +163,59 @@ TARGET_SCHEMA = _s(
 )
 
 # disease/EFO dump (sim.sc:159-188)
-DISEASE_SCHEMA = _s(
+DISEASE_SCHEMA = (
     "code string, label string, path_codes array<array<string>>,"
     " phenotypes array<string>, therapeutic_codes array<string>"
 )
 
 # literature evidence dump (sim.sc:222-235)
-EVIDENCE_SCHEMA = _s(
+EVIDENCE_SCHEMA = (
     "sourceID string, id string, disease struct<id: string>,"
     " target struct<id: string>, scores struct<association_score: double>"
 )
 
 # GWAS studies parquet (sim.sc:191-206)
-STUDIES_SCHEMA = _s(
+STUDIES_SCHEMA = (
     "study_id string, trait_reported string, trait_efos array<string>,"
     " trait_category string"
 )
 
 # locus-to-gene predictions parquet (sim.sc:198-209)
-PREDICTIONS_SCHEMA = _s(
+PREDICTIONS_SCHEMA = (
     "study_id string, chrom string, pos long, ref string, alt string,"
     " y_proba_all_features double, gene_id string"
 )
 
 # protein-protein interactions dump (sim.sc:14-18, 44-51)
-INTERACTIONS_SCHEMA = _s(
+INTERACTIONS_SCHEMA = (
     "interactorA_uniprot_name string, interactorB_uniprot_name string,"
     " mi_score double, source_databases array<string>"
 )
 
 # baseline expression dump (sim.sc:79-90)
-EXPRESSION_SCHEMA = _s(
+EXPRESSION_SCHEMA = (
     "gene string, tissues array<struct<efo_code: string,"
     " rna: struct<zscore: double>, protein: struct<level: double>>>"
 )
 
 # FAERS adverse events by drug (sim.sc:237-255)
-FAERS_DRUG_SCHEMA = _s(
+FAERS_DRUG_SCHEMA = (
     "chembl_id string, event string, count long, llr double, critval double"
 )
 
 # FAERS adverse events by target (sim.sc:257-275)
-FAERS_TARGET_SCHEMA = _s(
+FAERS_TARGET_SCHEMA = (
     "target_id string, event string, report_count long, llr double, critval double"
 )
 
 # aggregated drugs-per-disease from the associations pipeline (sim.sc:277-289)
-AGGREGATED_DRUGS_SCHEMA = _s(
+AGGREGATED_DRUGS_SCHEMA = (
     "disease_id string, drug_id string, associated_diseases array<string>,"
     " associated_targets array<string>"
 )
 
 # optional whitelist (sim.sc:377-378, 446)
-WHITELIST_SCHEMA = _s("whitelist_id string, whitelist array<string>")
+WHITELIST_SCHEMA = "whitelist_id string, whitelist array<string>"
 
 DOMAIN_SCHEMAS: dict[str, str] = {
     "drug": DRUG_SCHEMA,

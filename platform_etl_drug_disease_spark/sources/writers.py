@@ -112,122 +112,3 @@ def write_json(
     if compression:
         writer = writer.option("compression", compression)
     writer.json(path)
-
-
-def write_sorted_shards(
-    df,
-    path: str,
-    range_col: str,
-    n_shards: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Training-shard export: globally range-partition on ``range_col`` into
-    ``n_shards`` files, each sorted within itself — the standard layout for
-    sequential training-data readers (a reader streams shard k and sees keys
-    in order; shard boundaries are global order statistics).
-
-    ``repartitionByRange`` samples the column to compute balanced range
-    bounds (one pass + shuffle), and ``sortWithinPartitions`` sorts each
-    shard during the same shuffle's reduce side — no global sort barrier,
-    no driver involvement, which is what makes this the 100-TB shard writer:
-    cost is one shuffle regardless of shard count. Writers downstream can
-    range-prune shards by the same column."""
-    out = df.repartitionByRange(n_shards, range_col)
-    out = out.sortWithinPartitions(*(sort_cols or [range_col]))
-    out.write.mode(mode).parquet(path)
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    out_path: str | None = None,
-) -> int:
-    """Small-file compaction pass: read a fragmented parquet directory and
-    rewrite it with file count sized from the directory's ACTUAL bytes
-    (ceil(total/target)), preserving rows exactly. The maintenance job that
-    keeps streaming/foreachBatch landing zones (one file per micro-batch ×
-    partitions) from degrading scan planning — at 100 TB, millions of tiny
-    files cost more in listing + footer reads than the data itself.
-
-    Sizing reads file METADATA only (no data pass). Writes to ``out_path``
-    (default: ``path + ".compacted"``) then the caller swaps directories —
-    never an in-place overwrite of an input that is still being read.
-    Returns the output file count."""
-    import glob as _glob
-    import math
-    import os
-
-    files = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    out = out_path or (path.rstrip("/") + ".compacted")
-    df = spark.read.parquet(path)
-    # repartition (not coalesce): coalesce(1..k) would chain the upstream
-    # scan into k tasks and lose read parallelism; compaction is a shuffle
-    # by design so the write tasks are balanced regardless of input layout.
-    df.repartition(n_out).write.mode("overwrite").parquet(out)
-    return n_out
-
-
-def parquet_column_stats(path: str) -> list[dict]:
-    """Storage audit from parquet FOOTERS only (no data read): per column,
-    total compressed/uncompressed bytes, null count, and whether min/max
-    statistics are present (the prerequisite for skipping). The layout
-    check run after a write — a column whose stats are missing can never
-    be pruned, and a compression ratio near 1.0 flags encoding problems."""
-    import glob as _glob
-    import os
-    from collections import defaultdict
-
-    import pyarrow.parquet as pq
-
-    agg: dict[str, dict] = defaultdict(
-        lambda: {
-            "compressed": 0,
-            "uncompressed": 0,
-            "nulls": 0,
-            "n_chunks": 0,
-            "chunks_with_minmax": 0,
-        }
-    )
-    files = sorted(
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ) or ([path] if os.path.isfile(path) else [])
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                st = agg[col.path_in_schema]
-                st["compressed"] += col.total_compressed_size
-                st["uncompressed"] += col.total_uncompressed_size
-                st["n_chunks"] += 1
-                s = col.statistics
-                if s is not None:
-                    if s.null_count is not None:
-                        st["nulls"] += s.null_count
-                    if s.has_min_max:
-                        st["chunks_with_minmax"] += 1
-    return [
-        {
-            "column": name,
-            **vals,
-            "compression_ratio": round(
-                vals["compressed"] / vals["uncompressed"], 4
-            )
-            if vals["uncompressed"]
-            else None,
-            "skippable": vals["chunks_with_minmax"] == vals["n_chunks"]
-            and vals["n_chunks"] > 0,
-        }
-        for name, vals in sorted(agg.items())
-    ]

@@ -1,13 +1,16 @@
-"""Streaming event-time operators.
+"""Streaming operators the catalog's streaming queries run
+(plans/streaming_media.py), and the JSON event source the streaming tests
+drive them with.
 
 Design rules for unbounded state at scale:
-- every aggregation is watermarked — state for windows older than the
-  watermark is dropped, so executor state is O(active windows), not O(stream
-  history);
-- window/session logic is identical to the batch forms in
-  plans/events_time.py (same F.window / lag-gap semantics), so a batch
-  backfill and the streaming path produce the same tables;
-- sinks default to append mode (finalized windows only).
+- the stream-stream join is watermarked on both sides, so its buffered state
+  is bounded by watermark + interval, not stream history;
+- the custom stateful operators (applyInPandasWithState) keep bounded state
+  per key; the z-score and funnel operators reproduce their batch forms in
+  operators/windows.py, so a batch backfill and the streaming path produce
+  the same tables;
+- micro-batches land through an idempotent per-batch_id write, so a crash
+  replay overwrites instead of duplicating.
 """
 
 from __future__ import annotations
@@ -103,47 +106,6 @@ def read_event_stream(
     return reader.load(path)
 
 
-def windowed_event_counts(
-    stream: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling/sliding windowed counts + sums with bounded state."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(win.alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("value_sum"))
-        .select(
-            F.col("w.start").alias("win_start"),
-            F.col("w.end").alias("win_end"),
-            "event_type",
-            "n",
-            "value_sum",
-        )
-    )
-
-
-def sessionized_counts(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Native session windows (F.session_window): per-user sessions close
-    after ``gap`` of inactivity; watermark bounds open-session state."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("value_sum"))
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
 RUNNING_TOTALS_SCHEMA = "user_id bigint, total_events bigint, total_value double"
 _STATE_SCHEMA = "total_events bigint, total_value double"
 
@@ -211,16 +173,6 @@ def stream_stream_interval_join(
     return lw.join(rw, cond, "inner").drop(rw[key])
 
 
-def stream_dedup(
-    stream: DataFrame, keys: list[str], ts_col: str = "ts", watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exact dedup: first event per key wins; state for a key is
-    dropped once the watermark passes it (dropDuplicatesWithinWatermark), so
-    dedup state is bounded by the watermark horizon — the streaming twin of
-    the batch exact_dedup operator."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int) -> None:
     """Idempotent micro-batch landing: each batch overwrites its own
     ``batch_id=<id>`` partition directory. foreachBatch alone is only
@@ -230,36 +182,6 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int) -> Non
     restoring an exactly-once EFFECT. Readers see ``batch_id`` as a normal
     partition column (and can prune on it)."""
     batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-
-def run_foreach_batch_parquet(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-) -> int:
-    """Production sink path: land a stream into parquet via ``foreachBatch``
-    — each micro-batch is written as a normal batch DataFrame (so any batch
-    writer feature — partitionBy, bucketing, merge logic — is available).
-    The streaming checkpoint gives at-least-once replay; combined with the
-    per-batch_id idempotent write it is exactly-once in effect even across a
-    crash inside the write/commit window. Runs with Trigger.AvailableNow
-    (drain-what-exists) and returns the number of micro-batches written."""
-    batches = {"n": 0}
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(batch_df, path, batch_id)
-        batches["n"] += 1
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches["n"]
 
 
 def run_to_memory_sink(
@@ -457,98 +379,3 @@ def funnel_flags_stream(stream: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def transform_with_state_available() -> bool:
-    """True when the Spark-4 transformWithState Python worker can run here
-    (its driver worker imports google.protobuf descriptors at startup)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """The Spark-4 ``transformWithStateInPandas`` form of
-    :func:`running_user_totals`: per-user running event count and value sum
-    held in a typed ValueState. Functionally identical to the
-    applyInPandasWithState twin; carried so the engine exercises BOTH
-    stateful APIs (the older one is maintenance-mode upstream — this is
-    the forward path, with finer-grained state types and timers).
-
-    Requires a working ``google.protobuf`` (the transformWithState driver
-    worker speaks protobuf to the JVM); environments without it must stay
-    on :func:`running_user_totals` — probe with
-    :func:`transform_with_state_available` first."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n bigint, v double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            cur = self._state.get() if self._state.exists() else (0, 0.0)
-            n, v = int(cur[0]), float(cur[1])
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, v))
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])],
-                    "total_events": [n],
-                    "total_value": [v],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType="user_id bigint, total_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_foreach_batch_deadletter(
-    stream_df: DataFrame,
-    good_path: str,
-    dead_path: str,
-    checkpoint: str,
-    invalid_predicate,
-) -> int:
-    """Dead-letter ingestion: every micro-batch splits on
-    ``invalid_predicate`` — clean rows land in ``good_path``, rejects land
-    in ``dead_path`` WITH the batch id for replay/forensics — both via the
-    per-batch idempotent writer, so a crash-replay overwrites instead of
-    duplicating. The production pattern that keeps one malformed record
-    from stalling a 100-TB ingest while still never silently dropping it.
-
-    Returns the number of batches processed."""
-    n_batches = {"n": 0}
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        n_batches["n"] += 1
-        bad = batch_df.where(invalid_predicate)
-        good = batch_df.where(~invalid_predicate)
-        write_batch_idempotent(good, good_path, batch_id)
-        write_batch_idempotent(
-            bad.withColumn("__batch_id", F.lit(batch_id)), dead_path, batch_id
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]

@@ -301,35 +301,6 @@ def test_apportion_quota_exact_budget_properties(spark):
     assert got2["x"] >= 6 and got2["y"] >= got2["z"]
 
 
-def test_schema_diff_detects_all_change_kinds(spark):
-    from pyspark.sql import types as T
-
-    from platform_etl_drug_disease_spark.operators.quality_checks import (
-        schema_diff,
-    )
-
-    old = T.StructType(
-        [
-            T.StructField("a", T.LongType(), True),
-            T.StructField("b", T.StringType(), True),
-            T.StructField("c", T.DoubleType(), False),
-        ]
-    )
-    new = T.StructType(
-        [
-            T.StructField("a", T.IntegerType(), True),  # retyped
-            T.StructField("c", T.DoubleType(), True),  # renullabled
-            T.StructField("d", T.StringType(), True),  # added; b removed
-        ]
-    )
-    got = {e["column"]: e["change"] for e in schema_diff(old, new)}
-    assert got == {"a": "retyped", "b": "removed", "c": "renullabled", "d": "added"}
-    assert schema_diff(old, old) == []
-    # DataFrames accepted directly
-    df = spark.range(1)
-    assert schema_diff(df, df) == []
-
-
 def test_apportion_quota_properties_random(spark):
     """Property: for ANY positive integer weights, quotas sum exactly to the
     budget and each stratum's quota is within 1 of its exact proportional
@@ -400,29 +371,6 @@ def test_cohort_retention_invariants(spark):
         for off, r in offs.items():
             assert r["n_active"] <= base
             assert 0.0 <= r["retention"] <= 1.0
-
-
-def test_observe_metrics_free_quality_counters(spark, tmp_path):
-    from platform_etl_drug_disease_spark.operators.quality_checks import (
-        observe_metrics,
-    )
-
-    df = spark.range(0, 1000).withColumn(
-        "v", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id") * 2)
-    )
-    observed, obs = observe_metrics(
-        df,
-        "write_audit",
-        n_rows=F.count(F.lit(1)),
-        n_null_v=F.count(F.when(F.col("v").isNull(), 1)),
-        v_sum=F.sum("v"),
-    )
-    # the metrics ride the WRITE action itself — no second scan
-    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-    got = obs.get
-    assert got["n_rows"] == 1000
-    assert got["n_null_v"] == 100
-    assert got["v_sum"] == sum(2 * i for i in range(1000) if i % 10 != 0)
 
 
 def test_python_udtf_lateral_equals_builtin_explode(spark):
@@ -640,28 +588,6 @@ def test_neyman_allocation_budget_and_optimality(spark):
     tw = sum(r.neyman_w for r in out)
     for r in out:
         assert abs(r.quota - 10_000 * r.neyman_w / tw) < 1.0
-
-
-def test_media_features_arrow_equals_pandas(spark):
-    """The mapInArrow transfer path must produce exactly the mapInPandas
-    output (same schema, same values) — it only changes how batches move."""
-    from platform_etl_drug_disease_spark.operators.multimodal import (
-        extract_media_features,
-        extract_media_features_arrow,
-    )
-    from platform_etl_drug_disease_spark.schemas import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents", ["doc_id", "text"])
-    media = docs.limit(50).select(
-        docs.doc_id.alias("media_id"),
-        docs.text.cast("binary").alias("payload"),
-    )
-    a = extract_media_features_arrow(media, "payload").drop("payload")
-    p = extract_media_features(media, "payload").drop("payload")
-    assert a.schema == p.schema
-    ra = sorted((r.media_id, r.payload_bytes, r.content_digest, tuple(r.feature_vec)) for r in a.collect())
-    rp = sorted((r.media_id, r.payload_bytes, r.content_digest, tuple(r.feature_vec)) for r in p.collect())
-    assert ra == rp
 
 
 def test_bfs_levels_known_graph(spark):

@@ -16,7 +16,6 @@ from platform_etl_drug_disease_spark.plans.domain_loaders import (
 )
 from platform_etl_drug_disease_spark.plans.drug_disease import run_pipeline
 from platform_etl_drug_disease_spark.plans.network import (
-    build_annotated_network,
     build_network_lut,
     tissue_filtered_network,
 )
@@ -43,12 +42,23 @@ def test_network_lut_symmetrized(spark, inputs):
     assert got == {"T1": ["T2"], "T2": ["T1", "T3"], "T3": ["T2"]}
 
 
-def test_annotated_network_maps_accessions(spark, inputs):
-    # annotated network reads the RAW target dump (it needs hgnc_id, which
-    # the shaped form drops) — mirrors the reference reading genes separately
-    ann = build_annotated_network(inputs["interactions"], inputs["target"])
-    rows = {(r["id_src"], r["id_dst"]): r["score"] for r in ann.collect()}
-    assert rows == {("T1", "T2"): 0.9, ("T2", "T3"): 0.8}
+def test_network_lut_scans_interactions_once(spark, inputs, tmp_path):
+    """Both edge directions come from one scan of the interactions: a
+    union(swap) symmetrization would read the parquet twice."""
+    path = str(tmp_path / "interactions")
+    inputs["interactions"].write.parquet(path)
+    lut = build_network_lut(
+        spark.read.parquet(path), shape_targets(inputs["target"])
+    )
+    lut.foreach(lambda r: None)  # run, so AQE finalizes the plan
+    plan = lut._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    scans = [
+        ln
+        for ln in final.splitlines()
+        if "FileScan parquet" in ln and "interactorA_uniprot_name" in ln
+    ]
+    assert len(scans) == 1, final
 
 
 def test_tissue_filter_drops_non_coexpressed(spark, inputs):
@@ -156,6 +166,34 @@ def test_drug_disease_golden(spark, outputs):
     assert r["disease_max_clinical_trial_phase_from_drugs"] == 4
     assert r["target_max_clinical_trial_phase_from_drugs"] == 4
     assert sorted(r["disease_indication_from_drugs"]) == ["EFO_D1"]
+
+
+def test_drugs_for_disease_independent_of_row_order(spark):
+    """EFO_D1 has two aggregation rows (DR2 with targets [T1], DR3 with
+    [T9]). Fed in either order, the associations carry the same
+    ``associated_*`` arrays: the row with the smallest drug_id."""
+
+    def associated(rows):
+        inputs = domain_inputs(spark)
+        del inputs["whitelist"]
+        agg = inputs["aggregated_drugs"]
+        inputs["aggregated_drugs"] = spark.createDataFrame(
+            rows(agg.collect()), agg.schema
+        ).coalesce(1)
+        out = run_pipeline(**inputs).associations
+        got = {
+            (r["target_id"], r["disease_id"]): (
+                r["associated_disease_ids"], r["associated_target_ids"]
+            )
+            for r in out.collect()
+        }
+        spark.catalog.clearCache()
+        return got
+
+    forward = associated(list)
+    backward = associated(lambda rows: rows[::-1])
+    assert forward == backward
+    assert forward[("T1", "EFO_D1")] == (["EFO_D1"], ["T1"])
 
 
 def test_whitelist_branch_keeps_unfiltered(spark, inputs):

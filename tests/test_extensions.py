@@ -9,22 +9,20 @@ from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.operators import text as tx
 from platform_etl_drug_disease_spark.operators.dedup import (
-    exact_dedup,
     jaccard_pairs,
     minhash_lsh_candidates,
-    simhash64,
 )
 from platform_etl_drug_disease_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_media_features,
-    resize_images,
     sample_frames,
 )
 from platform_etl_drug_disease_spark.operators.similarity import (
     as_double,
-    cosine,
+    dot,
     knn_bruteforce,
     knn_lsh,
+    with_unit_vec,
 )
 
 
@@ -51,7 +49,7 @@ def test_lang_id_markers_and_tiebreak(spark):
 
 def test_shingles_short_doc_empty(spark):
     df = spark.createDataFrame([("one two",), ("one two three four",)], "text: string")
-    got = [r[0] for r in df.select(tx.shingles("text", 3)).collect()]
+    got = [r["sh"] for r in tx.with_shingles(df, "text", 3).collect()]
     assert got[0] == []
     assert got[1] == ["one two three", "two three four"]
 
@@ -77,11 +75,6 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id: long, text: string")
 
 
-def test_exact_dedup_keeps_min_id(spark):
-    out = exact_dedup(_docs(spark), "doc_id", "text")
-    assert {r["doc_id"] for r in out.collect()} == {1, 3, 4}
-
-
 def test_jaccard_pairs_find_near_dup(spark):
     pairs = jaccard_pairs(_docs(spark), "doc_id", "text", threshold=0.4).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
@@ -91,24 +84,14 @@ def test_jaccard_pairs_find_near_dup(spark):
 
 
 def test_jaccard_hot_shingle_cap_bounds_candidates(spark):
-    """A stop-phrase shingle shared by every doc must not make candidate
-    generation quadratic: the df cap drops it, while true near-dups (which
-    also share low-df shingles) are still found with EXACT jaccard values
-    (verify runs over the full arrays, hot shingles included)."""
-    from platform_etl_drug_disease_spark.operators.dedup import jaccard_candidates
-    from platform_etl_drug_disease_spark.operators.text import with_shingles
-
+    """With the df cap below a stop-phrase shingle's df, true near-dups
+    (which also share low-df shingles) are still found with EXACT jaccard
+    values: verify runs over the full arrays, hot shingles included."""
     common = "as an official disclaimer this document is provided as is"
     rows = [(i, f"{common} unique filler number {i} body {i * 7}") for i in range(40)]
     rows += [(100, f"{common} the quick brown fox jumps over the lazy dog"),
              (101, f"{common} the quick brown fox jumps over the lazy dog")]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    sh = with_shingles(df.select("doc_id", "text"), "text", 3).select("doc_id", "sh")
-
-    uncapped = jaccard_candidates(sh, "doc_id", max_shingle_df=None).count()
-    capped = jaccard_candidates(sh, "doc_id", max_shingle_df=16).count()
-    assert uncapped == 42 * 41 // 2, "stop-phrase makes the uncapped join all-pairs"
-    assert capped < uncapped / 10, "df cap must collapse hot-shingle pair blowup"
 
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
              for r in jaccard_pairs(df, "doc_id", "text", threshold=0.5,
@@ -170,20 +153,13 @@ def test_dedup_recall_audit_s_curve(spark, tmp_path):
     assert out[9]["recall"] == 1.0
 
 
-def test_simhash_identical_docs_same_bucket(spark):
-    df = _docs(spark)
-    out = df.select("doc_id", simhash64(tx.tokens("text"), prefix_hex=4).alias("h"))
-    h = {r["doc_id"]: r["h"] for r in out.collect()}
-    assert h[1] == h[2]
-    assert 0 <= h[1] < 2**16
-
-
 def test_rolling_hash_is_order_sensitive(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "gamma beta alpha"), (3, "alpha beta gamma"), (4, "")],
         "doc_id: long, text: string",
     )
-    out = {r["doc_id"]: r["h"] for r in df.select("doc_id", tx.rolling_hash("text").alias("h")).collect()}
+    h = tx.rolling_hash_of(tx.tokens("text")).alias("h")
+    out = {r["doc_id"]: r["h"] for r in df.select("doc_id", h).collect()}
     assert out[1] == out[3]  # deterministic
     assert out[1] != out[2]  # order matters (unlike bow_fingerprint)
     assert 0 <= out[1] < 2147483647
@@ -204,7 +180,8 @@ def test_cosine_known_values(spark):
         [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 1.0]), ([0.0, 0.0], [1.0, 0.0])],
         "a: array<double>, b: array<double>",
     )
-    got = [r[0] for r in df.select(cosine(F.col("a"), F.col("b"))).collect()]
+    unit = with_unit_vec(with_unit_vec(df, "a", "ua"), "b", "ub")
+    got = [r[0] for r in unit.select(dot(F.col("ua"), F.col("ub"))).collect()]
     assert got[0] == pytest.approx(0.0)
     assert got[1] == pytest.approx(1.0)
     assert got[2] is None  # zero vector → null, not div-by-zero
@@ -244,10 +221,7 @@ def test_knn_lsh_subset_of_bruteforce_pairs(spark, tmp_path):
 def test_knn_ivf_partitions_and_probes(spark):
     import random
 
-    from platform_etl_drug_disease_spark.operators.similarity import (
-        ivf_assign,
-        knn_ivf,
-    )
+    from platform_etl_drug_disease_spark.operators.similarity import knn_ivf
 
     rnd = random.Random(7)
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
@@ -259,10 +233,6 @@ def test_knn_ivf_partitions_and_probes(spark):
     cents = emb.where(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
     )
-    # every candidate lands in exactly one cell
-    cells = ivf_assign(cs, "c_id", "c_vec", cents)
-    assert cells.count() == 40
-    assert cells.select("c_id").distinct().count() == 40
     # approx results carry exact scores, restricted to probed cells
     exact = knn_bruteforce(qs, cs, k=40)
     approx = knn_ivf(qs, cs, cents, k=40, nprobe=2)
@@ -271,9 +241,12 @@ def test_knn_ivf_partitions_and_probes(spark):
     assert approx_pairs
     assert approx_pairs <= exact_pairs
     # nprobe = all cells ⇒ identical to brute force (full recall)
-    full = knn_ivf(qs, cs, cents, k=40, nprobe=4)
-    full_pairs = {(r["q_id"], r["c_id"], r["cosine_sim"]) for r in full.collect()}
+    full = knn_ivf(qs, cs, cents, k=40, nprobe=4).collect()
+    full_pairs = {(r["q_id"], r["c_id"], r["cosine_sim"]) for r in full}
     assert full_pairs == exact_pairs
+    # every candidate lands in exactly one cell: with all cells probed, each
+    # query meets each other vector once
+    assert len(full) == len(full_pairs) == 3 * 39
 
 
 # ------------------------------ multimodal ------------------------------
@@ -334,19 +307,6 @@ def test_sample_frames_explodes_video_rows(spark):
     assert {r["media_id"] for r in rows} == {3}
     assert [r["frame_idx"] for r in rows] == [0, 10, 20]
     assert len({r["frame_digest"] for r in rows}) == 3  # per-frame digest
-
-
-def test_resize_updates_meta(spark):
-    out = resize_images(_media(spark).where(F.col("kind") == "image"), 224, 224)
-    for r in out.collect():
-        assert r["meta"]["width"] == 224 and r["meta"]["height"] == 224
-    from platform_etl_drug_disease_spark.operators.multimodal import (
-        real_decoder_available,
-    )
-
-    if not real_decoder_available():
-        with pytest.raises(NotImplementedError):
-            resize_images(_media(spark), 224, 224, mode="real")
 
 
 def test_connected_components_chain_and_island(spark):

@@ -3,9 +3,6 @@ reservoir sampling, RRF fusion."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -55,15 +52,6 @@ def test_upsert_latest_multiple_versions_keep_highest(spark):
     assert [(r.k, r.val) for r in out.collect()] == [(1, "v3")]
 
 
-def test_changes_only_view_is_broadcast_semi(spark):
-    from platform_etl_drug_disease_spark.operators.cdc import changes_only_view
-
-    base = _snap(spark, [(1, "a", 0, False), (2, "b", 0, False), (3, "c", 0, False)])
-    changes = _snap(spark, [(2, "x", 1, False), (9, "y", 1, False)])
-    touched = changes_only_view(base, changes, ["k"])
-    assert sorted(r.k for r in touched.collect()) == [2]
-
-
 # ---------------------------------------------------------------------------
 # Z-order layout
 # ---------------------------------------------------------------------------
@@ -84,58 +72,6 @@ def test_zvalue_matches_reference_interleave(spark):
     got = df.select("x", "y", zvalue("x", "y", 8).alias("z")).collect()
     for r in got:
         assert r.z == morton(r.x, r.y), (r.x, r.y)
-
-
-def _file_spans(path, col):
-    """(min, max) per parquet file for ``col`` from the footer statistics."""
-    spans = []
-    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        spans.append((min(mins), max(maxs)))
-    return spans
-
-
-def test_zorder_writer_bounds_both_dimensions(spark, tmp_path):
-    """Clustered layout: every file's footer must bound BOTH x and y well
-    below the global span — the property min-max file skipping needs. A
-    single-column sort would leave the y spans at ~full width."""
-    from platform_etl_drug_disease_spark.operators.layout import (
-        write_zorder_clustered,
-    )
-
-    n, side = 4096, 64  # full 64×64 grid, 16 files → 256 points each
-    grid = spark.range(n).select(
-        (F.col("id") % side).alias("x"), (F.col("id") / side).cast("long").alias("y")
-    )
-    zpath = str(tmp_path / "zorder")
-    write_zorder_clustered(grid, zpath, "x", "y", n_files=16, bits=6)
-
-    sorted_path = str(tmp_path / "xsorted")
-    (
-        grid.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(sorted_path)
-    )
-
-    def mean_span(path, col):
-        spans = _file_spans(path, col)
-        return sum(hi - lo for lo, hi in spans) / len(spans)
-
-    # 16 files over a 64×64 grid: perfect z-clustering gives 16×16 tiles
-    # (span 15 each axis); allow curve-boundary slop up to half the side.
-    assert mean_span(zpath, "x") <= side / 2
-    assert mean_span(zpath, "y") <= side / 2
-    # the x-sorted layout must be near-perfect on x and useless on y,
-    # proving the comparison is meaningful
-    assert mean_span(sorted_path, "x") <= side / 8
-    assert mean_span(sorted_path, "y") >= side - 2
 
 
 # ---------------------------------------------------------------------------

@@ -9,37 +9,16 @@ from pyspark.sql import functions as F
 from platform_etl_drug_disease_spark.operators import (
     aggregates as agg,
     arrays as arr,
-    filters as flt,
     joins as jn,
-    projections as prj,
     windows as win,
 )
 
 
-def test_project_rename(spark):
-    df = spark.createDataFrame([(1, "x")], "a: int, b: string")
-    out = prj.project(df, {"id": "a", "name": F.col("b")})
-    assert out.columns == ["id", "name"]
-    assert out.collect()[0]["id"] == 1
-
-
-def test_flatten_struct(spark):
-    df = spark.createDataFrame(
-        [((1, "d1"),)], "disease: struct<id: int, label: string>"
-    )
-    out = prj.flatten_struct(df, "disease", ["id", "label"])
-    assert set(out.columns) == {"id", "label"}
-
-
 def test_with_columns_and_drop(spark):
     df = spark.createDataFrame([(2,)], "a: int")
-    out = prj.drop(prj.with_columns(df, {"b": "a * 10"}), "a")
+    out = df.withColumns({"b": F.expr("a * 10")}).drop("a")
+    assert out.columns == ["b"]
     assert out.collect()[0]["b"] == 20
-
-
-def test_where_array_nonempty(spark):
-    df = spark.createDataFrame([([1],), ([],)], "xs: array<int>")
-    assert flt.where_array_nonempty(df, "xs").count() == 1
 
 
 def test_semi_anti_partition_rows(spark):
@@ -66,6 +45,22 @@ def test_annotate_edges_inner_drops_unmatched(spark):
     edges = spark.createDataFrame([("a", "zz", 1.0)], "src: string, dst: string, w: double")
     dim = spark.createDataFrame([("a", "g")], "acc: string, gene: string")
     assert jn.annotate_edges(edges, dim, ("src", "dst"), "acc", {"gene": "g"}).count() == 0
+
+
+def test_symmetrize_both_directions_no_implicit_distinct(spark):
+    edges = spark.createDataFrame(
+        [("a", "b", 0.9), ("a", "b", 0.9), ("c", "c", 0.5), ("b", "a", 0.1)],
+        "s: string, d: string, w: double",
+    )
+    out = jn.symmetrize(edges, "s", "d")
+    assert out.columns == ["s", "d", "w"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == sorted([
+        ("a", "b", 0.9), ("b", "a", 0.9),  # both directions, w carried
+        ("a", "b", 0.9), ("b", "a", 0.9),  # the duplicate input row stays
+        ("c", "c", 0.5), ("c", "c", 0.5),  # a self-loop appears twice
+        ("b", "a", 0.1), ("a", "b", 0.1),
+    ])
 
 
 def test_salted_join_matches_plain(spark):
@@ -106,14 +101,6 @@ def test_flatten_distinct_replaces_udf(spark):
     assert got == ["a", "b", "c"]
 
 
-def test_explode_outer_keeps_empty(spark):
-    df = spark.createDataFrame([(1, ["x"]), (2, [])], "id: int, xs: array<string>")
-    plain = arr.explode_col(df, "xs", "x")
-    outer = arr.explode_col(df, "xs", "x", keep_empty=True)
-    assert plain.count() == 1  # empty array silently dropped (reference explode)
-    assert outer.count() == 2
-
-
 def test_overlap_coefficient_null_safe(spark):
     df = spark.createDataFrame(
         [(["a", "b"], ["b"]), ([], ["x"]), (None, ["x"])],
@@ -132,9 +119,6 @@ def test_window_top_n_and_running(spark):
     )
     top = win.top_n_per_group(df, ["k"], [F.col("v").desc()], n=1).collect()
     assert {(r["k"], r["v"]) for r in top} == {("a", 20.0), ("b", 1.0)}
-    run = win.running_agg(df, ["k"], ["seq"], "v", "cum").collect()
-    cum = {(r["k"], r["seq"]): r["cum"] for r in run}
-    assert cum[("a", 3)] == pytest.approx(35.0)
 
 
 def test_asof_join_backward_inclusive(spark):
@@ -170,15 +154,6 @@ def test_band_join_bucketed_boundaries(spark):
     ).select("rid", F.to_timestamp("e_ts").alias("e_ts"))
     out = jn.band_join_bucketed(left, right, "p_ts", "e_ts", band_seconds=300)
     assert sorted(r["rid"] for r in out.collect()) == [10, 11, 13]
-
-
-def test_group_approx_distinct_within_hll_tolerance(spark):
-    df = spark.createDataFrame(
-        [(k, v) for k in ("x", "y") for v in range(500)], "k: string, v: long"
-    )
-    out = {r["k"]: r["degree"] for r in agg.group_approx_distinct(df, ["k"], "v", out="degree").collect()}
-    for k in ("x", "y"):
-        assert abs(out[k] - 500) / 500 < 0.1  # HLL++ default rsd is ~5%
 
 
 def test_asof_join_matches_naive_reference(spark):

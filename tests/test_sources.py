@@ -201,59 +201,6 @@ def test_load_table_events_ts_both_spellings(spark, tmp_path):
     assert a == b
 
 
-def test_write_sorted_shards_orders_globally(spark, tmp_path):
-    """Each shard file is internally sorted and shard ranges do not overlap
-    (global order across shard boundaries)."""
-    import pyspark.sql.functions as F
-
-    from platform_etl_drug_disease_spark.schemas import load_table
-    from platform_etl_drug_disease_spark.sources.writers import write_sorted_shards
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents", ["doc_id", "n_chars"])
-    out = str(tmp_path / "shards")
-    write_sorted_shards(docs, out, "doc_id", n_shards=4)
-    back = spark.read.parquet(out).withColumn("__file", F.input_file_name())
-    per_file = (
-        back.groupBy("__file")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"), F.count("*").alias("n"))
-        .collect()
-    )
-    assert sum(r.n for r in per_file) == docs.count()
-    spans = sorted((r.lo, r.hi) for r in per_file)
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2, "shard ranges overlap"
-    # internal order: rows in file order must be monotone per shard
-    import pyarrow.parquet as pq
-    import glob as g
-
-    for f in g.glob(out + "/part-*.parquet"):
-        ids = pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()
-        assert ids == sorted(ids)
-
-
-def test_compact_small_files_preserves_rows(spark, tmp_path):
-    from platform_etl_drug_disease_spark.sources.writers import (
-        compact_small_files,
-    )
-
-    frag = str(tmp_path / "frag")
-    # 40 tiny files (one per partition)
-    spark.range(0, 4000).withColumn("v", F.col("id") * 2).repartition(
-        40
-    ).write.parquet(frag)
-    import glob as g
-
-    n_in = len([f for f in g.glob(frag + "/*.parquet")])
-    assert n_in >= 30
-    n_out = compact_small_files(spark, frag, target_file_bytes=10**9)
-    out = frag + ".compacted"
-    files_out = [f for f in g.glob(out + "/*.parquet")]
-    assert len(files_out) == n_out == 1
-    got = spark.read.parquet(out)
-    assert got.count() == 4000
-    assert got.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(4000))
-
-
 def test_json_reader_permissive_corrupt_records(spark, tmp_path):
     """PERMISSIVE JSON ingestion: malformed lines land in _corrupt_record
     instead of failing the job — the contract a 100-TB crawl ingest needs
@@ -275,24 +222,3 @@ def test_json_reader_permissive_corrupt_records(spark, tmp_path):
     bad = [r for r in rows if r["_corrupt_record"] is not None]
     assert len(good) == 2 and len(bad) == 1
     assert bad[0]["_corrupt_record"].startswith("THIS")
-
-
-def test_parquet_column_stats_footer_audit(spark, tmp_path):
-    from platform_etl_drug_disease_spark.sources.writers import (
-        parquet_column_stats,
-    )
-
-    out = str(tmp_path / "audited")
-    spark.range(0, 10000).select(
-        F.col("id"),
-        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") * 2).alias("v"),
-        F.lit("constant-text").alias("c"),
-    ).repartition(4).write.parquet(out)
-    stats = {s["column"]: s for s in parquet_column_stats(out)}
-    assert set(stats) == {"id", "v", "c"}
-    assert stats["v"]["nulls"] == 2000
-    assert all(s["skippable"] for s in stats.values())
-    # the constant column is dictionary/RLE-encoded to almost nothing long
-    # before snappy sees it — its FOOTPRINT is tiny, though its compression
-    # RATIO can exceed 1.0 (nothing left for snappy to squeeze)
-    assert stats["c"]["compressed"] < stats["id"]["compressed"] / 10

@@ -1,4 +1,4 @@
-"""Structured Streaming tests: file stream → windowed/sessionized/stateful
+"""Structured Streaming tests: file stream → interval-join/stateful
 operators → memory sink (Trigger.AvailableNow), checked against the batch
 equivalents — streaming and batch must produce the same tables."""
 
@@ -13,8 +13,6 @@ from platform_etl_drug_disease_spark.streaming.windows import (
     read_event_stream,
     run_to_memory_sink,
     running_user_totals,
-    sessionized_counts,
-    windowed_event_counts,
 )
 
 EVENTS = [
@@ -48,45 +46,6 @@ def events_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def test_windowed_counts_match_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=2)
-    # complete mode: with AvailableNow the final watermark never passes the
-    # last windows, so append mode would (correctly) emit nothing yet.
-    got = run_to_memory_sink(
-        windowed_event_counts(stream, window="1 hour"), "win_counts",
-        output_mode="complete",
-    )
-    rows = {
-        (r["win_start"].isoformat(), r["event_type"]): (r["n"], r["value_sum"])
-        for r in got.collect()
-    }
-    assert rows == {
-        ("2024-01-01T00:00:00", "click"): (2, 3.0),
-        ("2024-01-01T00:00:00", "view"): (1, 4.0),
-        ("2024-01-01T01:00:00", "view"): (1, 3.0),
-        ("2024-01-01T01:00:00", "click"): (1, 5.0),
-    }
-
-
-def test_session_windows(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
-    got = run_to_memory_sink(
-        sessionized_counts(stream, gap="30 minutes"), "sess_counts",
-        output_mode="complete",
-    )
-    sessions = {
-        (r["user_id"], r["session_start"].isoformat()): r["n_events"]
-        for r in got.collect()
-    }
-    # user 1: events at 00:00+00:10 merge (gap 10m), 01:00 separate
-    assert sessions == {
-        (1, "2024-01-01T00:00:00"): 2,
-        (1, "2024-01-01T01:00:00"): 1,
-        (2, "2024-01-01T00:05:00"): 1,
-        (2, "2024-01-01T01:30:00"): 1,
-    }
-
-
 def test_stream_stream_interval_join(spark, events_dir):
     from platform_etl_drug_disease_spark.streaming.windows import (
         stream_stream_interval_join,
@@ -110,23 +69,6 @@ def test_stream_stream_interval_join(spark, events_dir):
     assert pairs == {(1, 3), (2, 3)}
 
 
-def test_stream_dedup_first_wins(spark, events_dir):
-    from platform_etl_drug_disease_spark.streaming.windows import stream_dedup
-
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=2)
-    deduped = stream_dedup(stream, ["user_id", "event_type"])
-    got = run_to_memory_sink(deduped, "sdedup", output_mode="append")
-    collected = got.collect()
-    rows = {(r["user_id"], r["event_type"]): r["event_id"] for r in collected}
-    # exactly one survivor per (user, type); which duplicate survives within
-    # a micro-batch is not arrival-ordered, so assert membership, not identity
-    assert len(collected) == 4
-    assert rows[(1, "click")] in (1, 2)  # the only duplicated key
-    assert rows[(1, "view")] == 3
-    assert rows[(2, "view")] == 4
-    assert rows[(2, "click")] == 5
-
-
 def test_stateful_running_totals(spark, events_dir):
     # maxFilesPerTrigger=2 forces multiple micro-batches → state must carry
     # across batches; update-mode memory sink keeps the latest row per user.
@@ -144,25 +86,6 @@ def test_stateful_running_totals(spark, events_dir):
     )
     final = {r["user_id"]: (r["n"], r["v"]) for r in latest}
     assert final == {1: (3, 6.0), 2: (2, 9.0)}
-
-
-def test_foreach_batch_parquet_sink_round_trip(spark, events_dir, tmp_path):
-    from platform_etl_drug_disease_spark.streaming.windows import (
-        run_foreach_batch_parquet,
-    )
-
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=2)
-    out = str(tmp_path / "landed")
-    ckpt = str(tmp_path / "ckpt")
-    n_batches = run_foreach_batch_parquet(stream, out, ckpt)
-    assert n_batches >= 1
-    landed = spark.read.parquet(out)
-    assert landed.count() == len(EVENTS)
-    assert {r["event_id"] for r in landed.select("event_id").collect()} == {1, 2, 3, 4, 5}
-    # restart with the same checkpoint: nothing new to process, no duplicates
-    stream2 = read_event_stream(spark, events_dir, max_files_per_trigger=2)
-    run_foreach_batch_parquet(stream2, out, ckpt)
-    assert spark.read.parquet(out).count() == len(EVENTS)
 
 
 def test_write_batch_idempotent_crash_window_replay(spark, tmp_path):
@@ -378,127 +301,6 @@ def test_streaming_funnel_equals_batch_per_user(spark, tmp_path):
     assert got == want
 
 
-def test_watermark_drops_late_rows_accounted(spark, tmp_path):
-    """Late-data contract: a straggler behind the watermark is dropped by
-    the stateful aggregation (numRowsDroppedByWatermark), its window never
-    materializes, and state stays bounded. The watermark applied to LATE
-    FILTERING lags the observed max event time by one committed batch, so
-    the straggler is staged two micro-batches after the fresh data; files
-    arrive in pinned-mtime order (the file source admits by mtime)."""
-    import os
-    import time as _time
-
-    from platform_etl_drug_disease_spark.streaming.windows import (
-        read_event_stream,
-        windowed_event_counts,
-    )
-
-    d = tmp_path / "latestream"
-    d.mkdir()
-    rows = [
-        (1, "2024-01-03 09:00:00"),
-        (2, "2024-01-03 10:00:00"),  # batch 0: watermark will become 09:00
-        (3, "2024-01-03 10:10:00"),
-        (4, "2024-01-03 10:20:00"),  # batch 1: 09:00 commits for late filter
-        (5, "2024-01-03 10:30:00"),
-        (6, "2024-01-01 00:00:00"),  # batch 2: two-days-late straggler
-    ]
-    base = _time.time() - 1000
-    for i, (eid, ts) in enumerate(rows):
-        f = d / f"part-{i}.json"
-        f.write_text(
-            json.dumps(
-                {
-                    "event_id": eid,
-                    "ts": ts,
-                    "user_id": 1,
-                    "event_type": "click",
-                    "value": 1.0,
-                    "props": "{}",
-                }
-            )
-            + "\n"
-        )
-        os.utime(f, (base + i * 10, base + i * 10))
-
-    stream = read_event_stream(spark, str(d), max_files_per_trigger=2)
-    agg = windowed_event_counts(stream, window="1 hour", watermark="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_late_drop")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progress = list(q.recentProgress)
-    dropped = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for p in progress
-        for op in p.get("stateOperators", [])
-    )
-    assert dropped == 1, f"expected exactly the straggler dropped, got {dropped}"
-    # bounded state: only the two fresh hourly windows ever live in state
-    assert all(
-        op["numRowsTotal"] <= 2
-        for p in progress
-        for op in p["stateOperators"]
-    )
-    # and the straggler's window never materialized in the output
-    wins = {
-        r["win_start"].isoformat() for r in spark.table("t_late_drop").collect()
-    }
-    assert "2024-01-01T00:00:00" not in wins
-
-
-def test_transform_with_state_totals_match_legacy(spark, events_dir):
-    """The Spark-4 transformWithStateInPandas totals must equal the
-    applyInPandasWithState implementation's final per-user values.
-
-    Where the transformWithState driver worker cannot start (it imports
-    google.protobuf descriptors at startup; this container has no protobuf
-    wheel and package installs are forbidden, so the wheel cannot be added
-    — VERDICT r3 item 7), the test instead pins the GUARD contract: the
-    availability probe reports False for exactly that import, so callers
-    are routed to the applyInPandasWithState twin, which carries the same
-    semantics and is fully tested above. With protobuf present this test
-    runs the real transformWithState path end-to-end."""
-    from platform_etl_drug_disease_spark.streaming.windows import (
-        running_user_totals_tws,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        # Falsifiable guard contract (not a tautology): the probe may say
-        # "unavailable" ONLY when the module spec is genuinely absent from
-        # this interpreter — checked through importlib, not by repeating the
-        # probe's own import. If protobuf ever becomes installable here and
-        # the probe lags, this fails and the real path below must run.
-        import importlib.util
-
-        try:
-            spec = importlib.util.find_spec("google.protobuf")
-        except ModuleNotFoundError:  # parent package 'google' absent entirely
-            spec = None
-        assert spec is None, (
-            "probe reports transformWithState unavailable, but google."
-            "protobuf IS importable — fix transform_with_state_available()"
-        )
-        return
-
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=2)
-    got = run_to_memory_sink(
-        running_user_totals_tws(stream), "tws_totals", output_mode="update"
-    )
-    latest = (
-        got.groupBy("user_id")
-        .agg(F.max("total_events").alias("n"), F.max("total_value").alias("v"))
-        .collect()
-    )
-    final = {r["user_id"]: (r["n"], r["v"]) for r in latest}
-    assert final == {1: (3, 6.0), 2: (2, 9.0)}
-
-
 def test_stream_static_dimension_join(spark, events_dir):
     """Stream-static enrichment: a file stream joined to a static in-memory
     dimension (per-user tier) must produce the same enriched aggregate as
@@ -519,32 +321,6 @@ def test_stream_static_dimension_join(spark, events_dir):
         ).collect()
     }
     assert got == {"gold": (3, 6.0), "basic": (2, 9.0)}
-
-
-def test_deadletter_split_never_drops_rows(spark, events_dir, tmp_path):
-    """Dead-letter ingest: rows failing validation land in the dead-letter
-    sink with their batch id; clean rows land in the good sink; nothing is
-    dropped and the union equals the input."""
-    from platform_etl_drug_disease_spark.streaming.windows import (
-        run_foreach_batch_deadletter,
-    )
-
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=2)
-    good, dead = str(tmp_path / "good"), str(tmp_path / "dead")
-    n = run_foreach_batch_deadletter(
-        stream,
-        good,
-        dead,
-        str(tmp_path / "ckpt"),
-        invalid_predicate=F.col("value") > 3.5,  # events #4 (4.0) and #5 (5.0)
-    )
-    assert n >= 1
-    good_ids = {r["event_id"] for r in spark.read.parquet(good).collect()}
-    dead_rows = spark.read.parquet(dead).collect()
-    dead_ids = {r["event_id"] for r in dead_rows}
-    assert good_ids == {1, 2, 3}
-    assert dead_ids == {4, 5}
-    assert all(r["__batch_id"] is not None for r in dead_rows)
 
 
 def test_streaming_containment_incremental_matches_batch(spark):
