@@ -152,25 +152,6 @@ def _candidates_from_shingles(
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
-    """shingle → minhash → band → bucket-join candidate pairs (id_a < id_b).
-
-    The join is on band keys, so cost scales with bucket sizes, not n².
-    The shingle table is persisted: the banded self-join consumes the
-    signature pipeline on BOTH sides, and without materialization the whole
-    tokenize/shingle/hash chain runs twice (measured pathological on large
-    corpora)."""
-    sh = _shingle_table(df, id_col, text_col, shingle_n).persist()
-    return _candidates_from_shingles(sh, id_col, n_hashes, n_bands)
-
-
 def _count_intersections(
     cand: DataFrame,
     ex_a: DataFrame,
@@ -183,7 +164,7 @@ def _count_intersections(
     arrays are distinct per doc), shipping narrow (pair, key) rows instead
     of array payloads — the verify shape shared by the whole dedup family
     and mirrored verbatim in every DuckDB oracle (a change here must change
-    them all, which is why it lives in ONE place; round-7 review finding).
+    them all, which is why it lives in ONE place).
     ``ex_a``/``ex_b`` are (alias, shingle) rows; keys may be raw strings or
     hashes, as long as both sides agree."""
     return (
@@ -278,7 +259,7 @@ def incremental_minhash_matches(
     snapshot pieces so a multi-batch caller (the streaming twin's
     foreachBatch) pays the corpus-sized work ONCE per snapshot, not per
     micro-batch; ``new_shingles`` likewise lets the caller own (and
-    unpersist) the batch-side shingle table (round-8 review finding).
+    unpersist) the batch-side shingle table.
     New-batch-internal duplicates are a separate :func:`minhash_lsh_dedup`
     over the (small) batch.
     """
@@ -492,7 +473,7 @@ def _prefix_len(sz: Column, threshold: float) -> Column:
     ``floor(sz·(1−τ)) + 1`` silently evaluates ``1−0.8`` as
     0.19999999999999996, making the prefix one element SHORT for every sz
     that is a multiple of 5 at τ=0.8 (e.g. sz=5 → 1, lossless needs 2) and
-    dropping boundary-containment pairs (ADVICE r6, medium). ``_min_inter``'s
+    dropping boundary-containment pairs. ``_min_inter``'s
     epsilon errs toward a LONGER prefix, which only adds candidates."""
     return sz - _min_inter(sz, threshold) + 1
 
@@ -525,33 +506,59 @@ def _resolve_shingle_table(
     )
 
 
-def _jaccard_prefix_stage(
-    sh: DataFrame,
+def jaccard_pairs(
+    df: DataFrame,
     id_col: str,
-    cols: list[Column],
-    threshold: float,
-    max_shingle_df: int | None,
-    block_col: str | None,
-) -> tuple[DataFrame, DataFrame]:
-    """(candidates, hashed_exploded) — :func:`jaccard_pairs`' lossless
-    PPJoin candidate stage over a ``(id, sh, __sz)`` table, factored out so
-    the scale-stress harness (tools/dedup_scale_stress.py) can COUNT
-    candidates without paying the verify; jaccard_pairs consumes both
-    returns (the exploded rows feed its verify). Losslessness arguments
-    live in jaccard_pairs' docstring.
+    text_col: str,
+    shingle_n: int = 3,
+    threshold: float = 0.5,
+    block_col: str | None = None,
+    max_shingle_df: int | None = 256,
+    shingles: DataFrame | None = None,
+) -> DataFrame:
+    """n-gram Jaccard near-dup pairs via PREFIX-FILTERED shingle blocking
+    (the PPJoin prefix principle) with an exact count-based verify.
 
-    Shingles ride every downstream shuffle as 8-byte xxhash64 keys, not
-    ~25-byte strings: the verify fan-out (candidates × |sh| rows) is the
-    dominant shuffle, and long keys cut its bytes ~3× and make the joins/
-    aggregations integer-keyed. Collision risk is birthday-bounded over
-    the DISTINCT shingle vocabulary (~272k at sf≈1 → P ≈ 4e-9); a
-    collision would merge two shingles corpus-wide, which both candidate
-    generation and verify would see consistently. The canonical prefix
-    order becomes (df, hash) — any consistent global order keeps the
-    prefix filter lossless, so the thresholded output (and the oracle,
-    which orders by (df, text)) is unchanged."""
+    Candidate generation: two docs can have Jaccard ≥ τ only if they share
+    at least one shingle among each doc's ``|sh| − ⌈τ·|sh|⌉ + 1`` RAREST
+    (integer-exact, :func:`_prefix_len`) shingles (global order = ascending document frequency, shingle text as
+    tie-break) — rarer-prefix overlap is a necessary condition, so the
+    filter is lossless for the thresholded output. The self-join therefore
+    runs only over prefix rows: join fan-out is Σ_s df_prefix(s)², and
+    prefix membership deliberately concentrates on LOW-df shingles, so the
+    quadratic term collapses (measured 23× → ~3× data-scaling on a
+    duplicate-heavy corpus at sf≈1). ``max_shingle_df`` additionally drops
+    pathological stop-phrase shingles from prefixes (never from values).
+
+    Verification is exact over ALL shingles, hot included, and ships no
+    arrays: shingle arrays are distinct per doc (shingles_from_tokens), so
+    ``candidates ⋈ exploded_a ⋈ exploded_b`` grouped by pair COUNTS the true
+    intersection; union follows from per-doc sizes. O(candidates × |sh|)
+    narrow rows, never O(n²) and never array-width shuffle bytes.
+
+    Returns (id_a, id_b, jaccard ≥ threshold), jaccard rounded to 6 places.
+
+    ``shingles``: optional prebuilt ``(id_col, sh)`` table (the
+    :func:`_shingle_table` shape, unblocked only) — pass an already-PERSISTED
+    one to share the tokenize/shingle work with another consumer (e.g. the
+    MinHash candidate side of a recall audit) instead of computing it twice.
+    """
     from pyspark.sql import Window
 
+    cols = [F.col(id_col)] + ([F.col(block_col)] if block_col else [])
+    sh = _resolve_shingle_table(
+        df, id_col, text_col, shingle_n, cols, block_col, shingles
+    )
+    # Shingles ride every downstream shuffle as 8-byte xxhash64 keys, not
+    # ~25-byte strings: the verify fan-out (candidates × |sh| rows) is the
+    # dominant shuffle, and long keys cut its bytes ~3× and make the joins/
+    # aggregations integer-keyed. Collision risk is birthday-bounded over
+    # the DISTINCT shingle vocabulary (~272k at sf≈1 → P ≈ 4e-9); a
+    # collision would merge two shingles corpus-wide, which both candidate
+    # generation and verify would see consistently. The canonical prefix
+    # order becomes (df, hash) — any consistent global order keeps the
+    # prefix filter lossless, so the thresholded output (and the oracle,
+    # which orders by (df, text)) is unchanged.
     exploded = sh.select(
         *cols, F.col("__sz"), F.explode("sh").alias("__s")
     ).select(*cols, F.col("__sz"), F.xxhash64("__s").alias("shingle"))
@@ -627,53 +634,6 @@ def _jaccard_prefix_stage(
         - F.lit(1e-6)
     )
     cand = pairj.where(ub.cast("double") >= inter_floor).select("id_a", "id_b")
-    return cand, exploded
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    block_col: str | None = None,
-    max_shingle_df: int | None = 256,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """n-gram Jaccard near-dup pairs via PREFIX-FILTERED shingle blocking
-    (the PPJoin prefix principle) with an exact count-based verify.
-
-    Candidate generation: two docs can have Jaccard ≥ τ only if they share
-    at least one shingle among each doc's ``|sh| − ⌈τ·|sh|⌉ + 1`` RAREST
-    (integer-exact, :func:`_prefix_len`) shingles (global order = ascending document frequency, shingle text as
-    tie-break) — rarer-prefix overlap is a necessary condition, so the
-    filter is lossless for the thresholded output. The self-join therefore
-    runs only over prefix rows: join fan-out is Σ_s df_prefix(s)², and
-    prefix membership deliberately concentrates on LOW-df shingles, so the
-    quadratic term collapses (measured 23× → ~3× data-scaling on a
-    duplicate-heavy corpus at sf≈1). ``max_shingle_df`` additionally drops
-    pathological stop-phrase shingles from prefixes (never from values).
-
-    Verification is exact over ALL shingles, hot included, and ships no
-    arrays: shingle arrays are distinct per doc (shingles_from_tokens), so
-    ``candidates ⋈ exploded_a ⋈ exploded_b`` grouped by pair COUNTS the true
-    intersection; union follows from per-doc sizes. O(candidates × |sh|)
-    narrow rows, never O(n²) and never array-width shuffle bytes.
-
-    Returns (id_a, id_b, jaccard ≥ threshold), jaccard rounded to 6 places.
-
-    ``shingles``: optional prebuilt ``(id_col, sh)`` table (the
-    :func:`_shingle_table` shape, unblocked only) — pass an already-PERSISTED
-    one to share the tokenize/shingle work with another consumer (e.g. the
-    MinHash candidate side of a recall audit) instead of computing it twice.
-    """
-    cols = [F.col(id_col)] + ([F.col(block_col)] if block_col else [])
-    sh = _resolve_shingle_table(
-        df, id_col, text_col, shingle_n, cols, block_col, shingles
-    )
-    cand, exploded = _jaccard_prefix_stage(
-        sh, id_col, cols, threshold, max_shingle_df, block_col
-    )
     ex_a = exploded.select(F.col(id_col).alias("id_a"), F.col("shingle"))
     ex_b = exploded.select(F.col(id_col).alias("id_b"), F.col("shingle"))
     inter_cnt = _count_intersections(cand, ex_a, ex_b)
@@ -695,23 +655,80 @@ def jaccard_pairs(
     )
 
 
-def _containment_prefix_candidates(
-    exploded: DataFrame,
-    freq: DataFrame,
-    cols: list[Column],
+def containment_pairs(
+    df: DataFrame,
     id_col: str,
-    threshold: float,
-    block_col: str | None,
-    contained_pred: Column | None,
+    text_col: str,
+    shingle_n: int = 3,
+    threshold: float = 0.8,
+    block_col: str | None = None,
+    max_shingle_df: int | None = 256,
+    shingles: DataFrame | None = None,
+    contained_pred: Column | None = None,
 ) -> DataFrame:
-    """The one-sided prefix-filtered candidate stage of
-    :func:`containment_pairs` — factored out so the scale-stress harness
-    can count its fan-out directly (the `_jaccard_prefix_stage` precedent;
-    VERDICT r7 item 7). ``exploded`` = (cols, __sz, shingle-hash) rows,
-    ``freq`` = the df-capped (shingle, __df) table. Returns DISTINCT
-    (id_a, id_b) candidate pairs."""
+    """EXACT (id_a, id_b, containment ≥ threshold) pairs by shingle
+    containment ``c(A,B) = |sh(A) ∩ sh(B)| / |sh(A)|`` — the ASYMMETRIC
+    near-dup relation, lossless prefix-filtered. Symmetric Jaccard
+    structurally misses size-skewed duplication (a doc quoted whole inside
+    a 10× larger aggregator page has J ≈ 0.1 at any useful threshold but
+    containment ≈ 1.0), and that wrapped-inclusion pattern is a major
+    residual duplicate class in web training corpora after Jaccard/MinHash
+    passes. This is the exact-truth side of the family;
+    :func:`containment_minhash_topk` is the sub-quadratic 100-TB candidate
+    path, and the catalog's ``containment_recall_audit`` prices the gap.
+
+    Candidate generation is the PPJoin prefix principle adapted to the
+    one-sided constraint: ``c(A,B) ≥ τ`` forces B to share at least one of
+    A's ``|sh_A| − ⌈τ·|sh_A|⌉ + 1`` globally-RAREST shingles (if B misses
+    the whole prefix, the intersection is at most ``|sh_A| − prefix_len <
+    τ·|sh_A|``; integer-exact via :func:`_prefix_len` — the float form is
+    one short at |sh_A| multiples of 5), so the join runs
+    A-prefix × all-docs — and because every
+    prefix shingle passed the ``max_shingle_df`` cap, the B side per join
+    key is at most ``max_shingle_df`` rows: candidate fan-out is
+    Σ_A prefix_len(A) × df ≤ cap, never corpus². Unlike the Jaccard join
+    there is NO prefix on B (containment puts no constraint on the
+    container's size — that asymmetry is the point). As in
+    :func:`jaccard_pairs`, the df cap bounds prefix membership only
+    (documented contract: a doc whose shingles are almost all hotter than
+    the cap can miss containers); verification counts the TRUE intersection
+    over ALL shingles, hot included, so reported values are exact.
+
+    Output is the full thresholded pair set (unbounded on replica-dense
+    corpora — c(A,B)=1 both ways inside exact-dup clusters); catalog-facing
+    consumers use :func:`containment_topk` for the bounded k·n contract, or
+    aggregate immediately (the recall audit). Returns
+    (id_a, id_b, containment) rows, containment rounded to 6 places.
+
+    ``shingles``: optional prebuilt ``(id_col, sh)`` table (the
+    :func:`_shingle_table` shape, unblocked only) — pass an already-PERSISTED
+    one to share the tokenize/shingle work with another consumer (the
+    MinHash candidate side of the recall audit, a co-running Jaccard pass)
+    instead of computing it twice; mirrors ``jaccard_pairs(shingles=)``.
+
+    ``contained_pred``: optional boolean Column over the id column that
+    restricts the CONTAINED (A) side — the prefix rows and therefore the
+    candidate join — to the docs it selects, while df counts, the B side,
+    and the verify stay full-corpus. The output is then EXACTLY the subset
+    of the full relation with ``contained_pred(id_a)`` true (every pruning
+    rule is per-A-doc, so dropping A docs drops only their pairs): the
+    hook the sampled recall audit uses to put the exact-truth stage on a
+    deterministic Horvitz–Thompson doc sample at ~p× cost."""
     from pyspark.sql import Window
 
+    cols = [F.col(id_col)] + ([F.col(block_col)] if block_col else [])
+    sh = _resolve_shingle_table(
+        df, id_col, text_col, shingle_n, cols, block_col, shingles
+    )
+    # 8-byte hashed shingle keys for every shuffle, as in jaccard_pairs
+    # (same birthday-bounded collision argument; the oracle joins on raw
+    # shingle text — any consistent key gives identical counts).
+    exploded = sh.select(
+        *cols, F.col("__sz"), F.explode("sh").alias("__s")
+    ).select(*cols, F.col("__sz"), F.xxhash64("__s").alias("shingle"))
+    freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+    if max_shingle_df is not None:
+        freq = freq.where(F.col("__df") <= max_shingle_df)
     w = Window.partitionBy(F.col(id_col)).orderBy("__df", "shingle")
     prefix_len = _prefix_len(F.col("__sz"), threshold)
     # contained-side restriction BEFORE the prefix window: df comes from the
@@ -743,92 +760,12 @@ def _containment_prefix_candidates(
     )
     if block_col:
         cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    return (
+    cand = (
         a.join(b, cond)
         .select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
         .distinct()
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    block_col: str | None = None,
-    max_shingle_df: int | None = 256,
-    shingles: DataFrame | None = None,
-    contained_pred: Column | None = None,
-) -> DataFrame:
-    """EXACT (id_a, id_b, containment ≥ threshold) pairs by shingle
-    containment ``c(A,B) = |sh(A) ∩ sh(B)| / |sh(A)|`` — the ASYMMETRIC
-    near-dup relation, lossless prefix-filtered. Symmetric Jaccard
-    structurally misses size-skewed duplication (a doc quoted whole inside
-    a 10× larger aggregator page has J ≈ 0.1 at any useful threshold but
-    containment ≈ 1.0), and that wrapped-inclusion pattern is a major
-    residual duplicate class in web training corpora after Jaccard/MinHash
-    passes. This is the exact-truth side of the family;
-    :func:`containment_minhash_topk` is the sub-quadratic 100-TB candidate
-    path, and the catalog's ``containment_recall_audit`` prices the gap.
-
-    Candidate generation is the PPJoin prefix principle adapted to the
-    one-sided constraint: ``c(A,B) ≥ τ`` forces B to share at least one of
-    A's ``|sh_A| − ⌈τ·|sh_A|⌉ + 1`` globally-RAREST shingles (if B misses
-    the whole prefix, the intersection is at most ``|sh_A| − prefix_len <
-    τ·|sh_A|``; integer-exact via :func:`_prefix_len` — the float form was
-    one short at |sh_A| multiples of 5, ADVICE r6), so the join runs
-    A-prefix × all-docs — and because every
-    prefix shingle passed the ``max_shingle_df`` cap, the B side per join
-    key is at most ``max_shingle_df`` rows: candidate fan-out is
-    Σ_A prefix_len(A) × df ≤ cap, never corpus². Unlike the Jaccard join
-    there is NO prefix on B (containment puts no constraint on the
-    container's size — that asymmetry is the point). As in
-    :func:`jaccard_pairs`, the df cap bounds prefix membership only
-    (documented contract: a doc whose shingles are almost all hotter than
-    the cap can miss containers); verification counts the TRUE intersection
-    over ALL shingles, hot included, so reported values are exact.
-
-    Output is the full thresholded pair set (unbounded on replica-dense
-    corpora — c(A,B)=1 both ways inside exact-dup clusters); catalog-facing
-    consumers use :func:`containment_topk` for the bounded k·n contract, or
-    aggregate immediately (the recall audit). Returns
-    (id_a, id_b, containment) rows, containment rounded to 6 places.
-
-    ``shingles``: optional prebuilt ``(id_col, sh)`` table (the
-    :func:`_shingle_table` shape, unblocked only) — pass an already-PERSISTED
-    one to share the tokenize/shingle work with another consumer (the
-    MinHash candidate side of the recall audit, a co-running Jaccard pass)
-    instead of computing it twice; mirrors ``jaccard_pairs(shingles=)``.
-
-    ``contained_pred``: optional boolean Column over the id column that
-    restricts the CONTAINED (A) side — the prefix rows and therefore the
-    candidate join — to the docs it selects, while df counts, the B side,
-    and the verify stay full-corpus. The output is then EXACTLY the subset
-    of the full relation with ``contained_pred(id_a)`` true (every pruning
-    rule is per-A-doc, so dropping A docs drops only their pairs): the
-    hook the sampled recall audit uses to put the exact-truth stage on a
-    deterministic Horvitz–Thompson doc sample at ~p× cost (VERDICT r7
-    item 1)."""
-    from pyspark.sql import Window
-
-    cols = [F.col(id_col)] + ([F.col(block_col)] if block_col else [])
-    sh = _resolve_shingle_table(
-        df, id_col, text_col, shingle_n, cols, block_col, shingles
-    )
-    # 8-byte hashed shingle keys for every shuffle, as in jaccard_pairs
-    # (same birthday-bounded collision argument; the oracle joins on raw
-    # shingle text — any consistent key gives identical counts).
-    exploded = sh.select(
-        *cols, F.col("__sz"), F.explode("sh").alias("__s")
-    ).select(*cols, F.col("__sz"), F.xxhash64("__s").alias("shingle"))
-    freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    if max_shingle_df is not None:
-        freq = freq.where(F.col("__df") <= max_shingle_df)
-    cand = _containment_prefix_candidates(
-        exploded, freq, cols, id_col, threshold, block_col, contained_pred
     )
     ex_a = exploded.select(F.col(id_col).alias("id_a"), F.col("shingle"))
     ex_b = exploded.select(F.col(id_col).alias("id_b"), F.col("shingle"))
@@ -926,12 +863,12 @@ def minhash_slot_rows(
     hashes low under some mixer becomes the slot-min of every doc carrying
     it, and the bucket join then emits a QUADRATIC-in-boilerplate-mass
     candidate set (measured: 92.7× candidates for 10× data on a corpus
-    where 30% of docs share one 8-token phrase — tools/dedup_scale_stress
-    caught it). With the cap, every slot key's pre-image is one concrete
-    shingle shared by every doc in the bucket, so bucket size ≤ the
-    shingle's df ≤ cap: total candidate mass is Σ_s df_prefix-style, linear
-    in corpus size with a cap-bounded constant — the same Σ df² structure
-    (and the same contract) as the exact prefix path's ``max_shingle_df``.
+    where 30% of docs share one 8-token phrase). With the cap, every slot
+    key's pre-image is one concrete shingle shared by every doc in the
+    bucket, so bucket size ≤ the shingle's df ≤ cap: total candidate mass
+    is Σ_s df_prefix-style, linear in corpus size with a cap-bounded
+    constant — the same Σ df² structure (and the same contract) as the
+    exact prefix path's ``max_shingle_df``.
     Docs whose shingles are ALL hotter than the cap emit no rows (exact-dup
     clusters wider than the cap saturate every shingle's df — run exact
     dedup first, the documented pipeline order).
@@ -942,7 +879,7 @@ def minhash_slot_rows(
     sides share one signature universe (a batch-local df would keep
     corpus-hot boilerplate in the batch's minima, and those slots can never
     match any index value — a silent recall loss below the advertised
-    1−(1−J)^n curve; round-7 review finding)."""
+    1−(1−J)^n curve)."""
     seeds = minhash_seeds(n_hashes)
     ex = sh.select(
         F.col(id_col), F.size("sh").alias("__sz"), F.explode("sh").alias("s")
@@ -1018,7 +955,7 @@ def containment_minhash_candidates(
       (:func:`minhash_slot_rows`) — THE linearity guarantee: every slot
       key's bucket is then one concrete df≤cap shingle's doc set, so
       candidate mass has the exact path's Σ df² structure instead of
-      boilerplate-quadratic (measured 92.7× → see dedup_scale_stress);
+      boilerplate-quadratic (measured 92.7× without the cap);
     - bucket cap ``max_slot_df`` on (slot, val) bucket width, default 32 —
       the binding selectivity knob. A bucket's docs all carry the key's
       one pre-image shingle, so width ≈ that shingle's carrier-cluster
@@ -1108,7 +1045,7 @@ def containment_minhash_topk(
     family — the reuse hook ``jaccard_pairs``/``containment_pairs`` carry).
     ``candidates``: optional prebuilt (id_a, id_b) pair set from
     :func:`containment_minhash_candidates` at the SAME knobs — the
-    round-11 shared-artifact hook (the recall audit and this serve path
+    shared-artifact hook (the recall audit and this serve path
     derive the identical set); the caller is responsible for knob
     consistency."""
     from platform_etl_drug_disease_spark.operators.scans import bounded_top_k_rows
@@ -1166,7 +1103,7 @@ def containment_corpus_index(
     slot-row snapshot artifact :func:`incremental_containment_matches`'
     docstring names. Factored out so multi-batch callers (the streaming
     serve twin) build it ONCE per corpus snapshot instead of once per
-    micro-batch (round-8 review finding). The residual bucket-width guard
+    micro-batch. The residual bucket-width guard
     (``max_slot_df``) is applied here — a prebuilt index is already
     capped."""
     rows = minhash_slot_rows(
@@ -1174,7 +1111,7 @@ def containment_corpus_index(
     )
     if max_slot_df is not None:
         # residual bucket-width guard on the index side only; distinct name
-        # from the shingle hot-list — unrelated caps (ADVICE r7).
+        # from the shingle hot-list — unrelated caps.
         hot_buckets = (
             rows.groupBy("slot", "val")
             .agg(F.count(F.lit(1)).alias("__df"))
@@ -1222,7 +1159,7 @@ def incremental_containment_matches(
     signed under its own (tiny-df) universe would carry boilerplate minima
     that can never match any index value — silently losing exactly the
     boilerplate-framed quoted-page class this matcher exists to catch
-    (round-7 review finding). The index is still buildable without seeing
+    The index is still buildable without seeing
     future batches — the batch borrows the index's universe, never the
     reverse.
 
@@ -1232,7 +1169,7 @@ def incremental_containment_matches(
     :func:`containment_corpus_index`) so a multi-batch caller pays the
     corpus-sized work once per snapshot and owns the handles' lifecycle —
     without them, everything is computed (and persisted) per call, which a
-    foreachBatch loop must not do (round-8 review finding)."""
+    foreachBatch loop must not do."""
     if new_shingles is not None:
         new_sh = new_shingles
     else:
@@ -1294,53 +1231,6 @@ def incremental_containment_matches(
     )
 
 
-def _quoted_diagonal_hits(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-) -> DataFrame:
-    """The positional-gram diagonal stage of :func:`quoted_spans` —
-    (id_a, id_b, i, diag) match rows before the gaps-and-islands merge.
-    Factored out so the scale-stress harness can count its fan-out
-    directly (VERDICT r7 item 7)."""
-    from pyspark.sql import Window
-
-    from platform_etl_drug_disease_spark.operators.text import tokens
-
-    toks = df.select(F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok"))
-    wl = Window.partitionBy(id_col).orderBy("pos")
-    g = toks
-    for k in range(1, n):
-        g = g.withColumn(f"t{k}", F.lead("tok", k).over(wl))
-    grams = g.where(F.col(f"t{n - 1}").isNotNull()).select(
-        F.col(id_col),
-        F.col("pos"),
-        F.xxhash64(
-            F.concat_ws(" ", "tok", *[f"t{k}" for k in range(1, n)])
-        ).alias("g"),
-    )
-    ga = grams.select(
-        F.col(id_col).alias("id_a"), F.col("pos").alias("i"), F.col("g")
-    )
-    gb = grams.select(
-        F.col(id_col).alias("id_b"), F.col("pos").alias("j"), F.col("g")
-    )
-    # distinct on the SMALL pair set, not the positional join output: the
-    # joined rows are already unique in (pair, i, diag) — one gram per
-    # (doc, pos) per side and diag determines j — so a distinct there would
-    # shuffle the query's largest intermediate to remove nothing. Duplicate
-    # INPUT pairs would break the islands row_number, hence the cheap guard.
-    return (
-        pairs.select("id_a", "id_b")
-        .distinct()
-        .join(ga, "id_a")
-        .join(gb, ["id_b", "g"])
-        .select("id_a", "id_b", "i", (F.col("j") - F.col("i")).alias("diag"))
-    )
-
-
 def quoted_spans(
     df: DataFrame,
     pairs: DataFrame,
@@ -1371,7 +1261,38 @@ def quoted_spans(
     oracle joins raw text (same birthday argument as the dedup verifies)."""
     from pyspark.sql import Window
 
-    hits = _quoted_diagonal_hits(df, pairs, id_col, text_col, n)
+    from platform_etl_drug_disease_spark.operators.text import tokens
+
+    toks = df.select(F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok"))
+    wl = Window.partitionBy(id_col).orderBy("pos")
+    g = toks
+    for k in range(1, n):
+        g = g.withColumn(f"t{k}", F.lead("tok", k).over(wl))
+    grams = g.where(F.col(f"t{n - 1}").isNotNull()).select(
+        F.col(id_col),
+        F.col("pos"),
+        F.xxhash64(
+            F.concat_ws(" ", "tok", *[f"t{k}" for k in range(1, n)])
+        ).alias("g"),
+    )
+    ga = grams.select(
+        F.col(id_col).alias("id_a"), F.col("pos").alias("i"), F.col("g")
+    )
+    gb = grams.select(
+        F.col(id_col).alias("id_b"), F.col("pos").alias("j"), F.col("g")
+    )
+    # distinct on the SMALL pair set, not the positional join output: the
+    # joined rows are already unique in (pair, i, diag) — one gram per
+    # (doc, pos) per side and diag determines j — so a distinct there would
+    # shuffle the query's largest intermediate to remove nothing. Duplicate
+    # INPUT pairs would break the islands row_number, hence the cheap guard.
+    hits = (
+        pairs.select("id_a", "id_b")
+        .distinct()
+        .join(ga, "id_a")
+        .join(gb, ["id_b", "g"])
+        .select("id_a", "id_b", "i", (F.col("j") - F.col("i")).alias("diag"))
+    )
     wr = Window.partitionBy("id_a", "id_b", "diag").orderBy("i")
     runs = hits.withColumn("island", F.col("i") - F.row_number().over(wr))
     return (
@@ -1403,7 +1324,7 @@ def _word_lcp(a: Column, b: Column) -> Column:
 def lr_tokens(text_col: Column | str) -> Column:
     """Suffix-family tokenization: ``operators.text.tokens`` over text with
     the family's sort-separator bytes ``\\x00``/``\\x01`` STRIPPED first
-    (VERDICT r9 item 5). The prefix-doubling adjacency identity joins token
+    The prefix-doubling adjacency identity joins token
     slices with ``\\x01`` so that string order refines token-prefix order —
     a convention that is exact only when tokens are free of ``\\x00`` (sorts
     below the separator) and ``\\x01`` itself (makes the joined key
@@ -1426,7 +1347,7 @@ def suffix_base_plan(
 ) -> DataFrame:
     """The suffix family's shared TOKEN BASE: (id, __t tokens, __n length)
     for docs with ≥ ``w`` tokens, hash-repartitioned by id — the layout the
-    doubling loop's per-round slice joins reuse. Factored out (round 11) so
+    doubling loop's per-round slice joins reuse. Factored out so
     :func:`longest_repeat_lengths` and :func:`sampled_repeat_lengths` can
     share ONE materialized copy via their ``frames`` hook instead of each
     re-tokenizing the corpus and re-running the anchor-count shuffle."""
@@ -1477,9 +1398,9 @@ def _suffix_round_frame(
     and compute the extended-group size (``__c2``) and the
     adjacent-neighbour repeat length (``__r``) with TWO windows over ONE
     ``__key`` exchange — the round's whole shuffle budget. Factored out of
-    the loop so tests/test_plan_quality.py can pin this plan shape (VERDICT
-    r8 item 4: the r8 shuffle-hygiene rewrite was worth ~6 s at sf≈1 and is
-    exactly the silent-drift class plan pins exist to catch). Returns the
+    the loop so tests/test_plan_quality.py can pin this plan shape (the
+    two-windows-one-exchange form was worth ~6 s at sf≈1 and is exactly
+    the silent-drift class plan pins exist to catch). Returns the
     frame pruned to the six columns the resolved/alive splits need —
     ``__rest``/``__rest_str``, the per-round payload, never reach the
     checkpoint."""
@@ -1497,14 +1418,13 @@ def _suffix_round_frame(
         # \s+-split so they cannot contain whitespace, but C0 control
         # chars (\x02-\x08, \x0e-\x1f) survive tokenization and sort
         # BELOW ' ' — under a space join a token like "x\x02q" would
-        # misorder against "x b" and shave the adjacent-max LCP
-        # (round-8 review finding). The two bytes that would break the
+        # misorder against "x b" and shave the adjacent-max LCP.
+        # The two bytes that would break the
         # convention itself — \x00 (sorts below the separator) and
         # \x01 (makes the joined key ambiguous) — CANNOT occur here:
         # both family entry points tokenize via lr_tokens(), which
-        # strips them from the text before splitting (VERDICT r9
-        # item 5; previously a disclosed theoretical hole, now closed
-        # on both engines).
+        # strips them from the text before splitting (on both
+        # engines).
         .withColumn("__rest_str", F.array_join("__rest", "\x01"))
         .withColumn(
             "__key2",
@@ -1562,8 +1482,7 @@ def longest_repeat_lengths(
     longest-repeat semantics of Lee et al. 2022 ("Deduplicating Training
     Data Makes Language Models Better") that ``substring_dedup_stats``'s
     fixed-W marks only bound from below: W-gram marks say "≥ W here", this
-    says "exactly 23 tokens, starting here" (VERDICT r7 item 3 / "What's
-    missing" #1).
+    says "exactly 23 tokens, starting here".
 
     Distributed suffix ranking by PREFIX DOUBLING, never materializing full
     suffix remainders:
@@ -1618,7 +1537,7 @@ def longest_repeat_lengths(
         cnt = suffix_anchor_counts(base, id_col, w)
     else:
         # caller-materialized (base, anchor counts) — the shared-artifact
-        # hook (round 11): the tokenize pass and the full-corpus anchor
+        # hook: the tokenize pass and the full-corpus anchor
         # shuffle run ONCE per corpus snapshot and every suffix operator
         # rides them. The caller owns the frames' lifecycle.
         base, cnt = frames
@@ -1653,11 +1572,11 @@ def _doubling_loop(
 ) -> DataFrame:
     """The prefix-doubling resolution loop shared by
     :func:`longest_repeat_lengths` (exact, anchors 2..cap) and
-    :func:`sampled_repeat_lengths` (sampled interior of beyond-cap anchors
-    — VERDICT r8 item 6). ``alive`` = (id_col, pos, __rem, __key) suffix
-    rows, eagerly materialized by the caller; ``toks_by_id`` = the
-    id-partitioned token table the per-round slice joins read. Returns one
-    compact (id_col, pos, repeat_len) checkpoint. The loop is agnostic to
+    :func:`sampled_repeat_lengths` (sampled interior of beyond-cap
+    anchors). ``alive`` = (id_col, pos, __rem, __key) suffix rows, eagerly
+    materialized by the caller; ``toks_by_id`` = the id-partitioned token
+    table the per-round slice joins read. Returns one compact (id_col, pos,
+    repeat_len) checkpoint. The loop is agnostic to
     HOW the alive set was chosen: repeat_len is the longest shared prefix
     with any OTHER alive suffix of the same ``__key`` group, which is the
     exact corpus-wide value when the group is an anchor's full suffix set
@@ -1666,7 +1585,7 @@ def _doubling_loop(
     resolved: list[DataFrame] = []
     for _ in range(max_rounds):
         live_cond = (F.col("__c2") > 1) & (F.col("__rem") > 2 * depth)
-        # ONE eager materialization per round (ADVICE r8): checkpointing the
+        # ONE eager materialization per round: checkpointing the
         # resolved part and the alive part separately made each recompute
         # the token-slice join and both window sorts — the round's entire
         # cost, paid twice. Checkpoint the round frame ONCE (pruned by
@@ -1691,7 +1610,7 @@ def _doubling_loop(
         # SILENTLY missing from the output — a disclosure-free cap, which
         # this operator forbids. A live row needs remainder > depth, and
         # depth doubled max_rounds times, so this fires only on misuse
-        # (tiny max_rounds) — loudly (round-8 review finding).
+        # (tiny max_rounds) — loudly.
         n_left = alive.count()
         if n_left:
             raise RuntimeError(
@@ -1701,8 +1620,8 @@ def _doubling_loop(
     out = resolved[0]
     for part in resolved[1:]:
         out = out.unionByName(part)
-    # COMPACT the result into one 3-column checkpoint before returning
-    # (round-9 review finding): the union above references every round's
+    # COMPACT the result into one 3-column checkpoint before returning:
+    # the union above references every round's
     # 6-column frame — including alive-intermediate rows later rounds
     # superseded — and a caller that holds the result (the session memo in
     # plans/dedup_text does, for the whole session) would pin all of those
@@ -1726,7 +1645,7 @@ def sampled_repeat_lengths(
     frames: tuple[DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
     """SAMPLED interior estimate of repeat lengths for anchors BEYOND the
-    exact census' df cap (VERDICT r8 item 6). ``longest_repeat_lengths``
+    exact census' df cap. ``longest_repeat_lengths``
     excludes anchors shared by more than its cap and discloses the mass —
     correct, but on a boilerplate-saturated corpus the most interesting
     repeats live exactly there. This operator runs the SAME prefix-doubling
@@ -1742,7 +1661,7 @@ def sampled_repeat_lengths(
     Selection: anchors with df > ``min_anchor_df`` (and, when
     ``max_anchor_df`` is given, df ≤ it — the audit-band form, where exact
     truth is still affordable for comparison). ``min_anchor_df`` must be
-    ≥ ``sample_per_anchor`` (validated — ADVICE r9): every selected anchor
+    ≥ ``sample_per_anchor`` (validated): every selected anchor
     then has df > sample_per_anchor, so exactly ``sample_per_anchor``
     suffixes are sampled per anchor and the Horvitz-Thompson weight is
     exactly ``anchor_df / sample_per_anchor`` — the constant the consumers
@@ -1754,7 +1673,7 @@ def sampled_repeat_lengths(
     OVER (PARTITION BY anchor ORDER BY md5(...))``, so the estimate is
     fully value-hashable, not merely rows-only.
 
-    HEAT-ROBUST RANKING (ADVICE r9): a naive exact-rank window partitioned
+    HEAT-ROBUST RANKING: a naive exact-rank window partitioned
     by anchor would shuffle every occurrence of a hot anchor into ONE task
     and sort all of them there — an O(df log df) single-reducer sort for
     exactly the million-occurrence boilerplate anchors this operator
@@ -1784,10 +1703,10 @@ def sampled_repeat_lengths(
       sampled suffix; HT estimate of the anchor-mass at a given length is
       Σ anchor_df / sample_per_anchor over its sampled rows;
     - ``selected``: (id_col, pos) of EVERY suffix of a selected anchor —
-      ``None`` unless ``return_selected=True`` (round-9 review finding:
-      materializing it is O(selected anchor MASS), which at beyond-cap
-      knobs is exactly the unbounded quantity this operator exists to
-      avoid; only an audit that joins against exact truth should pay it);
+      ``None`` unless ``return_selected=True`` (materializing it is
+      O(selected anchor MASS), which at beyond-cap knobs is exactly the
+      unbounded quantity this operator exists to avoid; only an audit that
+      joins against exact truth should pay it);
     - ``disclosure``: 1 row (n_selected_anchors, n_selected_suffixes).
     """
     from pyspark.sql import Window
@@ -1805,7 +1724,7 @@ def sampled_repeat_lengths(
             f"resolve to repeat_len = w noise, got {min_anchor_df}"
         )
     if min_anchor_df < sample_per_anchor:
-        # ADVICE r9: an anchor with df < sample_per_anchor yields
+        # an anchor with df < sample_per_anchor yields
         # n_sampled = df, but the consumers' HT weight divides by the
         # CONSTANT sample_per_anchor — a silently-low-biased estimate.
         # Requiring min_anchor_df >= sample_per_anchor guarantees every
@@ -1835,8 +1754,8 @@ def sampled_repeat_lengths(
     # checkpoint the anchor-selection frame ONCE (one row per selected
     # anchor): disclosure, the selected-suffix listing, and the sample all
     # derive from it, and without the checkpoint each would re-run the
-    # full-corpus anchor-count shuffle as its own job (round-9 review
-    # finding — three corpus shuffles where one suffices).
+    # full-corpus anchor-count shuffle as its own job (three corpus
+    # shuffles where one suffices).
     sel = cnt.where(sel_cond).localCheckpoint()
     disclosure = sel.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_selected_anchors"),
@@ -1854,8 +1773,8 @@ def sampled_repeat_lengths(
         if return_selected
         else None
     )
-    # two-stage deterministic top-sample_per_anchor (ADVICE r9 — see
-    # docstring "HEAT-ROBUST RANKING"): stage 1 ranks within (anchor,
+    # two-stage deterministic top-sample_per_anchor (see docstring
+    # "HEAT-ROBUST RANKING"): stage 1 ranks within (anchor,
     # salt) so no task ever sorts more than ~df/salt_buckets rows of one
     # anchor; stage 2 ranks the bounded per-salt survivors exactly. Both
     # stages order by (md5(id:pos), id, pos) — the union-of-partial-top-S

@@ -401,10 +401,10 @@ def hits_scores(
         # localCheckpoint'ed (tiny: one (node, score) pair per node, same
         # discipline as bfs_levels) so the persisted input can be RELEASED
         # immediately — without this, each half-step's cache accumulated
-        # for the life of the session (ADVICE r4).
+        # for the life of the session.
         #
-        # A round-6 trade-off measurement (a one-off probe timing each form
-        # at k=2/4/8) pins this as the ONLY depth-scalable form, not merely the
+        # A trade-off measurement (a one-off probe timing each form at
+        # k=2/4/8) pins this as the ONLY depth-scalable form, not merely the
         # bounded-cache one: wall grows linearly in n_iters (2.2/3.9/7.3 s
         # at k=2/4/8, sf0.1). The "cheaper" alternatives both lose —
         # deferred unpersist-on-next-step (persist each half-step, release

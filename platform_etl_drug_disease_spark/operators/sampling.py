@@ -73,7 +73,7 @@ def group_reservoir(
     partitioning, and incremental-friendly: a grown stratum only swaps rows
     at the hash boundary).
 
-    Scale shape (reworked round 3): min-k-by-hash is a mergeable aggregate,
+    Scale shape: min-k-by-hash is a mergeable aggregate,
     so this uses operators/scans.bounded_top_k_rows — per-(stratum,
     sub-bucket) sorted k-slices merged per stratum — instead of a
     `row_number() OVER (PARTITION BY strata)` window that would sort each
@@ -204,9 +204,9 @@ def weighted_group_sample(
     than the pow form near u→1) with the id as tiebreaker. Rows with
     weight <= 0 or null are excluded — they have inclusion probability 0.
 
-    Scale shape (reworked round 3 — plan_lint's low-cardinality-window rule
-    flagged the former `row_number() OVER (PARTITION BY strata)` form,
-    which sorts each stratum's full row set on one reducer): top-k is a
+    Scale shape (plan_lint's low-cardinality-window rule flags a
+    `row_number() OVER (PARTITION BY strata)` form, which sorts each
+    stratum's full row set on one reducer): top-k is a
     mergeable aggregate, so rows are hashed into sub-buckets, each
     (stratum, sub-bucket) keeps a sorted k-slice of (−key, id, payload)
     structs, and the ≤ buckets×k survivors per stratum merge with one more

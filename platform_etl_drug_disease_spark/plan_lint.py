@@ -73,8 +73,8 @@ def codegen_stage_count(df: DataFrame) -> int:
 
 # Columns known to have O(10) distinct values in this schema. An ordered
 # window partitioned ONLY by these over an unaggregated table funnels the
-# whole input through that many reducers (single-core sort each) — the
-# VERDICT-r2 class of 100-TB serialization points. Fix with the two-phase
+# whole input through that many reducers (single-core sort each) — a
+# 100-TB serialization point. Fix with the two-phase
 # scans in operators/scans.py.
 LOW_CARDINALITY_COLS = frozenset(
     {

@@ -273,8 +273,8 @@ _JACCARD_SQL = _JACCARD_CORE
 
 
 def dedup_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-3 exact-Jaccard neighbours among pairs ≥ 0.5 (VERDICT r5
-    item 6): the headline-safe exact variant. ``dedup_ngram_jaccard``'s
+    """Per-doc top-3 exact-Jaccard neighbours among pairs ≥ 0.5: the
+    headline-safe exact variant. ``dedup_ngram_jaccard``'s
     all-pairs contract is inherently output-bound (~2,948× fan-out on the
     adversarial sf≈1 corpus — every downstream consumer inherits it); this
     form symmetrizes the verified pairs and cuts each doc to its k=3
@@ -376,15 +376,15 @@ def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ 1.0 — the wrapped-inclusion duplicate class (aggregators, quote
     farms, boilerplate-framed mirrors) that survives Jaccard passes.
     One-sided prefix filter (A's |sh|−⌈0.8·|sh|⌉+1 rarest shingles,
-    integer-exact — ADVICE r6 boundary fix — df≤256 cap on prefix
+    integer-exact, df≤256 cap on prefix
     membership only) plus the lossless size prune
     (|sh_B| ≥ τ·|sh_A| — measured 52.3 → 36.2 s at sf≈1), exact verify
     over all shingles, bounded k·n output. Cost profile at sf≈1 is
     in-family with `dedup_ngram_jaccard_topk` (the replica-dense corpus
     makes intra-cluster candidates genuine verify mass); sf0.1 → sf≈1 on
-    non-adversarial axes is 1.2× (PERF table). The relation comes from the
+    non-adversarial axes is 1.2×. The relation comes from the
     session-memoized ``_containment_topk_artifact`` shared with
-    ``quoted_span_stats`` (round 9) — this query is the memo's owner in
+    ``quoted_span_stats`` — this query is the memo's owner in
     plans/memo_owners.py."""
     top = _containment_topk_artifact(spark, sf_dir)
     w = Window.partitionBy("id_a").orderBy(F.col("containment").desc(), "id_b")
@@ -409,8 +409,8 @@ ranked AS (
     FROM ex JOIN freq USING (s)
 ),
 pref AS (SELECT doc_id, lang, sz, s FROM ranked
-         -- integer-exact PPJoin prefix sz - ceil(tau*sz) + 1 (ADVICE r6:
-         -- the float form floor(sz*(1-0.8)) is one short at multiples of 5)
+         -- integer-exact PPJoin prefix sz - ceil(tau*sz) + 1 (the
+         -- float form floor(sz*(1-0.8)) is one short at multiples of 5)
          WHERE rn <= sz - CAST(ceil(sz * 0.8 - 1e-6) AS INT) + 1),
 cands AS (
     -- size prune mirror: a container smaller than tau*|sh(A)| can never
@@ -581,8 +581,7 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     # ONE shingle table shared by the exact-truth and MinHash sides —
-    # without it the corpus is tokenized/shingled/hashed twice (round-5
-    # review finding).
+    # without it the corpus is tokenized/shingled/hashed twice.
     sh = _shingle_table(docs, "doc_id", "text", shingle_n=3).persist()
     truth = jaccard_pairs(
         docs, "doc_id", "text", shingle_n=3, threshold=0.5,
@@ -688,7 +687,7 @@ FROM scored GROUP BY jaccard_decile
 
 
 # ---------------------------------------------------------------------------
-# Containment family, scale path + audit (round 7; VERDICT r6 item 2).
+# Containment family, scale path + audit.
 # ---------------------------------------------------------------------------
 
 # Mirror of operators/dedup.py:minhash_slot_rows (df-capped signatures) +
@@ -765,7 +764,7 @@ FROM (
 )
 
 
-#: shared containment-scale-path artifacts (VERDICT r10 item 3): the
+#: shared containment-scale-path artifacts: the
 #: trigram shingle table and the UNFILTERED single-slot MinHash candidate
 #: pair set at the SHIPPED config (τ=0.8, 16 hashes, df≤256, slot≤32) are
 #: derived identically by `dedup_containment_minhash_topk` (the serve path)
@@ -858,7 +857,7 @@ def containment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signature universe = the CORPUS's hot-list applied to both sides (the
 # index dropped corpus-hot shingles from its minima; a batch-local df
 # would leave boilerplate minima in the batch that can never match the
-# index — round-7 review finding), corpus-side residual bucket cap, size
+# index), corpus-side residual bucket cap, size
 # prune inside the bucket join, exact verify over the UNCAPPED shingle
 # rows of both sides.
 _CONTAINMENT_INCR_SQL = (
@@ -938,8 +937,8 @@ def quoted_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is same-language by construction, and blocking keeps the discovery in
     that query's measured cost class instead of the ~2× unblocked one).
     The pair set comes from the session-memoized
-    ``_containment_topk_artifact`` shared with ``dedup_containment_topk``
-    (round 9): after that query has run, this one costs only the
+    ``_containment_topk_artifact`` shared with ``dedup_containment_topk``:
+    after that query has run, this one costs only the
     positional-diagonal spans over the bounded k·n pairs — not a second
     ~30 s prefix/verify pipeline. The artifact is an eager checkpoint, so
     its dual consumption here (pair set + containment join-back) reads
@@ -1079,7 +1078,7 @@ def _containment_audit_cells(
     extrapolate cell mass; 1.0 = full truth (the pytest pin path).
 
     ``shingles``/``candidates``: optional caller-materialized shared
-    artifacts (round 11): the trigram shingle table and the UNFILTERED
+    artifacts: the trigram shingle table and the UNFILTERED
     candidate pair set at the shipped config — the same frames
     ``dedup_containment_minhash_topk`` serves from. Passing the unfiltered
     candidate set is value-identical to building a ``contained_pred``-
@@ -1202,7 +1201,7 @@ def containment_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ``sample_extrapolation_audit`` machinery), pushed into BOTH
     pipelines via their ``contained_pred`` hooks: the full-truth audit's
     one-sided prefix join was the last corpus-quadratic stage in the timed
-    headline (95.9 s of 657.8 s at sf≈1, VERDICT r7 item 1); sampling the A
+    headline (95.9 s of 657.8 s at sf≈1); sampling the A
     side prices recall at ~p× the cost. Per-pair candidate membership never
     depends on other A docs (df counts, hot lists, and the container side
     stay full-corpus), so each sampled cell measures the same per-pair
@@ -1224,7 +1223,7 @@ def containment_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit variant can reuse it; τ=0.8 populates 8–10.
 
     ONE shingle table feeds truth, candidates, and sizes (the ``shingles=``
-    reuse hook, VERDICT r6 item 3); the audit join is equi-keyed on (id_a,
+    reuse hook); the audit join is equi-keyed on (id_a,
     id_b); output ≤ 36 cells."""
     from platform_etl_drug_disease_spark.operators.sampling import md5_bucket
 
@@ -1347,9 +1346,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same components with a recursive transitive-closure
     CTE — feasible only because the pair graph is small; the Spark side is
     the 100-TB path (per-round equi-join + min-agg, lineage checkpointed).
-    Pairs and components come from the session-memoized LSH artifacts
-    (round 9); this query is the memo owner of the hash-min
-    CC artifact."""
+    Pairs and components come from the session-memoized LSH artifacts;
+    this query is the memo owner of the hash-min CC artifact."""
     comp = _lsh_components_artifact(spark, sf_dir)
     return comp.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1502,7 +1500,7 @@ def token_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang) to contiguous ~4096-token training bins via a running token total
     — bin = floor((cumsum − n_tokens) / budget).
 
-    Scale note (VERDICT r2 #3): the naive `sum OVER (PARTITION BY lang
+    Scale note: the naive `sum OVER (PARTITION BY lang
     ORDER BY doc_id)` funnels every doc through ~|langs| reducers. The
     running sum is computed by operators/scans.keyed_running_sum — a
     two-phase scan over deterministic doc_id-range buckets whose shuffle
@@ -1880,7 +1878,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     that 0, not just the counts. Composes the two scale paths already proven
     separately (banded LSH candidates, per-round equi-join components); the
     extra cost over a naive doc-id split is one small join on doc_id —
-    and with the session-memoized LSH artifacts (round 9) the pairs/CC
+    and with the session-memoized LSH artifacts the pairs/CC
     machinery itself is warm after the cluster queries have run."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     comp = _lsh_components_artifact(spark, sf_dir).withColumnRenamed(
@@ -2135,7 +2133,7 @@ ORACLES["substring_dedup_stats"] = _SUBSTR_SQL
 _LR_W = 8
 _LR_CAP = 512
 
-# Session memo for the suffix-ranking corpus artifact (VERDICT r8 item 1):
+# Session memo for the suffix-ranking corpus artifact:
 # `longest_repeat_census`, `top_repeated_spans`, and `repeat_mass_by_source`
 # all consume the SAME per-suffix exact repeat lengths, and the
 # prefix-doubling loop that computes them is the family's single heaviest
@@ -2147,7 +2145,7 @@ _LR_CAP = 512
 # tests/test_extensions.py::test_suffix_artifact_reuse pins hook == standalone.
 _SUFFIX_ARTIFACT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
-#: shared ANCHOR-UNIVERSE artifact (VERDICT r10 item 3): the
+#: shared ANCHOR-UNIVERSE artifact: the
 #: tokenized/repartitioned base table and the full-corpus anchor-df count
 #: are computed IDENTICALLY by the exact census build and by both sampled
 #: estimators (`capped_repeat_estimate`, `capped_mass_profile`) — the
@@ -2201,7 +2199,7 @@ _K1_REMOVALS_CACHE: dict[tuple, DataFrame] = {}
 @session_memo(_LM_STARTS_CACHE, "documents")
 def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized LEFT-MAXIMAL repeat-start set — the family artifact's
-    fifth consumer surface (VERDICT r9 item 6). One lag-window pass over
+    fifth consumer surface. One lag-window pass over
     the per-suffix artifact marks the suffixes that START a maximal span
     (``r(pos−1) < r(pos)+1`` or no adjacent predecessor — the
     ``top_repeated_spans`` rule), UNFILTERED by length so every consumer
@@ -2233,7 +2231,7 @@ def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, pos) occurrence per identity RETAINED and every other
     occurrence listed for removal. Shared by the accounting twin
     (``repeat_keep_one_retention``) and the release DAG's ``keep_one``
-    strip mode (VERDICT r9 item 4) — the accounting and the action consume
+    strip mode — the accounting and the action consume
     the SAME checkpointed rows, so they can never diverge."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     starts = _lm_starts(spark, sf_dir).where(
@@ -2288,7 +2286,7 @@ def _interval_removed(occ: DataFrame) -> DataFrame:
 
 
 def longest_repeat_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT arbitrary-length repeated-substring census (VERDICT r7 item 3):
+    """EXACT arbitrary-length repeated-substring census:
     for every token-position suffix sharing ≥ ``_LR_W`` leading tokens with
     another suffix anywhere in the corpus, the exact length of its longest
     shared prefix — grouped into (repeat_len, n_suffixes, n_docs) rows.
@@ -2309,11 +2307,11 @@ def longest_repeat_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps). A constant ``repeat_len = 0`` sentinel row is always present so
     the disclosure survives even an ALL-capped corpus, where the census
     proper is empty and a bare cross join would return zero rows —
-    silently eating the one signal that says why (round-8 review
-    finding). The per-suffix frame comes from the session-memoized
-    ``_suffix_ranking`` artifact shared with ``top_repeated_spans`` and
-    ``repeat_mass_by_source`` (VERDICT r8 item 1) — the doubling loop runs
-    once per corpus snapshot, whichever of the three runs first."""
+    silently eating the one signal that says why. The per-suffix frame
+    comes from the session-memoized ``_suffix_ranking`` artifact shared
+    with ``top_repeated_spans`` and ``repeat_mass_by_source`` — the
+    doubling loop runs once per corpus snapshot, whichever of the three
+    runs first."""
     per_suffix, capped = _suffix_ranking(spark, sf_dir)
     census = per_suffix.groupBy("repeat_len").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_suffixes"),
@@ -2357,7 +2355,7 @@ _LR_CORE_SQL = (
     -- suffix-family tokenization (operators/dedup.lr_tokens mirror): the
     -- family's \\x00/\\x01 sort-separator bytes are stripped from the TEXT
     -- before the whitespace split, closing the separator-ambiguity hole on
-    -- both engines (VERDICT r9 item 5). Identical to toks on any corpus
+    -- both engines. Identical to toks on any corpus
     -- free of the two bytes.
     SELECT doc_id, lang, source,
            string_split_regex(trim(lower(
@@ -2455,9 +2453,9 @@ def top_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     preceded by the same token x at two of its three sites, making "x S"
     itself a repeat) is attributed to the LONGER span's row ("x S": 2)
     and not double-counted under S (S: 1); the rows partition the
-    repeated-start mass rather than overlapping (round-8 review
-    clarification). ``n_capped_anchors``/``n_capped_suffixes`` carry the
-    operator's boilerplate-cap disclosure on every row — a span whose
+    repeated-start mass rather than overlapping.
+    ``n_capped_anchors``/``n_capped_suffixes`` carry the operator's
+    boilerplate-cap disclosure on every row — a span whose
     start suffix sits in a > cap anchor group is absent from the listing,
     and these columns are the signal saying so (no silent caps; the same
     convention as the census). Span text is fetched by slicing the token
@@ -2465,10 +2463,9 @@ def top_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 cut is (span_tokens DESC, span_md5) — a TakeOrderedAndProject,
     no corpus-wide single-partition sort, and deterministic because md5
     is unique per distinct span text. The per-suffix frame comes from the
-    session-memoized ``_suffix_ranking`` artifact shared with the census
-    (VERDICT r8 item 1): after the census has run, this query costs only
-    the left-maximal start scan + span fetch, not a second ~25 s doubling
-    loop."""
+    session-memoized ``_suffix_ranking`` artifact shared with the census:
+    after the census has run, this query costs only the left-maximal start
+    scan + span fetch, not a second ~25 s doubling loop."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     per_suffix, capped = _suffix_ranking(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -2586,9 +2583,9 @@ def repeat_mass_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs carrying at least one ≥ ``_LR_W``-token exact repeat, qualifying
     suffix count, Σ repeat_len (the duplicated-token-mass proxy the suffix
     family's scaling contract is stated in), and the longest repeat seen.
-    Third consumer of the session-memoized ``_suffix_ranking`` artifact
-    (VERDICT r8 item 1) — after the census has run this costs one per-doc
-    aggregate + one doc-keyed join, not a doubling loop.
+    Third consumer of the session-memoized ``_suffix_ranking`` artifact —
+    after the census has run this costs one per-doc aggregate + one
+    doc-keyed join, not a doubling loop.
 
     Scale shape: the per-suffix frame is pre-aggregated to AT MOST one row
     per document BEFORE meeting the corpus-sized ``documents`` side, so the
@@ -2678,7 +2675,7 @@ ORACLES["repeat_mass_by_source"] = _REPEAT_MASS_SQL
 
 
 # boilerplate-strip knobs shared by `repeat_keep_one_retention` and the
-# release pipeline's strip stage (VERDICT r8 item 7): token positions
+# release pipeline's strip stage: token positions
 # covered by an exact repeat of >= _STRIP_LEN tokens (Lee et al. 2022's
 # ~50-BPE-token ExactSubstr threshold, in whitespace tokens) are
 # strip-eligible; a doc whose post-strip effective length falls below
@@ -2697,7 +2694,7 @@ def repeat_keep_one_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     losing tokens, total/removed/retained token mass — i.e. "what would
     the corpus keep if dedup kept one copy of each long repeat instead of
     stripping them all". Consumes the session-memoized ``_lm_starts`` and
-    ``_keep_one_removals`` artifacts (VERDICT r9 items 4/6) — the SAME
+    ``_keep_one_removals`` artifacts — the SAME
     checkpointed removal rows the release DAG's ``keep_one`` strip mode
     applies, so this accounting and that action cannot diverge.
 
@@ -2845,8 +2842,8 @@ _CRE_S = 2
 
 
 def capped_repeat_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled-interior repeat-length ESTIMATE vs exact truth (VERDICT r8
-    item 6). The exact census excludes anchors hotter than ``_LR_CAP`` and
+    """Sampled-interior repeat-length ESTIMATE vs exact truth. The exact
+    census excludes anchors hotter than ``_LR_CAP`` and
     discloses the mass; ``operators/dedup.sampled_repeat_lengths`` covers
     that excluded interior by running the same prefix-doubling loop over a
     deterministic ≤``sample_per_anchor`` md5-ranked sample per anchor, with
@@ -3006,13 +3003,13 @@ ORACLES["capped_repeat_estimate"] = _CRE_SQL
 
 
 # production estimator knobs: anchors BEYOND the exact census' cap, the
-# operator's actual design point (VERDICT r9 item 3)
+# operator's actual design point
 _CMP_S = 64
 
 
 def capped_mass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HT-ESTIMATED repeat-length distribution of the census' CAPPED mass
-    (VERDICT r9 item 3) — the datacard column family a curator reads to
+    — the datacard column family a curator reads to
     pick the strip threshold. The exact census excludes anchors hotter
     than ``_LR_CAP`` and reports only two counters
     (n_capped_anchors/n_capped_suffixes); this query runs
@@ -3299,7 +3296,7 @@ QUERIES["bpe_encode_stats"] = bpe_encode_stats
 
 
 def bpe_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``bpe_encode_stats``'s driver-provable audit twin (VERDICT r5 item 2):
+    """``bpe_encode_stats``'s driver-provable audit twin:
     the greedy merge loop itself is not SQL-expressible, so the oracle never
     reproduces the segmentation — instead the output carries (a) exact
     tokenizer-level counts a SQL oracle CAN compute (per-source word
@@ -3483,8 +3480,8 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_intersect"))
     )
-    # KMV sketch via mergeable two-phase min-k (VERDICT r2 #1): the former
-    # `row_number() OVER (PARTITION BY source ORDER BY h) <= K` form sorted
+    # KMV sketch via mergeable two-phase min-k: a
+    # `row_number() OVER (PARTITION BY source ORDER BY h) <= K` form sorts
     # every source's full distinct-shingle hash set on a single reducer
     # each. KMV is mergeable by construction, so bounded_min_k takes a
     # capped sorted min-K per (source, hash-sub-bucket) and re-merges the
@@ -3970,7 +3967,7 @@ def corpus_release_pipeline(
     per content hash) filtered to quality ≥ 0.5, deterministically split
     80/10/10, BOILERPLATE-STRIPPED (token positions covered by an exact
     repeat ≥ ``_STRIP_LEN`` tokens — the suffix-ranking family consumed by
-    the flagship DAG, VERDICT r8 item 7 — are removed from the packing
+    the flagship DAG — are removed from the packing
     mass, and docs left with < ``_STRIP_MIN_EFF`` effective tokens are
     dropped as husks), then sequence-packed into ~4096-token bins per
     (split, lang); the release manifest reports, per split: documents,
@@ -3989,15 +3986,15 @@ def corpus_release_pipeline(
     variant of Lee et al.'s ExactSubstr; ``keep_one=True`` instead RETAINS
     the lexicographically-first (doc_id, pos) occurrence per span identity
     and strips only the rest, consuming the exact checkpointed removal set
-    the ``repeat_keep_one_retention`` accounting twin reports (VERDICT r9
-    item 4 — accounting and action share the rows, so they cannot
-    diverge). A husk's own covered mass is accounted as its whole-doc
-    drop, not in stripped_tokens. The census cap's excluded boilerplate
+    the ``repeat_keep_one_retention`` accounting twin reports (accounting
+    and action share the rows, so they cannot diverge). A husk's own
+    covered mass is accounted as its whole-doc drop, not in
+    stripped_tokens. The census cap's excluded boilerplate
     mass (n_capped_*) is disclosed by the census queries, and the
     HT-estimated length distribution of that capped mass — the signal for
     choosing ``_STRIP_LEN`` itself — by ``capped_mass_profile``.
 
-    COMPOSITION CAVEAT (ADVICE r9, documented semantics): repeat coverage
+    COMPOSITION CAVEAT (documented semantics): repeat coverage
     is computed over the PRE-dedup corpus, so under the default remove-all
     strip a doc whose exact duplicates were removed by the dedup stage is
     still fully covered by those deleted copies' spans — the kept
@@ -4014,8 +4011,8 @@ def corpus_release_pipeline(
     (persisted at the fan-out — three consumers); coverage reuses the
     session-memoized ``_lm_starts`` (and, for keep_one,
     ``_keep_one_removals``) artifacts derived from the shared
-    ``_suffix_ranking`` doubling loop (VERDICT r9 item 6 — the lag-window
-    left-maximality pass runs once per corpus snapshot across the whole
+    ``_suffix_ranking`` doubling loop (the lag-window left-maximality
+    pass runs once per corpus snapshot across the whole
     family) and joins on doc_id pre-aggregated to one row per dup-carrying
     doc; dedup is a window, never a self-join; split membership is a pure
     hash function (no shuffle); the packing window runs per (split, lang)
@@ -4065,7 +4062,7 @@ def corpus_release_pipeline(
         .groupBy("split")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_dropped_boilerplate"))
     )
-    # packing prefix sum via two-phase scan (VERDICT r2 #3): the naive
+    # packing prefix sum via two-phase scan: the naive
     # window partitions by (split, lang) — ~30 keys — which would funnel
     # every clean doc through ~30 reducers at scale. keyed_running_sum
     # buckets on doc_id ranges instead; `scored` upstream is persisted, so
@@ -4197,7 +4194,7 @@ ORACLES["corpus_release_pipeline"] = _RELEASE_SQL
 
 def corpus_release_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``corpus_release_pipeline`` with the strip stage in ``keep_one``
-    mode (VERDICT r9 item 4): the lexicographically-first occurrence of
+    mode: the lexicographically-first occurrence of
     every ≥ ``_STRIP_LEN``-token repeated span is retained, only the other
     occurrences are stripped — Lee et al. 2022's keep-one-copy ExactSubstr
     as an EXECUTABLE pipeline variant, consuming the same memoized removal
@@ -4205,7 +4202,7 @@ def corpus_release_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two: the pipeline's per-doc coverage equals the twin's removal
     accounting on every doc). Unlike remove-all, this mode cannot husk out
     content that exists only as duplicates — one copy always survives the
-    strip (the ADVICE r9 dedup-then-strip composition hazard)."""
+    strip (the dedup-then-strip composition hazard)."""
     return corpus_release_pipeline(spark, sf_dir, keep_one=True)
 
 
@@ -4522,7 +4519,7 @@ def curation_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = s1 & (F.col("lang") == "en")
     s3 = s2 & (F.col("sw") >= 0.05)
     s4 = s3 & (F.col("rep_frac") <= 0.25)
-    # SEQUENTIAL semantics (round-5 review fix): dedup runs over the docs
+    # SEQUENTIAL semantics: dedup runs over the docs
     # that REACHED it — the keeper is the min doc_id among rule-1..4
     # survivors of the hash group, not of the full corpus. A doc whose
     # earlier-dropped twin was the corpus-wide min must NOT be discarded
@@ -4637,7 +4634,7 @@ def dedup_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic; the keeper pick is one row_number window partitioned by
     component over the (small) cluster-member table — never over the
     corpus. Pairs and components come from the session-memoized LSH
-    artifacts (round 9)."""
+    artifacts."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     comp = _lsh_components_artifact(spark, sf_dir)
     t = F.col("__t")

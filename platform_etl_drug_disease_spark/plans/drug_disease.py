@@ -16,7 +16,8 @@ for duplicate evidence ids, see :func:`pivot_evidence_scores`):
   ``df_t`` (propagation and the enrichment join), ``associations`` (both
   outputs; the reference recomputes its whole lineage for the second one,
   SURVEY.md C2) and, with a whitelist, the exploded whitelist (read before
-  and after the grouping). Every other node stays in one plan for Catalyst;
+  and after the grouping), all released by ``PipelineOutputs.close()``.
+  Every other node stays in one plan for Catalyst;
 - per-datasource evidence scores as a per-row projection instead of the
   reference's pivot by ``evs_id`` and self-join (no shuffle);
 - broadcast hints on the small dimension joins;
@@ -55,20 +56,40 @@ class PipelineOutputs:
     first attribute access: its DAG is ~15 eager Catalyst-analysis ops over
     the pipeline's largest trees (the hypotheses projection with nested
     transforms, the AE-overlap explode join and scoring chain), and the
-    whitelist branch reads only ``associations``."""
+    whitelist branch reads only ``associations``.
+
+    :meth:`close` (or leaving a ``with`` block) unpersists the frames
+    :func:`run_pipeline` cached, so a long-lived session can run the
+    pipeline repeatedly without piling up cached blocks. Close only after
+    both outputs are written: they read the cached frames."""
 
     def __init__(
-        self, associations: DataFrame, drug_disease_fn: Callable[[], DataFrame]
+        self,
+        associations: DataFrame,
+        drug_disease_fn: Callable[[], DataFrame],
+        persisted: tuple[DataFrame, ...],
     ) -> None:
         self.associations = associations
         self._drug_disease_fn = drug_disease_fn
         self._drug_disease: DataFrame | None = None
+        self._persisted = persisted
 
     @property
     def drug_disease(self) -> DataFrame:
         if self._drug_disease is None:
             self._drug_disease = self._drug_disease_fn()
         return self._drug_disease
+
+    def close(self) -> None:
+        for df in self._persisted:
+            df.unpersist()
+        self._persisted = ()
+
+    def __enter__(self) -> PipelineOutputs:
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self.close()
 
 
 def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: DataFrame) -> DataFrame:
@@ -78,8 +99,9 @@ def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: Data
 
     A disease has one aggregation row per drug, each with its own
     ``associated_*`` arrays; the reference keeps an arbitrary one
-    (``first``). Here the row with the smallest (drug_id, arrays) wins, so
-    the output does not depend on row arrival order."""
+    (``first``). Here the row with the smallest (drug_id, arrays) wins, and
+    the drug list is sorted (``collect_list`` order follows the
+    partitioning), so the output does not depend on row arrival order."""
     enriched = drugs.join(aes_by_drug, "drug_id", "left_outer").join(
         aggregated, "drug_id", "right_outer"
     )
@@ -89,15 +111,17 @@ def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: Data
     # the aes→drug_aes rename is the struct field's alias: one eager op
     # fewer than a withColumnRenamed, and the same optimized plan
     return enriched.groupBy("disease_id").agg(
-        F.collect_list(
-            F.struct(
-                F.col("aes").alias("drug_aes"),
-                "drug_id",
-                "indication_ids",
-                "max_clinical_trial_phase",
-                "mechanisms_of_action",
-                "number_of_mechanisms_of_action",
-                "pref_name",
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col("aes").alias("drug_aes"),
+                    "drug_id",
+                    "indication_ids",
+                    "max_clinical_trial_phase",
+                    "mechanisms_of_action",
+                    "number_of_mechanisms_of_action",
+                    "pref_name",
+                )
             )
         ).alias("drugs_for_disease"),
         pick["associated_disease_ids"].alias("associated_disease_ids"),
@@ -108,7 +132,8 @@ def drugs_for_disease(drugs: DataFrame, aes_by_drug: DataFrame, aggregated: Data
 def drugs_for_target(drugs: DataFrame, aes_by_target: DataFrame) -> DataFrame:
     """Per target: drugs acting on it via mechanism-of-action components
     (sim.sc:400-422): nested transform → flatten → explode → rollup, plus
-    the target's AE profile."""
+    the target's AE profile. The drug list is sorted, as in
+    :func:`drugs_for_disease`."""
     target_ids = F.flatten(
         F.transform(
             "mechanisms_of_action",
@@ -120,13 +145,15 @@ def drugs_for_target(drugs: DataFrame, aes_by_target: DataFrame) -> DataFrame:
         .withColumn("target_id", F.explode(target_ids))
         .groupBy("target_id")
         .agg(
-            F.collect_list(
-                F.struct(
-                    "drug_id",
-                    "max_clinical_trial_phase",
-                    "drug_type",
-                    "pref_name",
-                    "indication_ids",
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        "drug_id",
+                        "max_clinical_trial_phase",
+                        "drug_type",
+                        "pref_name",
+                        "indication_ids",
+                    )
                 )
             ).alias("drugs_for_target")
         )
@@ -162,9 +189,10 @@ def run_pipeline(
     else:
         # read twice: narrows the evidence before the grouping, then maps
         # each whitelist_id back to its diseases
-        selected = F.broadcast(
-            whitelist.withColumn("disease_id", F.explode("whitelist")).persist()
-        )
+        exploded_whitelist = whitelist.withColumn(
+            "disease_id", F.explode("whitelist")
+        ).persist()
+        selected = F.broadcast(exploded_whitelist)
         key = "whitelist_id"
         keep_association = keep_hypotheses = F.lit(True)
 
@@ -211,8 +239,13 @@ def run_pipeline(
     def _build_drug_disease() -> DataFrame:
         return _drug_disease_output(associations, aes_by_drug)
 
+    persisted = (aes_by_drug, df_t, associations)
+    if whitelist is not None:
+        persisted += (exploded_whitelist,)
     return PipelineOutputs(
-        associations=associations, drug_disease_fn=_build_drug_disease
+        associations=associations,
+        drug_disease_fn=_build_drug_disease,
+        persisted=persisted,
     )
 
 

@@ -250,7 +250,7 @@ def event_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 lag/lead: per event-type inter-arrival gap stats (min/max/avg µs) —
     the time-series delta idiom over a keyed window.
 
-    Scale note (VERDICT r2 #4): `lag OVER (PARTITION BY event_type ORDER BY
+    Scale note: `lag OVER (PARTITION BY event_type ORDER BY
     ts)` on the raw log sorts the whole table through ~|types| reducers.
     operators/scans.keyed_lag_delta computes the identical gap multiset with
     local lags inside time-range buckets plus per-bucket boundary stitches

@@ -52,7 +52,7 @@ def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Supplier node ids are offset into their own id space so customer and
 # supplier keys never collide AT ANY SCALE: TPC-H c_custkey reaches
-# 150,000×SF, so a 10^6 offset would collide around SF≥7 (ADVICE r4).
+# 150,000×SF, so a 10^6 offset would collide around SF≥7.
 # 10^12 clears custkey up to SF ~6.7M (≫ the 100-TB target of SF ~10^5)
 # while staying far inside int64. Single source of truth — the SQL
 # oracles' `l_suppkey + 1000000000000` literals must match this value.
@@ -136,8 +136,8 @@ def adjacency_degree_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: HLL++ degree (approx_count_distinct, sim.sc:74). Engine-specific
     sketch values → no SQL oracle; the driver records rows-only. Accuracy vs
     exact degree is asserted in tests/test_graph.py instead. Raw edges: the
-    HLL sketch absorbs duplicates, no distinct shuffle needed — measured
-    round 3: dedup-first is a wash here (7.35 vs 7.39 s at sf≈1; this
+    HLL sketch absorbs duplicates, no distinct shuffle needed — measured:
+    dedup-first is a wash here (7.35 vs 7.39 s at sf≈1; this
     graph's duplicate mass is low, so the extra shuffle buys nothing and
     register updates dominate either way). The audit twin's win came from
     removing the countDistinct-induced Expand, which this sketch-only form
@@ -149,7 +149,7 @@ def adjacency_degree_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def adjacency_degree_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 with a full value oracle (VERDICT r2 item 8): per-node exact degree
+    """A2 with a full value oracle: per-node exact degree
     (count distinct) alongside a deterministic audit of the HLL++ sketch.
 
     The HLL estimate itself is engine-specific, so it never appears in the
@@ -160,7 +160,7 @@ def adjacency_degree_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     max), so ``hll_ok`` is deterministic; the oracle asserts TRUE for every
     node, which makes A2 driver-checkable instead of rows-only.
 
-    Plan note (round-3 fix; 27× scaling sf0.1 → sf≈1, 24.9 → 8.8 s): a
+    Plan note (24.9 → 8.8 s at sf≈1): a
     DISTINCT aggregate next to a regular one makes Spark duplicate every
     input row through an Expand before the shuffle — ×2 volume on 12 M
     edges at sf≈1. Deduplicating (src, dst) first turns both into plain
@@ -749,8 +749,7 @@ def supplier_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unrolled-CTE oracles below — bump either constant and its oracle regrows
 # the matching number of CTE stages automatically; the depth-parametrized
 # pytest (tests/test_analytics.py) pins loop ≡ oracle for depths 1..4 so a
-# mismatch between a hand-edited loop and a stale oracle can't ship
-# (VERDICT r4 item 6).
+# mismatch between a hand-edited loop and a stale oracle can't ship.
 BFS_MAX_DEPTH = 3
 HITS_N_ITERS = 2
 
@@ -815,8 +814,8 @@ def hits_sql_body(n_iters: int) -> str:
     sum-normalize → authority contribution, every sum riding
     DECIMAL(28,12) — the same arithmetic as
     operators/graph_algos.hits_scores, so the scores agree bit-for-bit at
-    any iteration count. Ends with the round-9 top-15 ranking the catalog
-    query emits."""
+    any iteration count. Ends with the top-15 ranking the catalog query
+    emits."""
     dec_sum = "CAST(SUM(CAST({c} AS DECIMAL(28,12))) AS DOUBLE)"
     parts = [
         "a1 AS (SELECT dst, CAST(COUNT(*) AS DOUBLE) AS s FROM dedges GROUP BY dst)"

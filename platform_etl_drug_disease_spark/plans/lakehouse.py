@@ -596,8 +596,8 @@ def hll_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hll_rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``hll_user_rollup``'s driver-provable audit twin (VERDICT r5 item 2,
-    the ``adjacency_degree_audit`` pattern): per rollup cell (day / week /
+    """``hll_user_rollup``'s driver-provable audit twin (the
+    ``adjacency_degree_audit`` pattern): per rollup cell (day / week /
     all-time) the output carries the EXACT distinct-user count, the
     tolerance bound derived purely from it (``greatest(4, ceil(0.1·exact))``
     ≈ 6× the lgK=12 sketch's 1.6% rsd), and ``hll_ok`` — whether the merged

@@ -126,11 +126,11 @@ OWNERS: dict[str, Callable[[], None]] = {
     "dedup_containment_minhash_topk": _module_caches(
         "dedup_text", "_CTM_SHINGLES_CACHE", "_CTM_CANDS_CACHE"
     ),
-    # left-maximal-start lag-window pass (VERDICT r9 item 6); the
+    # left-maximal-start lag-window pass; the
     # strip/retention consumers ride it warm
     "top_repeated_spans": _module_caches("dedup_text", "_LM_STARTS_CACHE"),
     # keep-one span-identity/removal derivation shared with the release
-    # DAG's keep_one mode (VERDICT r9 item 4)
+    # DAG's keep_one mode
     "repeat_keep_one_retention": _module_caches(
         "dedup_text", "_K1_REMOVALS_CACHE"
     ),

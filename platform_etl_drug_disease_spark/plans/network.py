@@ -71,14 +71,12 @@ def tissue_filtered_network(
         F.col("target_id").alias("neighbour"),
         F.col("tissues").alias("neighbour_tissues"),
     )
-    # round-11 driver-side op-count cut: the tissues rename folds into one
-    # select (mirroring the Project the optimizer produced below the
-    # Generate — renaming INSIDE the explode select would instead split
-    # into Generate + an extra Project above it), and the shared-tissue
-    # predicate moves directly into the filter instead of a named
-    # cardinality column the aggregation immediately dropped (the optimizer
-    # inlined it into the Filter and pruned the column either way — the
-    # optimized plan is unchanged, only the eager-analysis count drops).
+    # the tissues rename folds into one select (mirroring the Project the
+    # optimizer puts below the Generate — renaming INSIDE the explode
+    # select would split into Generate + an extra Project above it), and
+    # the shared-tissue predicate sits directly in the filter: each eager
+    # DataFrame call costs a driver-side analysis, and neither form changes
+    # the optimized plan.
     exploded = (
         lut.join(expressions, "target_id")
         .select(

@@ -490,8 +490,8 @@ def quality_winsor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholding on a per-source quality signal (a handful of spam or
     truncated docs should not move a source's score budget).
 
-    Scale shape (reworked round 3 — the plan_lint low-cardinality-window
-    rule flagged the former per-source percent_rank over raw docs): exact
+    Scale shape (the plan_lint low-cardinality-window rule flags a
+    per-source percent_rank over raw docs): exact
     percentile bounds come from the per-(source, q) value histogram — one
     aggregate over the corpus, then rank arithmetic on the (bounded,
     score-resolution-sized) histogram. percent_rank of the last row with
@@ -1170,7 +1170,7 @@ def dsir_importance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram's cardinality is the score grid (1e-6 here; a 100-TB run
     would coarsen the quantization, which only coarsens the cut point).
 
-    Determinism (round-5 review fix): per-doc logw is Σ c·lr over MANY
+    Determinism: per-doc logw is Σ c·lr over MANY
     buckets in engine-specific order, and logw is NEGATIVE — summing
     doubles then rounding with built-in round() is exactly the divergence
     class the repo's dround rule exists for. So the per-BUCKET log-ratio is
@@ -1189,7 +1189,7 @@ def dsir_importance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     B = 1024
     # widen the single-file fixture scan BEFORE the tokenize/explode stage
-    # (the round-3 single-core corpus-scan trap)
+    # (the single-core corpus-scan trap)
     docs = ensure_compute_partitions(
         load_table(spark, sf_dir, "documents", ["doc_id", "text", "source"]),
         "doc_id",
@@ -1401,7 +1401,7 @@ def doremi_mixture_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persist: the k-row scored table feeds BOTH the normalizer sum and the
     # final select — unpersisted, the vocabulary-sized token join and the
-    # per-source rollup evaluate twice (round-5 review; the repeated-scan
+    # per-source rollup evaluate twice (the repeated-scan
     # lint can't see it because the persisted st hides it behind one scan).
     scored = per_source.select(
         "source",

@@ -527,7 +527,7 @@ def price_quantiles_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag — ``quantile_disc`` semantics (the element at ceil(p·n) of the
     sorted values), engine-independent, no interpolation arithmetic.
 
-    Scale shape (reworked round 4): computed by rank arithmetic over the
+    Scale shape: computed by rank arithmetic over the
     per-(flag, value) histogram — the element at position ceil(p·n) is the
     MIN value whose cumulative count reaches that position — so per-group
     state is bounded by the price GRID, not the group size. The former
@@ -736,8 +736,8 @@ def price_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tdigest_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``price_tdigest_quantiles``'s driver-provable audit twin (VERDICT r5
-    item 2, the ``adjacency_degree_audit`` pattern): the sketch estimate is
+    """``price_tdigest_quantiles``'s driver-provable audit twin (the
+    ``adjacency_degree_audit`` pattern): the sketch estimate is
     engine-specific and never appears in the output — what does is the EXACT
     disc quantile at each p (an actual data element, bit-identical across
     engines) plus ``ok_p*`` booleans recording whether the sketch landed
@@ -1456,8 +1456,7 @@ def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: point estimate, replica-mean spread (exact order statistics at
     ranks 2 and 31 of 32 — ≈ a 90% interval).
 
-    Scale form (round-3 rework; the r2 explode form was the worst scaler
-    of the sf≈1 run at 59× — its cost was one md5 per (replica, row), 48 M
+    Scale form (a per-(replica, row) explode costs one md5 per pair, 48 M
     hashes at sf≈1): each md5 now yields EIGHT independent 16-bit draws,
     so a row hashes 4× instead of 32×. The four hex digests concatenate
     into one 128-char string, `regexp_extract_all('.{4}')` slices out the
@@ -1467,10 +1466,9 @@ def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     are plain longs keyed by (replica, hash-bucket) — map-side combined
     to ≤ 32·1024 rows, long-overflow-safe because a bucket holds ~1/1024
     of the rows — and only the 32 K bucket subtotals are re-summed as
-    decimals (wide decimals never touch the per-row path; they were the
-    other r2 cost). 16-bit uniforms quantize the Poisson CDF by ≤ 2^-16 —
-    bootstrap-irrelevant, and bit-identical in the oracle (same hex
-    slices, same arithmetic).
+    decimals (wide decimals never touch the per-row path). 16-bit uniforms
+    quantize the Poisson CDF by ≤ 2^-16 — bootstrap-irrelevant, and
+    bit-identical in the oracle (same hex slices, same arithmetic).
 
     Every replica's weighted sum is exact integer arithmetic; the 32
     replica means sort exactly; no randomness at run time."""

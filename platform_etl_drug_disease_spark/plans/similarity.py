@@ -131,13 +131,12 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify, over the planted-duplicate corpus (see
     :func:`_augmented_embeddings`).
 
-    Round 1 shipped this as a label-blocked ALL-PAIRS self-join (VERDICT r1);
-    the first banded rewrite used 2-bit bands at τ=0.3 — only a 4-way split,
-    still quadratic-in-practice on uniform data, because low thresholds are
-    not prunable by sign-LSH (p(τ=0.3)=0.597 vs p(random)=0.5). This version
-    operates where LSH actually prunes exponentially: planted pairs
-    (cos≈0.999, p≈0.986/bit) are recovered with P(miss) < 1e-7 per pair,
-    while random pairs survive a band with probability ~2^-10.
+    Low thresholds are not prunable by sign-LSH (p(τ=0.3)=0.597 vs
+    p(random)=0.5: 2-bit bands at τ=0.3 stay quadratic in practice on
+    uniform data), so this operates where LSH actually prunes
+    exponentially: planted pairs (cos≈0.999, p≈0.986/bit) are recovered
+    with P(miss) < 1e-7 per pair, while random pairs survive a band with
+    probability ~2^-10.
 
     Fully deterministic (Gaussian planes as literals, IEEE left folds, ±2%
     literal jitter) → the oracle reproduces candidates AND cosines
@@ -272,11 +271,11 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells and rerank exactly. Fully deterministic (rounded cosines + id
     tie-breaks) → value-hash oracle, unlike the LSH variant.
 
-    The centroid count MUST be sublinear in the corpus: round 1 used a fixed
-    id stride (every 50th vector), which grows C linearly with n and makes
-    the assign stage n×C = O(n²/50) folds — 195 s at sf≈1 vs ~8 s with √n
-    cells. The stride is computed declaratively (count aggregate broadcast
-    into the filter), no driver-side collect.
+    The centroid count MUST be sublinear in the corpus: a fixed id stride
+    (every 50th vector) grows C linearly with n and makes the assign stage
+    n×C = O(n²/50) folds — 195 s at sf≈1 vs ~8 s with √n cells. The
+    stride is computed declaratively (count aggregate broadcast into the
+    filter), no driver-side collect.
 
     The pruned (vec_id, embedding) projection is persisted: it fans out four
     ways (candidates, queries, the stride count, the centroid filter)."""
@@ -1415,8 +1414,8 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the projection is matrix multiply as JOIN-AGGREGATE —
     explode (vec, i, component), broadcast-join the 1024-row ±1 sign table,
     one (vec, j) sum — the shape that scales to any corpus and any output
-    dimension, instead of a 16×64-term generated expression tree (the
-    round-3 codegen-ladder pathology). Query set is the standard 5-vector
+    dimension, instead of a 16×64-term generated expression tree (a
+    codegen-ladder pathology). Query set is the standard 5-vector
     broadcast; both top-5 passes are the allowlisted broadcast
     cross-products every kNN baseline here uses.
 
@@ -1447,7 +1446,7 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_query = (F.col("vec_id") % _PLANT_STRIDE == 0) & (
         F.col("vec_id") < 5 * _PLANT_STRIDE
     )
-    # zero-norm guard (ADVICE r5): a zero vector unit-normalizes to an array
+    # zero-norm guard: a zero vector unit-normalizes to an array
     # of NULL components; without a symmetric filter DuckDB would keep the
     # doc as a NULL-cos_p candidate row while Spark's sum-over-NULLs path
     # diverges. Both engines drop nv[first] IS NULL rows before projecting.
@@ -1506,7 +1505,7 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # built-in round (engine-specific half-boundary behavior — the exact
     # divergence class dround documents; dround itself is non-negative-only).
     # floor(x*1e6 + 0.5)/1e6 is IEEE-exact and negative-consistent on both
-    # engines, same as the DSIR log-ratio treatment (ADVICE r5). The
+    # engines, same as the DSIR log-ratio treatment. The
     # escored/_NDOT exact side deliberately keeps mirroring knn_bruteforce's
     # documented pre-existing rounding so the two stay bit-identical.
     cos_p = (

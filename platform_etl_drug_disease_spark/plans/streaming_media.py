@@ -131,8 +131,8 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _event_stream(spark, sf_dir)
     # NOT input-scaled: applyInPandasWithState cost is per-row Python work
-    # in the state function — partitions must follow cores (measured round
-    # 10: 1.7 s -> 7.2 s at the bytes-derived count), unlike the JVM
+    # in the state function — partitions must follow cores (measured:
+    # 1.7 s -> 7.2 s at the bytes-derived count), unlike the JVM
     # stateful ops where store bookkeeping dominates.
     updates = run_to_memory_sink(
         running_user_totals(stream), "cat_stream_totals", output_mode="update"
@@ -263,10 +263,9 @@ _STAGED_FEED_CACHE: dict[tuple, str] = {}
 #: platform builds the corpus snapshot index once and matches every feed
 #: batch against it; that is exactly this memo. Memo owners:
 #: streaming_incremental_dedup (minhash), streaming_containment_incremental
-#: (containment). Eager localCheckpoints replace the old
-#: persist+finally-unpersist lifecycle (ADVICE r8 was about LEAKED lazy
-#: persists; a checkpointed artifact with eviction is a deliberate
-#: retention, not a leak).
+#: (containment). The artifacts are eager localCheckpoints, not lazy
+#: persists: a checkpointed artifact with eviction is a deliberate
+#: retention, not a leak.
 _STREAM_MINHASH_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _STREAM_CONTAINMENT_CACHE: dict[tuple, tuple[DataFrame, ...]] = {}
 
@@ -325,21 +324,20 @@ def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     the single-batch twins stream) into a fresh landing directory as
     ``n_files`` parquet files, so a file-stream reader with
     ``maxFilesPerTrigger=1`` fires ``n_files`` separate micro-batches
-    (VERDICT r8 item 3: the per-batch-cost claim needs >= 3 real batches to
-    be a measurement, not an argument). Round-robin ``repartition`` spreads
+    (a per-batch-cost claim needs >= 3 real batches to be a measurement,
+    not an argument). Round-robin ``repartition`` spreads
     docs across files; WHICH docs share a batch never affects the final
     union, because every match is computed per new doc against the static
     corpus index.
 
     The landing dir is DETERMINISTIC per (corpus dir, n_files) and written
-    with overwrite mode, so repeated invocations — timed repeats of a
-    multibatch query, stream_batch_walls repeats — reuse one directory
-    instead of accumulating corpus-sized mkdtemp copies for the life of
-    the box (round-9 review finding). The session memo skips even the
-    overwrite rewrite while the corpus is unchanged. (The runners'
-    match OUTPUT dirs stay mkdtemp-fresh on purpose: reusing a streaming
-    checkpoint dir would make a new run think the feed was already
-    processed.)"""
+    with overwrite mode, so repeated invocations (timed repeats of a
+    multibatch query) reuse one directory instead of accumulating
+    corpus-sized mkdtemp copies for the life of the box. The session memo
+    skips even the overwrite rewrite while the corpus is unchanged. (The
+    runners' match OUTPUT dirs stay mkdtemp-fresh on purpose: reusing a
+    streaming checkpoint dir would make a new run think the feed was
+    already processed.)"""
     import hashlib
     import os
     import tempfile
@@ -397,9 +395,9 @@ def _minhash_stream_run(
     out_dir) — out_dir keeps the per-batch partition column readable for
     the parity tests. ``batch_log`` (when given) receives one
     ``{batch_id, n_docs, wall_s}`` dict per micro-batch — the
-    flat-per-batch-cost evidence of VERDICT r8 item 3. The per-batch
-    persist is released in a ``finally`` block: a micro-batch that raises
-    must not leak it for the rest of the session (ADVICE r8)."""
+    flat-per-batch-cost evidence. The per-batch persist is released in a
+    ``finally`` block: a micro-batch that raises must not leak it for the
+    rest of the session."""
     import tempfile
     import time
 
@@ -440,7 +438,7 @@ def _minhash_stream_run(
             # capture the wall BEFORE the n_docs count: the count is a
             # separate Spark job over the batch's landing file, run only
             # for the log — inside the timed window it would inflate every
-            # reported per-batch wall by one scan (round-9 review finding).
+            # reported per-batch wall by one scan.
             wall_s = time.monotonic() - t0
             batch_log.append(
                 {
@@ -453,7 +451,7 @@ def _minhash_stream_run(
     # deliberately NOT input-scaled (cf. the JVM-stateful entries):
     # foreachBatch has no state stores, and the matcher's exploded
     # shingle joins are compute-bound — core-count partitions win
-    # (measured round 10: containment 3.7 s -> 9.4 s when scoped to the
+    # (measured: containment 3.7 s -> 9.4 s when scoped to the
     # bytes-derived count).
     # No finally-unpersist: the corpus artifacts are session memos.
     q = (
@@ -524,7 +522,7 @@ def _containment_stream_run(
             # capture the wall BEFORE the n_docs count: the count is a
             # separate Spark job over the batch's landing file, run only
             # for the log — inside the timed window it would inflate every
-            # reported per-batch wall by one scan (round-9 review finding).
+            # reported per-batch wall by one scan.
             wall_s = time.monotonic() - t0
             batch_log.append(
                 {
@@ -537,7 +535,7 @@ def _containment_stream_run(
     # deliberately NOT input-scaled (cf. the JVM-stateful entries):
     # foreachBatch has no state stores, and the matcher's exploded
     # shingle joins are compute-bound — core-count partitions win
-    # (measured round 10: containment 3.7 s -> 9.4 s when scoped to the
+    # (measured: containment 3.7 s -> 9.4 s when scoped to the
     # bytes-derived count).
     # No finally-unpersist: the corpus artifacts are session memos.
     q = (
@@ -570,17 +568,16 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``streaming_incremental_dedup`` under a REAL multi-micro-batch feed
-    (VERDICT r8 item 3): the same incoming docs staged as 3 landing files
-    and rate-limited with ``maxFilesPerTrigger=1``, so ``foreachBatch``
+    """``streaming_incremental_dedup`` under a REAL multi-micro-batch feed:
+    the same incoming docs staged as 3 landing files and rate-limited with
+    ``maxFilesPerTrigger=1``, so ``foreachBatch``
     fires >= 3 times against the once-built corpus index. Every match is
     per-new-doc against the static index, so the batched union is
     value-identical to the single-batch twin and to the batch
     ``dedup_incremental`` — all three share one oracle. What this entry
     adds is driver-proven evidence that the serve path is correct ACROSS
     batch boundaries (no state bleeds between batches; replay-idempotent
-    landing per batch_id), with per-batch walls measured by
-    tools/stream_batch_walls.py and parity pinned per batch by
+    landing per batch_id), with parity pinned per batch by
     tests/test_streaming.py::test_multibatch_per_batch_parity."""
     feed_dir = _stage_feed(spark, sf_dir, n_files=3)
     df, _ = _minhash_stream_run(
@@ -592,7 +589,7 @@ def streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_containment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingestion CONTAINMENT on the streaming engine — the
     asymmetric sibling of ``streaming_incremental_dedup``, closing the
-    containment family's streaming serve gap (VERDICT r7 item 5): new
+    containment family's streaming serve gap: new
     documents arrive as a file stream (``doc_id % 10 == 0`` plays the feed,
     as in the batch ``containment_incremental``), and each micro-batch is
     matched as CONTAINED (trigram containment >= 0.8) against the STATIC
@@ -610,14 +607,13 @@ def streaming_containment_incremental(spark: SparkSession, sf_dir: str) -> DataF
 
 def streaming_containment_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``streaming_containment_incremental`` under a REAL multi-micro-batch
-    feed (VERDICT r8 item 3): the incoming docs staged as 3 landing files,
+    feed: the incoming docs staged as 3 landing files,
     ``maxFilesPerTrigger=1``, so the containment matcher runs >= 3 times
     against the once-built corpus index (shingles + hot list + slot-row
     index, all outside the loop). Value-identical to the single-batch twin
     and the batch ``containment_incremental`` (matches are per-new-doc
     against static state) — one shared oracle; this entry driver-proves
-    cross-batch correctness, with per-batch walls in
-    tools/stream_batch_walls.py output and per-batch parity pinned by
+    cross-batch correctness, with per-batch parity pinned by
     tests/test_streaming.py::test_multibatch_per_batch_parity."""
     feed_dir = _stage_feed(spark, sf_dir, n_files=3)
     df, _ = _containment_stream_run(

@@ -67,7 +67,7 @@ def _df(spark, name, rows):
     # unpickles Python rows. The previous createDataFrame(parallelize(rows))
     # path made each of the 12 tiny inputs an ExistingRDD of pickled rows —
     # the DAG's ~40 per-execution jobs were dominated by those scan/broadcast
-    # stages (round-10 measurement: pipeline execution 3.2 s → 1.3 s).
+    # stages (measured: pipeline execution 3.2 s → 1.3 s).
     #
     # The all-NULL sentinel row (dropped again by limit(len(rows)), which
     # folds back into the LocalRelation) forces the inline table's merged

@@ -57,11 +57,11 @@ HARNESS_TABLES: dict[str, str] = {
 
 def events_ts_unit(sf_dir: str) -> str:
     """Physical spelling of ``events.ts`` in this sf dir's parquet footer:
-    ``'ns'`` (round-1 fixtures: TIMESTAMP(NANOS), which Spark's reader only
-    accepts via nanosAsLong) or ``'us'`` (regenerated fixtures and
-    tools/make_scaled_sf.py copies: plain TIMESTAMP_MICROS). Streaming
-    sources declare their schema up front and cannot sniff per-row, so both
-    the batch and the stream reader key off this footer check."""
+    ``'ns'`` (TIMESTAMP(NANOS), which Spark's reader only accepts via
+    nanosAsLong) or ``'us'`` (regenerated or re-written copies: plain
+    TIMESTAMP_MICROS). Streaming sources declare their schema up front and
+    cannot sniff per-row, so both the batch and the stream reader key off
+    this footer check."""
     import pyarrow.parquet as pq
 
     return str(pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type.unit)
@@ -78,7 +78,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, columns: list[str] |
         # the fixture's ts is parquet TIMESTAMP(NANOS), which Spark's reader
         # rejects; read nanos as long and truncate to micros (exactly what
         # DuckDB's nanos→micros coercion does, so oracles agree). Re-written
-        # copies of the fixture (tools/make_scaled_sf.py, third-party dumps)
+        # copies of the fixture (e.g. third-party dumps)
         # may carry ts as a real micros timestamp instead — normalize both
         # spellings to TIMESTAMP (session tz is pinned UTC) by dtype.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

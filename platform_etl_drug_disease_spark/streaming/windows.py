@@ -41,7 +41,7 @@ def input_scaled_shuffle_partitions(
     open/commit/fsync constant regardless of how little state it holds.
     With the session default (= core count) a 2 MB event stream ran
     4 x 32 = 128 store instances whose bookkeeping dominated the wall
-    (measured round 10: the interval join 8.2 s -> 2.9 s at sf0.1 when the
+    (measured: the interval join 8.2 s -> 2.9 s at sf0.1 when the
     count follows the input). At production volumes the formula returns
     the configured ceiling, so a tuned cluster setting is never overridden
     upward or downward on real data.

@@ -194,10 +194,10 @@ def test_hll_rollup_accuracy_and_consistency(spark):
 
 
 def test_overlap_and_triangle_plans_stay_scale_safe(spark):
-    """Regression pins for the two sf≈1 fixes (PERF.md round-2
-    continuation): no shingle recomputation sunk into a Filter below the
-    overlap query's exchange, and the triangle graph support-thresholded
-    before orientation (the raw co-supplier graph is near-complete)."""
+    """Regression pins for the two sf≈1 fixes: no shingle recomputation
+    sunk into a Filter below the overlap query's exchange, and the triangle
+    graph support-thresholded before orientation (the raw co-supplier graph
+    is near-complete)."""
     from platform_etl_drug_disease_spark.plan_lint import filter_conditions
     from platform_etl_drug_disease_spark.plans.dedup_text import (
         source_overlap_jaccard,
@@ -208,8 +208,8 @@ def test_overlap_and_triangle_plans_stay_scale_safe(spark):
         assert "array_distinct" not in cond, cond
         assert "transform(sequence" not in cond, cond
 
-    # Round 10: the pair derivation moved into the _CO_PAIRS_CACHE session
-    # artifact (consumers see a checkpointed RDD), so the threshold is
+    # The pair derivation lives in the _CO_PAIRS_CACHE session artifact
+    # (consumers see a checkpointed RDD), so the threshold is
     # pinned on the LAZY plan that builds the artifact.
     from platform_etl_drug_disease_spark.plans.graph import (
         _co_supplier_pairs_plan,
@@ -624,7 +624,7 @@ def test_hits_scores_known_graph(spark):
 
 @pytest.mark.parametrize("depth", [1, 2, 3, 4])
 def test_bfs_loop_matches_generated_oracle_any_depth(spark, depth):
-    """The iteration-depth contract (VERDICT r4 item 6): the Spark frontier
+    """The iteration-depth contract: the Spark frontier
     loop and the GENERATED unrolled-CTE oracle must agree at every depth
     1..4 on a planted graph with a cycle and a long tail — the catalog
     oracle pins only BFS_MAX_DEPTH, so this guards whoever bumps the
@@ -660,7 +660,7 @@ def test_bfs_loop_matches_generated_oracle_any_depth(spark, depth):
 @pytest.mark.parametrize("n_iters", [1, 2, 3, 4])
 def test_hits_loop_matches_generated_oracle_any_iters(spark, n_iters):
     """Same contract for HITS: the decimal-exact Spark loop and the generated
-    unrolled-CTE oracle agree bit-for-bit (round-9) at every iteration count
+    unrolled-CTE oracle agree bit-for-bit at every iteration count
     1..4, including the h0=1 shortcut (iteration 1 = pure integer
     in-degree)."""
     import duckdb

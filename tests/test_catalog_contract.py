@@ -10,11 +10,13 @@ can't silently regress them:
 - every session memo owner in ``plans.memo_owners`` is a catalog query,
   and every session memo dict under ``plans/`` has an owner;
 - every public library function has a caller outside ``tests/``, so an
-  operator has one implementation: the one the catalog or pipeline runs.
+  operator has one implementation: the one the catalog or pipeline runs;
+- no Python source cites a document or tool that does not exist.
 """
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 
@@ -43,9 +45,9 @@ def test_unoracled_queries_are_the_rows_only_sketches():
     )
 
 
-# SURVEY §2 operator id -> exercising catalog queries (the VERDICT r2
-# coverage table's mapping). At least one of each id's queries must carry a
-# value oracle.
+# SURVEY.md §2 operator id -> the catalog queries that exercise it (the
+# operator rows of COVERAGE.md, keyed the same way). At least one of each
+# id's queries must carry a value oracle.
 SURVEY_IDS: dict[str, list[str]] = {
     "S1": ["drug_disease_pipeline"],
     "S2": ["flagship_harmonic_topk"],
@@ -230,3 +232,29 @@ def test_library_functions_have_a_caller():
     assert not uncalled, f"library code only tests call: {uncalled}"
     stale = sorted(n for n in NO_CALLER_OK if n in used or n not in defined)
     assert not stale, f"allowlisted names that now have a caller or are gone: {stale}"
+
+
+#: names of the retired per-round process's documents; the character
+#: classes keep this pattern from matching itself
+_RETIRED_DOCS = re.compile(r"VERDIC[T]|ADVIC[E]|PER[F]\.md|OPTIMIZATION_[r]")
+
+
+def test_sources_cite_only_live_files():
+    """Every ``*.md`` or ``tools/*.py`` file a Python source of the package,
+    ``tests/`` or ``tools/`` names exists (at the repo root or next to the
+    source), and no source cites the retired per-round documents. A comment
+    that points at a deleted file explains nothing."""
+    root = Path(__file__).resolve().parents[1]
+    sources = [root / "__spark_entry__.py"]
+    for top in ("platform_etl_drug_disease_spark", "tests", "tools"):
+        sources += sorted((root / top).rglob("*.py"))
+    cited = re.compile(r"[\w./-]*\w\.md\b|\btools/\w+\.py\b")
+    bad = []
+    for f in sources:
+        text = f.read_text()
+        rel = f.relative_to(root)
+        for name in sorted(set(cited.findall(text))):
+            if not ((root / name).exists() or (f.parent / name).exists()):
+                bad.append(f"{rel}: {name}")
+        bad += [f"{rel}: {m}" for m in sorted(set(_RETIRED_DOCS.findall(text)))]
+    assert not bad, f"stale citations: {bad}"

@@ -237,6 +237,73 @@ def test_pipeline_persists_only_shared_nodes(spark, branch):
     spark.catalog.clearCache()
 
 
+@pytest.mark.parametrize("branch", ["default", "whitelist"])
+def test_pipeline_close_releases_cache(spark, branch):
+    """A long-lived session runs the pipeline repeatedly: ``close()`` after
+    each run releases exactly the frames that run cached, so the count of
+    persisted RDDs (read as in the test above) returns to its baseline
+    every time instead of growing by 3-4 per run."""
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    inputs = domain_inputs(spark)
+    if branch == "default":
+        del inputs["whitelist"]
+    for _ in range(3):
+        with run_pipeline(**inputs) as out:
+            out.associations.collect()
+            out.drug_disease.collect()
+            assert persistent().size() > before
+        assert persistent().size() == before
+
+
+def _reordered(df, n_parts: int):
+    """The same rows in reverse order, spread over ``n_parts`` partitions."""
+    i = "__row_order"
+    return (
+        df.withColumn(i, F.monotonically_increasing_id())
+        .repartition(n_parts)
+        .sortWithinPartitions(F.col(i).desc())
+        .drop(i)
+    )
+
+
+def test_drug_arrays_independent_of_input_row_order(spark, tmp_path):
+    """The collected drug arrays are written in their raw order, so the same
+    input rows in another order and partitioning must give identical raw
+    ``drugs_for_target``, ``drugs_for_disease`` and ``new_drugs`` (and the
+    ``drug_disease`` arrays derived from them), not only identical sorted
+    contents."""
+    from perfbench.fixtures import domain_tables, read_domain, write_tables
+
+    write_tables(domain_tables(7, 300), str(tmp_path))
+    inputs = read_domain(spark, str(tmp_path))
+    keys = ["target_id", "disease_id"]
+    assoc_cols = ["drugs_for_target", "drugs_for_disease", "new_drugs"]
+    dd_cols = ["disease_aes_from_drugs", "disease_indication_from_drugs"]
+
+    def arrays(ins):
+        out = run_pipeline(**ins)
+        assoc = {
+            tuple(r[:2]): tuple(r[2:])
+            for r in out.associations.select(*keys, *assoc_cols).collect()
+        }
+        dd = {
+            tuple(r[:3]): tuple(r[3:])
+            for r in out.drug_disease.select(
+                *keys, "drug_hypothesis", *dd_cols
+            ).collect()
+        }
+        return assoc, dd
+
+    assoc_a, dd_a = arrays(inputs)
+    assoc_b, dd_b = arrays({k: _reordered(v, 3) for k, v in inputs.items()})
+    spark.catalog.clearCache()
+    assert assoc_a and dd_a
+    assert assoc_a == assoc_b
+    assert dd_a == dd_b
+
+
 def test_scaled_power_law_fixture_runs_full_dag(spark, tmp_path):
     """The benchmark's hub fixture generator (perfbench/fixtures.py) must
     stay schema-conforming and non-degenerate: a 300-target power-law
@@ -275,7 +342,7 @@ def test_scaled_power_law_fixture_runs_full_dag(spark, tmp_path):
 
 
 def test_fixture_inputs_are_local_relations(spark, inputs):
-    """Round-10 §8: the literal domain inputs must analyze to JVM
+    """The literal domain inputs must analyze to JVM
     LocalRelations (every scan a LocalTableScan — broadcast builds collect
     driver-side, no pickled-row scan jobs) AND keep the schema byte-identical
     to the declared domain schema (the old createDataFrame path's contract,

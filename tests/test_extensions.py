@@ -8,10 +8,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.operators import text as tx
-from platform_etl_drug_disease_spark.operators.dedup import (
-    jaccard_pairs,
-    minhash_lsh_candidates,
-)
+from platform_etl_drug_disease_spark.operators.dedup import jaccard_pairs
 from platform_etl_drug_disease_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_media_features,
@@ -98,12 +95,6 @@ def test_jaccard_hot_shingle_cap_bounds_candidates(spark):
                                     max_shingle_df=16).collect()}
     assert (100, 101) in pairs
     assert pairs[(100, 101)] == 1.0, "verify must count hot shingles in the value"
-
-
-def test_minhash_candidates_superset_of_exact_dups(spark):
-    cands = minhash_lsh_candidates(_docs(spark), "doc_id", "text")
-    got = {(r["id_a"], r["id_b"]) for r in cands.collect()}
-    assert (1, 2) in got  # identical docs always share every band
 
 
 def test_dedup_recall_audit_s_curve(spark, tmp_path):
@@ -1007,7 +998,7 @@ def test_containment_catches_what_jaccard_misses(spark):
 
 
 def test_containment_boundary_prefix_is_lossless(spark, tmp_path):
-    """ADVICE r6 (medium) regression: a pair at containment EXACTLY τ=0.8
+    """Regression: a pair at containment EXACTLY τ=0.8
     whose container shares NONE of the contained doc's old (one-short)
     prefix. Doc A has |sh|=5 (a multiple of 5 — the float-arithmetic
     failure class: floor(5·0.19999999999999996)+1 = 1, lossless needs
@@ -1096,7 +1087,7 @@ def _py_audit_sample(doc_id: int) -> bool:
 
 
 def test_containment_recall_audit_cells(spark, tmp_path):
-    """containment_recall_audit (10% HT-sampled truth, VERDICT r7 item 1) on
+    """containment_recall_audit (10% HT-sampled truth) on
     the planted corpus, pinned against the FULL-truth audit
     (_containment_audit_cells with contained_pred=None):
 
@@ -1241,7 +1232,7 @@ def test_containment_minhash_subset_of_exact_with_exact_values(spark):
 
 
 def test_containment_minhash_hot_shingles_never_bucket(spark):
-    """Regression for the round-7 quadratic caught by dedup_scale_stress:
+    """Regression for the boilerplate-quadratic candidate blow-up:
     docs whose ONLY overlap is a shared boilerplate phrase (df above the
     shingle cap) must produce ZERO candidates — the hot shingle must never
     become a slot minimum, else every pair of its carriers collides and
@@ -1277,7 +1268,7 @@ def test_containment_minhash_hot_shingles_never_bucket(spark):
 
 
 def test_incremental_batch_signed_in_index_universe(spark):
-    """Round-7 review finding: the batch side of the incremental matcher
+    """The batch side of the incremental matcher
     must be signed under the CORPUS's shingle universe. Mechanism pin: no
     batch slot value may un-XOR to a corpus-hot hash (such minima can never
     match any index value); and functionally, a new doc that is mostly
@@ -1403,8 +1394,7 @@ def test_quoted_spans_measures_verbatim_runs(spark):
 def test_containment_shingles_hook_shares_one_pass(spark):
     """`shingles=`: a prebuilt persisted shingle table must give identical
     results for BOTH family members (exact top-k and minhash top-k) as the
-    build-it-yourself path — the one-tokenize-pass reuse hook (VERDICT r6
-    item 3)."""
+    build-it-yourself path — the one-tokenize-pass reuse hook."""
     from platform_etl_drug_disease_spark.operators.dedup import (
         _shingle_table,
         containment_minhash_topk,
@@ -1466,7 +1456,7 @@ def _py_longest_repeats(
 
 def test_longest_repeat_lengths_planted_exact(spark):
     """The suffix-ranking path reports EXACT arbitrary-length repeats where
-    fixed-W marks cannot (VERDICT r7 item 3): a planted 23-token shared
+    fixed-W marks cannot: a planted 23-token shared
     passage yields repeat_len 23, 22, …, 8 (one per interior suffix per
     doc); a 3-doc 12-token passage yields lengths 12..8 over 3 docs; a
     9-token passage 9 and 8. Every (doc, pos, repeat_len) triple must equal
@@ -1548,7 +1538,7 @@ def test_longest_repeat_identical_suffix_twins_and_cap(spark):
 
 
 def test_sampled_repeat_lengths_planted_giant_anchor(spark):
-    """VERDICT r8 item 6, at PRODUCTION knobs: a 40-token block planted in
+    """At PRODUCTION knobs: a 40-token block planted in
     600 docs makes every interior anchor's df (600) exceed the census cap
     (512) — the exact family excludes the whole block and only discloses
     the mass. ``sampled_repeat_lengths(min_anchor_df=512,
@@ -1636,7 +1626,7 @@ def test_sampled_repeat_lengths_rejects_degenerate_sample(spark):
         sampled_repeat_lengths(df, "doc_id", "text", min_anchor_df=0)
     with _pytest.raises(ValueError, match="max_rounds"):
         sampled_repeat_lengths(df, "doc_id", "text", max_rounds=0)
-    # ADVICE r9: min_anchor_df < sample_per_anchor would make n_sampled <
+    # min_anchor_df < sample_per_anchor would make n_sampled <
     # sample_per_anchor for the low-df anchors while consumers weight by
     # the constant — a silently-low-biased HT estimate. Refuse loudly.
     with _pytest.raises(ValueError, match="sample_per_anchor"):
@@ -1701,7 +1691,7 @@ def test_top_repeated_spans_planted(spark, tmp_path):
 
 
 def test_release_pipeline_boilerplate_strip_planted(spark, tmp_path):
-    """VERDICT r8 item 7: the release pipeline consumes the suffix-ranking
+    """The release pipeline consumes the suffix-ranking
     census as a boilerplate-strip stage. A 30-token header planted in 15
     otherwise-unique docs exercises BOTH attrition paths on one fixture:
     12 long docs keep their unique 80 tokens but lose the header's 30 from
@@ -1737,7 +1727,7 @@ def test_release_pipeline_boilerplate_strip_planted(spark, tmp_path):
     # cross-engine: the driver's oracle gate only ever sees corpora where
     # the partial-strip path is inert (stripped_tokens = 0 — the synthetic
     # repeats are whole-doc), so pin Spark == DuckDB on THIS fixture, where
-    # it is live (round-9 review finding).
+    # it is live.
     import duckdb
 
     con = duckdb.connect()
@@ -1819,7 +1809,7 @@ def test_repeat_keep_one_retention_planted(spark, tmp_path):
 
 
 def test_suffix_artifact_reuse(spark, tmp_path):
-    """VERDICT r8 item 1: the session-memoized ``_suffix_ranking`` artifact
+    """The session-memoized ``_suffix_ranking`` artifact
     that `longest_repeat_census`, `top_repeated_spans`, and
     `repeat_mass_by_source` share is (a) value-identical to a fresh
     standalone ``longest_repeat_lengths`` run over the same corpus — the
@@ -1934,7 +1924,7 @@ _FINGERPRINT_CASES = {
 def test_suffix_artifact_fingerprint_miss(spark, tmp_path, case):
     """Rewriting a table at the SAME path within one session must MISS
     every session memo that reads it (the key carries a content
-    fingerprint of each table — round-9 review finding): serving the
+    fingerprint of each table): serving the
     previous snapshot's checkpoint-backed artifact would be a silent wrong
     answer. On the unchanged table a second call is a memo hit."""
     import importlib
@@ -1975,7 +1965,7 @@ def test_suffix_artifact_fingerprint_miss(spark, tmp_path, case):
 
 
 def test_containment_topk_artifact_reuse(spark, tmp_path):
-    """Round 9: the memoized lang-blocked containment top-3 artifact shared
+    """The memoized lang-blocked containment top-3 artifact shared
     by `dedup_containment_topk` and `quoted_span_stats` is value-identical
     to a fresh standalone ``containment_topk`` run, and the second consumer
     gets the SAME checkpoint-backed frame (no second prefix/verify
@@ -2019,7 +2009,7 @@ def test_containment_topk_artifact_reuse(spark, tmp_path):
 
 
 def test_lsh_artifacts_reuse(spark, tmp_path):
-    """Round 9: the memoized MinHash+LSH pair set and its hash-min
+    """The memoized MinHash+LSH pair set and its hash-min
     connected components — shared by dedup_minhash_lsh, the two cluster
     queries, leakage_safe_split, and dedup_quality_keeper — are
     value-identical to fresh standalone runs, and repeat consumers get the
@@ -2071,7 +2061,7 @@ def test_lsh_artifacts_reuse(spark, tmp_path):
 
 
 def test_lr_tokens_separator_bytes_sanitized(spark, tmp_path):
-    """VERDICT r9 item 5: the suffix family's \\x00/\\x01 sort-separator
+    """The suffix family's \\x00/\\x01 sort-separator
     bytes are stripped from the text during the family's tokenization on
     BOTH engines. A token spelled "x\\x01q" must (a) no longer be able to
     forge the joined sort key, and (b) match an occurrence spelled "xq"
@@ -2130,7 +2120,7 @@ def test_lr_tokens_separator_bytes_sanitized(spark, tmp_path):
 
 
 def test_release_keep_one_matches_retention_twin(spark, tmp_path):
-    """VERDICT r9 item 4: keep_one as an EXECUTABLE strip mode whose
+    """keep_one as an EXECUTABLE strip mode whose
     retained token mass equals the accounting twin's ``tokens_retained``
     (fixture chosen so no doc husks or fails quality — the pipeline's only
     attrition is the strip itself). Remove-all on the same corpus strips
@@ -2190,7 +2180,7 @@ def test_release_keep_one_matches_retention_twin(spark, tmp_path):
 
 
 def test_capped_mass_profile_planted_giant_anchor(spark, tmp_path):
-    """VERDICT r9 item 3 at production knobs: the 40-token block planted in
+    """At production knobs: the 40-token block planted in
     600 docs is INVISIBLE to the exact census (every block anchor's df=600
     exceeds the 512 cap) but fully profiled by capped_mass_profile — exact
     HT recovery of the excluded mass per length, strip-eligibility against
@@ -2241,7 +2231,7 @@ def test_capped_mass_profile_planted_giant_anchor(spark, tmp_path):
         for r in rows
     )
     # the salted two-stage rank is salt-invariant: global top-S == top-S of
-    # the union of per-salt top-S (ADVICE r9 heat-robustness rewrite)
+    # the union of per-salt top-S (the heat-robust ranking)
     loaded = spark.read.parquet(str(tmp_path / "documents.parquet"))
     s_default, _x, _y = sampled_repeat_lengths(
         loaded, "doc_id", "text", w=8, min_anchor_df=512,
@@ -2258,7 +2248,7 @@ def test_capped_mass_profile_planted_giant_anchor(spark, tmp_path):
 
 
 def test_suffix_base_frames_equivalence(spark, tmp_path):
-    """Round-11 shared anchor-universe artifact (VERDICT r10 item 3): the
+    """Shared anchor-universe artifact: the
     exact and sampled suffix operators fed the memoized (base, anchor
     counts) pair via their ``frames`` hook return row-identical results to
     the self-built path, and the pair is an actual memo (same frames back
@@ -2319,7 +2309,7 @@ def test_suffix_base_frames_equivalence(spark, tmp_path):
 
 
 def test_ctm_artifact_reuse(spark, tmp_path):
-    """Round-11 containment scale-path artifacts: the memoized trigram
+    """Containment scale-path artifacts: the memoized trigram
     shingle table + unfiltered shipped-config candidate set are (a) actual
     memos and (b) feed a topk result row-identical to the standalone
     operator path."""

@@ -54,8 +54,8 @@ def test_hot_path_stays_in_codegen(spark):
     assert codegen_stage_count(df) >= 1
 
 
-# Per-rule lint allowlist (VERDICT r3 item 5: allowlist must be explicit and
-# reasoned). Maps query name -> warning prefixes that are deliberate there.
+# Per-rule lint allowlist (explicit and reasoned). Maps query name ->
+# warning prefixes that are deliberate there.
 # knn brute-force/LSH cross a broadcast 5-row query set against candidates —
 # a bounded, intentional cross product, not the unkeyed-blowup the rule hunts.
 LINT_ALLOWLIST: dict[str, tuple[str, ...]] = {
@@ -64,7 +64,7 @@ LINT_ALLOWLIST: dict[str, tuple[str, ...]] = {
     # same 5-row broadcast query set as the brute-force baseline, twice
     # (projected-space and exact-space top-5)
     "jl_projection_recall": ("CartesianProduct",),
-    # round 10: the cumulative-rank windows consume the CHECKPOINTED
+    # the cumulative-rank windows consume the CHECKPOINTED
     # _price_flag_histogram artifact (grid-bounded aggregate, session memo);
     # the lint's raw-leaf walk cannot see the Aggregate through the
     # materialization boundary. The aggregate-input property is still
@@ -88,15 +88,15 @@ def test_catalog_query_lint_clean(spark, name):
     scans of one file (uncached fan-out). Parametrized so one dirty plan
     can't mask others, and allowlisted per RULE, not per query — an exempted
     query still gets every other rule enforced. This sweep is what caught
-    the personalized-PageRank 4x edge-set recompute in round 3.
+    the personalized-PageRank 4x edge-set recompute.
 
     Each query is linted against a CLEAN cache: the repeated-scan count
     reads ``Location:`` lines anywhere in the formatted plan, including
     inside InMemoryRelation cached-plan printouts, so leftover cache
     registrations from earlier parametrized queries make the count depend
     on test ORDER (a window rotation reordering the catalog flipped
-    knn_eval_metrics between 2 and 4 counted scans with an identical query,
-    round 11). Standalone is also how the catalog is timed — with the cache
+    knn_eval_metrics between 2 and 4 counted scans with an identical
+    query). Standalone is also how the catalog is timed — with the cache
     cleared between queries."""
     import __spark_entry__ as entrymod
 
@@ -121,8 +121,8 @@ def test_band_join_is_equi_not_nested_loop(spark):
 
 
 def test_embedding_near_dup_is_bucket_equi_join(spark):
-    """The banded-LSH rewrite must plan as equi-joins — the r1 label-blocked
-    all-pairs self-join was a cartesian-class scale-killer."""
+    """The banded-LSH near-dup must plan as equi-joins — a label-blocked
+    all-pairs self-join is a cartesian-class scale-killer."""
     from platform_etl_drug_disease_spark.plans.similarity import embedding_near_dup
 
     plan = explain_string(embedding_near_dup(spark, SF_SMOKE))
@@ -276,7 +276,7 @@ def test_quantile_windows_consume_the_histogram(spark):
     sweep passes these plans incidentally (their partition keys are
     low-cardinality AND aggregated); this pins the aggregate-input property
     by name so a rework that re-points the window at the fact table fails
-    here (VERDICT r4 item 7)."""
+    here."""
     from platform_etl_drug_disease_spark.plan_lint import (
         ordered_windows_over_unaggregated,
     )
@@ -294,7 +294,7 @@ def test_quantile_windows_consume_the_histogram(spark):
             f"{q.__name__}: cumulative window must consume the aggregated "
             f"histogram, got raw-input windows: {bad}"
         )
-    # price_mad_stats (round 10): its windows consume the CHECKPOINTED
+    # price_mad_stats: its windows consume the CHECKPOINTED
     # _price_flag_histogram session artifact, so the aggregate is invisible
     # to the raw-leaf walk. Pin the property in two halves: (a) the
     # artifact's lazy derivation IS the value histogram (an Aggregate over
@@ -323,7 +323,7 @@ def test_quantile_windows_consume_the_histogram(spark):
 
 
 def test_corpus_text_scans_have_compute_partitions(spark):
-    """Regression (round 3): token_fingerprints and lang_id_heuristic ran
+    """Regression: token_fingerprints and lang_id_heuristic ran
     their per-token folds on the single partition the one-file fixture
     scan dictated (21x/13x wall at 10x data). ensure_compute_partitions
     must widen the scan before the expensive projection."""
@@ -374,10 +374,10 @@ def _executed_plan_stats(df) -> dict:
             },
         ),
         (
-            # re-pinned round 10 after the _co_supplier_pairs session memo:
-            # the pair derivation (lineitem self-join + support groupBy) now
-            # builds ONCE per session as an eager localCheckpoint, so its
-            # exchanges left this query's own plan, and the downstream
+            # the _co_supplier_pairs session memo: the pair derivation
+            # (lineitem self-join + support groupBy) builds ONCE per session
+            # as an eager localCheckpoint, so its exchanges are not in this
+            # query's own plan, and the downstream
             # wedge/closing joins plan against the materialized pair RDD
             # (one more pair-set-sized exchange + one join upgraded to a
             # broadcast). Measured faster (4.95 s -> 3.57 s best-of-2 at
@@ -390,9 +390,8 @@ def _executed_plan_stats(df) -> dict:
             },
         ),
         (
-            # re-pinned round 10 with supplier_triangles (same
-            # _co_supplier_pairs memo; measured 3.81 s -> 1.43 s as family
-            # member): the materialized pair RDD re-plans the degree/orient
+            # same _co_supplier_pairs memo as supplier_triangles: the
+            # materialized pair RDD re-plans the degree/orient
             # joins as broadcasts — 5 BHJs of node-table-sized sides, one
             # extra pair-set-sized exchange, no lineitem-sized shuffles.
             "supplier_clustering",
@@ -401,15 +400,13 @@ def _executed_plan_stats(df) -> dict:
     ],
 )
 def test_graph_family_plan_shape_pinned(spark, name, expected):
-    """Pin the graph family's executed-plan shape (VERDICT r7 item 4): the
-    r6→r7 sf≈1 wall drift in this family was diagnosed as timing noise —
-    re-audited shapes were identical to PERF.md's recorded rows — so any
-    FUTURE shape change (a lost broadcast, an extra shuffle) must fail here
-    instead of surfacing as an unexplained bench delta. The
+    """Pin the graph family's executed-plan shape, so any shape change (a
+    lost broadcast, an extra shuffle) must fail here instead of surfacing
+    as an unexplained bench delta. The
     BroadcastNestedLoopJoins are the documented deliberate 1-row/tiny-side
     broadcasts (damping scalars, probe sets), not quadratic joins.
 
-    Pinned as CEILINGS, not exact equality (ADVICE r8): a regression —
+    Pinned as CEILINGS, not exact equality: a regression —
     more exchanges, a broadcast degrading to a sort-merge join, a new
     cartesian product — still fails, but a Spark/AQE upgrade that plans
     the same query BETTER (fewer exchanges, a join folded away) passes
@@ -432,9 +429,9 @@ def test_graph_family_plan_shape_pinned(spark, name, expected):
 
 
 def test_suffix_round_plan_shape_pinned(spark):
-    """Pin the prefix-doubling round's plan shape (VERDICT r8 item 4): the
-    round-8 shuffle-hygiene rewrite — extended-group size via a window
-    partitioned by (__key, __key2) instead of a groupBy+join — was worth
+    """Pin the prefix-doubling round's plan shape: the shuffle-hygiene
+    form — extended-group size via a window partitioned by (__key, __key2)
+    instead of a groupBy+join — was worth
     ~6 s at sf≈1 precisely because hash-partitioning on __key alone
     satisfies BOTH windows, so Catalyst plans ONE exchange per doubling
     round for the whole live set. Assert exactly that, on one round built
@@ -442,7 +439,7 @@ def test_suffix_round_plan_shape_pinned(spark):
     no hashpartitioning(__key2) (a second window exchange), two Window
     operators, zero HashAggregates (the groupBy+join resurrection this pin
     exists to catch), no cartesian/sort-merge fallback, and a bounded
-    total exchange count (ceilings per ADVICE r8)."""
+    total exchange count (as ceilings)."""
     import re
 
     from platform_etl_drug_disease_spark.operators.dedup import (
@@ -503,11 +500,11 @@ def test_suffix_round_plan_shape_pinned(spark):
 
 
 def test_containment_topk_pipeline_shape_pinned(spark):
-    """Pin the exact containment top-k pipeline's plan shape (round 9): the
+    """Pin the exact containment top-k pipeline's plan shape: the
     `_containment_topk_artifact` memo hides this pipeline behind an eager
     localCheckpoint, so `dedup_containment_topk`'s own plan shows only the
     post-artifact rank window — this test keeps the pipeline itself
-    asserted (as a ceiling per ADVICE r8): hash joins only (the
+    asserted (as a ceiling): hash joins only (the
     prefix/verify joins broadcast at this scale; a cartesian or nested-loop
     would mean the df-capped prefix join degenerated), bounded exchanges."""
     from platform_etl_drug_disease_spark.operators.dedup import (
@@ -534,7 +531,7 @@ def test_containment_topk_pipeline_shape_pinned(spark):
 
 
 def test_top_spans_md5_group_key_pinned(spark, tmp_path):
-    """Pin top_repeated_spans' shuffle hygiene (VERDICT r8 item 4): the
+    """Pin top_repeated_spans' shuffle hygiene: the
     span-artifact groupBy must key on the 32-char md5 digest — never the
     span text itself, which at 100 TB can be megabytes per row — and the
     global top-20 cut must never plan a corpus-wide single-partition /

@@ -1,6 +1,6 @@
 """Two-phase ordered-scan primitives (operators/scans.py) — equivalence
 with the naive single-window forms they replace, plus the plan_lint rule
-that flags the naive forms (VERDICT r2 items 3/4).
+that flags the naive forms.
 """
 
 from __future__ import annotations
@@ -137,7 +137,7 @@ def test_lint_clears_high_card_partition(spark):
     ],
 )
 def test_rewritten_plans_pass_lint(spark, name):
-    """The four VERDICT-r2 serialization points now plan without any
+    """The four serialization points plan without any
     low-cardinality ordered window over unaggregated input."""
     from platform_etl_drug_disease_spark.plans import merged_catalog
 
@@ -147,8 +147,8 @@ def test_rewritten_plans_pass_lint(spark, name):
 
 
 def test_lint_not_fooled_by_broadcast_aggregated_dimension(spark):
-    """Round-3 fix: an aggregate ANYWHERE in the window's subtree used to
-    clear the rule — but a raw fact table joined to a broadcast aggregated
+    """An aggregate ANYWHERE in the window's subtree must not clear the
+    rule: a raw fact table joined to a broadcast aggregated
     dimension still funnels the whole fact table through the
     low-cardinality sort. The rule must track the aggregate along the data
     path, not merely find one in the tree."""

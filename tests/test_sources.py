@@ -127,8 +127,8 @@ def test_bucketed_join_has_no_shuffle(spark):
 
 
 def test_bucketed_table_append_preserves_existing_rows(spark):
-    """ADVICE r3: append mode must NOT drop the table or delete its location
-    (previously both batches' data was silently lost); overwrite must still
+    """Append mode must NOT drop the table or delete its location (that
+    silently loses both batches' data); overwrite must still
     replace cleanly even with an orphaned location left by a prior session."""
     batch1 = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string")
     batch2 = spark.createDataFrame([(3, "c")], "k bigint, v string")
@@ -174,8 +174,8 @@ def test_write_json_target_partitions(spark, tmp_path):
 
 def test_load_table_events_ts_both_spellings(spark, tmp_path):
     """events.ts may arrive as TIMESTAMP(NANOS)-as-INT64 (the fixture) or as
-    a real micros timestamp (any DuckDB/Spark re-write of the fixture, e.g.
-    tools/make_scaled_sf.py). load_table must normalize both to TIMESTAMP
+    a real micros timestamp (any DuckDB/Spark re-write of the fixture).
+    load_table must normalize both to TIMESTAMP
     with identical values."""
     import duckdb
 

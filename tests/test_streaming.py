@@ -89,7 +89,7 @@ def test_stateful_running_totals(spark, events_dir):
 
 
 def test_write_batch_idempotent_crash_window_replay(spark, tmp_path):
-    """VERDICT r2 item 7: simulate the at-least-once crash window — the
+    """Simulate the at-least-once crash window — the
     engine wrote batch N but died BEFORE committing the checkpoint, so on
     restart foreachBatch replays the same batch_id with a fresh DataFrame
     instance (possibly different partitioning/row order, same logical rows).
@@ -124,10 +124,10 @@ def test_write_batch_idempotent_crash_window_replay(spark, tmp_path):
 
 def test_event_stream_normalizes_both_ts_spellings(spark, tmp_path):
     """The catalog's file-stream source must produce identical TIMESTAMP
-    values whether events.ts is stored as TIMESTAMP(NANOS) (round-1 fixtures)
-    or TIMESTAMP_MICROS (regenerated fixtures / DuckDB re-writes). The round-2
-    fixture switch silently broke the hardcoded nanos schema — hourly windows
-    collapsed 1000× (10 rows instead of 3385) — so both spellings are pinned
+    values whether events.ts is stored as TIMESTAMP(NANOS) or
+    TIMESTAMP_MICROS (regenerated fixtures / DuckDB re-writes). A hardcoded
+    nanos schema collapses hourly windows 1000× (10 rows instead of 3385)
+    on the micros spelling, so both spellings are pinned
     here via the footer sniff (schemas.events_ts_unit)."""
     import pandas as pd
     import pyarrow as pa
@@ -324,7 +324,7 @@ def test_stream_static_dimension_join(spark, events_dir):
 
 
 def test_streaming_containment_incremental_matches_batch(spark):
-    """The containment family's streaming serve twin (VERDICT r7 item 5):
+    """The containment family's streaming serve twin:
     the foreachBatch matcher over the %10 feed must produce EXACTLY the
     batch ``containment_incremental`` result — same (new_id, corpus_id)
     pairs, same exact-verified containment values. streaming == batch (the
@@ -351,7 +351,7 @@ def test_streaming_containment_incremental_matches_batch(spark):
 
 @pytest.mark.parametrize("family", ["minhash", "containment"])
 def test_multibatch_per_batch_parity(spark, family):
-    """VERDICT r8 item 3: the streaming serve twins measured across REAL
+    """The streaming serve twins measured across REAL
     multiple micro-batches, not argued from a single AvailableNow drain.
     The staged 3-file feed + maxFilesPerTrigger=1 must fire >= 3
     foreachBatch invocations, every feed doc must land in exactly one
