@@ -2,8 +2,7 @@
 
 from platform_etl_drug_disease_spark.functions.harmonic import (
     harmonic_sum,
-    harmonic_sum_scaled,
     top_k_sorted,
 )
 
-__all__ = ["harmonic_sum", "harmonic_sum_scaled", "top_k_sorted"]
+__all__ = ["harmonic_sum", "top_k_sorted"]

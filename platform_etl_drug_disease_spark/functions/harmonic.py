@@ -3,8 +3,8 @@
 The reference's core scoring primitive (sim.sc:295-337): per group, take the
 score list, sort descending, keep the top k=100, then fold
 ``sum_i(score_i / i^p)`` with p=2 — a rank-weighted harmonic sum whose upper
-bound for unit scores is ``zeta(2) = pi^2/6``. One variant (sim.sc:327-337)
-max-normalizes: divides by the harmonic sum of ``k`` ones scaled by a weight.
+bound for unit scores is ``zeta(2) = pi^2/6``. The reference's max-normalized
+variant (sim.sc:327-337) is not ported: no output of the DAG reads it.
 
 Everything here is built from Spark's higher-order array functions
 (``aggregate``/``zip_with``/``sequence``), exactly the idiom the reference
@@ -50,19 +50,3 @@ def harmonic_sum(scores: Column | str, exponent: float = 2.0) -> Column:
     fold = F.aggregate(ranked, F.lit(0.0), lambda acc, e: acc + e)
     # empty input: zip_with pads with null → null fold; define it as 0.0
     return F.when(F.size(xs) == 0, F.lit(0.0)).otherwise(fold)
-
-
-def harmonic_sum_scaled(
-    scores: Column | str,
-    k: int = 100,
-    exponent: float = 2.0,
-    scale: float = 1.0,
-) -> Column:
-    """Max-normalized harmonic sum (sim.sc:327-337): the harmonic fold of the
-    top-``k`` scores divided by the harmonic fold of ``k`` ones times
-    ``scale`` — maps scores into [0, 1/scale-ish] for cross-source blending.
-    """
-    xs = F.col(scores) if isinstance(scores, str) else scores
-    top = top_k_sorted(xs, k=k)
-    max_ones = F.array_repeat(F.lit(1.0) * F.lit(scale), k)
-    return harmonic_sum(top, exponent) / harmonic_sum(max_ones, exponent)

@@ -1527,19 +1527,20 @@ def longest_repeat_lengths(
     ``frames``: optional caller-materialized ``(base, anchor_counts)`` pair
     from :func:`suffix_base_plan` / :func:`suffix_anchor_counts` — the
     tokenize pass and the anchor-count shuffle are identical across every
-    suffix operator over one corpus snapshot, so a caller holding several
-    of them materializes the pair once and passes it here. Row-identical
-    to the self-built path (pytest-pinned); the caller owns persistence."""
+    suffix operator over one corpus snapshot, so a caller running several
+    of them (``plans/dedup_text.capped_repeat_estimate`` runs this and
+    :func:`sampled_repeat_lengths`) materializes the pair once and passes
+    it to each. Row-identical to the self-built path (pytest-pinned); the
+    caller owns persistence."""
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     if frames is None:
         base = suffix_base_plan(df, id_col, text_col, w).persist()
         cnt = suffix_anchor_counts(base, id_col, w)
     else:
-        # caller-materialized (base, anchor counts) — the shared-artifact
-        # hook: the tokenize pass and the full-corpus anchor
-        # shuffle run ONCE per corpus snapshot and every suffix operator
-        # rides them. The caller owns the frames' lifecycle.
+        # caller-materialized (base, anchor counts): the tokenize pass and
+        # the full-corpus anchor shuffle run once for every suffix operator
+        # the caller runs. The caller owns the frames' lifecycle.
         base, cnt = frames
     occ = suffix_occurrences(base, id_col, w)
     # 1-row disclosure frame, materialized NOW (localCheckpoint) so base can
@@ -1621,13 +1622,13 @@ def _doubling_loop(
     for part in resolved[1:]:
         out = out.unionByName(part)
     # COMPACT the result into one 3-column checkpoint before returning:
-    # the union above references every round's
-    # 6-column frame — including alive-intermediate rows later rounds
-    # superseded — and a caller that holds the result (the session memo in
-    # plans/dedup_text does, for the whole session) would pin all of those
-    # blocks. One cheap pass over the resolved rows re-materializes just
-    # (id, pos, repeat_len); dropping the per-round references afterwards
-    # lets the ContextCleaner reclaim the loop's blocks.
+    # the union above references every round's 6-column frame — including
+    # alive-intermediate rows later rounds superseded — and a caller that
+    # holds the result (a query reading the per-suffix frame several
+    # times) would pin all of those blocks. One cheap pass over the
+    # resolved rows re-materializes just (id, pos, repeat_len); dropping
+    # the per-round references afterwards lets the ContextCleaner reclaim
+    # the loop's blocks.
     return out.localCheckpoint()
 
 

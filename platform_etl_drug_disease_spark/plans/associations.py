@@ -14,7 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from platform_etl_drug_disease_spark.functions.harmonic import harmonic_sum
+from platform_etl_drug_disease_spark.functions.harmonic import (
+    harmonic_sum,
+    top_k_sorted,
+)
 
 EVIDENCE_DATASOURCES = ["europepmc", "genetics"]
 
@@ -48,12 +51,8 @@ def make_associations(evidences: DataFrame, group_cols: list[Column]) -> DataFra
     """
     grouped = evidences.groupBy(*group_cols).agg(
         F.count("evs_id").alias("evidence_count"),
-        F.slice(
-            F.sort_array(F.collect_list("genetics"), asc=False), 1, 100
-        ).alias("genetics_score_list"),
-        F.slice(
-            F.sort_array(F.collect_list("europepmc"), asc=False), 1, 100
-        ).alias("literature_score_list"),
+        top_k_sorted(F.collect_list("genetics")).alias("genetics_score_list"),
+        top_k_sorted(F.collect_list("europepmc")).alias("literature_score_list"),
     )
     blended = F.sort_array(
         F.array(

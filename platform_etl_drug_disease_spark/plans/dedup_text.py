@@ -33,6 +33,8 @@ from platform_etl_drug_disease_spark.operators.dedup import (
     longest_repeat_lengths,
     lr_tokens,
     sampled_repeat_lengths,
+    suffix_anchor_counts,
+    suffix_base_plan,
     quoted_spans,
     incremental_minhash_matches,
     minhash_lsh_dedup,
@@ -344,27 +346,16 @@ FROM (
 )
 
 
-# Session memo for the lang-blocked exact containment top-3 relation:
-# `dedup_containment_topk` and `quoted_span_stats` call
-# operators/dedup.containment_topk with IDENTICAL knobs (trigrams, τ=0.8,
-# k=3, lang block, df≤256) — ~30 s of prefix/verify pipeline at sf≈1,
-# otherwise run twice. The eager checkpoint lets reuse survive a clearCache
-# between runs. tests/test_extensions.py::test_containment_topk_artifact_reuse
-# pins hook == standalone.
-_CONTAINMENT_TOPK_CACHE: dict[tuple, DataFrame] = {}
-
-
-@session_memo(_CONTAINMENT_TOPK_CACHE, "documents")
-def _containment_topk_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (id_a, id_b, containment) top-3-containers relation over the
-    snapshot's ``documents`` — see the cache comment above. Value-identical
-    to a fresh ``containment_topk`` run; consumers pay only checkpoint-block
-    reads after the first build."""
+def _containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b, containment) top-3-containers relation over the
+    snapshot's ``documents`` at the knobs ``dedup_containment_topk`` and
+    ``quoted_span_stats`` share (trigrams, τ=0.8, k=3, lang block,
+    df≤256)."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang"])
     return containment_topk(
         docs, "doc_id", "text", shingle_n=3, threshold=0.8, k=3,
         block_col="lang", max_shingle_df=256,
-    ).localCheckpoint()
+    )
 
 
 def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,11 +373,8 @@ def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over all shingles, bounded k·n output. Cost profile at sf≈1 is
     in-family with `dedup_ngram_jaccard_topk` (the replica-dense corpus
     makes intra-cluster candidates genuine verify mass); sf0.1 → sf≈1 on
-    non-adversarial axes is 1.2×. The relation comes from the
-    session-memoized ``_containment_topk_artifact`` shared with
-    ``quoted_span_stats`` — this query is the memo's owner in
-    plans/memo_owners.py."""
-    top = _containment_topk_artifact(spark, sf_dir)
+    non-adversarial axes is 1.2×."""
+    top = _containment_topk(spark, sf_dir)
     w = Window.partitionBy("id_a").orderBy(F.col("containment").desc(), "id_b")
     return top.select(
         F.col("id_a").alias("doc_id"),
@@ -445,54 +433,24 @@ FROM (
 """
 
 
-# Session memos for the repo's most-reused dedup relations: FIVE catalog
-# queries run the identical MinHash(16)+LSH(4×4)+verify(J≥0.5) pipeline —
-# `dedup_minhash_lsh`, `dedup_cluster_components`, its star twin,
-# `leakage_safe_split`, `dedup_quality_keeper` — and three of those also
-# the identical hash-min connected components over its pairs. Both
-# relations are dup-mass-bounded (pairs ≤ verified near-dups; components ≤
-# clustered docs), so an eager checkpoint is cheap to hold. Memo owners
-# (plans/memo_owners.py): `dedup_minhash_lsh` owns the pair pipeline,
-# `dedup_cluster_components` owns the hash-min CC; the star twin
-# recomputes its OWN components (the two CC algorithms cross-validating is
-# that query's point) over the shared pairs.
-# tests/test_extensions.py::test_lsh_artifacts_reuse pins hook == standalone
-# for both.
-_LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_LSH_COMPONENTS_CACHE: dict[tuple, DataFrame] = {}
-
-
-@session_memo(_LSH_PAIRS_CACHE, "documents")
-def _lsh_pairs_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized verified near-dup pair set (id_a, id_b, jaccard ≥ 0.5) over
-    the snapshot's ``documents`` — see the cache comment above. The eager
-    checkpoint also serves what the call sites' per-query
-    ``localCheckpoint`` did before: the symmetrizing union inside
-    ``connected_components`` consumes the pairs twice."""
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(16)+LSH(4 bands × 4 rows) candidates verified with exact
+    Jaccard ≥ 0.5 (per-candidate array intersection — O(candidates) verify
+    cost, the property that makes LSH the scale path). The near-dup pair
+    set of the cluster/split/keeper family."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     return minhash_lsh_dedup(
         docs, "doc_id", "text", shingle_n=3, n_hashes=16, n_bands=4,
         threshold=0.5,
-    ).localCheckpoint()
-
-
-@session_memo(_LSH_COMPONENTS_CACHE, "documents")
-def _lsh_components_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized hash-min connected components (node, component) over the
-    pairs artifact. No extra checkpoint wrap: ``connected_components``
-    already returns a projection of its final per-round checkpoint."""
-    return connected_components(
-        _lsh_pairs_artifact(spark, sf_dir), "id_a", "id_b"
     )
 
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(16)+LSH(4 bands × 4 rows) candidates verified with exact
-    Jaccard ≥ 0.5 (per-candidate array intersection — O(candidates) verify
-    cost, the property that makes LSH the scale path). Serves (and is the
-    memo owner of) the session-memoized `_lsh_pairs_artifact` shared with
-    the cluster/split/keeper family."""
-    return _lsh_pairs_artifact(spark, sf_dir)
+def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hash-min connected components (node, component) over the
+    ``dedup_minhash_lsh`` pair set."""
+    return connected_components(
+        dedup_minhash_lsh(spark, sf_dir), "id_a", "id_b"
+    )
 
 
 # Mirror of operators/dedup.py:banded_signatures' hash family: one md5 per
@@ -769,7 +727,10 @@ FROM (
 #: pair set at the SHIPPED config (τ=0.8, 16 hashes, df≤256, slot≤32) are
 #: derived identically by `dedup_containment_minhash_topk` (the serve path)
 #: and `containment_recall_audit` (which audits exactly that
-#: configuration); memo owner: `dedup_containment_minhash_topk`.
+#: configuration); memo owner: `dedup_containment_minhash_topk`. This
+#: pair is the package's only session memo: the benchmark's query_mix
+#: repeats that request, and its repeats read the memo instead of
+#: rebuilding the shingle table and the candidate join.
 _CTM_SHINGLES_CACHE: dict[tuple, DataFrame] = {}
 _CTM_CANDS_CACHE: dict[tuple, DataFrame] = {}
 
@@ -935,16 +896,11 @@ def quoted_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive candidate discovery is the already-priced containment
     stage, lang-BLOCKED like `dedup_containment_topk` (verbatim quotation
     is same-language by construction, and blocking keeps the discovery in
-    that query's measured cost class instead of the ~2× unblocked one).
-    The pair set comes from the session-memoized
-    ``_containment_topk_artifact`` shared with ``dedup_containment_topk``:
-    after that query has run, this one costs only the
-    positional-diagonal spans over the bounded k·n pairs — not a second
-    ~30 s prefix/verify pipeline. The artifact is an eager checkpoint, so
-    its dual consumption here (pair set + containment join-back) reads
-    materialized blocks — the old per-call ``persist`` is subsumed."""
+    that query's measured cost class instead of the ~2× unblocked one)."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang"])
-    top = _containment_topk_artifact(spark, sf_dir)
+    # checkpointed: read twice (the span pair set and the containment
+    # join-back), and the prefix/verify pipeline should run once
+    top = _containment_topk(spark, sf_dir).localCheckpoint()
     spans = quoted_spans(docs, top, "doc_id", "text", n=3)
     return top.join(spans, ["id_a", "id_b"]).select(
         F.col("id_a").alias("doc_id"),
@@ -1345,10 +1301,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     is labeled by its min doc_id; members sorted for stable hashing. The
     oracle computes the same components with a recursive transitive-closure
     CTE — feasible only because the pair graph is small; the Spark side is
-    the 100-TB path (per-round equi-join + min-agg, lineage checkpointed).
-    Pairs and components come from the session-memoized LSH artifacts;
-    this query is the memo owner of the hash-min CC artifact."""
-    comp = _lsh_components_artifact(spark, sf_dir)
+    the 100-TB path (per-round equi-join + min-agg, lineage checkpointed)."""
+    comp = _lsh_components(spark, sf_dir)
     return comp.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         arr_join(F.sort_array(F.collect_list("node")), "string").alias("members"),
@@ -1813,11 +1767,10 @@ def dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame
     """Same clusters as ``dedup_cluster_components`` computed by the
     alternating large-star/small-star construction (O(log n) rounds on any
     graph shape, incl. long transitive near-dup chains where hash-min needs
-    diameter rounds) — same output, same oracle. Consumes the shared pairs
-    artifact but runs its OWN star construction: the two CC algorithms
-    agreeing on the same pair set is this query's cross-validation value,
-    so the components memo is deliberately not shared here."""
-    pairs = _lsh_pairs_artifact(spark, sf_dir)
+    diameter rounds) — same output, same oracle. The two CC algorithms
+    agreeing on the same ``dedup_minhash_lsh`` pair set is this query's
+    cross-validation value."""
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     comp = connected_components_star(pairs, "id_a", "id_b")
     return comp.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1877,11 +1830,9 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     global count of straddling clusters — provably 0, and the oracle checks
     that 0, not just the counts. Composes the two scale paths already proven
     separately (banded LSH candidates, per-round equi-join components); the
-    extra cost over a naive doc-id split is one small join on doc_id —
-    and with the session-memoized LSH artifacts the pairs/CC
-    machinery itself is warm after the cluster queries have run."""
+    extra cost over a naive doc-id split is one small join on doc_id."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    comp = _lsh_components_artifact(spark, sf_dir).withColumnRenamed(
+    comp = _lsh_components(spark, sf_dir).withColumnRenamed(
         "node", "doc_id"
     )
     membership = (
@@ -2133,81 +2084,28 @@ ORACLES["substring_dedup_stats"] = _SUBSTR_SQL
 _LR_W = 8
 _LR_CAP = 512
 
-# Session memo for the suffix-ranking corpus artifact:
-# `longest_repeat_census`, `top_repeated_spans`, and `repeat_mass_by_source`
-# all consume the SAME per-suffix exact repeat lengths, and the
-# prefix-doubling loop that computes them is the family's single heaviest
-# stage (~25 s at sf≈1). A real curation run asks all three questions of
-# one corpus snapshot, so the loop runs once per snapshot and later queries
-# reuse its eagerly-checkpointed per-round frames — the
-# `containment_corpus_index` build-once idiom, memoized here because the
-# catalog entry point is (spark, sf_dir) rather than a caller-held frame.
-# tests/test_extensions.py::test_suffix_artifact_reuse pins hook == standalone.
-_SUFFIX_ARTIFACT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-#: shared ANCHOR-UNIVERSE artifact: the
-#: tokenized/repartitioned base table and the full-corpus anchor-df count
-#: are computed IDENTICALLY by the exact census build and by both sampled
-#: estimators (`capped_repeat_estimate`, `capped_mass_profile`) — the
-#: tokenize pass + one full-corpus shuffle, otherwise repeated three times
-#: per session; memo owner: `longest_repeat_census`.
-_SUFFIX_BASE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-@session_memo(_SUFFIX_ARTIFACT_CACHE, "documents")
-def _suffix_ranking(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Memoized ``(per_suffix, capped)`` from
-    operators/dedup.longest_repeat_lengths over the snapshot's ``documents``
-    table — see the cache comment above. Reuse is value-identical to a fresh
-    standalone run: the returned frames are filters over eager
-    ``localCheckpoint`` blocks, so a second consumer re-reads cached blocks
-    instead of re-running the doubling loop."""
+def _suffix_ranking(
+    spark: SparkSession,
+    sf_dir: str,
+    frames: tuple[DataFrame, DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(per_suffix, capped)`` from operators/dedup.longest_repeat_lengths
+    at the census knobs (``_LR_W``, ``_LR_CAP``) over the snapshot's
+    ``documents``. Both frames are eager ``localCheckpoint``s, so a query
+    may read them more than once."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     return longest_repeat_lengths(
-        docs,
-        "doc_id",
-        "text",
-        w=_LR_W,
-        max_anchor_df=_LR_CAP,
-        frames=_suffix_base(spark, sf_dir),
+        docs, "doc_id", "text", w=_LR_W, max_anchor_df=_LR_CAP, frames=frames
     )
 
 
-@session_memo(_SUFFIX_BASE_CACHE, "documents")
-def _suffix_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Memoized ``(base, anchor_counts)`` anchor-universe pair over the
-    snapshot's ``documents`` table — see the ``_SUFFIX_BASE_CACHE`` comment.
-    The anchor counts are derived from the CHECKPOINTED base so the count
-    shuffle scans materialized rows, and both frames are eager checkpoints:
-    consumers (the exact census build and both sampled estimators) read
-    cached blocks instead of re-tokenizing the corpus."""
-    from platform_etl_drug_disease_spark.operators.dedup import (
-        suffix_anchor_counts,
-        suffix_base_plan,
-    )
-
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    base = suffix_base_plan(docs, "doc_id", "text", _LR_W).localCheckpoint()
-    cnt = suffix_anchor_counts(base, "doc_id", _LR_W).localCheckpoint()
-    return base, cnt
-
-
-_LM_STARTS_CACHE: dict[tuple, DataFrame] = {}
-_K1_REMOVALS_CACHE: dict[tuple, DataFrame] = {}
-
-
-@session_memo(_LM_STARTS_CACHE, "documents")
-def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized LEFT-MAXIMAL repeat-start set — the family artifact's
-    fifth consumer surface. One lag-window pass over
-    the per-suffix artifact marks the suffixes that START a maximal span
-    (``r(pos−1) < r(pos)+1`` or no adjacent predecessor — the
-    ``top_repeated_spans`` rule), UNFILTERED by length so every consumer
-    (top spans: all lengths; the strip/retention family: ≥ ``_STRIP_LEN``)
-    shares ONE checkpointed pass instead of re-running the window.
-    Dup-mass-bounded: at most one row per qualifying suffix, in practice
-    one per maximal span occurrence."""
-    per_suffix, _capped = _suffix_ranking(spark, sf_dir)
+def _lm_starts(per_suffix: DataFrame) -> DataFrame:
+    """LEFT-MAXIMAL repeat starts (doc_id, pos, repeat_len): one lag-window
+    pass over the per-suffix frame keeps the suffixes that START a maximal
+    span (``r(pos−1) < r(pos)+1`` or no adjacent predecessor — the
+    ``top_repeated_spans`` rule), unfiltered by length. Dup-mass-bounded:
+    at most one row per qualifying suffix, in practice one per maximal
+    span occurrence."""
     w = Window.partitionBy("doc_id").orderBy("pos")
     return (
         per_suffix.withColumn("__ppos", F.lag("pos").over(w))
@@ -2218,25 +2116,19 @@ def _lm_starts(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("__pr") < F.col("repeat_len") + 1)
         )
         .select("doc_id", "pos", "repeat_len")
-        .localCheckpoint()
     )
 
 
-@session_memo(_K1_REMOVALS_CACHE, "documents")
-def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized keep-one REMOVAL occurrence set (doc_id, pos, repeat_len):
+def _keep_one_removals(docs: DataFrame, per_suffix: DataFrame) -> DataFrame:
+    """Keep-one REMOVAL occurrence set (doc_id, pos, repeat_len):
     left-maximal spans of ≥ ``_STRIP_LEN`` tokens, identified by the md5
     of their text (sliced from the family's sanitized token array — the
     digest shuffles, the text never does), with the lexicographically-first
     (doc_id, pos) occurrence per identity RETAINED and every other
     occurrence listed for removal. Shared by the accounting twin
     (``repeat_keep_one_retention``) and the release DAG's ``keep_one``
-    strip mode — the accounting and the action consume
-    the SAME checkpointed rows, so they can never diverge."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    starts = _lm_starts(spark, sf_dir).where(
-        F.col("repeat_len") >= _STRIP_LEN
-    )
+    strip mode, so the accounting and the action can never diverge."""
+    starts = _lm_starts(per_suffix).where(F.col("repeat_len") >= _STRIP_LEN)
     toks = docs.select("doc_id", lr_tokens("text").alias("__t"))
     span = F.array_join(
         F.slice("__t", F.col("pos") + 1, F.col("repeat_len").cast("int")), " "
@@ -2249,7 +2141,6 @@ def _keep_one_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
         occs.withColumn("__rk", F.row_number().over(kw))
         .where(F.col("__rk") > 1)
         .select("doc_id", "pos", "repeat_len")
-        .localCheckpoint()
     )
 
 
@@ -2307,11 +2198,7 @@ def longest_repeat_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps). A constant ``repeat_len = 0`` sentinel row is always present so
     the disclosure survives even an ALL-capped corpus, where the census
     proper is empty and a bare cross join would return zero rows —
-    silently eating the one signal that says why. The per-suffix frame
-    comes from the session-memoized ``_suffix_ranking`` artifact shared
-    with ``top_repeated_spans`` and ``repeat_mass_by_source`` — the
-    doubling loop runs once per corpus snapshot, whichever of the three
-    runs first."""
+    silently eating the one signal that says why."""
     per_suffix, capped = _suffix_ranking(spark, sf_dir)
     census = per_suffix.groupBy("repeat_len").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_suffixes"),
@@ -2462,22 +2349,10 @@ def top_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     array only for the (duplicate-mass-bounded) start set; the global
     top-20 cut is (span_tokens DESC, span_md5) — a TakeOrderedAndProject,
     no corpus-wide single-partition sort, and deterministic because md5
-    is unique per distinct span text. The per-suffix frame comes from the
-    session-memoized ``_suffix_ranking`` artifact shared with the census:
-    after the census has run, this query costs only the left-maximal start
-    scan + span fetch, not a second ~25 s doubling loop."""
+    is unique per distinct span text."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     per_suffix, capped = _suffix_ranking(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    starts = (
-        per_suffix.withColumn("__ppos", F.lag("pos").over(w))
-        .withColumn("__pr", F.lag("repeat_len").over(w))
-        .where(
-            F.col("__ppos").isNull()
-            | (F.col("__ppos") != F.col("pos") - 1)
-            | (F.col("__pr") < F.col("repeat_len") + 1)
-        )
-    )
+    starts = _lm_starts(per_suffix)
     # lr_tokens, not tx.tokens: per-suffix positions live in the family's
     # sanitized token space, so the span slice must use the same array
     toks = docs.select("doc_id", lr_tokens("text").alias("__t"))
@@ -2583,9 +2458,6 @@ def repeat_mass_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs carrying at least one ≥ ``_LR_W``-token exact repeat, qualifying
     suffix count, Σ repeat_len (the duplicated-token-mass proxy the suffix
     family's scaling contract is stated in), and the longest repeat seen.
-    Third consumer of the session-memoized ``_suffix_ranking`` artifact —
-    after the census has run this costs one per-doc aggregate + one
-    doc-keyed join, not a doubling loop.
 
     Scale shape: the per-suffix frame is pre-aggregated to AT MOST one row
     per document BEFORE meeting the corpus-sized ``documents`` side, so the
@@ -2693,10 +2565,10 @@ def repeat_keep_one_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     other occurrence's token interval is removed. Per source: docs, docs
     losing tokens, total/removed/retained token mass — i.e. "what would
     the corpus keep if dedup kept one copy of each long repeat instead of
-    stripping them all". Consumes the session-memoized ``_lm_starts`` and
-    ``_keep_one_removals`` artifacts — the SAME
-    checkpointed removal rows the release DAG's ``keep_one`` strip mode
-    applies, so this accounting and that action cannot diverge.
+    stripping them all". The removal rows come from
+    ``_keep_one_removals``, the derivation the release DAG's ``keep_one``
+    strip mode applies, so this accounting and that action cannot
+    diverge.
 
     Semantics: spans are LEFT-MAXIMAL starts (``top_repeated_spans``' rule)
     with repeat_len ≥ the strip threshold; span identity is the md5 of the
@@ -2714,8 +2586,8 @@ def repeat_keep_one_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials. Sentinel + n_capped_* disclosure as everywhere in
     the family."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "source", "text"])
-    _per_suffix, capped = _suffix_ranking(spark, sf_dir)
-    cov = _interval_removed(_keep_one_removals(spark, sf_dir))
+    per_suffix, capped = _suffix_ranking(spark, sf_dir)
+    cov = _interval_removed(_keep_one_removals(docs, per_suffix))
     toks = docs.select(
         "doc_id", "source", tx.tokens("text").alias("__t")
     )
@@ -2758,7 +2630,7 @@ def repeat_keep_one_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # keep-one removal set (shared by the accounting twin and the keep_one
-# release oracle — the DuckDB mirror of plans/_keep_one_removals)
+# release oracle — the DuckDB mirror of _keep_one_removals)
 _K1_REM_CTE = f"""
 , k1starts AS (
     SELECT doc_id, pos, repeat_len FROM (
@@ -2852,8 +2724,8 @@ def capped_repeat_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``containment_recall_audit`` already uses for its truth stage.
 
     This catalog row is the estimator's AUDIT: it runs the estimator on the
-    df ∈ (2, cap] band — where the memoized exact ``_suffix_ranking``
-    artifact still carries the truth — and reports, per repeat_len, the
+    df ∈ (2, cap] band — where the exact ``_suffix_ranking`` still
+    carries the truth — and reports, per repeat_len, the
     sampled count, the HT-extrapolated estimate, and the exact count
     side-by-side. Estimated lengths are within-sample values (lower bounds
     of the corpus-wide truth: a 2-suffix sample may miss the true max-LCP
@@ -2864,11 +2736,16 @@ def capped_repeat_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: estimator cost is bounded by n_band_anchors ×
     sample_per_anchor regardless of anchor heat (the reason the operator
-    exists); the truth side reuses the shared suffix artifact (no second
-    doubling loop); the est/truth join is on the tiny repeat_len key. A
-    constant repeat_len=0 sentinel keeps the disclosure visible on an
-    empty band."""
+    exists); the estimator and the exact truth share one tokenized base and
+    anchor-count table (the operators' ``frames`` hook); the est/truth
+    join is on the tiny repeat_len key. A constant repeat_len=0 sentinel
+    keeps the disclosure visible on an empty band."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
+    # both suffix operators below read the same tokenized base and anchor
+    # counts, several times each: checkpoint the pair once for the query
+    base = suffix_base_plan(docs, "doc_id", "text", _LR_W).localCheckpoint()
+    cnt = suffix_anchor_counts(base, "doc_id", _LR_W).localCheckpoint()
+    frames = (base, cnt)
     sampled, selected, disc = sampled_repeat_lengths(
         docs,
         "doc_id",
@@ -2878,7 +2755,7 @@ def capped_repeat_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_anchor_df=_LR_CAP,
         sample_per_anchor=_CRE_S,
         return_selected=True,  # the audit joins it against exact truth
-        frames=_suffix_base(spark, sf_dir),
+        frames=frames,
     )
     est = sampled.groupBy("repeat_len").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sampled_suffixes"),
@@ -2886,7 +2763,7 @@ def capped_repeat_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("est_n_suffixes"),
     )
-    per_suffix, _capped = _suffix_ranking(spark, sf_dir)
+    per_suffix, _capped = _suffix_ranking(spark, sf_dir, frames)
     truth = (
         per_suffix.join(selected, ["doc_id", "pos"])
         .groupBy("repeat_len")
@@ -3041,7 +2918,6 @@ def capped_mass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_anchor_df=_LR_CAP,
         max_anchor_df=None,
         sample_per_anchor=_CMP_S,
-        frames=_suffix_base(spark, sf_dir),
     )
     prof = sampled.groupBy("repeat_len").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sampled_suffixes"),
@@ -3985,9 +3861,10 @@ def corpus_release_pipeline(
     Default mode strips ALL occurrences of a long repeat — the remove-all
     variant of Lee et al.'s ExactSubstr; ``keep_one=True`` instead RETAINS
     the lexicographically-first (doc_id, pos) occurrence per span identity
-    and strips only the rest, consuming the exact checkpointed removal set
-    the ``repeat_keep_one_retention`` accounting twin reports (accounting
-    and action share the rows, so they cannot diverge). A husk's own
+    and strips only the rest, applying the removal derivation
+    (``_keep_one_removals``) the ``repeat_keep_one_retention`` accounting
+    twin reports (accounting and action share it, so they cannot
+    diverge). A husk's own
     covered mass is accounted as its whole-doc drop, not in
     stripped_tokens. The census cap's excluded boilerplate
     mass (n_capped_*) is disclosed by the census queries, and the
@@ -4008,13 +3885,11 @@ def corpus_release_pipeline(
     content should survive curation.
 
     Scale shape: ONE tokenize pass feeds hash, quality, and token counts
-    (persisted at the fan-out — three consumers); coverage reuses the
-    session-memoized ``_lm_starts`` (and, for keep_one,
-    ``_keep_one_removals``) artifacts derived from the shared
-    ``_suffix_ranking`` doubling loop (the lag-window left-maximality
-    pass runs once per corpus snapshot across the whole
-    family) and joins on doc_id pre-aggregated to one row per dup-carrying
-    doc; dedup is a window, never a self-join; split membership is a pure
+    (persisted at the fan-out — three consumers); coverage takes the
+    left-maximal starts (``_lm_starts``; for keep_one,
+    ``_keep_one_removals``) of the ``_suffix_ranking`` doubling loop and
+    joins on doc_id pre-aggregated to one row per dup-carrying doc; dedup
+    is a window, never a self-join; split membership is a pure
     hash function (no shuffle); the packing window runs per (split, lang)
     partition; the manifest is a |splits|-row rollup."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "lang", "text"])
@@ -4040,13 +3915,18 @@ def corpus_release_pipeline(
     # boilerplate coverage: interval union (shared _interval_removed pass)
     # of the doc's >= _STRIP_LEN left-maximal spans — all occurrences in
     # remove-all mode, only the non-canonical occurrences in keep_one mode.
+    per_suffix, _capped = _suffix_ranking(spark, sf_dir)
     if keep_one:
-        occ = _keep_one_removals(spark, sf_dir)
+        occ = _keep_one_removals(docs, per_suffix)
     else:
-        occ = _lm_starts(spark, sf_dir).where(
-            F.col("repeat_len") >= _STRIP_LEN
-        )
-    cov = _interval_removed(occ).withColumnRenamed("__removed", "__covered")
+        occ = _lm_starts(per_suffix).where(F.col("repeat_len") >= _STRIP_LEN)
+    # checkpointed (one row per dup-carrying doc): the packing pass and the
+    # husk count both read it
+    cov = (
+        _interval_removed(occ)
+        .withColumnRenamed("__removed", "__covered")
+        .localCheckpoint()
+    )
     stripped = (
         split.join(cov, "doc_id", "left")
         .withColumn(
@@ -4197,10 +4077,11 @@ def corpus_release_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode: the lexicographically-first occurrence of
     every ≥ ``_STRIP_LEN``-token repeated span is retained, only the other
     occurrences are stripped — Lee et al. 2022's keep-one-copy ExactSubstr
-    as an EXECUTABLE pipeline variant, consuming the same memoized removal
-    set as the ``repeat_keep_one_retention`` accounting twin (pytest ties
-    the two: the pipeline's per-doc coverage equals the twin's removal
-    accounting on every doc). Unlike remove-all, this mode cannot husk out
+    as an EXECUTABLE pipeline variant, applying the same removal
+    derivation (``_keep_one_removals``) as the
+    ``repeat_keep_one_retention`` accounting twin (pytest ties the two:
+    the pipeline's per-doc coverage equals the twin's removal accounting
+    on every doc). Unlike remove-all, this mode cannot husk out
     content that exists only as duplicates — one copy always survives the
     strip (the dedup-then-strip composition hazard)."""
     return corpus_release_pipeline(spark, sf_dir, keep_one=True)
@@ -4633,10 +4514,9 @@ def dedup_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     components are the proven dedup machinery; quality is column
     arithmetic; the keeper pick is one row_number window partitioned by
     component over the (small) cluster-member table — never over the
-    corpus. Pairs and components come from the session-memoized LSH
-    artifacts."""
+    corpus."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    comp = _lsh_components_artifact(spark, sf_dir)
+    comp = _lsh_components(spark, sf_dir)
     t = F.col("__t")
     q = docs.withColumn("__t", tx.tokens("text")).select(
         F.col("doc_id").alias("node"),

@@ -18,26 +18,9 @@ from pyspark.sql import functions as F
 from platform_etl_drug_disease_spark.operators.arrays import flatten_distinct
 from platform_etl_drug_disease_spark.operators.joins import symmetrize
 from platform_etl_drug_disease_spark.plans._util import arr_join, dround, dsum
-from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
 
 
-#: session memos for the trade graph's edge derivations. Every graph query
-#: starts from the same lineitem⋈orders edge join, and six of them
-#: additionally pay the same (src,dst)-distinct shuffle — at sf0.1 that is
-#: ~1.1 s (join) / ~2.7 s (join+distinct) of identical work repeated per
-#: query. The memo holds materialized rows, not a lineage that would re-run
-#: the join; owner ``trade_pagerank``. A 100-TB graph platform materializes
-#: the edge list once and runs every analysis over it — this memo is that
-#: design.
-_EDGES_CACHE: dict[tuple, DataFrame] = {}
-_SYM_EDGES_CACHE: dict[tuple, DataFrame] = {}
-#: support-thresholded co-supplier pair set (triangles / k-core /
-#: clustering); memo owner: supplier_triangles
-_CO_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
-@session_memo(_SYM_EDGES_CACHE, "lineitem", "orders")
 def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected trade edges (sim.sc:53-54 semantics). Customer nodes keep
     their key; supplier nodes are offset by 10^12 so the id spaces don't
@@ -45,9 +28,8 @@ def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: ``joins.symmetrize`` explodes both directions from ONE pass;
     a union(swap) would scan the upstream join twice (caught by plan_lint),
-    which at 100 TB recomputes the whole fact join.
-    Session-memoized (see _SYM_EDGES_CACHE above)."""
-    return _sym_edges_raw(spark, sf_dir).distinct().localCheckpoint()
+    which at 100 TB recomputes the whole fact join."""
+    return _sym_edges_raw(spark, sf_dir).distinct()
 
 
 # Supplier node ids are offset into their own id space so customer and
@@ -59,7 +41,6 @@ def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 SUPPLIER_OFFSET = 1_000_000_000_000
 
 
-@session_memo(_EDGES_CACHE, "lineitem", "orders")
 def _directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed (customer → supplier) purchase edges, one row per lineitem
     (NOT distinct). The single definition of the trade graph's edge
@@ -67,15 +48,9 @@ def _directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from this, so the join and the id-space offset can never diverge."""
     li = load_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
     orders = load_table(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + F.lit(SUPPLIER_OFFSET)).alias("dst"),
-        )
-        # eager checkpoint so every graph query after the first rides
-        # materialized rows instead of re-running the fact join
-        .localCheckpoint()
+    return li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        F.col("o_custkey").alias("src"),
+        (F.col("l_suppkey") + F.lit(SUPPLIER_OFFSET)).alias("dst"),
     )
 
 
@@ -283,7 +258,8 @@ def two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-hop neighbourhood size per customer node: the self-join form of
     network expansion (the at-scale alternative to materializing neighbour
     arrays and exploding twice)."""
-    edges = _sym_edges(spark, sf_dir)
+    # checkpointed: both sides of the self-join read it
+    edges = _sym_edges(spark, sf_dir).localCheckpoint()
     # bound the expansion: two-hop through supplier hub nodes is O(deg^2);
     # restrict source nodes to a fixed customer subset (pushed into e1
     # before the join) so intermediate rows stay bounded at any sf.
@@ -359,23 +335,13 @@ LIMIT 20
 """
 
 
-@session_memo(_CO_PAIRS_CACHE, "lineitem")
 def _co_supplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-thresholded co-supplier edges (u < v, ≥5 shared orders) —
-    shared by the triangle and k-core queries; see supplier_triangles for
-    why the threshold is mandatory on a co-occurrence graph. Memoized: the
-    thresholded pair set is tiny (≤ a few rows per recurring supplier pair)
-    while its derivation is a lineitem self-join — exactly the artifact a
-    graph platform materializes once for its triangle/k-core/clustering
-    passes."""
-    return _co_supplier_pairs_plan(spark, sf_dir).localCheckpoint()
-
-
-def _co_supplier_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAZY pair derivation behind the _CO_PAIRS_CACHE artifact — the
-    support threshold (the scale-safety property
+    shared by the triangle, k-core and clustering queries; see
+    supplier_triangles for why the threshold is mandatory on a
+    co-occurrence graph (the scale-safety property
     tests/test_analytics.py::test_overlap_and_triangle_plans_stay_scale_safe
-    pins) lives HERE; consumers see only the checkpointed result."""
+    pins)."""
     li = load_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
     order_supp = li.distinct()
     return (

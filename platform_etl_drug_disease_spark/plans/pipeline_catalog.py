@@ -14,22 +14,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.plans._util import arr_join
-from platform_etl_drug_disease_spark.plans.drug_disease import run_pipeline
+from platform_etl_drug_disease_spark.plans.drug_disease import (
+    PipelineOutputs,
+    run_pipeline,
+)
 from platform_etl_drug_disease_spark.plans.synthetic_domain import domain_inputs
 
 
-def _run(spark: SparkSession, whitelist: bool):
+def _run(spark: SparkSession, whitelist: bool) -> PipelineOutputs:
     inputs = domain_inputs(spark)
     if not whitelist:
         inputs = {k: v for k, v in inputs.items() if k != "whitelist"}
     return run_pipeline(**inputs)
 
 
+def _collect_and_close(
+    spark: SparkSession, run: PipelineOutputs, df: DataFrame
+) -> DataFrame:
+    """``df`` (a small normalized output of ``run``) as local rows, with
+    ``run`` closed. A catalog entry hands back a DataFrame that nothing
+    downstream could close, so it releases what ``run_pipeline`` cached
+    before returning."""
+    with run:
+        return spark.createDataFrame(df.collect(), df.schema)
+
+
 def drug_disease_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full DAG, default branch; output normalized for hashing (rounded
     scores, sorted arrays)."""
-    out = _run(spark, whitelist=False).drug_disease
-    return out.select(
+    run = _run(spark, whitelist=False)
+    return _collect_and_close(spark, run, run.drug_disease.select(
         "disease_id",
         "target_id",
         F.round("harmonic", 6).alias("harmonic"),
@@ -43,7 +57,7 @@ def drug_disease_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("drug_hypothesis_aes_score", 6).alias("drug_hypothesis_aes_score"),
         F.round("disease_aes_score", 6).alias("disease_aes_score"),
         F.round("drug_hypothesis_disease_aes_score", 6).alias("aes_blend_score"),
-    )
+    ))
 
 
 _PIPELINE_SQL = """
@@ -65,15 +79,15 @@ SELECT 'EFO_D1' AS disease_id,
 
 def drug_disease_pipeline_whitelist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitelist branch: groups by (target, whitelist_id), no cutoffs."""
-    out = _run(spark, whitelist=True).associations
-    return out.select(
+    run = _run(spark, whitelist=True)
+    return _collect_and_close(spark, run, run.associations.select(
         "target_id",
         "whitelist_id",
         F.col("evidence_count"),
         F.round("harmonic", 6).alias("harmonic"),
         F.round("harmonic_genetics", 6).alias("harmonic_genetics"),
         F.round("harmonic_literature", 6).alias("harmonic_literature"),
-    )
+    ))
 
 
 _PIPELINE_WL_SQL = """

@@ -28,7 +28,6 @@ from platform_etl_drug_disease_spark.operators.joins import (
 )
 from platform_etl_drug_disease_spark.operators.windows import top_n_per_group
 from platform_etl_drug_disease_spark.plans._util import arr_join, davg, dround, dsum
-from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
 
 
@@ -494,32 +493,19 @@ GROUP BY s_nationkey
 """
 
 
-#: session memo for the per-(returnflag, extendedprice) lineitem value
-#: histogram — three catalog queries (price_quantiles_per_flag,
-#: tdigest_quantile_audit, price_mad_stats) derive the IDENTICAL histogram
-#: from the identical fact scan. Memo owner: price_mad_stats. The
-#: histogram is value-GRID-bounded (~1 row per distinct (flag, cents)
-#: price), so the checkpoint stays tiny at any corpus size — it is exactly
-#: the reusable statistic a warehouse materializes once per snapshot.
-_PRICE_HIST_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _price_flag_histogram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAZY derivation behind the _PRICE_HIST_CACHE artifact — the
-    window-consumes-an-aggregate safety property is pinned HERE by
-    tests/test_plan_quality.py::test_quantile_windows_consume_the_histogram;
-    consumers see only the checkpointed result."""
+def _price_flag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(returnflag, extendedprice) lineitem value histogram — the one
+    fact scan ``price_quantiles_per_flag``, ``tdigest_quantile_audit`` and
+    ``price_mad_stats`` derive their rank arithmetic from. Value-GRID-
+    bounded (~1 row per distinct (flag, cents) price); the
+    window-consumes-an-aggregate property is pinned by
+    tests/test_plan_quality.py::test_quantile_windows_consume_the_histogram."""
     from platform_etl_drug_disease_spark.operators.scans import value_histogram
 
     li = load_table(
         spark, sf_dir, "lineitem", ["l_returnflag", "l_extendedprice"]
     )
     return value_histogram(li, ["l_returnflag"], "l_extendedprice")
-
-
-@session_memo(_PRICE_HIST_CACHE, "lineitem")
-def _price_flag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _price_flag_histogram_plan(spark, sf_dir).localCheckpoint()
 
 
 def price_quantiles_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1936,13 +1922,12 @@ def price_mad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             hist, [key], val, {out: 0.5}, mode="cont"
         )
 
-    # ONE fact-table pass (now the memoized _price_flag_histogram artifact —
-    # this query is its memo owner): everything downstream — the
+    # ONE fact-table pass (_price_flag_histogram): everything downstream — the
     # residual histogram included — is pure arithmetic over the value
     # histogram (|x−med| carries each bucket's count unchanged). The median
     # is defined over NON-NULL values on both engines (a NULL bucket would
     # shift Spark's NULLS-FIRST cum ranks but DuckDB's NULLS-LAST
-    # row_numbers): dropping the shared artifact's NULL BUCKET is
+    # row_numbers): dropping the histogram's NULL BUCKET is
     # row-for-row identical to the old pre-scan filter, because filtering
     # on the group key commutes with the groupBy.
     h1 = (

@@ -45,6 +45,7 @@ from platform_etl_drug_disease_spark.schemas import load_table
 from platform_etl_drug_disease_spark.sources.python_datasource import (
     register_synthetic_events,
 )
+from platform_etl_drug_disease_spark.sources.readers import read_csv
 from platform_etl_drug_disease_spark.sources.writers import write_bucketed_table
 
 
@@ -291,10 +292,10 @@ FROM orders WHERE o_orderstatus = 'F'
 
 
 def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV sink/source under the value-hash oracle (the readers are
-    pytest-covered; this puts the full write→read loop on the driver
-    gate). Doubles survive because Spark writes shortest-round-trip
-    decimal text and the schema'd read parses it back to the same bits."""
+    """CSV sink/source under the value-hash oracle: the full write→read
+    loop, read back through ``sources.readers.read_csv``. Doubles survive
+    because Spark writes shortest-round-trip decimal text and the schema'd
+    read parses it back to the same bits."""
     agg = (
         load_table(spark, sf_dir, "orders", ["o_orderstatus", "o_totalprice"])
         .groupBy("o_orderstatus")
@@ -305,9 +306,9 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join("/tmp/spark_graft_csv", _sf_tag(sf_dir))
     agg.repartition(1).write.mode("overwrite").option("header", "true").csv(out)
-    return spark.read.schema(
-        "o_orderstatus string, n_orders bigint, total_price double"
-    ).option("header", "true").csv(out)
+    return read_csv(
+        spark, out, "o_orderstatus string, n_orders bigint, total_price double"
+    )
 
 
 _CSV_SINK_SQL = """

@@ -25,7 +25,6 @@ from platform_etl_drug_disease_spark.operators.similarity import (
     semantic_dedup,
 )
 from platform_etl_drug_disease_spark.plans._util import dround
-from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import (
     ensure_compute_partitions,
     load_table,
@@ -399,21 +398,11 @@ FROM ranked GROUP BY cent_id
 _KM_K, _KM_ITERS = 16, 2
 
 
-#: session memo for the 2-iteration spherical k-means fit over the
-#: embeddings. ``kmeans_cells`` (the index-build query and the memo's
-#: owner) and ``knn_cosine_ivf_kmeans`` (build + serve composition) run
-#: the IDENTICAL fit: same stride seeds, same _KM_ITERS, same input. At
-#: scale the fitted centroid table is exactly the artifact an ANN platform
-#: materializes once and serves from — holds (centroids, assignments),
-#: both eagerly checkpointed (centroids: K rows; assignments: one
-#: (vec_id, cent_id) pair per vector).
-_KMEANS_FIT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-@session_memo(_KMEANS_FIT_CACHE, "embeddings")
-def _kmeans_fit_artifact(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
+def _kmeans_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(centroids, assignments) of the 2-iteration spherical k-means fit
+    over the embeddings (stride seeds, ``_KM_ITERS``) that ``kmeans_cells``
+    and ``knn_cosine_ivf_kmeans`` share. Both frames are eager checkpoints,
+    so the input persist is released before returning."""
     emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
     stride = emb.agg(
         F.ceil(F.count(F.lit(1)) / F.lit(_KM_K)).cast("bigint").alias("__stride")
@@ -438,7 +427,7 @@ def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every step is deterministic (rounded assignment scores, exact-decimal
     centroid means), so the whole fit value-hash-matches the SQL replay —
     the learned-centroid index build that feeds IVF at scale."""
-    cents, assigned = _kmeans_fit_artifact(spark, sf_dir)
+    cents, assigned = _kmeans_fit(spark, sf_dir)
     stats = assigned.groupBy("cent_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("vec_id").alias("id_sum"),
@@ -542,7 +531,7 @@ def knn_cosine_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, serving is a cell-keyed equi-join — and the whole composition
     stays deterministic, so it carries a full value-hash oracle."""
     emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
-    cents, _ = _kmeans_fit_artifact(spark, sf_dir)
+    cents, _ = _kmeans_fit(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )

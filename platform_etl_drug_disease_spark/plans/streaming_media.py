@@ -32,7 +32,6 @@ from platform_etl_drug_disease_spark.plans.events_time import (
     _HOURLY_SQL,
     _SESSIONS_SQL,
 )
-from platform_etl_drug_disease_spark.plans.memo_owners import session_memo
 from platform_etl_drug_disease_spark.schemas import load_table
 from platform_etl_drug_disease_spark.streaming.windows import (
     input_scaled_shuffle_partitions,
@@ -252,23 +251,6 @@ _DOCS_SCHEMA = (
 
 _FEED_SCHEMA = "doc_id bigint, text string"
 
-# staged-feed landing dirs, shared by the two multibatch twins — see
-# _stage_feed's docstring.
-_STAGED_FEED_CACHE: dict[tuple, str] = {}
-
-#: session memos for the serve twins' CORPUS SNAPSHOT artifacts. The
-#: single-batch and multibatch twins of each family index the IDENTICAL
-#: static corpus — rebuilding the shingle table / band index / slot-row
-#: index per catalog query repeated ~1.5-2 s of identical work. A serving
-#: platform builds the corpus snapshot index once and matches every feed
-#: batch against it; that is exactly this memo. Memo owners:
-#: streaming_incremental_dedup (minhash), streaming_containment_incremental
-#: (containment). The artifacts are eager localCheckpoints, not lazy
-#: persists: a checkpointed artifact with eviction is a deliberate
-#: retention, not a leak.
-_STREAM_MINHASH_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_STREAM_CONTAINMENT_CACHE: dict[tuple, tuple[DataFrame, ...]] = {}
-
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The static corpus the serve twins match against: every document the
@@ -278,12 +260,12 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@session_memo(_STREAM_MINHASH_CACHE, "documents")
-def _minhash_corpus_artifacts(
+def _minhash_corpus_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(shingle table, band index) of the corpus snapshot, built once
-    outside the micro-batch loop and shared by the MinHash serve twins."""
+    """(shingle table, band index) of the corpus snapshot for the MinHash
+    serve twins. Eager checkpoints: built once before the stream starts,
+    every micro-batch reads them."""
     from platform_etl_drug_disease_spark.operators.dedup import (
         _shingle_table,
         banded_signatures,
@@ -295,13 +277,12 @@ def _minhash_corpus_artifacts(
     return c_sh, banded_signatures(c_sh, "doc_id", 16, 4).localCheckpoint()
 
 
-@session_memo(_STREAM_CONTAINMENT_CACHE, "documents")
-def _containment_corpus_artifacts(
+def _containment_corpus_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(shingles, hot-shingle list, bucket-capped slot-row index) of the
-    corpus snapshot, built once outside the micro-batch loop and shared by
-    the containment serve twins."""
+    corpus snapshot for the containment serve twins. Eager checkpoints:
+    built once before the stream starts, every micro-batch reads them."""
     from platform_etl_drug_disease_spark.operators.dedup import (
         _hot_shingle_hashes,
         _shingle_table,
@@ -318,7 +299,6 @@ def _containment_corpus_artifacts(
     return c_sh, c_hot, c_idx
 
 
-@session_memo(_STAGED_FEED_CACHE, "documents")
 def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     """Write the incoming-feed subset (``doc_id % 10 == 0``, the same docs
     the single-batch twins stream) into a fresh landing directory as
@@ -333,8 +313,7 @@ def _stage_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     The landing dir is DETERMINISTIC per (corpus dir, n_files) and written
     with overwrite mode, so repeated invocations (timed repeats of a
     multibatch query) reuse one directory instead of accumulating
-    corpus-sized mkdtemp copies for the life of the box. The session memo
-    skips even the overwrite rewrite while the corpus is unchanged. (The
+    corpus-sized mkdtemp copies for the life of the box. (The
     runners' match OUTPUT dirs stay mkdtemp-fresh on purpose: reusing a
     streaming checkpoint dir would make a new run think the feed was
     already processed.)"""
@@ -412,7 +391,7 @@ def _minhash_stream_run(
     corpus = _corpus(spark, sf_dir)
     feed = _feed_stream(spark, sf_dir, feed_dir, max_files_per_trigger)
     out_dir = tempfile.mkdtemp(prefix="stream_incdedup_")
-    corpus_sh, corpus_bands = _minhash_corpus_artifacts(spark, sf_dir)
+    corpus_sh, corpus_bands = _minhash_corpus_index(spark, sf_dir)
 
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -453,7 +432,6 @@ def _minhash_stream_run(
     # shingle joins are compute-bound — core-count partitions win
     # (measured: containment 3.7 s -> 9.4 s when scoped to the
     # bytes-derived count).
-    # No finally-unpersist: the corpus artifacts are session memos.
     q = (
         feed.writeStream.foreachBatch(match_batch)
         .option("checkpointLocation", f"{out_dir}/_ckpt")
@@ -492,7 +470,7 @@ def _containment_stream_run(
     corpus = _corpus(spark, sf_dir)
     feed = _feed_stream(spark, sf_dir, feed_dir, max_files_per_trigger)
     out_dir = tempfile.mkdtemp(prefix="stream_inccont_")
-    corpus_sh, corpus_hot, corpus_index = _containment_corpus_artifacts(
+    corpus_sh, corpus_hot, corpus_index = _containment_corpus_index(
         spark, sf_dir
     )
 
@@ -537,7 +515,6 @@ def _containment_stream_run(
     # shingle joins are compute-bound — core-count partitions win
     # (measured: containment 3.7 s -> 9.4 s when scoped to the
     # bytes-derived count).
-    # No finally-unpersist: the corpus artifacts are session memos.
     q = (
         feed.writeStream.foreachBatch(match_batch)
         .option("checkpointLocation", f"{out_dir}/_ckpt")

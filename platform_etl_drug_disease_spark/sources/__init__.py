@@ -1,10 +1,8 @@
 """Sources and sinks (SURVEY.md §2.1, S1-S7)."""
 
 from platform_etl_drug_disease_spark.sources.readers import (
-    optional_json_source,
     read_csv,
     read_json,
-    read_orc,
     read_parquet,
 )
 from platform_etl_drug_disease_spark.sources.writers import write_json, write_parquet
@@ -13,8 +11,6 @@ __all__ = [
     "read_json",
     "read_parquet",
     "read_csv",
-    "read_orc",
-    "optional_json_source",
     "write_parquet",
     "write_json",
 ]

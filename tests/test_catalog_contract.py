@@ -7,8 +7,9 @@ can't silently regress them:
   carries a DuckDB value oracle (``oracle_sql()``);
 - the only queries without a value oracle are the four rows-only sketch
   originals, so a new query without an oracle fails here;
-- every session memo owner in ``plans.memo_owners`` is a catalog query,
-  and every session memo dict under ``plans/`` has an owner;
+- every session memo owner in ``plans.memo_owners`` is a catalog query
+  that the benchmark's ``query_mix`` requests, and every session memo dict
+  under ``plans/`` has an owner;
 - every public library function has a caller outside ``tests/``, so an
   operator has one implementation: the one the catalog or pipeline runs;
 - no Python source cites a document or tool that does not exist.
@@ -140,10 +141,28 @@ def test_every_survey_id_has_an_oracled_query():
     assert not ghosts, f"SURVEY map references unknown queries: {ghosts}"
 
 
+def _query_mix_requests() -> set[str]:
+    """The catalog queries ``query_mix`` requests: the string keys of
+    ``QUERY_POPULARITY`` in ``perfbench/workloads.py``, read from its source
+    (importing the benchmark module is not needed to know its mix)."""
+    import ast
+
+    src = Path(__file__).resolve().parents[1] / "perfbench" / "workloads.py"
+    for node in ast.parse(src.read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "QUERY_POPULARITY" for t in node.targets
+        ):
+            return {
+                k.value for k in node.value.keys if isinstance(k, ast.Constant)
+            }
+    raise AssertionError("perfbench/workloads.py defines no QUERY_POPULARITY")
+
+
 def test_memo_owner_registry():
-    """Every memo owner in plans.memo_owners is a real catalog query, every
-    reset is callable and idempotent, and some reset clears every
-    module-level ``_*_CACHE`` dict under ``plans/``."""
+    """Every memo owner in plans.memo_owners is a real catalog query that
+    ``query_mix`` requests (a memo no benchmark request reads shows no
+    win), every reset is callable and idempotent, and some reset clears
+    every module-level ``_*_CACHE`` dict under ``plans/``."""
     import importlib
     import pkgutil
 
@@ -153,6 +172,10 @@ def test_memo_owner_registry():
     q, _ = _catalog()
     unknown = [n for n in memo_owners.OWNERS if n not in q]
     assert not unknown, f"memo owners that are not catalog queries: {unknown}"
+    mix = _query_mix_requests()
+    assert mix
+    unmeasured = sorted(set(memo_owners.OWNERS) - mix)
+    assert not unmeasured, f"memo owners query_mix never requests: {unmeasured}"
     caches = {}
     for m in pkgutil.iter_modules(plans.__path__):
         mod = importlib.import_module(f"{plans.__name__}.{m.name}")
@@ -195,9 +218,10 @@ def test_library_functions_have_a_caller():
     """Every public top-level function or class under ``operators/``,
     ``streaming/``, ``sources/`` and ``functions/`` is referenced by code
     outside ``tests/`` (the package itself, ``perfbench/``, ``tools/``, the
-    entry module) or re-exported in a package ``__all__``. An import that
-    is never used does not count. A name only its own test calls is a
-    second implementation of something the catalog writes another way."""
+    entry module). An import that is never used does not count, and
+    neither does a package ``__all__`` re-export. A name only its own test
+    calls is a second implementation of something the catalog writes
+    another way."""
     import ast
 
     root = Path(__file__).resolve().parents[1]
@@ -220,10 +244,6 @@ def test_library_functions_have_a_caller():
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):
                 used.add(node.attr)
-            elif isinstance(node, ast.Assign) and any(
-                getattr(t, "id", None) == "__all__" for t in node.targets
-            ):
-                used.update(e.value for e in node.value.elts)
     uncalled = sorted(
         f"{path}:{name}"
         for name, path in defined.items()

@@ -237,15 +237,28 @@ def test_pipeline_persists_only_shared_nodes(spark, branch):
     spark.catalog.clearCache()
 
 
-@pytest.mark.parametrize("branch", ["default", "whitelist"])
+@pytest.mark.parametrize("branch", ["default", "whitelist", "catalog"])
 def test_pipeline_close_releases_cache(spark, branch):
     """A long-lived session runs the pipeline repeatedly: ``close()`` after
     each run releases exactly the frames that run cached, so the count of
     persisted RDDs (read as in the test above) returns to its baseline
-    every time instead of growing by 3-4 per run."""
+    every time instead of growing by 3-4 per run. The two catalog entries
+    run the pipeline with no caller that could close it, so they release
+    it themselves."""
     spark.catalog.clearCache()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
+    if branch == "catalog":
+        from platform_etl_drug_disease_spark.plans.pipeline_catalog import (
+            drug_disease_pipeline,
+            drug_disease_pipeline_whitelist,
+        )
+
+        for entry in (drug_disease_pipeline, drug_disease_pipeline_whitelist):
+            for _ in range(2):
+                assert entry(spark, "").collect()
+                assert persistent().size() == before
+        return
     inputs = domain_inputs(spark)
     if branch == "default":
         del inputs["whitelist"]

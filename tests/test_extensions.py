@@ -1714,7 +1714,6 @@ def test_release_pipeline_boilerplate_strip_planted(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id: long, lang: string, source: string, text: string"
     ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
     rows = dt.corpus_release_pipeline(spark, str(tmp_path)).collect()
     assert sum(r["n_docs"] for r in rows) == 12
     assert sum(r["n_tokens"] for r in rows) == 12 * 80
@@ -1751,7 +1750,6 @@ def test_release_pipeline_boilerplate_strip_planted(spark, tmp_path):
         s: (v[0], v[1], v[2], round(v[3], 6), v[4], v[5])
         for s, v in oracle.items()
     }
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
 
 
 def test_repeat_keep_one_retention_planted(spark, tmp_path):
@@ -1776,7 +1774,6 @@ def test_repeat_keep_one_retention_planted(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id: long, lang: string, source: string, text: string"
     ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
     rows = {
         r["source"]: r
         for r in dt.repeat_keep_one_retention(spark, str(tmp_path)).collect()
@@ -1805,176 +1802,57 @@ def test_repeat_keep_one_retention_planted(spark, tmp_path):
         for s, r in rows.items()
     }
     assert got == oracle
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
 
 
-def test_suffix_artifact_reuse(spark, tmp_path):
-    """The session-memoized ``_suffix_ranking`` artifact
-    that `longest_repeat_census`, `top_repeated_spans`, and
-    `repeat_mass_by_source` share is (a) value-identical to a fresh
-    standalone ``longest_repeat_lengths`` run over the same corpus — the
-    hook path equals the standalone path — and (b) an actual memo: a second
-    consumer gets the SAME checkpoint-backed frames back instead of
-    re-running the doubling loop."""
-    from platform_etl_drug_disease_spark.operators.dedup import (
-        longest_repeat_lengths,
-    )
+def test_ctm_memo_fingerprint_miss(spark, tmp_path):
+    """Rewriting ``documents`` at the SAME path within one session must MISS
+    the containment scale-path memos (the key carries a content fingerprint
+    of the table): serving the previous snapshot's checkpoint-backed
+    shingles or candidates would be a silent wrong answer. On the unchanged
+    table a second call is a memo hit."""
     from platform_etl_drug_disease_spark.plans import dedup_text as dt
-    from platform_etl_drug_disease_spark.schemas import load_table
-
-    passage = " ".join(f"p{i}" for i in range(17))
-    docs = [
-        (1, " ".join(f"a{i}" for i in range(6)) + " " + passage),
-        (2, passage + " " + " ".join(f"b{i}" for i in range(9))),
-        (3, " ".join(f"c{i}" for i in range(4)) + " " + passage + " end"),
-        (4, " ".join(f"z{i}" for i in range(25))),
-    ]
-    spark.createDataFrame(docs, "doc_id: long, text: string").coalesce(
-        1
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
-    ps1, cap1 = dt._suffix_ranking(spark, str(tmp_path))
-    ps2, cap2 = dt._suffix_ranking(spark, str(tmp_path))
-    # memo hit: the same frames, not a second doubling loop
-    assert ps1 is ps2 and cap1 is cap2
-    assert len(dt._SUFFIX_ARTIFACT_CACHE) == 1
-
-    loaded = load_table(spark, str(tmp_path), "documents", ["doc_id", "text"])
-    fresh_ps, fresh_cap = longest_repeat_lengths(
-        loaded, "doc_id", "text", w=dt._LR_W, max_anchor_df=dt._LR_CAP
-    )
-    key = lambda r: (r["doc_id"], r["pos"], r["repeat_len"])  # noqa: E731
-    assert sorted(map(key, ps1.collect())) == sorted(
-        map(key, fresh_ps.collect())
-    )
-    assert cap1.collect() == fresh_cap.collect()
-    # the hook feeds real repeats here (passage is 17 >= _LR_W tokens)
-    assert ps1.count() > 0
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
-
-
-_P12 = " ".join(f"p{i}" for i in range(12))
-_Q20 = " ".join(f"q{i}" for i in range(20))
-_DOCS_DDL = "doc_id: long, text: string"
-_LI_SUPP_DDL = "l_orderkey: long, l_suppkey: long"
-_EMB_DDL = "vec_id: long, embedding: array<float>"
-
-#: case -> (module, accessor, tables written once {name: (ddl, rows)},
-#: rewritten table (name, ddl, rows_v1, rows_v2), probe of the artifact,
-#: probe on v1, probe on v2). Every memoized accessor must miss when a
-#: table it reads is rewritten in place at the same path.
-_FINGERPRINT_CASES = {
-    # three docs carry the 20-token passage in v2: doc 3 (absent from v1)
-    # must show up in the per-suffix repeats
-    "suffix_ranking": (
-        "dedup_text", "_suffix_ranking", {},
-        ("documents", _DOCS_DDL,
-         [(1, _P12 + " a1"), (2, "b1 " + _P12)],
-         [(1, _Q20 + " a1"), (2, "b1 " + _Q20), (3, _Q20 + " c9")]),
-        lambda a, sf: sorted({r.doc_id for r in a[0].collect()}),
-        [1, 2], [1, 2, 3],
-    ),
-    "directed_edges": (
-        "graph", "_directed_edges",
-        {"orders": ("o_orderkey: long, o_custkey: long", [(1, 7)])},
-        ("lineitem", _LI_SUPP_DDL, [(1, 10)], [(1, 10), (1, 20)]),
-        lambda a, sf: sorted(r.dst - 10**12 for r in a.collect()),
-        [10], [10, 20],
-    ),
-    # support ≥ 5 shared orders: v1 pairs suppliers 1-2, v2 pairs 1-3
-    "co_supplier_pairs": (
-        "graph", "_co_supplier_pairs", {},
-        ("lineitem", _LI_SUPP_DDL,
-         [(o, s) for o in range(5) for s in (1, 2)],
-         [(o, s) for o in range(5) for s in (1, 3)]),
-        lambda a, sf: [tuple(r) for r in a.collect()],
-        [(1, 2)], [(1, 3)],
-    ),
-    "price_flag_histogram": (
-        "relational", "_price_flag_histogram", {},
-        ("lineitem", "l_returnflag: string, l_extendedprice: double",
-         [("A", 1.0)], [("A", 1.0), ("R", 2.0), ("R", 2.0)]),
-        lambda a, sf: sorted(tuple(r) for r in a.collect()),
-        [("A", 1.0, 1)], [("A", 1.0, 1), ("R", 2.0, 2)],
-    ),
-    "kmeans_fit": (
-        "similarity", "_kmeans_fit_artifact", {},
-        ("embeddings", _EMB_DDL,
-         [(i, [1.0, float(i), 0.0]) for i in range(3)],
-         [(i, [1.0, float(i), 0.0]) for i in range(5)]),
-        lambda a, sf: sorted(r.vec_id for r in a[1].collect()),
-        [0, 1, 2], [0, 1, 2, 3, 4],
-    ),
-    # the landing dir's path is the same for both snapshots; its contents
-    # must be re-staged from the rewritten table
-    "stage_feed": (
-        "streaming_media", "_stage_feed", {},
-        ("documents", _DOCS_DDL,
-         [(10, "a b c"), (11, "d e f")], [(10, "a b c"), (20, "g h i")]),
-        lambda a, sf: sorted(
-            r.doc_id for r in sf.read.parquet(a).collect()
-        ),
-        [10], [10, 20],
-    ),
-}
-
-
-@pytest.mark.parametrize("case", sorted(_FINGERPRINT_CASES))
-def test_suffix_artifact_fingerprint_miss(spark, tmp_path, case):
-    """Rewriting a table at the SAME path within one session must MISS
-    every session memo that reads it (the key carries a content
-    fingerprint of each table): serving the
-    previous snapshot's checkpoint-backed artifact would be a silent wrong
-    answer. On the unchanged table a second call is a memo hit."""
-    import importlib
-
-    mod_name, fn_name, fixed, rewritten, probe, want_v1, want_v2 = (
-        _FINGERPRINT_CASES[case]
-    )
-    mod = importlib.import_module(
-        f"platform_etl_drug_disease_spark.plans.{mod_name}"
-    )
-    accessor = getattr(mod, fn_name)
-    sf = str(tmp_path)
-    args = (3,) if case == "stage_feed" else ()
-
-    def write(name, ddl, rows):
-        spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"{name}.parquet"))
-
-    for name, (ddl, rows) in fixed.items():
-        write(name, ddl, rows)
-    name, ddl, rows_v1, rows_v2 = rewritten
-    write(name, ddl, rows_v1)
     from platform_etl_drug_disease_spark.plans.memo_owners import OWNERS
 
+    sf = str(tmp_path)
+    core = " ".join(f"w{i}" for i in range(12))
+    v1 = [(1, core), (2, " ".join(f"z{i}" for i in range(12)))]
+    # v2 adds doc 3, which contains doc 1 whole: a candidate pair
+    v2 = v1 + [(3, core + " tail")]
+
+    def write(rows):
+        spark.createDataFrame(rows, "doc_id: long, text: string").coalesce(
+            1
+        ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+    def build():
+        return dt._ctm_shingles(spark, sf), dt._ctm_candidates(spark, sf)
+
+    def probe(frames):
+        sh, cands = frames
+        return (
+            sorted({r.doc_id for r in sh.collect()}),
+            sorted({frozenset((r.id_a, r.id_b)) for r in cands.collect()}, key=sorted),
+        )
+
     for reset in OWNERS.values():
         reset()
-    a1 = accessor(spark, sf, *args)
-    hit = accessor(spark, sf, *args)
-    pairs = zip(a1, hit) if isinstance(a1, tuple) else [(a1, hit)]
-    assert all(x is y for x, y in pairs)  # memo hit: no rebuild
-    assert probe(a1, spark) == want_v1
-
-    write(name, ddl, rows_v2)
-    assert probe(accessor(spark, sf, *args), spark) == want_v2
+    write(v1)
+    first = build()
+    hit = build()
+    assert all(x is y for x, y in zip(first, hit))  # memo hit: no rebuild
+    assert probe(first) == ([1, 2], [])
+    write(v2)
+    assert probe(build()) == ([1, 2, 3], [frozenset((1, 3))])
     for reset in OWNERS.values():
         reset()
 
 
-def test_containment_topk_artifact_reuse(spark, tmp_path):
-    """The memoized lang-blocked containment top-3 artifact shared
-    by `dedup_containment_topk` and `quoted_span_stats` is value-identical
-    to a fresh standalone ``containment_topk`` run, and the second consumer
-    gets the SAME checkpoint-backed frame (no second prefix/verify
-    pipeline)."""
-    from platform_etl_drug_disease_spark.operators.dedup import (
-        containment_topk,
-    )
+def test_containment_topk_lang_blocked(spark, tmp_path):
+    """The lang-blocked containment top-3 relation that
+    `dedup_containment_topk` and `quoted_span_stats` read pairs a doc with
+    the doc of its language that contains it, and never with the same text
+    in another language block."""
     from platform_etl_drug_disease_spark.plans import dedup_text as dt
-    from platform_etl_drug_disease_spark.schemas import load_table
 
     core = " ".join(f"w{i}" for i in range(30))
     docs = [
@@ -1987,77 +1865,12 @@ def test_containment_topk_artifact_reuse(spark, tmp_path):
         docs, "doc_id: long, text: string, lang: string"
     ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
 
-    dt._CONTAINMENT_TOPK_CACHE.clear()
-    t1 = dt._containment_topk_artifact(spark, str(tmp_path))
-    t2 = dt._containment_topk_artifact(spark, str(tmp_path))
-    assert t1 is t2  # memo hit
-    loaded = load_table(
-        spark, str(tmp_path), "documents", ["doc_id", "text", "lang"]
-    )
-    fresh = containment_topk(
-        loaded, "doc_id", "text", shingle_n=3, threshold=0.8, k=3,
-        block_col="lang", max_shingle_df=256,
-    )
-    key = lambda r: (r["id_a"], r["id_b"], r["containment"])  # noqa: E731
-    got = sorted(map(key, t1.collect()))
-    assert got == sorted(map(key, fresh.collect()))
-    # the plant produced real pairs (1 contained in 2), lang-blocked (no
-    # 1<->3 pair despite identical text)
-    assert any(a == 1 and b == 2 for a, b, _ in got)
-    assert not any({a, b} == {1, 3} for a, b, _ in got)
-    dt._CONTAINMENT_TOPK_CACHE.clear()
-
-
-def test_lsh_artifacts_reuse(spark, tmp_path):
-    """The memoized MinHash+LSH pair set and its hash-min
-    connected components — shared by dedup_minhash_lsh, the two cluster
-    queries, leakage_safe_split, and dedup_quality_keeper — are
-    value-identical to fresh standalone runs, and repeat consumers get the
-    SAME frames back (no second pipeline / CC)."""
-    from platform_etl_drug_disease_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_dedup,
-    )
-    from platform_etl_drug_disease_spark.plans import dedup_text as dt
-    from platform_etl_drug_disease_spark.schemas import load_table
-
-    base = " ".join(f"tok{i}" for i in range(40))
-    docs = [
-        (1, base),
-        (2, base + " tail1"),          # near-dup of 1
-        (3, "head0 " + base),          # near-dup of 1/2 -> one cluster
-        (4, " ".join(f"z{i}" for i in range(35))),
-        (5, " ".join(f"z{i}" for i in range(35)) + " extra"),  # 2nd cluster
-        (6, " ".join(f"u{i}" for i in range(30))),             # singleton
-    ]
-    spark.createDataFrame(docs, "doc_id: long, text: string").coalesce(
-        1
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dt._LSH_PAIRS_CACHE.clear()
-    dt._LSH_COMPONENTS_CACHE.clear()
-    p1 = dt._lsh_pairs_artifact(spark, str(tmp_path))
-    c1 = dt._lsh_components_artifact(spark, str(tmp_path))
-    assert p1 is dt._lsh_pairs_artifact(spark, str(tmp_path))
-    assert c1 is dt._lsh_components_artifact(spark, str(tmp_path))
-
-    loaded = load_table(spark, str(tmp_path), "documents", ["doc_id", "text"])
-    fresh_p = minhash_lsh_dedup(
-        loaded, "doc_id", "text", shingle_n=3, n_hashes=16, n_bands=4,
-        threshold=0.5,
-    ).localCheckpoint()
-    pkey = lambda r: (r["id_a"], r["id_b"], r["jaccard"])  # noqa: E731
-    got_p = sorted(map(pkey, p1.collect()))
-    assert got_p == sorted(map(pkey, fresh_p.collect()))
-    assert len(got_p) > 0  # the plant produced real near-dup pairs
-
-    fresh_c = connected_components(fresh_p, "id_a", "id_b")
-    ckey = lambda r: (r["node"], r["component"])  # noqa: E731
-    assert sorted(map(ckey, c1.collect())) == sorted(
-        map(ckey, fresh_c.collect())
-    )
-    dt._LSH_PAIRS_CACHE.clear()
-    dt._LSH_COMPONENTS_CACHE.clear()
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in dt._containment_topk(spark, str(tmp_path)).collect()
+    }
+    assert (1, 2) in got
+    assert not any({a, b} == {1, 3} for a, b in got)
 
 
 def test_lr_tokens_separator_bytes_sanitized(spark, tmp_path):
@@ -2248,14 +2061,15 @@ def test_capped_mass_profile_planted_giant_anchor(spark, tmp_path):
 
 
 def test_suffix_base_frames_equivalence(spark, tmp_path):
-    """Shared anchor-universe artifact: the
-    exact and sampled suffix operators fed the memoized (base, anchor
-    counts) pair via their ``frames`` hook return row-identical results to
-    the self-built path, and the pair is an actual memo (same frames back
-    on the second call)."""
+    """Shared anchor universe: the exact and sampled suffix operators fed
+    one caller-checkpointed (base, anchor counts) pair via their ``frames``
+    hook (as ``capped_repeat_estimate`` feeds both) return row-identical
+    results to the self-built path."""
     from platform_etl_drug_disease_spark.operators.dedup import (
         longest_repeat_lengths,
         sampled_repeat_lengths,
+        suffix_anchor_counts,
+        suffix_base_plan,
     )
     from platform_etl_drug_disease_spark.plans import dedup_text as dt
     from platform_etl_drug_disease_spark.schemas import load_table
@@ -2268,10 +2082,12 @@ def test_suffix_base_frames_equivalence(spark, tmp_path):
         1
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    dt._SUFFIX_BASE_CACHE.clear()
-    frames = dt._suffix_base(spark, str(tmp_path))
-    assert dt._suffix_base(spark, str(tmp_path))[0] is frames[0]  # memo hit
     loaded = load_table(spark, str(tmp_path), "documents", ["doc_id", "text"])
+    base = suffix_base_plan(loaded, "doc_id", "text", dt._LR_W).localCheckpoint()
+    frames = (
+        base,
+        suffix_anchor_counts(base, "doc_id", dt._LR_W).localCheckpoint(),
+    )
 
     key3 = lambda r: (r["doc_id"], r["pos"], r["repeat_len"])  # noqa: E731
     ps_f, cap_f = longest_repeat_lengths(
@@ -2305,7 +2121,6 @@ def test_suffix_base_frames_equivalence(spark, tmp_path):
     )
     assert disc_f.collect() == disc_s.collect()
     assert sm_f.count() > 0
-    dt._SUFFIX_BASE_CACHE.clear()
 
 
 def test_ctm_artifact_reuse(spark, tmp_path):

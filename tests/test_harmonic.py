@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.functions.harmonic import (
     harmonic_sum,
-    harmonic_sum_scaled,
     top_k_sorted,
 )
 
@@ -52,12 +51,6 @@ def test_top_k_truncates(spark):
 def test_unit_scores_bounded_by_zeta2(spark):
     got = eval_harmonic(spark, [1.0] * 100)
     assert got < math.pi**2 / 6
-
-
-def test_scaled_normalizes_full_window(spark):
-    df = spark.createDataFrame([([1.0] * 100,)], "xs: array<double>")
-    got = df.select(harmonic_sum_scaled("xs", k=100).alias("h")).collect()[0]["h"]
-    assert got == pytest.approx(1.0)
 
 
 @settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))

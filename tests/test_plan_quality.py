@@ -64,13 +64,6 @@ LINT_ALLOWLIST: dict[str, tuple[str, ...]] = {
     # same 5-row broadcast query set as the brute-force baseline, twice
     # (projected-space and exact-space top-5)
     "jl_projection_recall": ("CartesianProduct",),
-    # the cumulative-rank windows consume the CHECKPOINTED
-    # _price_flag_histogram artifact (grid-bounded aggregate, session memo);
-    # the lint's raw-leaf walk cannot see the Aggregate through the
-    # materialization boundary. The aggregate-input property is still
-    # pinned, on the artifact's lazy plan, by
-    # test_quantile_windows_consume_the_histogram below.
-    "price_mad_stats": ("ordered window partitioned only by low-cardinality",),
 }
 
 
@@ -288,38 +281,12 @@ def test_quantile_windows_consume_the_histogram(spark):
         price_quantiles_per_flag,
     )
 
-    for q in (price_quantiles_per_flag, value_quantile_profile):
+    for q in (price_quantiles_per_flag, value_quantile_profile, price_mad_stats):
         bad = ordered_windows_over_unaggregated(q(spark, SF_SMOKE))
         assert not bad, (
             f"{q.__name__}: cumulative window must consume the aggregated "
             f"histogram, got raw-input windows: {bad}"
         )
-    # price_mad_stats: its windows consume the CHECKPOINTED
-    # _price_flag_histogram session artifact, so the aggregate is invisible
-    # to the raw-leaf walk. Pin the property in two halves: (a) the
-    # artifact's lazy derivation IS the value histogram (an Aggregate over
-    # the fact scan), (b) the query's own plan reaches NO parquet relation —
-    # every window input is the materialized artifact.
-    from platform_etl_drug_disease_spark.plans.relational import (
-        _price_flag_histogram_plan,
-    )
-
-    hist_plan = (
-        _price_flag_histogram_plan(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "Aggregate" in hist_plan and "parquet" in hist_plan
-    mad_plan = (
-        price_mad_stats(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "parquet" not in mad_plan and "ExistingRDD" in mad_plan, (
-        "price_mad_stats must consume only the histogram artifact"
-    )
 
 
 def test_corpus_text_scans_have_compute_partitions(spark):
@@ -374,15 +341,10 @@ def _executed_plan_stats(df) -> dict:
             },
         ),
         (
-            # the _co_supplier_pairs session memo: the pair derivation
-            # (lineitem self-join + support groupBy) builds ONCE per session
-            # as an eager localCheckpoint, so its exchanges are not in this
-            # query's own plan, and the downstream
-            # wedge/closing joins plan against the materialized pair RDD
-            # (one more pair-set-sized exchange + one join upgraded to a
-            # broadcast). Measured faster (4.95 s -> 3.57 s best-of-2 at
-            # sf0.1 as family member); every exchange below is pair-set- or
-            # node-sized, never lineitem-sized.
+            # triangle_stats persists the support-thresholded pair set, so
+            # the wedge/closing joins plan against the cached pairs; every
+            # exchange below is pair-set- or node-sized, never
+            # lineitem-sized.
             "supplier_triangles",
             {
                 "exchanges": 8,
@@ -390,10 +352,9 @@ def _executed_plan_stats(df) -> dict:
             },
         ),
         (
-            # same _co_supplier_pairs memo as supplier_triangles: the
-            # materialized pair RDD re-plans the degree/orient
-            # joins as broadcasts — 5 BHJs of node-table-sized sides, one
-            # extra pair-set-sized exchange, no lineitem-sized shuffles.
+            # same persisted pair set as supplier_triangles: the
+            # degree/orient joins plan as broadcasts of node-table-sized
+            # sides, no lineitem-sized shuffles.
             "supplier_clustering",
             {"exchanges": 7, "joins": {"BroadcastHashJoin": 5}},
         ),
@@ -500,11 +461,8 @@ def test_suffix_round_plan_shape_pinned(spark):
 
 
 def test_containment_topk_pipeline_shape_pinned(spark):
-    """Pin the exact containment top-k pipeline's plan shape: the
-    `_containment_topk_artifact` memo hides this pipeline behind an eager
-    localCheckpoint, so `dedup_containment_topk`'s own plan shows only the
-    post-artifact rank window — this test keeps the pipeline itself
-    asserted (as a ceiling): hash joins only (the
+    """Pin the exact containment top-k pipeline's plan shape (as a
+    ceiling): hash joins only (the
     prefix/verify joins broadcast at this scale; a cartesian or nested-loop
     would mean the df-capped prefix join degenerated), bounded exchanges."""
     from platform_etl_drug_disease_spark.operators.dedup import (
@@ -551,7 +509,6 @@ def test_top_spans_md5_group_key_pinned(spark, tmp_path):
     spark.createDataFrame(docs, "doc_id: long, text: string").coalesce(
         1
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
     out = dt.top_repeated_spans(spark, str(tmp_path))
     out.foreach(lambda r: None)
     plan = (
@@ -560,7 +517,6 @@ def test_top_spans_md5_group_key_pinned(spark, tmp_path):
         .toString()
         .split("== Initial Plan ==")[0]
     )
-    dt._SUFFIX_ARTIFACT_CACHE.clear()
     assert "hashpartitioning(span_md5#" in plan
     assert "Exchange rangepartitioning" not in plan
     assert "Exchange SinglePartition" not in plan

@@ -1,6 +1,6 @@
 """Source/sink operator tests (SURVEY.md §2.1, S1-S7): round trips with
-explicit schemas, glob reads, optional sources, partitioned parquet writes
-with pruning verified in the physical plan."""
+explicit schemas, glob reads, partitioned parquet writes with pruning
+verified in the physical plan."""
 
 from __future__ import annotations
 
@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 
 from platform_etl_drug_disease_spark.plan_lint import explain_string
 from platform_etl_drug_disease_spark.sources.readers import (
-    optional_json_source,
     read_csv,
     read_json,
-    read_orc,
     read_parquet,
 )
 from platform_etl_drug_disease_spark.sources.writers import (
@@ -56,16 +54,6 @@ def test_json_glob_source(spark, tmp_path):
     assert sorted(r["id"] for r in df.collect()) == ["0", "1", "2"]
 
 
-def test_optional_source(spark, tmp_path):
-    # S4: whitelist only read when a non-empty path is configured
-    assert optional_json_source(spark, "", "id string") is None
-    assert optional_json_source(spark, None, "id string") is None
-    p = tmp_path / "wl.json"
-    p.write_text('{"id": "EFO_1"}\n')
-    df = optional_json_source(spark, str(p), "id string")
-    assert df is not None and df.collect()[0]["id"] == "EFO_1"
-
-
 def test_parquet_partitioned_write_prunes(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, "us" if i % 2 == 0 else "eu", float(i)) for i in range(20)],
@@ -90,14 +78,6 @@ def test_csv_round_trip(spark, tmp_path):
     p.write_text("id|v\n1|1.5\n2|2.5\n")
     df = read_csv(spark, str(p), "id bigint, v double", header=True, sep="|")
     assert {(r["id"], r["v"]) for r in df.collect()} == {(1, 1.5), (2, 2.5)}
-
-
-def test_orc_round_trip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, name string")
-    path = str(tmp_path / "orc_t")
-    df.write.mode("overwrite").orc(path)
-    back = read_orc(spark, path)
-    assert {(r["id"], r["name"]) for r in back.collect()} == {(1, "a"), (2, "b")}
 
 
 def test_bucketed_join_has_no_shuffle(spark):
