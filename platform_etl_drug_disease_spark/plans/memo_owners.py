@@ -10,13 +10,13 @@ is a plain function its consumers call; a query that reads a frame twice
 builds it once and checkpoints it itself.
 
 ``session_memo(cache, *tables)`` is the only way to read or fill a memo
-dict: it wraps a ``(spark, sf_dir, *args)`` build body and keys each call on
-the application id (a frame never outlives its session), the absolute
-``sf_dir``, a content fingerprint of every named table (rewriting a table in
-place misses instead of serving the previous snapshot) and the extra call
-arguments. A miss runs the body and stores the result through ``memo_put``,
-which keeps the two newest snapshots. Bodies return eager
-``localCheckpoint``s, so a hit re-reads materialized blocks.
+dict: it wraps a ``(spark, sf_dir)`` build body and keys each call on the
+application id (a frame never outlives its session), the absolute ``sf_dir``
+and a content fingerprint of every named table (rewriting a table in place
+misses instead of serving the previous snapshot). A miss runs the body and
+stores the result through ``memo_put``, which keeps the two newest
+snapshots. Bodies return eager ``localCheckpoint``s, so a hit re-reads
+materialized blocks.
 
 ``OWNERS`` maps each memo to the catalog query that consumes it and to a
 reset that clears its caches. ``perfbench`` clears every memo through it
@@ -66,13 +66,13 @@ def _table_fingerprint(path: str) -> tuple:
 
 
 def session_memo(cache: dict, *tables: str) -> Callable:
-    """Memoize a ``(spark, sf_dir, *args, **kwargs)`` build body in
-    ``cache``, keyed on the session, the snapshot of ``tables`` under
-    ``sf_dir`` and the extra arguments (see the module docstring)."""
+    """Memoize a ``(spark, sf_dir)`` build body in ``cache``, keyed on the
+    session and the snapshot of ``tables`` under ``sf_dir`` (see the module
+    docstring)."""
 
     def wrap(build: Callable) -> Callable:
         @functools.wraps(build)
-        def memo(spark, sf_dir: str, *args, **kwargs):
+        def memo(spark, sf_dir: str):
             sf = os.path.abspath(sf_dir)
             key = (
                 spark.sparkContext.applicationId,
@@ -81,12 +81,10 @@ def session_memo(cache: dict, *tables: str) -> Callable:
                     _table_fingerprint(os.path.join(sf, f"{t}.parquet"))
                     for t in tables
                 ),
-                args,
-                tuple(sorted(kwargs.items())),
             )
             hit = cache.get(key)
             if hit is None:
-                hit = build(spark, sf_dir, *args, **kwargs)
+                hit = build(spark, sf_dir)
                 memo_put(cache, key, hit)
             return hit
 

@@ -207,6 +207,13 @@ def test_whitelist_branch_keeps_unfiltered(spark, inputs):
     assert rows[("T1", "W1")]["harmonic"] == pytest.approx(0.755)
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. Tests compare id sets, not
+    counts: the context cleaner may unpersist an earlier test's unreferenced
+    checkpoint at any moment, which lowers the count but adds no id."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
 @pytest.mark.parametrize("branch", ["default", "whitelist"])
 def test_pipeline_persists_only_shared_nodes(spark, branch):
     """The pipeline caches only its multi-consumer nodes: aes_by_drug,
@@ -214,13 +221,12 @@ def test_pipeline_persists_only_shared_nodes(spark, branch):
     the evidence scores are a projection: no aggregate and no join keyed on
     ``evs_id`` anywhere in the associations plan (cached sub-plans
     included). Cached relations are counted as the persisted RDDs the
-    outputs' jobs add, against the session's count before the call; the
-    cache is cleared first, so no earlier test's identical plan is reused."""
+    outputs' jobs add to the session's set before the call; the cache is
+    cleared first, so no earlier test's identical plan is reused."""
     import re
 
     spark.catalog.clearCache()
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    before = persistent().size()
+    before = _persisted_rdd_ids(spark)
     inputs = domain_inputs(spark)
     if branch == "default":
         del inputs["whitelist"]
@@ -228,7 +234,8 @@ def test_pipeline_persists_only_shared_nodes(spark, branch):
     out.associations.collect()
     if branch == "default":
         out.drug_disease.collect()
-    assert persistent().size() - before == (3 if branch == "default" else 4)
+    added = _persisted_rdd_ids(spark) - before
+    assert len(added) == (3 if branch == "default" else 4)
 
     plan = out.associations._jdf.queryExecution().optimizedPlan().toString()
     assert "Aggregate" in plan  # the cached sub-plans are printed
@@ -241,13 +248,12 @@ def test_pipeline_persists_only_shared_nodes(spark, branch):
 def test_pipeline_close_releases_cache(spark, branch):
     """A long-lived session runs the pipeline repeatedly: ``close()`` after
     each run releases exactly the frames that run cached, so the count of
-    persisted RDDs (read as in the test above) returns to its baseline
-    every time instead of growing by 3-4 per run. The two catalog entries
-    run the pipeline with no caller that could close it, so they release
-    it themselves."""
+    persisted RDDs (read as in the test above) leaves no RDD behind that
+    was not persisted before the run, instead of growing by 3-4 per run.
+    The two catalog entries run the pipeline with no caller that could
+    close it, so they release it themselves."""
     spark.catalog.clearCache()
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    before = persistent().size()
+    before = _persisted_rdd_ids(spark)
     if branch == "catalog":
         from platform_etl_drug_disease_spark.plans.pipeline_catalog import (
             drug_disease_pipeline,
@@ -257,7 +263,7 @@ def test_pipeline_close_releases_cache(spark, branch):
         for entry in (drug_disease_pipeline, drug_disease_pipeline_whitelist):
             for _ in range(2):
                 assert entry(spark, "").collect()
-                assert persistent().size() == before
+                assert not _persisted_rdd_ids(spark) - before
         return
     inputs = domain_inputs(spark)
     if branch == "default":
@@ -266,8 +272,8 @@ def test_pipeline_close_releases_cache(spark, branch):
         with run_pipeline(**inputs) as out:
             out.associations.collect()
             out.drug_disease.collect()
-            assert persistent().size() > before
-        assert persistent().size() == before
+            assert _persisted_rdd_ids(spark) - before
+        assert not _persisted_rdd_ids(spark) - before
 
 
 def _reordered(df, n_parts: int):
