@@ -32,12 +32,10 @@ def rank_in_group(
 def top_n_per_group(
     df: DataFrame, keys: list[str], order_by: list[str | Column], n: int
 ) -> DataFrame:
-    """Bounded-state per-group top-n (the scale-safe A8 alternative)."""
-    return (
-        rank_in_group(df, keys, order_by, out="__rn")
-        .where(F.col("__rn") <= n)
-        .drop("__rn")
-    )
+    """Bounded-state per-group top-n (the scale-safe A8 alternative). The
+    row_number it filtered on stays as ``rn``, so a caller that reports the
+    rank needs no second window."""
+    return rank_in_group(df, keys, order_by).where(F.col("rn") <= n)
 
 
 def rolling_zscore(

@@ -270,11 +270,9 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 
 def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer", ["c_custkey", "c_nationkey", "c_acctbal"])
-    top = top_n_per_group(
+    return top_n_per_group(
         cust, ["c_nationkey"], [F.col("c_acctbal").desc(), F.col("c_custkey")], n=3
     )
-    w = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
-    return top.withColumn("rn", F.row_number().over(w))
 
 
 _TOP_CUSTOMERS_SQL = """

@@ -32,7 +32,7 @@ from platform_etl_drug_disease_spark.plans.events_time import (
     _HOURLY_SQL,
     _SESSIONS_SQL,
 )
-from platform_etl_drug_disease_spark.schemas import load_table
+from platform_etl_drug_disease_spark.schemas import events_source, load_table
 from platform_etl_drug_disease_spark.streaming.windows import (
     input_scaled_shuffle_partitions,
     run_to_memory_sink,
@@ -46,36 +46,20 @@ def _events_partitions(spark: SparkSession, sf_dir: str) -> int:
     return input_scaled_shuffle_partitions(spark, [f"{sf_dir}/events.parquet*"])
 
 
-# ts arrives in two spellings across fixture generations (TESTDATA.md):
-# TIMESTAMP(NANOS), which Spark's reader only accepts via nanosAsLong, or
-# plain TIMESTAMP_MICROS. A stream source declares its schema up front and
-# cannot sniff per-row, so pick the schema from the parquet footer
-# (schemas.events_ts_unit) — same normalization as the batch load_table.
-_EVENTS_NANOS_SCHEMA = (
-    "event_id bigint, ts long, user_id bigint, event_type string,"
-    " value double, props string"
-)
-_EVENTS_MICROS_SCHEMA = _EVENTS_NANOS_SCHEMA.replace("ts long", "ts timestamp")
-
-
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from platform_etl_drug_disease_spark.schemas import events_ts_unit
-
-    nanos = events_ts_unit(sf_dir) == "ns"
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """The events table as a file stream. A stream source declares its
+    schema up front and cannot sniff per-row, so the schema and the ``ts``
+    normalization come from the parquet footer (schemas.events_source), the
+    same ones the batch ``load_table`` reads with."""
+    ddl, ts = events_source(spark, sf_dir)
     # glob, not a bare file path: the file stream source requires its base
     # path to be a directory (it resolves the non-glob prefix as basePath).
     raw = (
-        spark.readStream.schema(
-            _EVENTS_NANOS_SCHEMA if nanos else _EVENTS_MICROS_SCHEMA
-        )
+        spark.readStream.schema(ddl)
         .format("parquet")
         .load(f"{sf_dir}/events.parquet*")
     )
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    return raw.withColumn("ts", ts)
 
 
 def streaming_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,6 +377,8 @@ def _minhash_stream_run(
     out_dir = tempfile.mkdtemp(prefix="stream_incdedup_")
     corpus_sh, corpus_bands = _minhash_corpus_index(spark, sf_dir)
 
+    written: dict = {}
+
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
         batch_sh = _shingle_table(batch_df, "doc_id", "text", 3).persist()
@@ -410,6 +396,8 @@ def _minhash_stream_run(
                 corpus_shingles=corpus_sh,
                 corpus_bands=corpus_bands,
             )
+            # every batch writes this schema; the read-back declares it
+            written.setdefault("schema", matches.schema)
             write_batch_idempotent(matches, out_dir, batch_id)
         finally:
             batch_sh.unpersist()
@@ -440,7 +428,9 @@ def _minhash_stream_run(
     )
     q.awaitTermination()
     return (
-        spark.read.parquet(out_dir).select("new_id", "corpus_id", "jaccard"),
+        spark.read.schema(written["schema"])
+        .parquet(out_dir)
+        .select("new_id", "corpus_id", "jaccard"),
         out_dir,
     )
 
@@ -474,6 +464,8 @@ def _containment_stream_run(
         spark, sf_dir
     )
 
+    written: dict = {}
+
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
         batch_sh = _shingle_table(batch_df, "doc_id", "text", 3).persist()
@@ -493,6 +485,8 @@ def _containment_stream_run(
                 corpus_hot=corpus_hot,
                 corpus_index=corpus_index,
             )
+            # every batch writes this schema; the read-back declares it
+            written.setdefault("schema", matches.schema)
             write_batch_idempotent(matches, out_dir, batch_id)
         finally:
             batch_sh.unpersist()
@@ -523,9 +517,9 @@ def _containment_stream_run(
     )
     q.awaitTermination()
     return (
-        spark.read.parquet(out_dir).select(
-            "new_id", "corpus_id", "containment"
-        ),
+        spark.read.schema(written["schema"])
+        .parquet(out_dir)
+        .select("new_id", "corpus_id", "containment"),
         out_dir,
     )
 
@@ -689,7 +683,8 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {"latest": f"{snap_dir}/v_base"}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cur = spark.read.parquet(state["latest"])
+        # every snapshot has base's schema (upsert_latest keeps it)
+        cur = spark.read.schema(base.schema).parquet(state["latest"])
         merged = upsert_latest(cur, batch_df, ["o_orderkey"], "version")
         path = f"{snap_dir}/v{batch_id}"
         merged.write.mode("overwrite").parquet(path)
@@ -709,7 +704,11 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    final = spark.read.parquet(state["latest"]).where(~F.col("deleted"))
+    final = (
+        spark.read.schema(base.schema)
+        .parquet(state["latest"])
+        .where(~F.col("deleted"))
+    )
     return final.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         dsum("o_totalprice").alias("total_price"),

@@ -15,13 +15,14 @@ Two families:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
-# A. Driver harness tables (parquet; schema embedded, declared here for
-#    contract checking and for building column-pruned scans).
+# A. Driver harness tables (parquet). Every read declares these, so opening
+#    a table starts no schema-inference job; the types are the ones Spark
+#    reads from the footers (tests/test_sources.py pins the two together).
 # --------------------------------------------------------------------------
 
 HARNESS_TABLES: dict[str, str] = {
@@ -38,16 +39,16 @@ HARNESS_TABLES: dict[str, str] = {
     ),
     "orders": (
         "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string"
+        " o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
     ),
     "lineitem": (
         "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int,"
         " l_quantity double, l_extendedprice double, l_discount double,"
         " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp"
+        " l_shipdate timestamp_ntz"
     ),
     "events": (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string,"
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
         " value double, props string"
     ),
     "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
@@ -57,42 +58,61 @@ HARNESS_TABLES: dict[str, str] = {
 
 def events_ts_unit(sf_dir: str) -> str:
     """Physical spelling of ``events.ts`` in this sf dir's parquet footer:
-    ``'ns'`` (TIMESTAMP(NANOS), which Spark's reader only accepts via
-    nanosAsLong) or ``'us'`` (regenerated or re-written copies: plain
-    TIMESTAMP_MICROS). Streaming sources declare their schema up front and
-    cannot sniff per-row, so both the batch and the stream reader key off
-    this footer check."""
+    ``'ns'`` (INT64 TIMESTAMP(NANOS), which Spark's reader only accepts via
+    nanosAsLong) or ``'us'`` (TIMESTAMP_MICROS, what every shipped sf dir and
+    any DuckDB/Spark re-write stores; Spark's default INT96 reads natively as
+    micros, so it counts as ``'us'`` too). ``events.parquet`` is one file or,
+    as Spark writes it, a directory of part files. A driver-side footer
+    read: no Spark job."""
+    import glob
+    import os
+
     import pyarrow.parquet as pq
 
-    return str(pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type.unit)
+    path = f"{sf_dir}/events.parquet"
+    if os.path.isdir(path):
+        path = sorted(glob.glob(f"{path}/*.parquet"))[0]
+    schema = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").schema_arrow
+    return str(schema.field("ts").type.unit)
+
+
+def events_source(spark: SparkSession, sf_dir: str) -> tuple[str, Column]:
+    """The DDL to read this sf dir's ``events`` with, and the expression that
+    normalizes its ``ts`` to TIMESTAMP (session tz is pinned UTC).
+
+    Nanos are read as long (setting nanosAsLong, on this branch only) and
+    truncated to micros, exactly what DuckDB's nanos→micros coercion does, so
+    oracles agree; micros are read as declared and cast. The batch
+    ``load_table`` and the catalog's file-stream source both read through
+    this, so the two agree on every spelling."""
+    ddl = HARNESS_TABLES["events"]
+    if events_ts_unit(sf_dir) == "ns":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return (
+            ddl.replace("ts timestamp_ntz", "ts bigint"),
+            F.timestamp_micros(F.expr("ts div 1000")),
+        )
+    return ddl, F.col("ts").cast("timestamp")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, columns: list[str] | None = None) -> DataFrame:
-    """Read one harness table; optionally prune to ``columns`` at the scan.
+    """Read one harness table with its declared schema; optionally prune to
+    ``columns`` at the scan.
 
-    Parquet carries its own schema; we read with it (timestamps keep their
-    physical type) and select-prune so Catalyst pushes the projection into the
-    vectorized reader.
+    The schema comes from ``HARNESS_TABLES``, not from the file, so the read
+    starts no Spark job; the select lets Catalyst push the projection into
+    the vectorized reader. ``events`` gets its ``ts`` normalized to TIMESTAMP
+    (``events_source``) in the same projection.
     """
-    if name == "events":
-        # the fixture's ts is parquet TIMESTAMP(NANOS), which Spark's reader
-        # rejects; read nanos as long and truncate to micros (exactly what
-        # DuckDB's nanos→micros coercion does, so oracles agree). Re-written
-        # copies of the fixture (e.g. third-party dumps)
-        # may carry ts as a real micros timestamp instead — normalize both
-        # spellings to TIMESTAMP (session tz is pinned UTC) by dtype.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if columns:
-        df = df.select(*columns)
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        df = spark.read.schema(HARNESS_TABLES[name]).parquet(path)
+        return df.select(*columns) if columns else df
+    ddl, ts = events_source(spark, sf_dir)
+    df = spark.read.schema(ddl).parquet(path)
+    return df.select(
+        *[ts.alias("ts") if c == "ts" else F.col(c) for c in columns or df.columns]
+    )
 
 
 #: mirror of spark.sql.files.maxPartitionBytes' default (128 MiB) — used only

@@ -118,7 +118,7 @@ def test_window_top_n_and_running(spark):
         "k: string, seq: int, v: double",
     )
     top = win.top_n_per_group(df, ["k"], [F.col("v").desc()], n=1).collect()
-    assert {(r["k"], r["v"]) for r in top} == {("a", 20.0), ("b", 1.0)}
+    assert {(r["k"], r["v"], r["rn"]) for r in top} == {("a", 20.0, 1), ("b", 1.0, 1)}
 
 
 def test_asof_join_backward_inclusive(spark):

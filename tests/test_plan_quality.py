@@ -211,6 +211,23 @@ def test_cdc_upsert_merge_is_single_window_pass(spark):
     assert "Join" not in plan
 
 
+def test_top_customers_rank_is_one_window(spark):
+    """The per-nation top-3 reports the row_number it filtered on: one
+    Window node (plus Spark's partial/final WindowGroupLimit), not a second
+    ranking pass over the kept rows."""
+    from platform_etl_drug_disease_spark.plans.relational import (
+        top_customers_per_nation,
+    )
+
+    plan = top_customers_per_nation(spark, SF_SMOKE)._jdf.queryExecution()
+    nodes = [
+        line.strip(" +-:").split(" ")[0]
+        for line in plan.executedPlan().toString().splitlines()
+    ]
+    assert nodes.count("Window") == 1
+    assert nodes.count("WindowGroupLimit") == 2
+
+
 def test_pagerank_iterations_are_equi_joins(spark):
     """Each power iteration must be a rank⋈edges equi-join + one hash
     aggregate — never a nested loop; the node-count total is the only

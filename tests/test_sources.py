@@ -153,10 +153,10 @@ def test_write_json_target_partitions(spark, tmp_path):
 
 
 def test_load_table_events_ts_both_spellings(spark, tmp_path):
-    """events.ts may arrive as TIMESTAMP(NANOS)-as-INT64 (the fixture) or as
-    a real micros timestamp (any DuckDB/Spark re-write of the fixture).
-    load_table must normalize both to TIMESTAMP
-    with identical values."""
+    """events.ts may arrive as TIMESTAMP(NANOS)-as-INT64 or as a real
+    timestamp (the shipped fixture, any DuckDB re-write, or Spark's INT96 in
+    a directory of part files). load_table must normalize every spelling
+    to TIMESTAMP with identical values."""
     import duckdb
 
     from platform_etl_drug_disease_spark.schemas import load_table
@@ -179,6 +179,59 @@ def test_load_table_events_ts_both_spellings(spark, tmp_path):
     a = sorted(native.select("event_id", "ts").collect())
     b = sorted(rewritten.select("event_id", "ts").collect())
     assert a == b
+
+    # Spark's own re-write: a directory of part files, ts as INT96 (which
+    # pyarrow reports as nanos, yet Spark reads natively)
+    spark_out = str(tmp_path / "spark_written")
+    native.write.parquet(f"{spark_out}/events.parquet")
+    c = sorted(load_table(spark, spark_out, "events", ["event_id", "ts"]).collect())
+    assert a == c
+
+
+@pytest.mark.parametrize("src", ["sf0.001", "sf0.01", "sf0.1", "perfbench"])
+def test_harness_ddls_match_the_files(spark, tmp_path, src):
+    """load_table reads with HARNESS_TABLES instead of the footer, and a
+    declared type that differs from the file fails the read or changes
+    what a query sees. So each DDL must equal the schema Spark reads from
+    the files: in every shipped sf dir and in the benchmark's generator."""
+    from pyspark.sql import types as T
+
+    from platform_etl_drug_disease_spark.schemas import HARNESS_TABLES
+
+    from tests.conftest import SF_SMOKE
+
+    if src == "perfbench":
+        from perfbench.fixtures import harness_tables, write_tables
+
+        sf_dir = str(tmp_path)
+        tables = harness_tables(5, 0.001)
+        write_tables(tables, sf_dir, ".parquet")
+        names = sorted(tables)
+    else:
+        sf_dir = os.path.join(os.path.dirname(SF_SMOKE), src)
+        names = sorted(HARNESS_TABLES)
+    for name in names:
+        want = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert T.StructType.fromDDL(HARNESS_TABLES[name]) == want, name
+
+
+def test_load_table_starts_no_job(spark):
+    """A catalog read is a declared-schema scan: opening any harness table
+    (events' footer check is a driver-side pyarrow read) starts no Spark
+    job. An inferring read starts one job per table to read the footer."""
+    from platform_etl_drug_disease_spark.schemas import HARNESS_TABLES, load_table
+
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    group = "load_table_starts_no_job"
+    sc.setJobGroup(group, "harness table reads")
+    try:
+        frames = [load_table(spark, SF_SMOKE, name) for name in HARNESS_TABLES]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(frames) == 10
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_json_reader_permissive_corrupt_records(spark, tmp_path):

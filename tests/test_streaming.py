@@ -123,12 +123,14 @@ def test_write_batch_idempotent_crash_window_replay(spark, tmp_path):
 
 
 def test_event_stream_normalizes_both_ts_spellings(spark, tmp_path):
-    """The catalog's file-stream source must produce identical TIMESTAMP
-    values whether events.ts is stored as TIMESTAMP(NANOS) or
-    TIMESTAMP_MICROS (regenerated fixtures / DuckDB re-writes). A hardcoded
-    nanos schema collapses hourly windows 1000× (10 rows instead of 3385)
-    on the micros spelling, so both spellings are pinned
-    here via the footer sniff (schemas.events_ts_unit)."""
+    """The catalog's file-stream source and the batch ``load_table`` must
+    produce identical TIMESTAMP values whether events.ts is stored as
+    TIMESTAMP(NANOS) or TIMESTAMP_MICROS (regenerated fixtures / DuckDB
+    re-writes). A hardcoded nanos schema collapses hourly windows 1000×
+    (10 rows instead of 3385) on the micros spelling, so both spellings and
+    both readers are pinned here via the footer sniff
+    (schemas.events_ts_unit). Every shipped sf dir stores micros, so this
+    is the only place the nanos branch runs."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -136,7 +138,7 @@ def test_event_stream_normalizes_both_ts_spellings(spark, tmp_path):
     from platform_etl_drug_disease_spark.plans.streaming_media import (
         _event_stream,
     )
-    from platform_etl_drug_disease_spark.schemas import events_ts_unit
+    from platform_etl_drug_disease_spark.schemas import events_ts_unit, load_table
     from platform_etl_drug_disease_spark.streaming.windows import (
         run_to_memory_sink,
     )
@@ -160,8 +162,11 @@ def test_event_stream_normalizes_both_ts_spellings(spark, tmp_path):
             _event_stream(spark, str(d)), f"ts_spelling_{unit}"
         )
         results[unit] = sorted(out.select("event_id", "ts").collect())
-    assert results["ns"] == results["us"]
+        batch = load_table(spark, str(d), "events", ["event_id", "ts"])
+        assert dict(batch.dtypes)["ts"] == "timestamp"
+        results[f"batch_{unit}"] = sorted(batch.collect())
     assert len(results["ns"]) == 2
+    assert all(r == results["ns"] for r in results.values())
 
 
 def test_streaming_cdc_upsert_matches_batch(spark):

@@ -25,6 +25,7 @@ from __future__ import annotations
 import argparse
 import glob
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
@@ -111,7 +112,7 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from platform_etl_drug_disease_spark.session import get_spark
 
