@@ -328,14 +328,15 @@ def connected_components(
     shuffle-partitioned by node id, no driver-side graph. ``localCheckpoint``
     truncates the per-round lineage so the plan doesn't grow exponentially.
     Rounds needed = graph diameter; near-dup graphs are quasi-cliques
-    (diameter 2-4) so this converges in a handful of rounds. For adversarial
-    long-chain graphs prefer the alternating large-star/small-star variant
-    (same building blocks, O(log n) rounds).
+    (diameter 2-4) so this converges in a handful of rounds. A graph whose
+    labels still change after ``max_iter`` rounds (a long chain) RAISES
+    rather than returning unconverged labels.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = symmetrize(e, "a", "b").distinct().persist()
     # seed with min(self, direct neighbours) — one aggregation, saves a round.
     labels = e.groupBy("a").agg(F.least(F.first("a"), F.min("b")).alias("comp")).localCheckpoint()
+    converged = False
     for _ in range(max_iter):
         nbr = (
             e.join(labels.select(F.col("a").alias("b"), F.col("comp").alias("nc")), "b")
@@ -350,106 +351,17 @@ def connected_components(
             .select("a", F.least("old", F.coalesce("nc", F.col("old"))).alias("comp"), "old")
             .localCheckpoint()
         )
-        changed = new.where(F.col("comp") != F.col("old")).limit(1).count()
+        converged = new.where(F.col("comp") != F.col("old")).limit(1).count() == 0
         labels = new.drop("old")
-        if changed == 0:
+        if converged:
             break
     e.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; raise max_iter"
+        )
     return labels.select(F.col("a").alias("node"), F.col("comp").alias("component"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (the two-phase MapReduce CC construction): converges in O(log n) rounds
-    on ANY graph shape, including the long-chain adversarial case where
-    hash-min label propagation needs diameter rounds.
-
-    - large-star: every node u links each STRICTLY GREATER neighbour to the
-      minimum of its closed neighbourhood min(Γ(u) ∪ {u});
-    - small-star: with edges oriented parent<child, every node links each
-      ≤-neighbour (and itself) to that same minimum.
-
-    Each round is two (groupBy-min + join + project + distinct) passes —
-    node-id-keyed shuffles, no driver-side graph state; ``localCheckpoint``
-    truncates lineage per round. Convergence = the oriented edge set is
-    stable (count + order-independent xxhash64 sum — one cheap aggregate,
-    no join-diff). At the fixed point the edge set IS the star forest
-    (child → component-min), so the result needs no extra propagation.
-
-    Use this variant when the duplicate graph may contain long chains
-    (transitive near-dup paths); :func:`connected_components` (hash-min) is
-    preferred for the quasi-clique graphs LSH dedup actually produces, where
-    diameter ≈ 2-4 makes its per-round constant cheaper.
-    """
-    # orient parent<child: (u,v) with u < v, u the parent. least/greatest
-    # maps (a,b) and (b,a) to the same row, so no symmetrize is needed.
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = (
-        e0.where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("p"), F.greatest("a", "b").alias("c")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = e.select(F.col("p").alias("n")).union(
-        e.select(F.col("c").alias("n"))
-    ).distinct().localCheckpoint()
-
-    def _signature(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a long sum of xxhash64 values
-            # overflows (ANSI mode raises); decimal keeps the signature
-            # order-independent and exact.
-            F.coalesce(
-                F.sum(F.xxhash64("p", "c").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    sig = _signature(e)
-    for _ in range(max_iter):
-        # large-star over the symmetric view: m(u) = min(Γ(u) ∪ {u});
-        # connect v > u to m(u).
-        sym = symmetrize(e, "p", "c")
-        m = sym.groupBy("p").agg(
-            F.least(F.min("c"), F.first("p")).alias("m")
-        )
-        large = (
-            sym.join(m, "p")
-            .where(F.col("c") > F.col("p"))
-            .select(F.least("m", "c").alias("p"), F.greatest("m", "c").alias("c"))
-            .where(F.col("p") != F.col("c"))
-            .distinct()
-        )
-        # small-star over the oriented view: every node links its parents
-        # (≤-neighbours) and itself to the minimum parent.
-        mp = large.groupBy("c").agg(F.min("p").alias("m"))
-        small = (
-            large.join(mp, "c")
-            .select(F.col("m").alias("p"), F.col("p").alias("c"))
-            .where(F.col("p") != F.col("c"))
-            .union(large.join(mp, "c").select(F.col("m").alias("p"), "c"))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = _signature(small)
-        e = small
-        if new_sig == sig:
-            break
-        sig = new_sig
-    comp = e.select(F.col("c").alias("node"), F.col("p").alias("component"))
-    roots = nodes.join(
-        e.select(F.col("c").alias("n")), "n", "left_anti"
-    ).select(F.col("n").alias("node"), F.col("n").alias("component"))
-    return comp.union(roots)
 
 
 def _min_inter(sz: Column, threshold: float) -> Column:
@@ -794,8 +706,8 @@ def containment_topk(
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc top-``k`` containers from the EXACT :func:`containment_pairs`
-    relation, bounded at k·n from the start (the lesson of
-    ``dedup_ngram_jaccard``): per contained doc, its k strongest containers
+    relation, bounded at k·n from the start (an all-pairs result is
+    output-bound on replica-dense corpora): per contained doc, its k strongest containers
     by (containment DESC, container id ASC), cut with the mergeable
     :func:`~platform_etl_drug_disease_spark.operators.scans.bounded_top_k_rows`
     — no per-doc window over an unbounded pair set. Returns

@@ -164,10 +164,6 @@ def bow_fingerprint_of(tok_col: Column | str) -> Column:
     return F.md5(F.concat_ws(" ", t))
 
 
-def bow_fingerprint(text: Column | str) -> Column:
-    return bow_fingerprint_of(tokens(text))
-
-
 def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles over an ALREADY-MATERIALIZED token array
     column. ``tok_col`` must be a plain column reference: inlining the

@@ -24,7 +24,6 @@ from platform_etl_drug_disease_spark.operators.sampling import (
 )
 from platform_etl_drug_disease_spark.operators.dedup import (
     connected_components,
-    connected_components_star,
     containment_minhash_candidates,
     containment_minhash_topk,
     containment_pairs,
@@ -142,46 +141,6 @@ FROM toks JOIN documents d USING (doc_id)
 """
 
 
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-vocabulary language ID (n-gram heuristic) vs the labeled lang."""
-    docs = ensure_compute_partitions(
-        load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang"]), "doc_id"
-    )
-    detected = docs.withColumn("__toks", tx.tokens("text")).select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        tx.lang_id_of(F.col("__toks")).alias("detected_lang"),
-    )
-    return detected.groupBy("labeled_lang", "detected_lang").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-
-
-# the oracle replicates the argmax-with-alphabetical-tie-break exactly:
-# max over (score, reverse-alphabetical lang) structs.
-_LANG_ID_SQL = _TOKS_CTE + """
-, scored AS (
-    SELECT doc_id, lang AS labeled_lang,
-           [
-             {'score': len(list_filter(t, x -> list_contains(['the','a','of','and','to'], x))), 'lang': 'en'},
-             {'score': len(list_filter(t, x -> list_contains(['el','la','de','los','y'], x))), 'lang': 'es'},
-             {'score': len(list_filter(t, x -> list_contains(['le','la','les','des','et'], x))), 'lang': 'fr'},
-             {'score': len(list_filter(t, x -> list_contains(['der','die','das','und','ein'], x))), 'lang': 'de'}
-           ] AS pairs
-    FROM toks
-), best AS (
-    SELECT doc_id, labeled_lang,
-           list_aggregate(list_sort(pairs), 'max') AS b
-    FROM scored
-)
-SELECT labeled_lang,
-       CASE WHEN b['score'] > 0 THEN b['lang'] ELSE 'und' END AS detected_lang,
-       COUNT(*) AS n_docs
-FROM best
-GROUP BY 1, 2
-"""
-
-
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup clusters by md5(text) — hash-groupBy, O(1) per cluster."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
@@ -197,96 +156,20 @@ GROUP BY 1
 """
 
 
-def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-of-words fingerprint clusters: catches token-order/whitespace
-    variants exact dedup misses."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    return (
-        docs.select("doc_id", tx.bow_fingerprint("text").alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
-_DEDUP_FP_SQL = _TOKS_CTE + """
-SELECT md5(list_aggregate(list_sort(list_distinct(t)), 'string_agg', ' ')) AS fingerprint,
-       MIN(doc_id) AS keeper_id,
-       COUNT(*) AS n_docs
-FROM toks
-GROUP BY 1
-HAVING COUNT(*) > 1
-"""
-
-
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered trigram Jaccard pairs ≥ 0.5, lang-blocked: candidates
-    must share one of each doc's ⌊|sh|/2⌋+1 globally-rarest shingles
-    (PPJoin prefix principle — lossless at the threshold), then an exact
-    count-based verify over all shingles (operators/dedup.jaccard_pairs).
-    The df>256 cap only bounds prefix membership against stop-phrase
-    shingles; reported jaccard values always count every shingle."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang"])
-    return jaccard_pairs(
-        docs, "doc_id", "text", shingle_n=3, threshold=0.5, block_col="lang",
-        max_shingle_df=256,
-    )
-
-
-# Mirrors the Spark pipeline exactly: df-ranked prefixes (ascending df,
-# shingle tie-break; df>256 shingles excluded from prefixes), prefix-share
-# candidates, then the exact intersection COUNT over all shingles. The core
-# (through `verified`) is shared with the top-k variant below.
-_JACCARD_CORE = _SHINGLES_CTE + """
-, ex AS (SELECT doc_id, lang, len(sh) AS sz, unnest(sh) AS s FROM sh),
-freq AS (SELECT s, COUNT(*) AS df FROM ex GROUP BY s HAVING COUNT(*) <= 256),
-ranked AS (
-    SELECT ex.doc_id, ex.lang, ex.sz, ex.s,
-           row_number() OVER (PARTITION BY ex.doc_id
-                              ORDER BY freq.df, ex.s) AS rn
-    FROM ex JOIN freq USING (s)
-),
-pref AS (SELECT doc_id, lang, s FROM ranked
-         WHERE rn <= sz - CAST(ceil(sz * 0.5 - 1e-6) AS INT) + 1),
-cands AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM pref a JOIN pref b
-      ON a.s = b.s AND a.doc_id < b.doc_id AND a.lang = b.lang
-),
-inter AS (
-    SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-    FROM cands c
-    JOIN ex ea ON ea.doc_id = c.id_a
-    JOIN ex eb ON eb.doc_id = c.id_b AND eb.s = ea.s
-    GROUP BY c.id_a, c.id_b
-),
-verified AS (
-    SELECT i.id_a, i.id_b,
-           round(i.n_inter * 1.0
-                 / (sa.sz + sb.sz - i.n_inter), 6) AS jaccard
-    FROM inter i
-    JOIN (SELECT DISTINCT doc_id, sz FROM ex) sa ON i.id_a = sa.doc_id
-    JOIN (SELECT DISTINCT doc_id, sz FROM ex) sb ON i.id_b = sb.doc_id
-)
-SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5
-"""
-
-_JACCARD_SQL = _JACCARD_CORE
-
-
 def dedup_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-3 exact-Jaccard neighbours among pairs ≥ 0.5: the
-    headline-safe exact variant. ``dedup_ngram_jaccard``'s
-    all-pairs contract is inherently output-bound (~2,948× fan-out on the
-    adversarial sf≈1 corpus — every downstream consumer inherits it); this
-    form symmetrizes the verified pairs and cuts each doc to its k=3
+    """Per-doc top-3 exact-Jaccard neighbours among pairs ≥ 0.5, lang-blocked:
+    candidates must share one of each doc's ⌊|sh|/2⌋+1 globally-rarest
+    trigram shingles (PPJoin prefix principle — lossless at the threshold),
+    then an exact count-based verify over all shingles
+    (operators/dedup.jaccard_pairs; the df>256 cap only bounds prefix
+    membership). The all-pairs result is output-bound (~2,948× fan-out on
+    the adversarial sf≈1 corpus — every downstream consumer inherits it);
+    this form symmetrizes the verified pairs and cuts each doc to its k=3
     strongest neighbours, so the OUTPUT and everything consuming it is
     bounded at k·n rows no matter how large duplicate clusters grow. The
-    intermediate candidate/verify fan-out is shared with the unbounded form
-    and remains the documented exact-path trade (MinHash+LSH is the 100-TB
-    candidate path; the recall audit prices the difference) — what this
-    query fixes is the result-set contract, which is what re-enters the
-    timed headline.
+    intermediate candidate/verify fan-out remains the documented exact-path
+    trade (MinHash+LSH is the 100-TB candidate path; the recall audit
+    prices the difference).
 
     The per-doc cut uses ``bounded_top_k_rows`` (hash-bucketed mergeable
     top-k), NOT a row_number window over all pairs: a 1M-replica cluster
@@ -326,10 +209,42 @@ def dedup_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JACCARD_TOPK_SQL = _JACCARD_CORE.replace(
-    "SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5",
-    """
-, pairs AS (SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5),
+# Mirrors the Spark pipeline exactly: df-ranked prefixes (ascending df,
+# shingle tie-break; df>256 shingles excluded from prefixes), prefix-share
+# candidates, the exact intersection COUNT over all shingles, then the
+# symmetrized per-doc top-3.
+_JACCARD_TOPK_SQL = _SHINGLES_CTE + """
+, ex AS (SELECT doc_id, lang, len(sh) AS sz, unnest(sh) AS s FROM sh),
+freq AS (SELECT s, COUNT(*) AS df FROM ex GROUP BY s HAVING COUNT(*) <= 256),
+ranked AS (
+    SELECT ex.doc_id, ex.lang, ex.sz, ex.s,
+           row_number() OVER (PARTITION BY ex.doc_id
+                              ORDER BY freq.df, ex.s) AS rn
+    FROM ex JOIN freq USING (s)
+),
+pref AS (SELECT doc_id, lang, s FROM ranked
+         WHERE rn <= sz - CAST(ceil(sz * 0.5 - 1e-6) AS INT) + 1),
+cands AS (
+    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+    FROM pref a JOIN pref b
+      ON a.s = b.s AND a.doc_id < b.doc_id AND a.lang = b.lang
+),
+inter AS (
+    SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
+    FROM cands c
+    JOIN ex ea ON ea.doc_id = c.id_a
+    JOIN ex eb ON eb.doc_id = c.id_b AND eb.s = ea.s
+    GROUP BY c.id_a, c.id_b
+),
+verified AS (
+    SELECT i.id_a, i.id_b,
+           round(i.n_inter * 1.0
+                 / (sa.sz + sb.sz - i.n_inter), 6) AS jaccard
+    FROM inter i
+    JOIN (SELECT DISTINCT doc_id, sz FROM ex) sa ON i.id_a = sa.doc_id
+    JOIN (SELECT DISTINCT doc_id, sz FROM ex) sb ON i.id_b = sb.doc_id
+),
+pairs AS (SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5),
 sym AS (
     SELECT id_a AS doc_id, id_b AS nbr_id, jaccard FROM pairs
     UNION ALL
@@ -342,8 +257,7 @@ FROM (
                               ORDER BY jaccard DESC, nbr_id) AS rn
     FROM sym
 ) WHERE rn <= 3
-""",
-)
+"""
 
 
 def _containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,9 +434,9 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     This measures the one lossy step of the documented 100-TB near-dup
     path — candidate GENERATION (the banded self-join, before the exact
     verify) — against the lossless prefix-filtered exact path
-    (``jaccard_pairs``), turning ``dedup_ngram_jaccard``'s headline
-    exclusion into a quantified trade: every decile's measured recall can
-    be read against its theoretical floor. Truth is computed WITHOUT lang
+    (``jaccard_pairs``), turning the exact path's scale cost into a
+    quantified trade: every decile's measured recall can be read against
+    its theoretical floor. Truth is computed WITHOUT lang
     blocking so cross-language true pairs (which MinHash also sees) count
     in the denominator.
 
@@ -578,11 +492,12 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _recall_audit_sql() -> str:
-    """Truth = the proven _JACCARD_SQL mirror minus lang blocking; candidates
-    = the banded-signature self-join from _SIGS_CTE (no verify). The Spark
-    prefix ranks by (df, xxhash64) and this mirror by (df, shingle text) —
-    both are consistent global orders, so the lossless prefix filter yields
-    the same thresholded truth set (the dedup_ngram_jaccard-proven pattern)."""
+    """Truth = the prefix/verify core of _JACCARD_TOPK_SQL minus lang
+    blocking; candidates = the banded-signature self-join from _SIGS_CTE (no
+    verify). The Spark prefix ranks by (df, xxhash64) and this mirror by
+    (df, shingle text) — both are consistent global orders, so the lossless
+    prefix filter yields the same thresholded truth set (as in the
+    dedup_ngram_jaccard_topk oracle)."""
     bound_case = "CASE jaccard_decile " + " ".join(
         f"WHEN {d} THEN {txt}" for d, txt in _lsh_bound_literals()
     ) + " END"
@@ -1207,8 +1122,8 @@ def _containment_recall_audit_sql() -> str:
     sampled truth, so leaving mcands unfiltered is value-identical). The
     Spark prefix ranks by (df, xxhash64) and this mirror by (df, shingle
     text) — both consistent global orders, so the lossless prefix filter
-    yields the same thresholded truth (the dedup_ngram_jaccard-proven
-    pattern). Wilson CI arithmetic mirrors the Spark expression tree
+    yields the same thresholded truth (as in the dedup_ngram_jaccard_topk
+    oracle). Wilson CI arithmetic mirrors the Spark expression tree
     op-for-op on the ROUNDED recall."""
     bound_case = (
         "CASE "
@@ -1401,34 +1316,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def corpus_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/val/test assignment (md5-bucket, 80/10/10): split
-    membership is a pure function of doc_id — stable across partitioning,
-    retries, engines, and corpus growth (operators/sampling.py)."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "lang"])
-    return (
-        docs.select(
-            "lang",
-            split_assign("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}).alias("split"),
-        )
-        .groupBy("split", "lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-_SPLIT_BUCKET = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7)) AS BIGINT) % 10000"
-
-_SPLIT_SQL = f"""
-SELECT CASE WHEN {_SPLIT_BUCKET} < 8000 THEN 'train'
-            WHEN {_SPLIT_BUCKET} < 9000 THEN 'val'
-            ELSE 'test' END AS split,
-       lang,
-       COUNT(*) AS n_docs
-FROM documents
-GROUP BY 1, 2
-"""
-
-
 def corpus_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~10% corpus sample (salted md5-bucket draw, independent
     of the split assignment) with per-lang token totals."""
@@ -1446,50 +1333,6 @@ SELECT lang, COUNT(*) AS n_docs,
 FROM documents
 WHERE CAST(('0x' || substr(md5('s1' || CAST(doc_id AS VARCHAR)), 1, 7)) AS BIGINT) % 10000 < 1000
 GROUP BY lang
-"""
-
-
-def token_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing: assign docs (in deterministic doc_id order, per
-    lang) to contiguous ~4096-token training bins via a running token total
-    — bin = floor((cumsum − n_tokens) / budget).
-
-    Scale note: the naive `sum OVER (PARTITION BY lang
-    ORDER BY doc_id)` funnels every doc through ~|langs| reducers. The
-    running sum is computed by operators/scans.keyed_running_sum — a
-    two-phase scan over deterministic doc_id-range buckets whose shuffle
-    key is (lang, bucket) — with the narrow (doc_id, lang, n_tokens)
-    projection persisted so tokenization runs once. Identical output; the
-    oracle still runs the naive integer window arithmetic."""
-    budget = 4096
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "lang", "text"])
-    toks = docs.select(
-        "doc_id", "lang", tx.token_count("text").alias("n_tokens")
-    ).persist()  # fan-out: local-window pass + per-bucket totals pass
-    binned = keyed_running_sum(
-        toks, ["lang"], "doc_id", "n_tokens", "cum", n_buckets=64
-    ).withColumn("bin", F.floor((F.col("cum") - F.col("n_tokens")) / F.lit(budget)))
-    return binned.groupBy("lang", "bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("bin_tokens"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-    )
-
-
-_PACKING_SQL = _TOKS_CTE + """
-, toks_n AS (
-    SELECT doc_id, lang, CAST(len(t) AS INTEGER) AS n_tokens FROM toks
-), binned AS (
-    SELECT doc_id, lang, n_tokens,
-           CAST(floor((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       - n_tokens) / 4096.0) AS BIGINT) AS bin
-    FROM toks_n
-)
-SELECT lang, bin, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens,
-       MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-FROM binned GROUP BY 1, 2
 """
 
 
@@ -1576,47 +1419,6 @@ k AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_kept
 SELECT r.source, r.n_total,
        CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept, r.thresh
 FROM r LEFT JOIN k USING (source)
-"""
-
-
-def clean_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed curation pass: exact-dedup keepers (min doc_id per content
-    hash, one window — no self-join) filtered by quality ≥ 0.5, rolled up per
-    language. The end-to-end shape of a training-data cleaning stage."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "lang", "text"])
-    t = F.col("__toks")
-    scored = docs.withColumn("__toks", tx.tokens("text")).select(
-        "doc_id",
-        "lang",
-        F.md5("text").alias("__h"),
-        tx.quality_score_of(t).alias("q"),
-        tx.token_count_of(t).alias("n_tokens"),
-    )
-    w = Window.partitionBy("__h")
-    keep = scored.withColumn("__is_keeper", F.min("doc_id").over(w) == F.col("doc_id"))
-    clean = keep.where(F.col("__is_keeper") & (F.col("q") >= 0.5))
-    return clean.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-    )
-
-
-_CLEAN_SQL = _TOKS_CTE + """
-, scored AS (
-    SELECT d.doc_id, d.lang, md5(d.text) AS h,
-           round(0.4 * least(len(t) / 64.0, 1.0)
-               + 0.4 * coalesce(len(list_distinct(t)) * 1.0 / nullif(len(t), 0), 0.0)
-               + 0.2 * least(coalesce(len(list_filter(t, x -> list_contains(
-                     ['the','a','an','of','and','to','in','is','it','for'], x)))
-                     * 1.0 / nullif(len(t), 0), 0.0) * 4.0, 1.0), 6) AS q,
-           len(t) AS n_tokens
-    FROM toks JOIN documents d USING (doc_id)
-), keepers AS (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY h) = doc_id AS is_keeper FROM scored
-)
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-FROM keepers WHERE is_keeper AND q >= 0.5
-GROUP BY lang
 """
 
 
@@ -1763,21 +1565,6 @@ GROUP BY t.source
 """
 
 
-def dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clusters as ``dedup_cluster_components`` computed by the
-    alternating large-star/small-star construction (O(log n) rounds on any
-    graph shape, incl. long transitive near-dup chains where hash-min needs
-    diameter rounds) — same output, same oracle. The two CC algorithms
-    agreeing on the same ``dedup_minhash_lsh`` pair set is this query's
-    cross-validation value."""
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    comp = connected_components_star(pairs, "id_a", "id_b")
-    return comp.groupBy(F.col("component").alias("cluster_id")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        arr_join(F.sort_array(F.collect_list("node")), "string").alias("members"),
-    )
-
-
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingestion dedup: docs with ``doc_id % 10 == 0`` play the
     incoming batch, the rest the existing corpus; the batch is matched
@@ -1895,16 +1682,10 @@ GROUP BY split, lk.leaky_clusters
 
 QUERIES = {
     "text_stats": text_stats,
-    "corpus_split_stats": corpus_split_stats,
     "corpus_sample_stats": corpus_sample_stats,
-    "clean_corpus_stats": clean_corpus_stats,
     "corpus_mix_stats": corpus_mix_stats,
-    "token_bin_packing": token_bin_packing,
     "token_fingerprints": token_fingerprints,
-    "lang_id_heuristic": lang_id_heuristic,
     "dedup_exact": dedup_exact,
-    "dedup_fingerprint": dedup_fingerprint,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_ngram_jaccard_topk": dedup_ngram_jaccard_topk,
     "dedup_containment_topk": dedup_containment_topk,
     "dedup_containment_minhash_topk": dedup_containment_minhash_topk,
@@ -1917,7 +1698,6 @@ QUERIES = {
     "dedup_simhash": dedup_simhash,
     "repetition_quality": repetition_quality,
     "decontaminate_stats": decontaminate_stats,
-    "dedup_cluster_components_star": dedup_cluster_components_star,
     "dedup_incremental": dedup_incremental,
     "leakage_safe_split": leakage_safe_split,
     "temperature_mix_stats": temperature_mix_stats,
@@ -1925,16 +1705,10 @@ QUERIES = {
 
 ORACLES = {
     "text_stats": _TEXT_STATS_SQL,
-    "corpus_split_stats": _SPLIT_SQL,
     "corpus_sample_stats": _SAMPLE_SQL,
-    "clean_corpus_stats": _CLEAN_SQL,
     "corpus_mix_stats": _MIX_SQL,
-    "token_bin_packing": _PACKING_SQL,
     "token_fingerprints": _TOKEN_FP_SQL,
-    "lang_id_heuristic": _LANG_ID_SQL,
     "dedup_exact": _DEDUP_EXACT_SQL,
-    "dedup_fingerprint": _DEDUP_FP_SQL,
-    "dedup_ngram_jaccard": _JACCARD_SQL,
     "dedup_ngram_jaccard_topk": _JACCARD_TOPK_SQL,
     "dedup_containment_topk": _CONTAINMENT_SQL,
     "dedup_containment_minhash_topk": _CONTAINMENT_MINHASH_SQL,
@@ -1947,7 +1721,6 @@ ORACLES = {
     "dedup_simhash": _simhash_sql(),
     "repetition_quality": _REPETITION_SQL,
     "decontaminate_stats": _DECONTAM_SQL,
-    "dedup_cluster_components_star": _CC_SQL,
     "dedup_incremental": _INCREMENTAL_SQL,
     "leakage_safe_split": _LEAKAGE_SQL,
     "temperature_mix_stats": _TEMP_MIX_SQL,
@@ -2125,9 +1898,8 @@ def _keep_one_removals(docs: DataFrame, per_suffix: DataFrame) -> DataFrame:
     of their text (sliced from the family's sanitized token array — the
     digest shuffles, the text never does), with the lexicographically-first
     (doc_id, pos) occurrence per identity RETAINED and every other
-    occurrence listed for removal. Shared by the accounting twin
-    (``repeat_keep_one_retention``) and the release DAG's ``keep_one``
-    strip mode, so the accounting and the action can never diverge."""
+    occurrence listed for removal (``repeat_keep_one_retention``'s
+    removal set)."""
     starts = _lm_starts(per_suffix).where(F.col("repeat_len") >= _STRIP_LEN)
     toks = docs.select("doc_id", lr_tokens("text").alias("__t"))
     span = F.array_join(
@@ -2451,101 +2223,6 @@ QUERIES["top_repeated_spans"] = top_repeated_spans
 ORACLES["top_repeated_spans"] = _TOP_SPANS_SQL
 
 
-def repeat_mass_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source exact repeated-substring mass — the attribution question a
-    curation run asks right after the census: WHICH ingest source carries
-    the duplicated tokens? One row per ``documents.source``: total docs,
-    docs carrying at least one ≥ ``_LR_W``-token exact repeat, qualifying
-    suffix count, Σ repeat_len (the duplicated-token-mass proxy the suffix
-    family's scaling contract is stated in), and the longest repeat seen.
-
-    Scale shape: the per-suffix frame is pre-aggregated to AT MOST one row
-    per document BEFORE meeting the corpus-sized ``documents`` side, so the
-    join ships dup-doc-bounded rows; the final groupBy is on the
-    low-cardinality ``source`` with map-side partial aggregation. The usual
-    family conventions: ``n_capped_*`` disclosure on every row, and a
-    constant ``source = ''`` sentinel so the disclosure survives even an
-    empty-corpus edge where the per-source rows vanish."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "source"])
-    per_suffix, capped = _suffix_ranking(spark, sf_dir)
-    per_doc = per_suffix.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n_suf"),
-        F.sum("repeat_len").cast("bigint").alias("__mass"),
-        F.max("repeat_len").cast("bigint").alias("__maxlen"),
-    )
-    agg = (
-        docs.join(per_doc, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.count("__n_suf").cast("bigint").alias("n_docs_with_repeat"),
-            F.coalesce(F.sum("__n_suf"), F.lit(0)).cast("bigint").alias(
-                "n_repeat_suffixes"
-            ),
-            F.coalesce(F.sum("__mass"), F.lit(0)).cast("bigint").alias(
-                "repeat_token_mass"
-            ),
-            F.coalesce(F.max("__maxlen"), F.lit(0)).cast("bigint").alias(
-                "max_repeat_len"
-            ),
-        )
-    )
-    sentinel = spark.range(1).select(
-        F.lit("").alias("source"),
-        F.lit(0).cast("bigint").alias("n_docs"),
-        F.lit(0).cast("bigint").alias("n_docs_with_repeat"),
-        F.lit(0).cast("bigint").alias("n_repeat_suffixes"),
-        F.lit(0).cast("bigint").alias("repeat_token_mass"),
-        F.lit(0).cast("bigint").alias("max_repeat_len"),
-    )
-    return agg.unionByName(sentinel).crossJoin(F.broadcast(capped)).select(
-        "source",
-        "n_docs",
-        "n_docs_with_repeat",
-        "n_repeat_suffixes",
-        "repeat_token_mass",
-        "max_repeat_len",
-        "n_capped_anchors",
-        "n_capped_suffixes",
-    )
-
-
-_REPEAT_MASS_SQL = (
-    _TOKS_CTE
-    + _LR_CORE_SQL
-    + """
-, lrperdoc AS (
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_suf,
-           CAST(SUM(repeat_len) AS BIGINT) AS mass,
-           CAST(MAX(repeat_len) AS BIGINT) AS maxlen
-    FROM lrlen GROUP BY doc_id
-),
-lrsrc AS (
-    SELECT d.source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN p.n_suf IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_docs_with_repeat,
-           CAST(COALESCE(SUM(p.n_suf), 0) AS BIGINT) AS n_repeat_suffixes,
-           CAST(COALESCE(SUM(p.mass), 0) AS BIGINT) AS repeat_token_mass,
-           CAST(COALESCE(MAX(p.maxlen), 0) AS BIGINT) AS max_repeat_len
-    FROM documents d LEFT JOIN lrperdoc p USING (doc_id)
-    GROUP BY d.source
-    UNION ALL
-    SELECT '', CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-)
-SELECT s.source, s.n_docs, s.n_docs_with_repeat, s.n_repeat_suffixes,
-       s.repeat_token_mass, s.max_repeat_len,
-       h.n_capped_anchors, h.n_capped_suffixes
-FROM lrsrc s, lrhot h
-"""
-)
-
-QUERIES["repeat_mass_by_source"] = repeat_mass_by_source
-ORACLES["repeat_mass_by_source"] = _REPEAT_MASS_SQL
-
-
 # boilerplate-strip knobs shared by `repeat_keep_one_retention` and the
 # release pipeline's strip stage: token positions
 # covered by an exact repeat of >= _STRIP_LEN tokens (Lee et al. 2022's
@@ -2566,9 +2243,7 @@ def repeat_keep_one_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     losing tokens, total/removed/retained token mass — i.e. "what would
     the corpus keep if dedup kept one copy of each long repeat instead of
     stripping them all". The removal rows come from
-    ``_keep_one_removals``, the derivation the release DAG's ``keep_one``
-    strip mode applies, so this accounting and that action cannot
-    diverge.
+    ``_keep_one_removals``.
 
     Semantics: spans are LEFT-MAXIMAL starts (``top_repeated_spans``' rule)
     with repeat_len ≥ the strip threshold; span identity is the md5 of the
@@ -2629,9 +2304,11 @@ def repeat_keep_one_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# keep-one removal set (shared by the accounting twin and the keep_one
-# release oracle — the DuckDB mirror of _keep_one_removals)
-_K1_REM_CTE = f"""
+# the keep-one removal set k1rem mirrors _keep_one_removals
+_KEEP_ONE_SQL = (
+    _TOKS_CTE
+    + _LR_CORE_SQL
+    + f"""
 , k1starts AS (
     SELECT doc_id, pos, repeat_len FROM (
         SELECT doc_id, pos, repeat_len,
@@ -2654,15 +2331,8 @@ k1rem AS (
                       ORDER BY doc_id, pos) AS rk
         FROM k1occ
     ) WHERE rk > 1
-)
-"""
-
-_KEEP_ONE_SQL = (
-    _TOKS_CTE
-    + _LR_CORE_SQL
-    + _K1_REM_CTE
-    + f"""
-, k1cov0 AS (
+),
+k1cov0 AS (
     SELECT doc_id, pos, repeat_len,
            MAX(pos + repeat_len) OVER (PARTITION BY doc_id ORDER BY pos
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
@@ -2705,10 +2375,11 @@ ORACLES["repeat_keep_one_retention"] = _KEEP_ONE_SQL
 # census' _LR_CAP (where exact truth is unaffordable), but an audit must run
 # where truth IS affordable — the df ∈ (_CRE_MIN_DF, _LR_CAP] band — so the
 # catalog row compares estimate vs truth on real data at every scale.
-# Production use is the same operator at (min_anchor_df=_LR_CAP,
-# max_anchor_df=None, sample_per_anchor=64), pinned by
+# The production knobs (min_anchor_df=_LR_CAP, max_anchor_df=None,
+# sample_per_anchor=64) run in no catalog query: on the test snapshots no
+# anchor exceeds the cap, so such a query would return only its sentinel.
 # tests/test_extensions.py::test_sampled_repeat_lengths_planted_giant_anchor
-# on a planted >cap anchor.
+# pins that path on a planted >cap anchor.
 _CRE_MIN_DF = 2
 _CRE_S = 2
 
@@ -2877,150 +2548,6 @@ FROM crejoin j, creh h
 
 QUERIES["capped_repeat_estimate"] = capped_repeat_estimate
 ORACLES["capped_repeat_estimate"] = _CRE_SQL
-
-
-# production estimator knobs: anchors BEYOND the exact census' cap, the
-# operator's actual design point
-_CMP_S = 64
-
-
-def capped_mass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HT-ESTIMATED repeat-length distribution of the census' CAPPED mass
-    — the datacard column family a curator reads to
-    pick the strip threshold. The exact census excludes anchors hotter
-    than ``_LR_CAP`` and reports only two counters
-    (n_capped_anchors/n_capped_suffixes); this query runs
-    ``operators/dedup.sampled_repeat_lengths`` at its PRODUCTION knobs
-    (min_anchor_df=``_LR_CAP``, no upper bound, sample_per_anchor=
-    ``_CMP_S``) over exactly that excluded interior and reports, per
-    within-sample repeat_len: the sampled suffix count, the
-    Horvitz-Thompson-extrapolated suffix count (anchor_df/``_CMP_S``
-    weights), the HT-extrapolated repeated-token mass, and whether the
-    length clears the release DAG's ``_STRIP_LEN`` — so ``_STRIP_LEN`` is
-    chosen against MEASURED boilerplate mass, not blind. The constant
-    ``estimated = true`` column and the ``sample_per_anchor`` disclosure
-    mark every row as a sample-bounded estimate (within-sample lengths
-    are lower bounds of the corpus-wide truth).
-
-    On a corpus with no beyond-cap anchors (the small test snapshots) the
-    profile is just the sentinel row with a zero disclosure — honest and
-    hash-stable; tests/test_extensions.py pins the hot path on a planted
-    giant-anchor corpus. Scale shape: the estimator's cost is bounded by
-    n_capped_anchors × ``_CMP_S`` regardless of anchor heat (salted
-    two-stage ranking — see the operator docstring), which is the whole
-    reason this profile is affordable where the exact census is not."""
-    docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    sampled, _sel, disc = sampled_repeat_lengths(
-        docs,
-        "doc_id",
-        "text",
-        w=_LR_W,
-        min_anchor_df=_LR_CAP,
-        max_anchor_df=None,
-        sample_per_anchor=_CMP_S,
-    )
-    prof = sampled.groupBy("repeat_len").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sampled_suffixes"),
-        F.floor(F.sum("anchor_df") / F.lit(_CMP_S))
-        .cast("bigint")
-        .alias("est_n_suffixes"),
-        F.floor(
-            F.sum(F.col("repeat_len") * F.col("anchor_df")) / F.lit(_CMP_S)
-        )
-        .cast("bigint")
-        .alias("est_repeat_tokens"),
-    ).select(
-        F.col("repeat_len").cast("bigint").alias("repeat_len"),
-        "n_sampled_suffixes",
-        "est_n_suffixes",
-        "est_repeat_tokens",
-        (F.col("repeat_len") >= _STRIP_LEN).alias("strip_eligible"),
-    )
-    sentinel = spark.range(1).select(
-        F.lit(0).cast("bigint").alias("repeat_len"),
-        F.lit(0).cast("bigint").alias("n_sampled_suffixes"),
-        F.lit(0).cast("bigint").alias("est_n_suffixes"),
-        F.lit(0).cast("bigint").alias("est_repeat_tokens"),
-        F.lit(False).alias("strip_eligible"),
-    )
-    capped = disc.select(
-        F.col("n_selected_anchors").alias("n_capped_anchors"),
-        F.col("n_selected_suffixes").alias("n_capped_suffixes"),
-    )
-    return (
-        prof.unionByName(sentinel)
-        .crossJoin(F.broadcast(capped))
-        .withColumn("estimated", F.lit(True))
-        .withColumn("sample_per_anchor", F.lit(_CMP_S).cast("bigint"))
-    )
-
-
-_CMP_SQL = (
-    _TOKS_CTE
-    + _LR_CORE_SQL
-    + f"""
-, cmpband AS (
-    SELECT anchor, c FROM lrcnt WHERE c > {_LR_CAP}
-),
-cmpcand AS (
-    SELECT a.doc_id, a.pos, a.anchor, a.suf, b.c
-    FROM lranch a JOIN cmpband b USING (anchor)
-),
-cmpranked AS (
-    SELECT doc_id, pos, anchor, suf, c,
-           row_number() OVER (PARTITION BY anchor
-               ORDER BY md5(CAST(doc_id AS VARCHAR) || ':'
-                            || CAST(pos AS VARCHAR)),
-                        doc_id, pos) AS rk
-    FROM cmpcand
-),
-cmpsamp AS (
-    SELECT doc_id, pos, anchor, suf, c,
-           list_aggregate(suf, 'string_agg', chr(1)) AS suf_str
-    FROM cmpranked WHERE rk <= {_CMP_S}
-),
-cmpnb AS (
-    SELECT doc_id, pos, c, suf,
-           lag(suf) OVER cw AS psuf,
-           lead(suf) OVER cw AS nsuf
-    FROM cmpsamp WINDOW cw AS (PARTITION BY anchor ORDER BY suf_str, doc_id, pos)
-),
-cmplen AS (
-    SELECT c,
-           CAST(greatest(COALESCE({{lcp_p}}, 0), COALESCE({{lcp_n}}, 0))
-                AS BIGINT) AS repeat_len
-    FROM cmpnb
-),
-cmpprof AS (
-    SELECT repeat_len,
-           CAST(COUNT(*) AS BIGINT) AS n_sampled_suffixes,
-           CAST(SUM(c) // {_CMP_S} AS BIGINT) AS est_n_suffixes,
-           CAST(SUM(repeat_len * c) // {_CMP_S} AS BIGINT)
-               AS est_repeat_tokens,
-           repeat_len >= {_STRIP_LEN} AS strip_eligible
-    FROM cmplen GROUP BY repeat_len
-    UNION ALL
-    SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), FALSE
-),
-cmph AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_capped_anchors,
-           CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_capped_suffixes
-    FROM cmpband
-)
-SELECT p.repeat_len, p.n_sampled_suffixes, p.est_n_suffixes,
-       p.est_repeat_tokens, p.strip_eligible, h.n_capped_anchors,
-       h.n_capped_suffixes, TRUE AS estimated,
-       CAST({_CMP_S} AS BIGINT) AS sample_per_anchor
-FROM cmpprof p, cmph h
-"""
-).format(
-    lcp_p=_lr_lcp_sql("suf", "psuf"),
-    lcp_n=_lr_lcp_sql("suf", "nsuf"),
-)
-
-QUERIES["capped_mass_profile"] = capped_mass_profile
-ORACLES["capped_mass_profile"] = _CMP_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -3836,9 +3363,7 @@ ORACLES["source_coverage_greedy"] = _GREEDY_SQL
 # ---------------------------------------------------------------------------
 
 
-def corpus_release_pipeline(
-    spark: SparkSession, sf_dir: str, keep_one: bool = False
-) -> DataFrame:
+def corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END training-corpus release: exact-dedup keepers (min doc_id
     per content hash) filtered to quality ≥ 0.5, deterministically split
     80/10/10, BOILERPLATE-STRIPPED (token positions covered by an exact
@@ -3858,36 +3383,27 @@ def corpus_release_pipeline(
     left-maximal starts equals the union over all qualifying suffixes —
     every interior suffix's interval is contained in its left-maximal
     start's), so overlapping repeat starts are never double-counted.
-    Default mode strips ALL occurrences of a long repeat — the remove-all
-    variant of Lee et al.'s ExactSubstr; ``keep_one=True`` instead RETAINS
-    the lexicographically-first (doc_id, pos) occurrence per span identity
-    and strips only the rest, applying the removal derivation
-    (``_keep_one_removals``) the ``repeat_keep_one_retention`` accounting
-    twin reports (accounting and action share it, so they cannot
-    diverge). A husk's own
+    The strip removes ALL occurrences of a long repeat — the remove-all
+    variant of Lee et al.'s ExactSubstr (``repeat_keep_one_retention``
+    reports what the keep-one-copy variant would retain). A husk's own
     covered mass is accounted as its whole-doc drop, not in
-    stripped_tokens. The census cap's excluded boilerplate
-    mass (n_capped_*) is disclosed by the census queries, and the
-    HT-estimated length distribution of that capped mass — the signal for
-    choosing ``_STRIP_LEN`` itself — by ``capped_mass_profile``.
+    stripped_tokens. The census cap's excluded boilerplate mass
+    (n_capped_*) is disclosed by the census queries.
 
     COMPOSITION CAVEAT (documented semantics): repeat coverage
-    is computed over the PRE-dedup corpus, so under the default remove-all
-    strip a doc whose exact duplicates were removed by the dedup stage is
-    still fully covered by those deleted copies' spans — the kept
-    canonical copy husks out and duplicated content vanishes from the
-    release entirely (dedup's "keep one copy" is intentionally overridden
-    by the stricter boilerplate rule: content repeated ≥ _STRIP_LEN tokens
-    is treated as boilerplate wherever it occurs, canonical or not, and
-    the drop is visible in n_dropped_boilerplate). ``keep_one=True`` is
-    the mode that preserves one copy of every long repeat — including the
-    exact-duplicate case — and is the right composition when repeated
-    content should survive curation.
+    is computed over the PRE-dedup corpus, so a doc whose exact duplicates
+    were removed by the dedup stage is still fully covered by those
+    deleted copies' spans — the kept canonical copy husks out and
+    duplicated content vanishes from the release entirely (dedup's "keep
+    one copy" is intentionally overridden by the stricter boilerplate
+    rule: content repeated ≥ _STRIP_LEN tokens is treated as boilerplate
+    wherever it occurs, canonical or not, and the drop is visible in
+    n_dropped_boilerplate).
 
     Scale shape: ONE tokenize pass feeds hash, quality, and token counts
     (persisted at the fan-out — three consumers); coverage takes the
-    left-maximal starts (``_lm_starts``; for keep_one,
-    ``_keep_one_removals``) of the ``_suffix_ranking`` doubling loop and
+    left-maximal starts (``_lm_starts``) of the ``_suffix_ranking``
+    doubling loop and
     joins on doc_id pre-aggregated to one row per dup-carrying doc; dedup
     is a window, never a self-join; split membership is a pure
     hash function (no shuffle); the packing window runs per (split, lang)
@@ -3913,13 +3429,9 @@ def corpus_release_pipeline(
         "split", split_assign("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
     )
     # boilerplate coverage: interval union (shared _interval_removed pass)
-    # of the doc's >= _STRIP_LEN left-maximal spans — all occurrences in
-    # remove-all mode, only the non-canonical occurrences in keep_one mode.
+    # of the doc's >= _STRIP_LEN left-maximal spans
     per_suffix, _capped = _suffix_ranking(spark, sf_dir)
-    if keep_one:
-        occ = _keep_one_removals(docs, per_suffix)
-    else:
-        occ = _lm_starts(per_suffix).where(F.col("repeat_len") >= _STRIP_LEN)
+    occ = _lm_starts(per_suffix).where(F.col("repeat_len") >= _STRIP_LEN)
     # checkpointed (one row per dup-carrying doc): the packing pass and the
     # husk count both read it
     cov = (
@@ -3984,19 +3496,16 @@ def corpus_release_pipeline(
     )
 
 
-def _release_sql_for(cov_src: str, extra_cte: str = "") -> str:
-    """Release-manifest oracle, parametrized by the strip-coverage source:
-    remove-all covers every qualifying suffix interval (``cov_src`` = the
-    ≥ _STRIP_LEN lrlen rows — interval-union-identical to the Spark side's
-    left-maximal start set, since every interior suffix's interval is
-    contained in its left-maximal start's), keep_one covers only the
-    non-canonical occurrences (``cov_src`` = k1rem, via ``_K1_REM_CTE``)."""
-    return _TOKS_CTE + _LR_CORE_SQL + extra_cte + f"""
+# Release-manifest oracle: strip coverage is every >= _STRIP_LEN suffix
+# interval of lrlen, interval-union-identical to the Spark side's
+# left-maximal start set (every interior suffix's interval is contained in
+# its left-maximal start's).
+_RELEASE_SQL = _TOKS_CTE + _LR_CORE_SQL + f"""
 , relcov0 AS (
     SELECT doc_id, pos, repeat_len,
            MAX(pos + repeat_len) OVER (PARTITION BY doc_id ORDER BY pos
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-    FROM {cov_src}
+    FROM lrlen WHERE repeat_len >= {_STRIP_LEN}
 ), relcov AS (
     SELECT doc_id,
            CAST(SUM(GREATEST(pos + repeat_len
@@ -4064,31 +3573,9 @@ SELECT COALESCE(m.split, h.split) AS split,
 FROM manifest m FULL OUTER JOIN huskrel h ON m.split = h.split
 """
 
-
-_RELEASE_SQL = _release_sql_for(f"lrlen WHERE repeat_len >= {_STRIP_LEN}")
-_RELEASE_KEEP_ONE_SQL = _release_sql_for("k1rem", _K1_REM_CTE)
-
 QUERIES["corpus_release_pipeline"] = corpus_release_pipeline
 ORACLES["corpus_release_pipeline"] = _RELEASE_SQL
 
-
-def corpus_release_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``corpus_release_pipeline`` with the strip stage in ``keep_one``
-    mode: the lexicographically-first occurrence of
-    every ≥ ``_STRIP_LEN``-token repeated span is retained, only the other
-    occurrences are stripped — Lee et al. 2022's keep-one-copy ExactSubstr
-    as an EXECUTABLE pipeline variant, applying the same removal
-    derivation (``_keep_one_removals``) as the
-    ``repeat_keep_one_retention`` accounting twin (pytest ties the two:
-    the pipeline's per-doc coverage equals the twin's removal accounting
-    on every doc). Unlike remove-all, this mode cannot husk out
-    content that exists only as duplicates — one copy always survives the
-    strip (the dedup-then-strip composition hazard)."""
-    return corpus_release_pipeline(spark, sf_dir, keep_one=True)
-
-
-QUERIES["corpus_release_keep_one"] = corpus_release_keep_one
-ORACLES["corpus_release_keep_one"] = _RELEASE_KEEP_ONE_SQL
 
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID quality: confusion matrix of the marker-n-gram
@@ -4210,57 +3697,6 @@ FROM staged
 
 QUERIES["corpus_datacard"] = corpus_datacard
 ORACLES["corpus_datacard"] = _DATACARD_SQL
-
-
-
-def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filtered twin of ``decontaminate_stats`` — same flags, same
-    oracle, different physical strategy: the probe structure broadcast to
-    every task is a CONSTANT-SIZE Bloom bitmap (32 KB at m=2^18) instead
-    of the exact shingle set.
-
-    Why it exists: the exact-set broadcast is fine while the eval suite is
-    small, but a production decontamination sweep probes dozens of
-    benchmarks × all their n-grams — hundreds of MB of broadcast state.
-    The bitmap never grows; corpus (doc, shingle) pairs failing the
-    membership test die inside their scan stage, and only the tiny
-    bloom-surviving remainder reaches the exact semi-join that removes
-    false positives (so the output — and the oracle — is exactly the
-    n-gram-overlap answer, regardless of the filter's FP rate)."""
-    from platform_etl_drug_disease_spark.operators.sketches import bloom_prune
-    from platform_etl_drug_disease_spark.plans.retrieval import _load_docs
-
-    docs = _load_docs(spark, sf_dir, ["doc_id", "text", "source"])
-    sh = tx.with_shingles(docs, "text", 3).persist()
-    probe_sh = (
-        sh.where(F.col("doc_id") % 100 == 0)
-        .select(F.explode("sh").alias("shingle"))
-        .distinct()
-    )
-    train = sh.where(F.col("doc_id") % 100 != 0)
-    pairs = train.select("doc_id", F.explode("sh").alias("shingle"))
-    survivors = bloom_prune(
-        pairs, "shingle", probe_sh, "shingle", m_bits=1 << 18, k_hashes=5
-    )
-    contaminated = (
-        survivors.join(F.broadcast(probe_sh), "shingle", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("__flag", F.lit(1))
-    )
-    return (
-        train.select("doc_id", "source")
-        .join(contaminated, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count(F.col("__flag")).alias("n_contaminated"),
-        )
-    )
-
-
-QUERIES["decontaminate_bloom"] = decontaminate_bloom
-ORACLES["decontaminate_bloom"] = _DECONTAM_SQL
 
 
 def quality_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4544,7 +3980,7 @@ def dedup_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # components via the same recursive-closure CTE as _CC_SQL, then quality
-# (the _CLEAN_SQL formula) and an argmax by (q DESC, node) per cluster.
+# (the _FEATURE_MATRIX_SQL formula) and an argmax by (q DESC, node) per cluster.
 _QUALITY_KEEPER_SQL = (
     _SHINGLES_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
     + _MINHASH_PAIRS_CORE

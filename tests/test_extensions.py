@@ -55,7 +55,7 @@ def test_bow_fingerprint_order_invariant(spark):
     df = spark.createDataFrame(
         [("alpha beta gamma",), ("gamma  alpha beta",)], "text: string"
     )
-    fps = [r[0] for r in df.select(tx.bow_fingerprint("text")).collect()]
+    fps = [r[0] for r in df.select(tx.bow_fingerprint_of(tx.tokens("text"))).collect()]
     assert fps[0] == fps[1]
 
 
@@ -103,9 +103,9 @@ def test_dedup_recall_audit_s_curve(spark, tmp_path):
     bound at every decile's lower edge, exact duplicates always recalled,
     counts consistent. Deterministic (fixed md5 hash family + fixed planted
     text), so the per-decile assertions are stable pins, not flaky
-    statistics — this is the evidence that retires dedup_ngram_jaccard's
-    scale-weak flag as a measured trade (MinHash recall is known per
-    similarity band, not an open question)."""
+    statistics — this is the evidence that makes the exact Jaccard path's
+    scale cost a measured trade (MinHash recall is known per similarity
+    band, not an open question)."""
     from platform_etl_drug_disease_spark.plans.dedup_text import (
         _lsh_bound_literals,
         dedup_recall_audit,
@@ -394,39 +394,60 @@ def test_decontaminate_semi_join_flags_overlap(spark):
         assert 0 <= r["n_contaminated"] <= r["n_docs"]
 
 
-def test_star_cc_long_chain_converges_fast(spark):
-    """A 2,000-edge path graph: hash-min label propagation needs diameter
-    (~2,000) rounds; the alternating-star construction must finish within
-    its 25-round cap and label every node with the chain head."""
+def test_hash_min_cc_raises_when_rounds_run_out(spark):
+    """Hash-min label propagation moves a label one hop per round, so a
+    path graph needs about its length in rounds. A 12-edge chain with
+    max_iter=3 still has labels changing when the rounds run out: the
+    operator must raise instead of returning unconverged labels. A chain
+    the rounds can close labels every node with the chain head."""
+    import pytest as _pytest
+
     from platform_etl_drug_disease_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
     )
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(2000)], "a: long, b: long"
+    long_chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "a: long, b: long"
     )
-    out = connected_components_star(edges, "a", "b").collect()
-    assert len(out) == 2001
+    with _pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(long_chain, "a", "b", max_iter=3)
+    # 3 edges: the seed and two rounds move labels, the third round sees
+    # none change
+    short_chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(3)], "a: long, b: long"
+    )
+    out = connected_components(short_chain, "a", "b", max_iter=3).collect()
+    assert len(out) == 4
     assert {r["component"] for r in out} == {0}
 
 
-def test_star_cc_matches_hash_min_on_random_graphs(spark):
+def test_hash_min_cc_matches_union_find_on_random_graphs(spark):
+    """Hash-min components equal a pure-Python union-find's on a seeded
+    random graph: each node labeled with the smallest node it reaches."""
     import random
 
     from platform_etl_drug_disease_spark.operators.dedup import (
         connected_components,
-        connected_components_star,
     )
 
     rng = random.Random(7)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
     edges = [(a, b) for a, b in edges if a != b]
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    expected = {(n, find(n)) for n in parent}
     df = spark.createDataFrame(edges, "a: long, b: long")
-    star = {(r["node"], r["component"])
-            for r in connected_components_star(df, "a", "b").collect()}
-    hmin = {(r["node"], r["component"])
-            for r in connected_components(df, "a", "b").collect()}
-    assert star == hmin
+    got = {(r["node"], r["component"])
+           for r in connected_components(df, "a", "b").collect()}
+    assert got == expected
 
 
 def test_incremental_minhash_matches_batch_vs_corpus(spark):
@@ -888,13 +909,18 @@ def test_jaccard_topk_equals_window_cut_of_full_pairs(spark):
     """The bounded-top-k path must produce exactly the per-doc top-3 (by
     jaccard DESC, neighbour ASC) of the symmetrized full thresholded pair
     set — the mergeable cut may never change the result, only the plan."""
+    from platform_etl_drug_disease_spark.operators.dedup import jaccard_pairs
     from platform_etl_drug_disease_spark.plans.dedup_text import (
-        dedup_ngram_jaccard,
         dedup_ngram_jaccard_topk,
     )
+    from platform_etl_drug_disease_spark.schemas import load_table
 
     sf = "/root/testdata/sf0.001"
-    pairs = dedup_ngram_jaccard(spark, sf).collect()
+    docs = load_table(spark, sf, "documents", ["doc_id", "text", "lang"])
+    pairs = jaccard_pairs(
+        docs, "doc_id", "text", shingle_n=3, threshold=0.5, block_col="lang",
+        max_shingle_df=256,
+    ).collect()
     sym: dict[int, list[tuple[float, int]]] = {}
     for r in pairs:
         sym.setdefault(r["id_a"], []).append((-r["jaccard"], r["id_b"]))
@@ -1547,7 +1573,8 @@ def test_sampled_repeat_lengths_planted_giant_anchor(spark):
     ranking predicts, (c) report the TRUE interior lengths 40−q for every
     sampled suffix (all block occurrences share the full remainder, so the
     within-sample lower bound is tight here), and (d) HT-extrapolate each
-    length's sampled count back to the full 600-suffix anchor mass."""
+    length's sampled count back to the full 600-suffix anchor mass; (e) the
+    salted two-stage rank is salt-invariant."""
     import hashlib
 
     from platform_etl_drug_disease_spark.operators.dedup import (
@@ -1606,6 +1633,14 @@ def test_sampled_repeat_lengths_planted_giant_anchor(spark):
         for ln in by_len
     }
     assert est == {40 - q: n_docs for q in range(33)}
+    # (e) heat-robust ranking: the global top-S equals the top-S of the
+    # union of per-salt top-S, whatever the salt count
+    s_salted, _sel, _disc = sampled_repeat_lengths(
+        df, "doc_id", "text", w=8, min_anchor_df=512, sample_per_anchor=64,
+        salt_buckets=5,
+    )
+    key = lambda r: (r["doc_id"], r["pos"], r["repeat_len"])  # noqa: E731
+    assert sorted(map(key, s_salted.collect())) == sorted(map(key, rows))
 
 
 def test_sampled_repeat_lengths_rejects_degenerate_sample(spark):
@@ -1929,134 +1964,6 @@ def test_lr_tokens_separator_bytes_sanitized(spark, tmp_path):
         (r["repeat_len"], r["n_suffixes"], r["n_docs"],
          r["n_capped_anchors"], r["n_capped_suffixes"])
         for r in rows
-    )
-
-
-def test_release_keep_one_matches_retention_twin(spark, tmp_path):
-    """keep_one as an EXECUTABLE strip mode whose
-    retained token mass equals the accounting twin's ``tokens_retained``
-    (fixture chosen so no doc husks or fails quality — the pipeline's only
-    attrition is the strip itself). Remove-all on the same corpus strips
-    the canonical copy too, so the two manifests differ by exactly the one
-    retained header."""
-    import duckdb
-
-    from platform_etl_drug_disease_spark.plans import dedup_text as dt
-
-    header = " ".join(f"hdr{j}" for j in range(30))
-    docs = [
-        (i, "en", "web",
-         header + " " + " ".join(f"u{i}w{j}" for j in range(80)))
-        for i in range(1, 16)
-    ]
-    spark.createDataFrame(
-        docs, "doc_id: long, lang: string, source: string, text: string"
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    twin = {
-        r["source"]: r
-        for r in dt.repeat_keep_one_retention(spark, str(tmp_path)).collect()
-    }["web"]
-    assert twin["tokens_total"] == 15 * 110
-    assert twin["tokens_removed"] == 14 * 30  # doc 1 keeps the canonical
-    keep = dt.corpus_release_keep_one(spark, str(tmp_path)).collect()
-    assert sum(r["n_dropped_boilerplate"] for r in keep) == 0
-    assert sum(r["n_docs"] for r in keep) == 15
-    # THE tie: pipeline-retained mass == twin's accounting, by shared rows
-    assert sum(r["n_tokens"] for r in keep) == twin["tokens_retained"]
-    remove_all = dt.corpus_release_pipeline(spark, str(tmp_path)).collect()
-    assert (
-        sum(r["n_tokens"] for r in keep)
-        - sum(r["n_tokens"] for r in remove_all)
-        == 30
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/documents.parquet/*.parquet')"
-    )
-    oracle = {
-        r[0]: tuple(r[1:])
-        for r in con.execute(dt._RELEASE_KEEP_ONE_SQL).fetchall()
-    }
-    got = {
-        r["split"]: (
-            r["n_docs"], r["n_tokens"], r["n_bins"],
-            round(r["mean_bin_fill"], 6), r["stripped_tokens"],
-            r["n_dropped_boilerplate"],
-        )
-        for r in keep
-    }
-    assert got == {
-        s: (v[0], v[1], v[2], round(v[3], 6), v[4], v[5])
-        for s, v in oracle.items()
-    }
-
-
-def test_capped_mass_profile_planted_giant_anchor(spark, tmp_path):
-    """At production knobs: the 40-token block planted in
-    600 docs is INVISIBLE to the exact census (every block anchor's df=600
-    exceeds the 512 cap) but fully profiled by capped_mass_profile — exact
-    HT recovery of the excluded mass per length, strip-eligibility against
-    _STRIP_LEN, and byte-identical DuckDB parity."""
-    import duckdb
-
-    from platform_etl_drug_disease_spark.operators.dedup import (
-        sampled_repeat_lengths,
-    )
-    from platform_etl_drug_disease_spark.plans import dedup_text as dt
-
-    n_docs, blk = 600, [f"blk{j}" for j in range(40)]
-    docs = [
-        (i, "en", "web",
-         " ".join([f"x{i}n{j}" for j in range(5)] + blk
-                  + [f"y{i}n{j}" for j in range(5)]))
-        for i in range(1, n_docs + 1)
-    ]
-    spark.createDataFrame(
-        docs, "doc_id: long, lang: string, source: string, text: string"
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    rows = dt.capped_mass_profile(spark, str(tmp_path)).collect()
-    prof = {r["repeat_len"]: r for r in rows if r["repeat_len"] > 0}
-    # block offsets q=0..32 → within-sample length 40-q, each with the full
-    # 64-suffix sample HT-recovering the true 600-suffix anchor mass
-    assert set(prof) == {40 - q for q in range(33)}
-    for ln, r in prof.items():
-        assert r["n_sampled_suffixes"] == 64
-        assert r["est_n_suffixes"] == n_docs
-        assert r["est_repeat_tokens"] == ln * n_docs
-        assert r["strip_eligible"] == (ln >= dt._STRIP_LEN)
-        assert r["estimated"] is True
-        assert r["n_capped_anchors"] == 33
-        assert r["n_capped_suffixes"] == 33 * n_docs
-        assert r["sample_per_anchor"] == 64
-    sent = [r for r in rows if r["repeat_len"] == 0]
-    assert len(sent) == 1 and sent[0]["strip_eligible"] is False
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/documents.parquet/*.parquet')"
-    )
-    oracle = sorted(map(tuple, con.execute(dt._CMP_SQL).fetchall()))
-    assert oracle == sorted(
-        (r["repeat_len"], r["n_sampled_suffixes"], r["est_n_suffixes"],
-         r["est_repeat_tokens"], r["strip_eligible"], r["n_capped_anchors"],
-         r["n_capped_suffixes"], r["estimated"], r["sample_per_anchor"])
-        for r in rows
-    )
-    # the salted two-stage rank is salt-invariant: global top-S == top-S of
-    # the union of per-salt top-S (the heat-robust ranking)
-    loaded = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    s_default, _x, _y = sampled_repeat_lengths(
-        loaded, "doc_id", "text", w=8, min_anchor_df=512,
-        sample_per_anchor=64,
-    )
-    s_salted, _x2, _y2 = sampled_repeat_lengths(
-        loaded, "doc_id", "text", w=8, min_anchor_df=512,
-        sample_per_anchor=64, salt_buckets=5,
-    )
-    key = lambda r: (r["doc_id"], r["pos"], r["repeat_len"])  # noqa: E731
-    assert sorted(map(key, s_default.collect())) == sorted(
-        map(key, s_salted.collect())
     )
 
 

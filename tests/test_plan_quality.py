@@ -318,19 +318,19 @@ def test_quantile_windows_consume_the_histogram(spark):
 
 
 def test_corpus_text_scans_have_compute_partitions(spark):
-    """Regression: token_fingerprints and lang_id_heuristic ran
+    """Regression: token_fingerprints and the language-ID scan ran
     their per-token folds on the single partition the one-file fixture
     scan dictated (21x/13x wall at 10x data). ensure_compute_partitions
     must widen the scan before the expensive projection."""
     from platform_etl_drug_disease_spark.plans.dedup_text import (
-        lang_id_heuristic,
+        lang_id_confusion,
         token_fingerprints,
     )
 
     # AQE legitimately coalesces the tiny smoke-sf shuffle back down, so
     # assert the REPARTITION exchange exists in the plan (it sizes with the
     # data at real scale) rather than the runtime partition count.
-    for q in (token_fingerprints, lang_id_heuristic):
+    for q in (token_fingerprints, lang_id_confusion):
         plan = q(spark, "/root/testdata/sf0.001")._jdf.queryExecution().executedPlan().toString()
         assert "REPARTITION_BY" in plan, f"{q.__name__} scan not widened before the token fold"
 

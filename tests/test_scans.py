@@ -130,14 +130,13 @@ def test_lint_clears_high_card_partition(spark):
 @pytest.mark.parametrize(
     "name",
     [
-        "token_bin_packing",
         "corpus_release_pipeline",
         "source_overlap_jaccard",
         "event_interarrival_stats",
     ],
 )
 def test_rewritten_plans_pass_lint(spark, name):
-    """The four serialization points plan without any
+    """The three serialization points plan without any
     low-cardinality ordered window over unaggregated input."""
     from platform_etl_drug_disease_spark.plans import merged_catalog
 

@@ -13,7 +13,9 @@ failure classes a collect()-based compare hides:
   equal values, different hashes → here a dtype FAIL.
 
 Queries without an oracle (the rows-only sketches) print ``ok?`` with their
-row count. The exit status is non-zero when any query fails.
+row count. The summary line gives the pass count and the pass's elapsed
+seconds (session start included). The exit status is non-zero when any
+query fails.
 
 Run before every commit:
 
@@ -25,6 +27,7 @@ from __future__ import annotations
 import argparse
 import glob
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -111,6 +114,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*", help="subset of query names")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
+    t0 = time.perf_counter()
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
@@ -156,7 +160,8 @@ def main() -> int:
             failures.append(name)
         else:
             print(f"PASS  {name} ({len(sp)} rows)")
-    print(f"\n{len(names) - len(failures)}/{len(names)} passed")
+    elapsed = time.perf_counter() - t0
+    print(f"\n{len(names) - len(failures)}/{len(names)} passed in {elapsed:.1f} s")
     return 1 if failures else 0
 
 
