@@ -192,9 +192,9 @@ def minhash_lsh_dedup(
     verified against the full shared-shingle pair table and was ~50× slower
     at sf0.1 — caught by a catalog timing run.)
 
-    The shingle table is built ONCE and persisted — it feeds the banded
-    self-join (2 consumers) and the exploded verify; without the persist the
-    source is scanned 4× (caught by plan_lint).
+    The shingle table is built ONCE and checkpointed — it feeds the banded
+    self-join (2 consumers) and the exploded verify; without the checkpoint
+    the source is scanned 4× (caught by plan_lint).
 
     Verify ships NO arrays: shingle arrays are distinct per doc, so joining
     candidates against the exploded (id, shingle) rows of both sides and
@@ -204,7 +204,7 @@ def minhash_lsh_dedup(
     ~650 MB of array payload through the shuffle; the count verify moves
     O(candidates × |sh|) narrow rows instead.
     """
-    sh = _shingle_table(df, id_col, text_col, shingle_n).persist()
+    sh = _shingle_table(df, id_col, text_col, shingle_n).localCheckpoint()
     cands = _candidates_from_shingles(sh, id_col, n_hashes, n_bands)
     ex_a = sh.select(
         F.col(id_col).alias("id_a"), F.explode("sh").alias("shingle")
@@ -266,11 +266,11 @@ def incremental_minhash_matches(
     if new_shingles is not None:
         new_sh = new_shingles
     else:
-        new_sh = _shingle_table(new_df, id_col, text_col, shingle_n).persist()
+        new_sh = _shingle_table(new_df, id_col, text_col, shingle_n).localCheckpoint()
     if corpus_shingles is not None:
         corpus_sh = corpus_shingles
     else:
-        corpus_sh = _shingle_table(corpus_df, id_col, text_col, shingle_n).persist()
+        corpus_sh = _shingle_table(corpus_df, id_col, text_col, shingle_n).localCheckpoint()
     nb = banded_signatures(new_sh, id_col, n_hashes, n_bands)
     cb = (
         corpus_bands
@@ -402,7 +402,8 @@ def _resolve_shingle_table(
     """The ``shingles=`` reuse-hook resolution shared by the pair family:
     a prebuilt (PERSISTED, unblocked) table is projected for free — no
     second persist layer — else the table is built and persisted here
-    (consumed by the exploded join and the per-doc size lookup). No
+    (consumed by the exploded join and the size lookup; released by the
+    caller once its pairs are checkpointed). No
     ``size(sh) > 0`` filter — see :func:`_shingle_table` for why."""
     if shingles is not None and block_col is not None:
         raise ValueError("a prebuilt shingle table carries no block column")
@@ -552,7 +553,7 @@ def jaccard_pairs(
     sizes = sh.select(F.col(id_col), F.col("__sz"))
     inter = F.col("__inter").cast("double")
     union = (F.col("__sz_a") + F.col("__sz_b")).cast("double") - inter
-    return (
+    out = (
         inter_cnt.join(
             sizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__sz_a")),
             "id_a",
@@ -565,6 +566,10 @@ def jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+    if shingles is None:
+        out = out.localCheckpoint()
+        sh.unpersist()
+    return out
 
 
 def containment_pairs(
@@ -683,7 +688,7 @@ def containment_pairs(
     ex_b = exploded.select(F.col(id_col).alias("id_b"), F.col("shingle"))
     inter = _count_intersections(cand, ex_a, ex_b)
     sizes = sh.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__sz_a"))
-    return (
+    out = (
         inter.join(sizes, "id_a")
         .withColumn(
             "containment",
@@ -692,6 +697,10 @@ def containment_pairs(
         .where(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
     )
+    if shingles is None:
+        out = out.localCheckpoint()
+        sh.unpersist()
+    return out
 
 
 def containment_topk(
@@ -965,7 +974,7 @@ def containment_minhash_topk(
     if shingles is not None:
         sh = shingles
     else:
-        sh = _shingle_table(df, id_col, text_col, shingle_n).persist()
+        sh = _shingle_table(df, id_col, text_col, shingle_n).localCheckpoint()
     cand = (
         candidates
         if candidates is not None
@@ -1080,21 +1089,21 @@ def incremental_containment_matches(
     tables, hot-shingle list, bucket-capped slot rows from
     :func:`containment_corpus_index`) so a multi-batch caller pays the
     corpus-sized work once per snapshot and owns the handles' lifecycle —
-    without them, everything is computed (and persisted) per call, which a
-    foreachBatch loop must not do."""
+    without them, everything is computed (and checkpointed) per call, which
+    a foreachBatch loop must not do."""
     if new_shingles is not None:
         new_sh = new_shingles
     else:
-        new_sh = _shingle_table(new_df, id_col, text_col, shingle_n).persist()
+        new_sh = _shingle_table(new_df, id_col, text_col, shingle_n).localCheckpoint()
     if corpus_shingles is not None:
         corpus_sh = corpus_shingles
     else:
-        corpus_sh = _shingle_table(corpus_df, id_col, text_col, shingle_n).persist()
+        corpus_sh = _shingle_table(corpus_df, id_col, text_col, shingle_n).localCheckpoint()
     hot_shingles = corpus_hot
     if hot_shingles is None and max_shingle_df is not None:
-        # consumed by both sides' anti-joins → persist the (tiny) list
+        # consumed by both sides' anti-joins → checkpoint the (tiny) list
         # rather than re-scanning corpus shingles per side.
-        hot_shingles = _hot_shingle_hashes(corpus_sh, max_shingle_df).persist()
+        hot_shingles = _hot_shingle_hashes(corpus_sh, max_shingle_df).localCheckpoint()
     nrows = minhash_slot_rows(
         new_sh, id_col, n_hashes, max_shingle_df=None, hot_hashes=hot_shingles
     )
@@ -1545,18 +1554,15 @@ def _doubling_loop(
 
 
 def sampled_repeat_lengths(
-    df: DataFrame,
+    frames: tuple[DataFrame, DataFrame],
     id_col: str,
-    text_col: str,
     w: int = 8,
     min_anchor_df: int = 512,
     max_anchor_df: int | None = None,
     sample_per_anchor: int = 64,
     max_rounds: int = 24,
-    return_selected: bool = False,
     salt_buckets: int = 64,
-    frames: tuple[DataFrame, DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """SAMPLED interior estimate of repeat lengths for anchors BEYOND the
     exact census' df cap. ``longest_repeat_lengths``
     excludes anchors shared by more than its cap and discloses the mass —
@@ -1610,16 +1616,17 @@ def sampled_repeat_lengths(
     sample_per_anchor × loop rounds) — bounded where the exact census'
     cost is unbounded above its cap.
 
+    ``frames``: the caller-owned ``(base, anchor_counts)`` pair from
+    :func:`suffix_base_plan` / :func:`suffix_anchor_counts` at this ``w``.
+
     Returns ``(sampled, selected, disclosure)``:
 
     - ``sampled``: (id_col, pos, repeat_len, anchor_df) — one row per
       sampled suffix; HT estimate of the anchor-mass at a given length is
       Σ anchor_df / sample_per_anchor over its sampled rows;
-    - ``selected``: (id_col, pos) of EVERY suffix of a selected anchor —
-      ``None`` unless ``return_selected=True`` (materializing it is
-      O(selected anchor MASS), which at beyond-cap knobs is exactly the
-      unbounded quantity this operator exists to avoid; only an audit that
-      joins against exact truth should pay it);
+    - ``selected``: (id_col, pos) of EVERY suffix of a selected anchor,
+      checkpointed — O(selected anchor MASS), the set an audit joins
+      against exact truth;
     - ``disclosure``: 1 row (n_selected_anchors, n_selected_suffixes).
     """
     from pyspark.sql import Window
@@ -1653,13 +1660,7 @@ def sampled_repeat_lengths(
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     if salt_buckets < 1:
         raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
-    if frames is None:
-        base = suffix_base_plan(df, id_col, text_col, w).persist()
-        cnt = suffix_anchor_counts(base, id_col, w)
-    else:
-        # caller-materialized shared pair — see longest_repeat_lengths;
-        # identical tokenize/anchor-shuffle work shared across operators.
-        base, cnt = frames
+    base, cnt = frames
     occ = suffix_occurrences(base, id_col, w)
     sel_cond = F.col("__df") > min_anchor_df
     if max_anchor_df is not None:
@@ -1677,15 +1678,9 @@ def sampled_repeat_lengths(
         ),
     ).localCheckpoint()
     cand = occ.join(sel, "__key")
-    # every suffix of a selected anchor — materialized only on request
-    # BEFORE base is released (an audit consumer joins this against exact
-    # truth; it is the disclosed anchor mass — two bigints per suffix —
-    # i.e. O(heat), which non-audit callers must not pay).
-    selected = (
-        cand.select(F.col(id_col), "pos").localCheckpoint()
-        if return_selected
-        else None
-    )
+    # every suffix of a selected anchor (the disclosed anchor mass — two
+    # bigints per suffix), which the audit joins against exact truth
+    selected = cand.select(F.col(id_col), "pos").localCheckpoint()
     # two-stage deterministic top-sample_per_anchor (see docstring
     # "HEAT-ROBUST RANKING"): stage 1 ranks within (anchor,
     # salt) so no task ever sorts more than ~df/salt_buckets rows of one
@@ -1720,8 +1715,6 @@ def sampled_repeat_lengths(
     resolved = _doubling_loop(
         alive, base.select(F.col(id_col), "__t"), id_col, w, max_rounds
     )
-    if frames is None:
-        base.unpersist()
     # a (doc, pos) suffix belongs to exactly one anchor (its own leading
     # w tokens), so the weight join-back is 1:1 on the sampled keys.
     sampled = resolved.join(weights, [id_col, "pos"]).select(

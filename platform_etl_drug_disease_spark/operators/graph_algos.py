@@ -90,7 +90,10 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-    return ranks.select(F.col("src").alias("node"), "rank")
+    out = ranks.select(F.col("src").alias("node"), "rank").localCheckpoint()
+    for df in (e, deg, n):
+        df.unpersist()
+    return out
 
 
 def personalized_pagerank(
@@ -108,7 +111,8 @@ def personalized_pagerank(
 
     Same plan discipline as the global form (edges persisted pre-
     partitioned on src; one groupBy(dst) shuffle per round; exact decimal
-    contribution sums), with two deltas: the per-node teleport vector p
+    contribution sums; the final ranks checkpointed so the caches can be
+    released), with two deltas: the per-node teleport vector p
     rides the persisted base table, and the rank update is a LEFT join so
     zero-rank nodes stay in the frontier (they acquire rank as mass
     reaches them). Same out-degree ≥ 1 precondition."""
@@ -152,7 +156,10 @@ def personalized_pagerank(
                 + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
             ).alias("rank"),
         )
-    return ranks.select(F.col("src").alias("node"), "rank")
+    out = ranks.select(F.col("src").alias("node"), "rank").localCheckpoint()
+    e.unpersist()
+    base.unpersist()
+    return out
 
 
 def orient_by_degree(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
@@ -205,7 +212,7 @@ def triangle_stats(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     )
     closing = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     triangles = wedges.join(closing, ["a", "c"], "left_semi")
-    return (
+    out = (
         pairs.agg(F.count(F.lit(1)).alias("n_edges"))
         .crossJoin(
             oriented.groupBy("src")
@@ -213,7 +220,11 @@ def triangle_stats(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
             .agg(F.max("od").alias("max_out_degree"))
         )
         .crossJoin(triangles.agg(F.count(F.lit(1)).alias("n_triangles")))
+        .localCheckpoint()
     )
+    pairs.unpersist()
+    oriented.unpersist()
+    return out
 
 
 def kcore_peel(
@@ -236,7 +247,7 @@ def kcore_peel(
     anti-joins; the frontier shrinks monotonically, so per-round cost
     falls. Rounds-to-converge is bounded by the peeling depth (degeneracy
     ordering length), small on real graphs."""
-    e = pairs.select(F.col(u).alias("u"), F.col(v).alias("v")).persist()
+    e0 = e = pairs.select(F.col(u).alias("u"), F.col(v).alias("v")).persist()
     stats = []
     for r in range(1, n_rounds + 1):
         deg = (
@@ -268,6 +279,7 @@ def kcore_peel(
             ).select(F.lit(r).alias("round"), "n_nodes", "n_edges")
         )
         e = new_e
+    e0.unpersist()
     out = stats[0]
     for st in stats[1:]:
         out = out.unionByName(st)
@@ -305,7 +317,7 @@ def node_clustering(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    return (
+    out = (
         deg.join(credits, "node", "left")
         .withColumn("n_triangles", F.coalesce("n_triangles", F.lit(0)))
         .withColumn(
@@ -316,7 +328,11 @@ def node_clustering(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
                 / (F.col("deg") * (F.col("deg") - 1)).cast("double"),
             ).otherwise(F.lit(0.0)),
         )
+        .localCheckpoint()
     )
+    pairs.unpersist()
+    oriented.unpersist()
+    return out
 
 
 def bfs_levels(

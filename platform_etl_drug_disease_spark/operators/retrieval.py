@@ -182,10 +182,10 @@ def bm25_search(
 
     The corpus is scanned and tokenized exactly ONCE: document length is
     Σtf over the postings table (every doc has ≥1 posting — empty text
-    tokenizes to ['']), so dl / avgdl / n_docs all derive from the persisted
+    tokenizes to ['']), so dl / avgdl / n_docs all derive from the checkpointed
     postings rather than re-reading the corpus (the repo plan linter flags
     multi-scan fan-outs)."""
-    post = postings(docs, id_col, text_col).persist()
+    post = postings(docs, id_col, text_col).localCheckpoint()
     dl = post.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     n_and_avg = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),

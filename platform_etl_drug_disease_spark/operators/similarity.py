@@ -207,13 +207,13 @@ def banded_near_dup(
     """
     block_cols = block_cols or []
     planes = hyperplanes(dim, n_bands * band_bits)
-    # persist the pruned projection with PRE-NORMALIZED vectors: it fans out
-    # 4 ways (both sides of the candidate join + both vector lookups of the
-    # verify), and normalizing once at cache-fill time means the per-pair
-    # verify needs a single dot fold instead of dot + two norms.
+    # checkpoint the pruned projection with PRE-NORMALIZED vectors: it fans
+    # out 4 ways (both sides of the candidate join + both vector lookups of
+    # the verify), and normalizing once at checkpoint time means the
+    # per-pair verify needs a single dot fold instead of dot + two norms.
     src = with_unit_vec(df, vec_col, "__nv").select(
         F.col(id_col), *[F.col(c) for c in block_cols], F.col("__nv")
-    ).persist()
+    ).localCheckpoint()
     keyed = src.select(
         F.col(id_col),
         *[F.col(c) for c in block_cols],
@@ -349,9 +349,9 @@ def knn_ivf(
     from pyspark.sql import Window
 
     # normalize each side once; centroids are tiny and consumed twice (cell
-    # assignment + query probing) — persist the normalized projection.
+    # assignment + query probing) — checkpoint the normalized projection.
     centsn = (
-        with_unit_vec(centroids, cent_vec, "__cnv").select(cent_id, "__cnv").persist()
+        with_unit_vec(centroids, cent_vec, "__cnv").select(cent_id, "__cnv").localCheckpoint()
     )
     candn = with_unit_vec(candidates, c_vec, "__nv").select(c_id, "__nv")
     cells = _assign_cells(candn, c_id, centsn, cent_id, ["__nv"])
@@ -471,31 +471,29 @@ def kmeans_fit(
     n). Nothing ever collects to the driver; centroids stay a C-row
     DataFrame that is broadcast into each assignment. Cost per iteration is
     exactly one corpus pass, so the 100-TB plan is n_iters scans of a
-    persisted normalized projection.
+    cached normalized projection.
 
     Assignment scores round to 6 places and tie-break on centroid id; the
     update accumulates in exact decimal — every iteration is deterministic,
     so the full fit (and its cell memberships) value-hash-matches a SQL
-    replay. Returns (centroids_after_n_iters, last_assignment); the last
-    assignment is the membership that PRODUCED the final centroids.
+    replay. Returns (centroids_after_n_iters, last_assignment), both eager
+    checkpoints; the last assignment is the membership that PRODUCED the
+    final centroids.
     """
     membersn = with_unit_vec(df.select(id_col, vec_col), vec_col, "__nv").select(
         id_col, "__nv"
     ).persist()
     cents = centroids
-    assigned = None
     for it in range(n_iters):
         centsn = with_unit_vec(cents, cent_vec, "__cnv").select(cent_id, "__cnv")
-        prev = assigned
-        # persist each round's assignment: it fans out (centroid update now,
-        # plus the caller's membership stats), and the next round's broadcast
-        # centroids embed it as a subquery — without the persist every
+        # checkpoint each round's assignment: it fans out (centroid update
+        # now, plus the caller's membership stats), and the next round's
+        # broadcast centroids embed it as a subquery — without it every
         # consumer replays the full corpus assignment.
-        assigned = _assign_cells(membersn, id_col, centsn, cent_id, ["__nv"]).persist()
-        if prev is not None:
-            prev.unpersist()
+        assigned = _assign_cells(membersn, id_col, centsn, cent_id, ["__nv"]).localCheckpoint()
         cents = _mean_centroids(assigned, cent_id, "__nv")
-    return cents.persist(), assigned.drop("__nv")
+    membersn.unpersist()
+    return cents.localCheckpoint(), assigned.drop("__nv")
 
 
 # --------------------------------------------------------------------------

@@ -59,7 +59,7 @@ def cms_heavy_hitters(
     ]
     rows = occ.select(
         key_col, *[b.alias(f"_b{i}") for i, b in enumerate(bucket_exprs)]
-    ).persist()
+    ).localCheckpoint()
 
     sketch = (
         rows.select(
@@ -74,7 +74,7 @@ def cms_heavy_hitters(
         sketch.crossJoin(F.broadcast(threshold))
         .where(F.col("_c") >= F.col("thr"))
         .select("_seed", "_bucket")
-        .persist()
+        .localCheckpoint()
     )
 
     survivors = rows

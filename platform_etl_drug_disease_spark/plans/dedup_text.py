@@ -454,7 +454,7 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     # ONE shingle table shared by the exact-truth and MinHash sides —
     # without it the corpus is tokenized/shingled/hashed twice.
-    sh = _shingle_table(docs, "doc_id", "text", shingle_n=3).persist()
+    sh = _shingle_table(docs, "doc_id", "text", shingle_n=3).localCheckpoint()
     truth = jaccard_pairs(
         docs, "doc_id", "text", shingle_n=3, threshold=0.5,
         block_col=None, max_shingle_df=256, shingles=sh,
@@ -963,7 +963,7 @@ def _containment_audit_cells(
     sh = (
         shingles
         if shingles is not None
-        else _shingle_table(docs, "doc_id", "text", shingle_n=3).persist()
+        else _shingle_table(docs, "doc_id", "text", shingle_n=3).localCheckpoint()
     )
     truth = containment_pairs(
         docs, "doc_id", "text", shingle_n=3, threshold=0.8,
@@ -1387,7 +1387,7 @@ def temperature_mix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("thresh"),
         )
-        .persist()
+        .localCheckpoint()
     )
     key = F.concat_ws("|", F.col("source"), F.col("doc_id").cast("string"))
     kept = (
@@ -1514,10 +1514,11 @@ def decontaminate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_drug_disease_spark.plans.retrieval import _load_docs
 
     docs = _load_docs(spark, sf_dir, ["doc_id", "text", "source"])
-    # persist: the shingled corpus fans out (probe vocabulary + train side),
-    # and the cache boundary also stops the explode-inferred size()>0 filter
-    # from sinking the shingle expression below the repartition exchange.
-    sh = tx.with_shingles(docs, "text", 3).persist()
+    # checkpoint: the shingled corpus fans out (probe vocabulary + train
+    # side), and the checkpoint boundary also stops the explode-inferred
+    # size()>0 filter from sinking the shingle expression below the
+    # repartition exchange.
+    sh = tx.with_shingles(docs, "text", 3).localCheckpoint()
     probe_sh = (
         sh.where(F.col("doc_id") % 100 == 0)
         .select(F.explode("sh").alias("shingle"))
@@ -1631,7 +1632,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = membership.withColumn(
         "split", split_assign("cluster_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    ).persist()
+    ).localCheckpoint()
     leaky = (
         assigned.groupBy("cluster_id")
         .agg(F.count_distinct("split").alias("ns"))
@@ -1760,7 +1761,6 @@ def substring_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         docs.select("doc_id", "source", tx.tokens("text").alias("t"))
         .withColumn("n", F.size("t"))
-        .persist()  # consumed twice: occurrence explode + final census
     )
     starts = F.when(F.col("n") >= _SUB_W, F.sequence(F.lit(0), F.col("n") - _SUB_W))
     occ = (
@@ -2418,15 +2418,12 @@ def capped_repeat_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = suffix_anchor_counts(base, "doc_id", _LR_W).localCheckpoint()
     frames = (base, cnt)
     sampled, selected, disc = sampled_repeat_lengths(
-        docs,
+        frames,
         "doc_id",
-        "text",
         w=_LR_W,
         min_anchor_df=_CRE_MIN_DF,
         max_anchor_df=_LR_CAP,
         sample_per_anchor=_CRE_S,
-        return_selected=True,  # the audit joins it against exact truth
-        frames=frames,
     )
     est = sampled.groupBy("repeat_len").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sampled_suffixes"),
@@ -2623,8 +2620,8 @@ ORACLES["bpe_merge_pair_stats"] = _BPE_SQL
 
 def _bpe_occ_dictseg(spark: SparkSession, sf_dir: str):
     """Shared BPE-apply substrate for ``bpe_encode_stats`` and its audit
-    twin: per-source word occurrences (persisted) and the segmented distinct-
-    word dictionary (persisted — the Arrow UDF runs once per VOCAB word, so
+    twin: per-source word occurrences (checkpointed) and the segmented
+    distinct-word dictionary (checkpointed — the Arrow UDF runs once per VOCAB word, so
     cost is ∝ vocabulary regardless of corpus size). The 20-row merge table
     is collected driver-side deliberately: it is the tokenizer artifact,
     config-sized by definition."""
@@ -2635,7 +2632,7 @@ def _bpe_occ_dictseg(spark: SparkSession, sf_dir: str):
         docs.withColumn("__toks", tx.tokens("text"))
         .select("source", F.explode_outer("__toks").alias("word"))
         .where(F.col("word").isNotNull() & (F.col("word") != ""))
-        .persist()
+        .localCheckpoint()
     )
     vocab = occ.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     pair_idx = F.when(
@@ -2651,7 +2648,7 @@ def _bpe_occ_dictseg(spark: SparkSession, sf_dir: str):
         .limit(20)
     )
     merges = [r.pair for r in top_pairs.collect()]
-    dictseg = segment_dictionary(vocab.select("word"), merges).persist()
+    dictseg = segment_dictionary(vocab.select("word"), merges).localCheckpoint()
     return occ, dictseg
 
 
@@ -2871,7 +2868,7 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.select("source", F.explode_outer("sh").alias("shingle"))
         .where(F.col("shingle").isNotNull())
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     sizes = src_sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -3058,7 +3055,7 @@ def word_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("w").isNotNull() & (F.length("w") > 0))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("df"))
-    ).persist()  # consumed by plant + union + final annotation joins
+    ).localCheckpoint()  # consumed by plant + union + final annotation joins
     planted = (
         words.where(F.length("w") >= 5)
         .select(
@@ -3070,7 +3067,7 @@ def word_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(words, "w", "left_anti")  # don't re-add real words
         .select("w", F.lit(0).alias("df"))
     )
-    vocab = words.unionByName(planted).persist()
+    vocab = words.unionByName(planted).localCheckpoint()
     keys = vocab.select(
         "w",
         F.explode(
@@ -3401,7 +3398,7 @@ def corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_dropped_boilerplate).
 
     Scale shape: ONE tokenize pass feeds hash, quality, and token counts
-    (persisted at the fan-out — three consumers); coverage takes the
+    (checkpointed at the fan-out — three consumers); coverage takes the
     left-maximal starts (``_lm_starts``) of the ``_suffix_ranking``
     doubling loop and
     joins on doc_id pre-aggregated to one row per dup-carrying doc; dedup
@@ -3419,7 +3416,7 @@ def corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             tx.quality_score_of(t).alias("q"),
             tx.token_count_of(t).alias("n_tokens"),
         )
-        .persist()  # fan-out: keeper window + quality filter + packing feed
+        .localCheckpoint()  # fan-out: keeper window + quality filter + packing feed
     )
     w = Window.partitionBy("__h")
     clean = scored.withColumn(
@@ -3457,8 +3454,8 @@ def corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # packing prefix sum via two-phase scan: the naive
     # window partitions by (split, lang) — ~30 keys — which would funnel
     # every clean doc through ~30 reducers at scale. keyed_running_sum
-    # buckets on doc_id ranges instead; `scored` upstream is persisted, so
-    # the second pass re-reads cached narrow rows.
+    # buckets on doc_id ranges instead; `scored` upstream is checkpointed,
+    # so the second pass re-reads checkpointed narrow rows.
     packed = keyed_running_sum(
         kept, ["split", "lang"], "doc_id", "n_eff", "__cum", n_buckets=64
     ).withColumn(
@@ -3587,7 +3584,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     pred = docs.select("lang", tx.lang_id("text").alias("pred"))
-    cells = pred.groupBy("lang", "pred").agg(F.count(F.lit(1)).alias("n")).persist()
+    cells = pred.groupBy("lang", "pred").agg(F.count(F.lit(1)).alias("n"))
     totals = cells.groupBy("lang").agg(F.sum("n").alias("n_true"))
     return cells.join(F.broadcast(totals), "lang").select(
         "lang",
@@ -3705,7 +3702,7 @@ def quality_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the corpus: token/diversity/stopword stats, the C4-style
     quality blend, detected language, raw PII hit count, and exact-dup
     group size. Everything is JVM codegen except nothing: two scans of
-    the persisted 4-column projection (feature projection + md5 group
+    the checkpointed 4-column projection (feature projection + md5 group
     sizes), one high-cardinality join on the content hash.
     """
     from platform_etl_drug_disease_spark.operators.pii import pii_counts
@@ -3713,7 +3710,7 @@ def quality_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_compute_partitions(
         load_table(spark, sf_dir, "documents", ["doc_id", "source", "lang", "text"]),
         "doc_id",
-    ).persist()
+    ).localCheckpoint()
     t = F.col("__toks")
     pii = pii_counts(F.col("text"))
     n_pii = None

@@ -257,13 +257,13 @@ def event_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny first/last aggregate) — shuffle key (type, bucket)."""
     from platform_etl_drug_disease_spark.operators.scans import keyed_lag_delta
 
-    # persist the 2-column projection: the two-phase scan consumes it three
-    # times (bounds aggregate, local lags, per-bucket ends) and the bounds
-    # aggregate is in-plan (lazy) — without the cache the scan repeats.
+    # checkpoint the 2-column projection: the two-phase scan consumes it
+    # three times (bounds aggregate, local lags, per-bucket ends) and the
+    # bounds aggregate is in-plan (lazy) — without it the scan repeats.
     ev = (
         load_table(spark, sf_dir, "events", ["event_type", "ts"])
         .select("event_type", F.unix_micros("ts").alias("us"))
-        .persist()
+        .localCheckpoint()
     )
     gaps = keyed_lag_delta(ev, ["event_type"], "us", n_buckets=64)
     return gaps.groupBy("event_type").agg(
@@ -480,11 +480,11 @@ def order_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     active = df.groupBy("o_custkey", "cohort_month", "month_offset").agg(
         F.lit(1).alias("_one")
     )
-    # cohort×offset-sized — persist so the sizes branch doesn't re-run the
-    # fact-table window/dedup subtree a second time.
+    # cohort×offset-sized — checkpoint so the sizes branch doesn't re-run
+    # the fact-table window/dedup subtree a second time.
     counts = active.groupBy("cohort_month", "month_offset").agg(
         F.count(F.lit(1)).alias("n_active")
-    ).persist()
+    ).localCheckpoint()
     sizes = counts.where(F.col("month_offset") == 0).select(
         "cohort_month", F.col("n_active").alias("cohort_size")
     )
@@ -543,7 +543,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count(F.lit(1)).alias("n"))
-    ).persist()  # |types|²-sized; consumed by totals + the final join
+    )
     totals = pairs.groupBy("prev_type").agg(F.sum("n").alias("n_prev"))
     return pairs.join(F.broadcast(totals), "prev_type").select(
         "prev_type",
@@ -804,7 +804,7 @@ def seasonal_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v6").alias("s"),
             F.sum(F.col("v6") * F.col("v6")).alias("ss"),
         )
-    ).persist()  # 120 rows; consumed by the per-type rollup and the join
+    )
     types = cells.groupBy("event_type").agg(
         F.sum("n").alias("tn"), F.sum("s").alias("ts_"), F.sum("ss").alias("tss")
     )
@@ -1028,7 +1028,7 @@ def hourly_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("event_type", F.date_trunc("hour", "ts").alias("h"))
         .groupBy("event_type", "h")
         .agg(F.count(F.lit(1)).alias("c"))
-    ).persist()  # consumed by span bounds + the dense-series join
+    ).localCheckpoint()  # consumed by span bounds + the dense-series join
     span = obs.groupBy("event_type").agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
     )
@@ -1123,7 +1123,7 @@ def hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("event_type", F.date_trunc("hour", "ts").alias("hour_ts"), "value")
         .groupBy("event_type", "hour_ts")
         .agg((dsum("value") / F.count("value")).alias("v"))
-    ).persist()  # consumed by span bounds + the dense-series join
+    )
     span = obs.groupBy("event_type").agg(
         F.min("hour_ts").alias("h0"), F.max("hour_ts").alias("h1")
     )
@@ -1580,7 +1580,7 @@ def type_dow_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("event_type", F.dayofweek("ts").alias("dow"))
         .groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).cast(d).alias("obs"))
-    ).persist()  # consumed by row totals, col totals, and the term build
+    ).localCheckpoint()  # consumed by row totals, col totals, and the term build
     rows_t = cells.groupBy("event_type").agg(F.sum("obs").alias("row_tot"))
     cols_t = cells.groupBy("dow").agg(F.sum("obs").alias("col_tot"))
     n_t = cells.agg(F.sum("obs").alias("n"))
@@ -1759,7 +1759,7 @@ def ab_conversion_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms = per_user.where(F.col("reached_view")).groupBy("arm").agg(
         F.count(F.lit(1)).cast(d).alias("n_exposed"),
         F.count(F.when(F.col("reached_purchase"), 1)).cast(d).alias("n_converted"),
-    ).persist()  # 2 rows; consumed by totals + the per-arm output
+    )
     tot = arms.agg(
         F.sum("n_exposed").alias("N"),
         F.sum("n_converted").alias("C"),
@@ -1898,7 +1898,7 @@ def growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             1 - F.greatest(F.col("is_new"), F.col("is_retained"))
         ).alias("resurrected"),
-    ).persist()  # consumed twice for the churn self-shift
+    )
     prev = monthly.select(
         (F.col("m") + F.expr("INTERVAL 1 MONTH")).alias("m"),
         F.col("active").alias("prev_active"),
@@ -1970,7 +1970,7 @@ def ab_cuped_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "arm",
         F.when(md5_bucket("user_id", 2, "ab1") == 0, "A").otherwise("B"),
-    ).persist()  # pooled moments + per-arm rollup
+    )
     d = "decimal(38,0)"
     pooled = per_user.agg(
         F.count(F.lit(1)).cast(d).alias("n"),

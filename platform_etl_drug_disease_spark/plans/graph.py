@@ -623,8 +623,8 @@ def personalized_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # persist: both the seed derivation and the operator's pre-partitioned
-    # edge table consume this (without the cache the lineitem⋈orders edge
-    # join recomputes for each — flagged by the repeated-scan lint).
+    # edge table consume this (else the lineitem⋈orders edge join recomputes
+    # for each); the operator returns a checkpoint, so release it after.
     edges = _sym_edges(spark, sf_dir).persist()
     cust = load_table(spark, sf_dir, "customer", ["c_custkey", "c_nationkey"])
     seeds = (
@@ -637,6 +637,7 @@ def personalized_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pr = personalized_pagerank(edges, seeds, n_iters=3, damping=0.85)
+    edges.unpersist()
     out = pr.select("node", dround("rank", 9).alias("rank"))
     top = out.orderBy(F.col("rank").desc(), "node").limit(20)
     w = Window.orderBy(F.col("rank").desc(), "node")

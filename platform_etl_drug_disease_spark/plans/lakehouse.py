@@ -210,14 +210,14 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # orders fans out to 4 consumers (pk check, fk parent set, fk child +
-    # its total), lineitem to 3 — persist the pruned projections so the
+    # its total), lineitem to 3 — checkpoint the pruned projections so the
     # audit reads each table once, not once per check.
     orders = load_table(
         spark, sf_dir, "orders", ["o_orderkey", "o_custkey"]
-    ).persist()
+    ).localCheckpoint()
     li = load_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_linenumber"]
-    ).persist()
+    ).localCheckpoint()
     cust = load_table(spark, sf_dir, "customer", ["c_custkey", "c_name"])
     events = load_table(spark, sf_dir, "events", ["value"])
     return audit(
@@ -503,9 +503,9 @@ def snapshot_diff_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_drug_disease_spark.operators.cdc import table_diff
 
     # old snapshot + three mutation branches + the diff's old side all read
-    # this projection — persist it once instead of re-scanning the snapshot
-    # 4× (at 100 TB the snapshot scan IS the cost of the diff).
-    orders = load_table(spark, sf_dir, "orders", _CDC_COLS).persist()
+    # this projection — checkpoint it once instead of re-scanning the
+    # snapshot 4× (at 100 TB the snapshot scan IS the cost of the diff).
+    orders = load_table(spark, sf_dir, "orders", _CDC_COLS).localCheckpoint()
     updated = orders.where(F.col("o_orderkey") % 10 == 3).select(
         "o_orderkey",
         F.lit("U").alias("o_orderstatus"),
@@ -572,7 +572,6 @@ def hll_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(F.hll_sketch_agg("user_id").alias("sk"))
-        .persist()  # consumed by all three rollup levels
     )
     day_rows = daily.select(
         F.lit("day").alias("level"),
@@ -605,11 +604,11 @@ def hll_rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     appears in the output: HLL union is a register max, order-insensitive,
     so ``hll_ok`` is deterministic and the oracle asserts TRUE per cell.
 
-    Scale shape: ONE events scan → distinct (day, user) pairs, persisted and
-    consumed by all four paths (the daily sketch build — HLL is
+    Scale shape: ONE events scan → distinct (day, user) pairs, checkpointed
+    and consumed by all four paths (the daily sketch build — HLL is
     duplicate-insensitive, so sketching the deduped pairs yields identical
     registers — plus the three exact levels). Week and all-time estimates
-    are SKETCH MERGES of the persisted daily sketches, exactly the
+    are SKETCH MERGES of the checkpointed daily sketches, exactly the
     pre-aggregated rollup pattern the headline query demonstrates; the exact
     side re-aggregates the deduped pair table, whose cardinality is bounded
     by |days|×|users|, not the event count."""
@@ -617,10 +616,10 @@ def hll_rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         ev.select(F.date_trunc("day", "ts").alias("day"), "user_id")
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     daily = (
-        pairs.groupBy("day").agg(F.hll_sketch_agg("user_id").alias("sk")).persist()
+        pairs.groupBy("day").agg(F.hll_sketch_agg("user_id").alias("sk")).localCheckpoint()
     )
     est = (
         daily.select(
@@ -912,8 +911,8 @@ def incremental_backfill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     new version directly, so the driver check IS the proof that partial
     recompute ≡ full recompute.
 
-    Scale shape: the day-level aggregate table is computed once (persisted,
-    both versions' sums ride the same scan as paired columns); the merge is
+    Scale shape: the day-level aggregate table is computed once (both
+    versions' sums ride the same scan as paired columns); the merge is
     a |days|-row selection, never a row-level join. At 100 TB the recompute
     cost is |changed partitions|, the check cost is two fingerprint
     aggregates."""
@@ -934,7 +933,6 @@ def incremental_backfill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(v_new.cast(d)).alias("sum_new"),
             F.count(F.when(changed, 1)).alias("n_changed"),
         )
-        .persist()  # plan + merge both read it
     )
     # the change plan: days where any row mutated (fingerprint diff stands
     # in as n_changed > 0 here — partition_change_plan proves the hash form)

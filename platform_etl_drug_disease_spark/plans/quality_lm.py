@@ -145,7 +145,7 @@ def heavy_shingle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode_outer(tx.raw_shingles_from_tokens("__toks")).alias("sh")
         )
         .where(F.col("sh").isNotNull())
-        .persist()
+        .localCheckpoint()
     )
     thr = occ.agg(
         (F.floor(F.count(F.lit(1)) / F.countDistinct("sh")) + F.lit(3))
@@ -184,14 +184,14 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a, b) text after floor-rounded PMI keeps the cut deterministic."""
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     toks = docs.withColumn("__toks", tx.tokens("text"))
-    # uni fans out three ways (total, a-side, b-side) — persist the
+    # uni fans out three ways (total, a-side, b-side) — checkpoint the
     # vocabulary-sized count table so the corpus tokenization runs once.
     uni = (
         toks.select(F.explode_outer("__toks").alias("tok"))
         .where(F.col("tok").isNotNull())
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .localCheckpoint()
     )
     tot_u = uni.agg(F.sum("c").cast("bigint").alias("t"))
     bigc = (
@@ -201,7 +201,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("g").isNotNull())
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("c_ab"))
-        .persist()
+        .localCheckpoint()
     )
     tot_b = bigc.agg(F.sum("c_ab").cast("bigint").alias("bt"))
     cand = (
@@ -310,8 +310,8 @@ def cms_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUE, so any hash/bucketing drift fails the driver gate.
 
     Plan shape: ONE token scan → the map-side-combinable exact count table
-    (vocab-sized, persisted — consumed by the top-20 TakeOrderedAndProject
-    AND the sketch build); the counters are the SAME multiset sum built
+    (vocab-sized, consumed by the top-20 TakeOrderedAndProject AND the
+    sketch build); the counters are the SAME multiset sum built
     from (token, count) rows — ``counter(d,b) = Σ count over tokens
     hashing to b`` — so md5 runs once per DISTINCT token instead of once
     per occurrence (measured 10.3 s → sub-second at sf≈1: occurrence-level
@@ -325,9 +325,7 @@ def cms_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode_outer(tx.tokens("text")).alias("tok"))
         .where(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
-    exact = (
-        occ.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt")).persist()
-    )
+    exact = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
     top = exact.orderBy(F.col("exact_cnt").desc(), "tok").limit(20)
 
     def cms_rows(src: DataFrame, *keep: str) -> DataFrame:
@@ -499,7 +497,7 @@ def quality_winsor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q, doc_id) ordering, so:  lo = min q with cum-1 ≥ .05(n-1)  and
     hi = max q with cum-c ≤ .95(n-1)  — identical to the window form.
     The bounds table is |sources| rows → broadcast back; means are
-    decimal-exact sums over the persisted narrow (source, q) projection."""
+    decimal-exact sums over the narrow (source, q) projection."""
     docs = ensure_compute_partitions(
         load_table(spark, sf_dir, "documents", ["doc_id", "text", "source"]),
         "doc_id",
@@ -508,7 +506,7 @@ def quality_winsor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         tx.quality_score("text").alias("q"),
-    ).persist()  # fan-out: histogram pass + clipped-means pass
+    )
     counts = scored.groupBy("source", "q").agg(F.count(F.lit(1)).alias("c"))
     cum_w = (
         Window.partitionBy("source")
@@ -695,12 +693,12 @@ def quality_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b"),
     ).where(F.col("b").isNotNull()).select("doc_id", "b.w1", "b.w2")
     # fan-outs: doc_bg feeds the LM build AND the scoring join; lm_bg
-    # feeds three marginals plus the join — persist both or the tokenizer
-    # re-runs five times (caught by plan_lint).
+    # feeds three marginals plus the join — checkpoint both or the
+    # tokenizer re-runs five times (caught by plan_lint).
     doc_bg = bg.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).alias("c")
-    ).persist()
-    lm_bg = doc_bg.groupBy("w1", "w2").agg(F.sum("c").alias("c12")).persist()
+    ).localCheckpoint()
+    lm_bg = doc_bg.groupBy("w1", "w2").agg(F.sum("c").alias("c12")).localCheckpoint()
     lm_uni = lm_bg.groupBy("w1").agg(F.sum("c12").alias("c1"))
     uni2 = lm_bg.groupBy("w2").agg(F.sum("c12").alias("c2"))
     n_tot = lm_bg.agg(F.sum("c12").alias("n"))
@@ -949,7 +947,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("double")
             )
         ).alias("neyman_w"),
-    ).persist()  # feeds both the apportionment and the output join
+    )
     quotas = apportion_quota(w, "source", "neyman_w", total=10_000)
     return (
         w.join(F.broadcast(quotas), "source")
@@ -1035,7 +1033,7 @@ def source_nucleus_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             tx.quality_score("text").cast("decimal(18,6)").alias("q"),
         )
         .where(F.col("q") > 0)
-        .persist()  # fan-out: histogram pass + boundary-bucket doc pass
+        .localCheckpoint()  # fan-out: histogram pass + boundary-bucket doc pass
     )
     hist = (
         scored.groupBy("source", "q")
@@ -1206,7 +1204,7 @@ def dsir_importance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", bucket.alias("b"))
         .groupBy("doc_id", "source", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()  # feeds the two bucket models AND the scoring join
+        .localCheckpoint()  # feeds the two bucket models AND the scoring join
     )
     tgt = db.where(F.col("source") == "src0")
     raw = db.where(F.col("source") != "src0")
@@ -1241,7 +1239,7 @@ def dsir_importance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "source")
         # exact: c and lr are integers (logw is in 1e-6 ln units)
         .agg(F.sum(F.col("c") * F.col("lr")).cast("bigint").alias("logw"))
-        .persist()  # feeds the threshold histogram AND the final rollup
+        .localCheckpoint()  # feeds the threshold histogram AND the final rollup
     )
     hist = value_histogram(
         scored.where(F.col("source") != "src0").withColumn("__g", F.lit(1)),
@@ -1361,7 +1359,7 @@ def doremi_mixture_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("tok").isNotNull())
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()  # feeds corpus counts, per-source totals, and the join
+        .localCheckpoint()  # feeds corpus counts, per-source totals, and the join
     )
     ct = st.groupBy("tok").agg(F.sum("c").alias("ctot"))
     ns = st.groupBy("source").agg(F.sum("c").alias("n_s"))
@@ -1399,17 +1397,17 @@ def doremi_mixture_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(baseline * F.exp(excess) * F.lit(1e9) + F.lit(0.5))
         .cast("bigint")
     )
-    # persist: the k-row scored table feeds BOTH the normalizer sum and the
-    # final select — unpersisted, the vocabulary-sized token join and the
-    # per-source rollup evaluate twice (the repeated-scan
-    # lint can't see it because the persisted st hides it behind one scan).
+    # checkpoint: the k-row scored table feeds BOTH the normalizer sum and
+    # the final select — without it, the vocabulary-sized token join and
+    # the per-source rollup evaluate twice (the repeated-scan lint can't
+    # see it because the checkpointed st hides it behind one scan).
     scored = per_source.select(
         "source",
         "n_tokens",
         dround(baseline, 6).alias("baseline_share"),
         (F.floor(excess * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("excess_kl"),
         term_scaled.alias("__term"),
-    ).persist()
+    ).localCheckpoint()
     tot = scored.agg(F.sum("__term").cast("bigint").alias("__tot"))
     return (
         scored.crossJoin(F.broadcast(tot))
@@ -1493,7 +1491,7 @@ def doremi_token_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("__wu"),
         )
-        .persist()  # k rows; feeds the apportionment AND the output join
+        .localCheckpoint()  # k rows; feeds the apportionment AND the output join
     )
     quotas = apportion_quota(weights, "source", "__wu", total=1_000_000, out="token_quota")
     return weights.select("source", "doremi_weight").join(quotas, "source")

@@ -395,9 +395,9 @@ def segment_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     done = orders.where(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    # persist: the intersect result fans out to both output branches —
+    # checkpoint: the intersect result fans out to both output branches —
     # without it each branch recomputes it, scanning orders twice more.
-    both = open_.intersect(done).persist()
+    both = open_.intersect(done).localCheckpoint()
     auto = cust.where(F.col("c_mktsegment") == "AUTOMOBILE").select("c_custkey")
     return both.exceptAll(auto).withColumn("bucket", F.lit("both_not_auto")).unionByName(
         both.intersect(auto).withColumn("bucket", F.lit("both_auto"))
@@ -1341,7 +1341,7 @@ def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-supplier graph builder — co-occurrence work scales with baskets,
     never |parts|²."""
     li = load_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"])
-    baskets = li.distinct().persist()  # pair build + item supports + N
+    baskets = li.distinct().localCheckpoint()  # pair build + item supports + N
     n_orders = baskets.agg(
         F.countDistinct("l_orderkey").alias("n_baskets")
     )
@@ -1931,7 +1931,7 @@ def price_mad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     h1 = (
         _price_flag_histogram(spark, sf_dir)
         .where(F.col("l_extendedprice").isNotNull())
-        .persist()
+        .localCheckpoint()
     )
     med = median_from_hist(h1, "l_returnflag", "l_extendedprice", "median")
     h2 = (
@@ -1943,7 +1943,7 @@ def price_mad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_returnflag", "d")
         .agg(F.sum("c").alias("c"))
-        .persist()  # feeds the MAD rank pass + the outlier census
+        .localCheckpoint()  # feeds the MAD rank pass + the outlier census
     )
     mad = median_from_hist(h2, "l_returnflag", "d", "mad").select(
         "l_returnflag", "mad"

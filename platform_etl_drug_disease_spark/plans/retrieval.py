@@ -322,9 +322,9 @@ def boilerplate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("key"),
         )
-        # spans fan out (census + join-back): without the persist the whole
-        # shingle→md5 pipeline runs twice over the corpus.
-        .persist()
+        # spans fan out (census + join-back): without the checkpoint the
+        # whole shingle→md5 pipeline runs twice over the corpus.
+        .localCheckpoint()
     )
     total = docs.agg(F.count(F.lit(1)).alias("n_total"))
     freq_keys = (

@@ -276,9 +276,9 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride is computed declaratively (count aggregate broadcast into the
     filter), no driver-side collect.
 
-    The pruned (vec_id, embedding) projection is persisted: it fans out four
-    ways (candidates, queries, the stride count, the centroid filter)."""
-    emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
+    The pruned (vec_id, embedding) projection is checkpointed: it fans out
+    four ways (candidates, queries, the stride count, the centroid filter)."""
+    emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).localCheckpoint()
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
@@ -349,7 +349,7 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     member count, and an md5 digest of the sorted member ids — cluster-then-
     keep dedup whose cost is O(n·√n) assignment + one aggregate, never a
     pairwise join. Fully deterministic → value-hash oracle."""
-    emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
+    emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).localCheckpoint()
     stride = emb.agg(
         F.ceil(F.count(F.lit(1)) / F.ceil(F.sqrt(F.count(F.lit(1)))))
         .cast("bigint")
@@ -401,8 +401,8 @@ _KM_K, _KM_ITERS = 16, 2
 def _kmeans_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, assignments) of the 2-iteration spherical k-means fit
     over the embeddings (stride seeds, ``_KM_ITERS``) that ``kmeans_cells``
-    and ``knn_cosine_ivf_kmeans`` share. Both frames are eager checkpoints,
-    so the input persist is released before returning."""
+    and ``knn_cosine_ivf_kmeans`` share. ``kmeans_fit`` returns eager
+    checkpoints, so the input persist is released before returning."""
     emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
     stride = emb.agg(
         F.ceil(F.count(F.lit(1)) / F.lit(_KM_K)).cast("bigint").alias("__stride")
@@ -414,8 +414,7 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
         )
     )
-    cents, assigned = kmeans_fit(emb, seeds, n_iters=_KM_ITERS)
-    out = (cents.localCheckpoint(), assigned.localCheckpoint())
+    out = kmeans_fit(emb, seeds, n_iters=_KM_ITERS)
     emb.unpersist()
     return out
 
@@ -530,7 +529,7 @@ def knn_cosine_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     production ANN layout at 100 TB — the fit amortizes over every query
     batch, serving is a cell-keyed equi-join — and the whole composition
     stays deterministic, so it carries a full value-hash oracle."""
-    emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).persist()
+    emb = _load_emb(spark, sf_dir, ["vec_id", "embedding"]).localCheckpoint()
     cents, _ = _kmeans_fit(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -625,9 +624,9 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             _load_emb(spark, sf_dir, ["vec_id", "embedding"]), "embedding", "__uv"
         )
         .select("vec_id", F.col("__uv").alias("embedding"))
-        .persist()
+        .localCheckpoint()
     )
-    codebook = pq_fit(emb, m=_PQ_M, d=_PQ_D, n_codes=_PQ_K).persist()
+    codebook = pq_fit(emb, m=_PQ_M, d=_PQ_D, n_codes=_PQ_K).localCheckpoint()
     codes = pq_encode(emb, codebook, m=_PQ_M, d=_PQ_D)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -964,7 +963,7 @@ def embedding_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_unit_vec,
     )
 
-    emb = _load_emb(spark, sf_dir).persist()  # probes + corpus branches
+    emb = _load_emb(spark, sf_dir)
     unit = with_unit_vec(
         emb.select("vec_id", "label", as_double("embedding").alias("v")),
         "v",
@@ -1032,7 +1031,7 @@ def centroid_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         dot,
     )
 
-    emb = _load_emb(spark, sf_dir).persist()
+    emb = _load_emb(spark, sf_dir).localCheckpoint()
     base = emb.select("vec_id", "label", as_double("embedding").alias("v"))
     cent = (
         base.select("label", F.posexplode("v").alias("i", "x"))
@@ -1133,7 +1132,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_drug_disease_spark.operators.similarity import knn_ivf
     from pyspark.sql import Window
 
-    emb = _load_emb(spark, sf_dir).persist()
+    emb = _load_emb(spark, sf_dir).localCheckpoint()
     queries = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
@@ -1426,11 +1425,11 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_unit_vec,
     )
 
-    # persist: consumed by the projection chain AND both sides of the exact
-    # top-5 — without it the augmentation union re-scans the parquet per
-    # consumer (the lint sweep counts 16 scans)
+    # checkpoint: consumed by the projection chain AND both sides of the
+    # exact top-5 — without it the augmentation union re-scans the parquet
+    # per consumer (the lint sweep counts 16 scans)
     emb = (
-        _augmented_embeddings(spark, sf_dir).select("vec_id", "embedding").persist()
+        _augmented_embeddings(spark, sf_dir).select("vec_id", "embedding").localCheckpoint()
     )
     is_query = (F.col("vec_id") % _PLANT_STRIDE == 0) & (
         F.col("vec_id") < 5 * _PLANT_STRIDE
@@ -1478,7 +1477,7 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # tiny (n × 16 bigints) and consumed by both the query and the
         # candidate side of the projected top-5
-        .persist()
+        .localCheckpoint()
     )
     pq = proj.where(is_query).select(
         F.col("vec_id").alias("q_id"), F.col("pv").alias("qv")

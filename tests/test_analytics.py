@@ -202,21 +202,21 @@ def test_overlap_and_triangle_plans_stay_scale_safe(spark):
     from platform_etl_drug_disease_spark.plans.dedup_text import (
         source_overlap_jaccard,
     )
-    from platform_etl_drug_disease_spark.plans.graph import supplier_triangles
+    from platform_etl_drug_disease_spark.plans.graph import (
+        _co_supplier_pairs,
+        supplier_triangles,
+    )
 
     for cond in filter_conditions(source_overlap_jaccard(spark, SF_SMOKE)):
         assert "array_distinct" not in cond, cond
         assert "transform(sequence" not in cond, cond
 
-    # the query's own plan (the persisted pair set's sub-plan is printed
-    # with it) thresholds the pairs
-    plan = (
-        supplier_triangles(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    # the pair builder thresholds the pairs, and the triangle census runs
+    # over exactly that pair set (its plan reads a checkpoint of it)
+    pairs = _co_supplier_pairs(spark, SF_SMOKE)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "support" in plan and ">= 5" in plan
+    assert supplier_triangles(spark, SF_SMOKE).first()["n_edges"] == pairs.count()
 
 
 def test_kcore_peel_planted_clique_and_tail(spark):

@@ -20,8 +20,15 @@ def test_catalog_is_consistent():
 
 
 def test_catalog_queries_run_at_smoke_sf(spark):
+    """Every query runs, and none leaves a named cache entry behind: a
+    query's caches are either released after its last eager action or
+    replaced by eager ``localCheckpoint``s its result reads. ``persist()``
+    registers the entry when it is called, so ``limit(1)`` sees it."""
     from tests.conftest import SF_SMOKE
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     for name, fn in entrymod.queries().items():
         df = fn(spark, SF_SMOKE)
         df.limit(1).collect()  # plans resolve and execute
+        assert cache.isEmpty(), f"{name} left a named cache entry"

@@ -1579,6 +1579,8 @@ def test_sampled_repeat_lengths_planted_giant_anchor(spark):
 
     from platform_etl_drug_disease_spark.operators.dedup import (
         sampled_repeat_lengths,
+        suffix_anchor_counts,
+        suffix_base_plan,
     )
 
     n_docs, blk = 600, [f"blk{j}" for j in range(40)]
@@ -1594,9 +1596,10 @@ def test_sampled_repeat_lengths_planted_giant_anchor(spark):
         for i in range(1, n_docs + 1)
     ]
     df = spark.createDataFrame(docs, "doc_id: long, text: string")
+    base = suffix_base_plan(df, "doc_id", "text", 8).localCheckpoint()
+    frames = (base, suffix_anchor_counts(base, "doc_id", 8).localCheckpoint())
     sampled, selected, disc = sampled_repeat_lengths(
-        df, "doc_id", "text", w=8, min_anchor_df=512, sample_per_anchor=64,
-        return_selected=True,
+        frames, "doc_id", w=8, min_anchor_df=512, sample_per_anchor=64
     )
     d = disc.collect()[0]
     assert d["n_selected_anchors"] == 40 - 8 + 1  # block offsets 0..32
@@ -1636,7 +1639,7 @@ def test_sampled_repeat_lengths_planted_giant_anchor(spark):
     # (e) heat-robust ranking: the global top-S equals the top-S of the
     # union of per-salt top-S, whatever the salt count
     s_salted, _sel, _disc = sampled_repeat_lengths(
-        df, "doc_id", "text", w=8, min_anchor_df=512, sample_per_anchor=64,
+        frames, "doc_id", w=8, min_anchor_df=512, sample_per_anchor=64,
         salt_buckets=5,
     )
     key = lambda r: (r["doc_id"], r["pos"], r["repeat_len"])  # noqa: E731
@@ -1650,26 +1653,30 @@ def test_sampled_repeat_lengths_rejects_degenerate_sample(spark):
 
     from platform_etl_drug_disease_spark.operators.dedup import (
         sampled_repeat_lengths,
+        suffix_anchor_counts,
+        suffix_base_plan,
     )
 
     df = spark.createDataFrame([(1, "a b c d e f g h")], "doc_id: long, text: string")
+    base = suffix_base_plan(df, "doc_id", "text", 8)
+    frames = (base, suffix_anchor_counts(base, "doc_id", 8))
     with _pytest.raises(ValueError, match="sample_per_anchor"):
-        sampled_repeat_lengths(df, "doc_id", "text", sample_per_anchor=1)
+        sampled_repeat_lengths(frames, "doc_id", sample_per_anchor=1)
     # min_anchor_df=0 would select df-1 anchors: singleton groups whose
     # suffixes repeat nowhere, resolving to repeat_len = w noise
     with _pytest.raises(ValueError, match="min_anchor_df"):
-        sampled_repeat_lengths(df, "doc_id", "text", min_anchor_df=0)
+        sampled_repeat_lengths(frames, "doc_id", min_anchor_df=0)
     with _pytest.raises(ValueError, match="max_rounds"):
-        sampled_repeat_lengths(df, "doc_id", "text", max_rounds=0)
+        sampled_repeat_lengths(frames, "doc_id", max_rounds=0)
     # min_anchor_df < sample_per_anchor would make n_sampled <
     # sample_per_anchor for the low-df anchors while consumers weight by
     # the constant — a silently-low-biased HT estimate. Refuse loudly.
     with _pytest.raises(ValueError, match="sample_per_anchor"):
         sampled_repeat_lengths(
-            df, "doc_id", "text", min_anchor_df=3, sample_per_anchor=8
+            frames, "doc_id", min_anchor_df=3, sample_per_anchor=8
         )
     with _pytest.raises(ValueError, match="salt_buckets"):
-        sampled_repeat_lengths(df, "doc_id", "text", salt_buckets=0)
+        sampled_repeat_lengths(frames, "doc_id", salt_buckets=0)
 
 
 def test_top_repeated_spans_planted(spark, tmp_path):
@@ -1968,13 +1975,12 @@ def test_lr_tokens_separator_bytes_sanitized(spark, tmp_path):
 
 
 def test_suffix_base_frames_equivalence(spark, tmp_path):
-    """Shared anchor universe: the exact and sampled suffix operators fed
-    one caller-checkpointed (base, anchor counts) pair via their ``frames``
-    hook (as ``capped_repeat_estimate`` feeds both) return row-identical
-    results to the self-built path."""
+    """Shared anchor universe: the exact suffix operator fed one
+    caller-checkpointed (base, anchor counts) pair via its ``frames`` hook
+    (as ``capped_repeat_estimate`` feeds it) returns row-identical results
+    to the self-built path."""
     from platform_etl_drug_disease_spark.operators.dedup import (
         longest_repeat_lengths,
-        sampled_repeat_lengths,
         suffix_anchor_counts,
         suffix_base_plan,
     )
@@ -2007,27 +2013,6 @@ def test_suffix_base_frames_equivalence(spark, tmp_path):
     assert sorted(map(key3, ps_f.collect())) == sorted(map(key3, ps_s.collect()))
     assert cap_f.collect() == cap_s.collect()
     assert ps_f.count() > 0
-
-    # sampled path at audit-band knobs (min_df=2 >= S=2; passage df=7 lands
-    # in (2, cap]) — frames vs standalone must sample identically
-    key4 = lambda r: (  # noqa: E731
-        r["doc_id"], r["pos"], r["repeat_len"], r["anchor_df"]
-    )
-    sm_f, sel_f, disc_f = sampled_repeat_lengths(
-        loaded, "doc_id", "text", w=dt._LR_W, min_anchor_df=2,
-        max_anchor_df=dt._LR_CAP, sample_per_anchor=2,
-        return_selected=True, frames=frames,
-    )
-    sm_s, sel_s, disc_s = sampled_repeat_lengths(
-        loaded, "doc_id", "text", w=dt._LR_W, min_anchor_df=2,
-        max_anchor_df=dt._LR_CAP, sample_per_anchor=2, return_selected=True,
-    )
-    assert sorted(map(key4, sm_f.collect())) == sorted(map(key4, sm_s.collect()))
-    assert sorted(map(tuple, sel_f.collect())) == sorted(
-        map(tuple, sel_s.collect())
-    )
-    assert disc_f.collect() == disc_s.collect()
-    assert sm_f.count() > 0
 
 
 def test_ctm_artifact_reuse(spark, tmp_path):

@@ -13,9 +13,10 @@ failure classes a collect()-based compare hides:
   equal values, different hashes → here a dtype FAIL.
 
 Queries without an oracle (the rows-only sketches) print ``ok?`` with their
-row count. The summary line gives the pass count and the pass's elapsed
-seconds (session start included). The exit status is non-zero when any
-query fails.
+row count. The summary line gives the pass count, the pass's elapsed
+seconds (session start included) and the number of named cache entries
+(``persist()``/``cache()``) the pass left in the session, which should be 0.
+The exit status is non-zero when any query fails.
 
 Run before every commit:
 
@@ -161,7 +162,11 @@ def main() -> int:
         else:
             print(f"PASS  {name} ({len(sp)} rows)")
     elapsed = time.perf_counter() - t0
-    print(f"\n{len(names) - len(failures)}/{len(names)} passed in {elapsed:.1f} s")
+    cached = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    print(
+        f"\n{len(names) - len(failures)}/{len(names)} passed in {elapsed:.1f} s, "
+        f"{cached} named cache entries left"
+    )
     return 1 if failures else 0
 
 
