@@ -400,10 +400,9 @@ def _resolve_shingle_table(
     shingles: DataFrame | None,
 ) -> DataFrame:
     """The ``shingles=`` reuse-hook resolution shared by the pair family:
-    a prebuilt (PERSISTED, unblocked) table is projected for free — no
-    second persist layer — else the table is built and persisted here
-    (consumed by the exploded join and the size lookup; released by the
-    caller once its pairs are checkpointed). No
+    a prebuilt (checkpointed, unblocked) table is projected for free, else
+    the table is built here, lazily (the caller persists it for its join
+    and size lookup, and releases it once its pairs are checkpointed). No
     ``size(sh) > 0`` filter — see :func:`_shingle_table` for why."""
     if shingles is not None and block_col is not None:
         raise ValueError("a prebuilt shingle table carries no block column")
@@ -412,10 +411,8 @@ def _resolve_shingle_table(
             F.col(id_col), F.col("sh"), F.size("sh").alias("__sz")
         )
     keep = cols + [F.col(text_col)]
-    return (
-        with_shingles(df.select(*keep), text_col, shingle_n)
-        .select(*cols, F.col("sh"), F.size("sh").alias("__sz"))
-        .persist()
+    return with_shingles(df.select(*keep), text_col, shingle_n).select(
+        *cols, F.col("sh"), F.size("sh").alias("__sz")
     )
 
 
@@ -449,10 +446,10 @@ def jaccard_pairs(
     intersection; union follows from per-doc sizes. O(candidates × |sh|)
     narrow rows, never O(n²) and never array-width shuffle bytes.
 
-    Returns (id_a, id_b, jaccard ≥ threshold), jaccard rounded to 6 places.
+    Returns checkpointed (id_a, id_b, jaccard ≥ threshold), rounded to 6.
 
     ``shingles``: optional prebuilt ``(id_col, sh)`` table (the
-    :func:`_shingle_table` shape, unblocked only) — pass an already-PERSISTED
+    :func:`_shingle_table` shape, unblocked only) — pass a checkpointed
     one to share the tokenize/shingle work with another consumer (e.g. the
     MinHash candidate side of a recall audit) instead of computing it twice.
     """
@@ -462,6 +459,8 @@ def jaccard_pairs(
     sh = _resolve_shingle_table(
         df, id_col, text_col, shingle_n, cols, block_col, shingles
     )
+    if shingles is None:
+        sh.persist()  # read by the exploded join and the size lookup
     # Shingles ride every downstream shuffle as 8-byte xxhash64 keys, not
     # ~25-byte strings: the verify fan-out (candidates × |sh| rows) is the
     # dominant shuffle, and long keys cut its bytes ~3× and make the joins/
@@ -565,9 +564,8 @@ def jaccard_pairs(
         .withColumn("jaccard", F.round(inter / union, 6))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
+    ).localCheckpoint()
     if shingles is None:
-        out = out.localCheckpoint()
         sh.unpersist()
     return out
 
@@ -614,11 +612,11 @@ def containment_pairs(
     Output is the full thresholded pair set (unbounded on replica-dense
     corpora — c(A,B)=1 both ways inside exact-dup clusters); catalog-facing
     consumers use :func:`containment_topk` for the bounded k·n contract, or
-    aggregate immediately (the recall audit). Returns
+    aggregate immediately (the recall audit). Returns checkpointed
     (id_a, id_b, containment) rows, containment rounded to 6 places.
 
     ``shingles``: optional prebuilt ``(id_col, sh)`` table (the
-    :func:`_shingle_table` shape, unblocked only) — pass an already-PERSISTED
+    :func:`_shingle_table` shape, unblocked only) — pass a checkpointed
     one to share the tokenize/shingle work with another consumer (the
     MinHash candidate side of the recall audit, a co-running Jaccard pass)
     instead of computing it twice; mirrors ``jaccard_pairs(shingles=)``.
@@ -637,6 +635,8 @@ def containment_pairs(
     sh = _resolve_shingle_table(
         df, id_col, text_col, shingle_n, cols, block_col, shingles
     )
+    if shingles is None:
+        sh.persist()  # read by the exploded join and the size lookup
     # 8-byte hashed shingle keys for every shuffle, as in jaccard_pairs
     # (same birthday-bounded collision argument; the oracle joins on raw
     # shingle text — any consistent key gives identical counts).
@@ -696,9 +696,8 @@ def containment_pairs(
         )
         .where(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
-    )
+    ).localCheckpoint()
     if shingles is None:
-        out = out.localCheckpoint()
         sh.unpersist()
     return out
 

@@ -18,3 +18,23 @@ def spark():
     spark = get_spark(app_name="pytest", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def checkpointed(monkeypatch):
+    """Every frame a ``localCheckpoint()`` ran while the test runs, in call
+    order. An eager checkpoint runs its frame's plan in a job of its own and
+    hands the rows on as a bare ``LogicalRDD``, so a plan check that reads
+    only a query's returned frame misses that work; the plan checks read
+    these frames too."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        frames.append(self)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return frames

@@ -193,11 +193,12 @@ def test_hll_rollup_accuracy_and_consistency(spark):
     assert max(by_level["week"].values()) >= max(by_level["day"].values()) * 0.95
 
 
-def test_overlap_and_triangle_plans_stay_scale_safe(spark):
+def test_overlap_and_triangle_plans_stay_scale_safe(spark, checkpointed):
     """Regression pins for the two sf≈1 fixes: no shingle recomputation
-    sunk into a Filter below the overlap query's exchange, and the triangle
-    graph support-thresholded before orientation (the raw co-supplier graph
-    is near-complete)."""
+    sunk into a Filter below the overlap query's exchange (in any plan the
+    query runs, its checkpoint jobs included), and the triangle graph
+    support-thresholded before orientation (the raw co-supplier graph is
+    near-complete)."""
     from platform_etl_drug_disease_spark.plan_lint import filter_conditions
     from platform_etl_drug_disease_spark.plans.dedup_text import (
         source_overlap_jaccard,
@@ -207,9 +208,12 @@ def test_overlap_and_triangle_plans_stay_scale_safe(spark):
         supplier_triangles,
     )
 
-    for cond in filter_conditions(source_overlap_jaccard(spark, SF_SMOKE)):
-        assert "array_distinct" not in cond, cond
-        assert "transform(sequence" not in cond, cond
+    overlap = source_overlap_jaccard(spark, SF_SMOKE)
+    assert checkpointed, "the overlap pin reads the checkpoint job's plan"
+    for frame in [overlap, *checkpointed]:
+        for cond in filter_conditions(frame):
+            assert "array_distinct" not in cond, cond
+            assert "transform(sequence" not in cond, cond
 
     # the pair builder thresholds the pairs, and the triangle census runs
     # over exactly that pair set (its plan reads a checkpoint of it)

@@ -74,7 +74,7 @@ def _catalog_names() -> list[str]:
 
 
 @pytest.mark.parametrize("name", _catalog_names())
-def test_catalog_query_lint_clean(spark, name):
+def test_catalog_query_lint_clean(spark, checkpointed, name):
     """Every catalog query's plan must pass ``lint()`` — no cartesian
     products, no row-at-a-time Python UDFs, no ordered windows partitioned
     only by low-cardinality columns over unaggregated input, no >3x repeated
@@ -82,6 +82,12 @@ def test_catalog_query_lint_clean(spark, name):
     can't mask others, and allowlisted per RULE, not per query — an exempted
     query still gets every other rule enforced. This sweep is what caught
     the personalized-PageRank 4x edge-set recompute.
+
+    The lint covers every plan the query runs: the returned frame's, and
+    that of each frame the query ``localCheckpoint``-ed on the way (a
+    checkpoint's job runs its frame's plan, and the frames that read it see
+    only a ``LogicalRDD``), each linted on its own. A persisted frame's plan
+    is printed inside each consumer's ``InMemoryRelation``.
 
     Each query is linted against a CLEAN cache: the repeated-scan count
     reads ``Location:`` lines anywhere in the formatted plan, including
@@ -111,6 +117,7 @@ def test_catalog_query_lint_clean(spark, name):
             found = lint(df)
     else:
         found = lint(entrymod.queries()[name](spark, SF_SMOKE))
+    found += [w for frame in checkpointed for w in lint(frame)]
     warnings = [w for w in found if not any(w.startswith(a) for a in allowed)]
     assert not warnings, f"{name}: {warnings}"
 
@@ -260,7 +267,7 @@ def test_training_order_single_shard_shuffle(spark):
     assert "Join" not in plan
 
 
-def test_single_fact_shuffle_window_family(spark):
+def test_single_fact_shuffle_window_family(spark, checkpointed):
     """The user-keyed window queries added this round must keep their ONE
     fact-table hash Exchange (plus at most tiny post-agg exchanges): the
     funnel's stages, the transition matrix's lag, and the cohort dedup all
@@ -286,20 +293,24 @@ def test_single_fact_shuffle_window_family(spark):
     # the second branch reads the first's shuffle (ReusedExchange), so the
     # fact table shuffles once
     assert fact_hash_exchanges(event_transition_matrix(spark, SF_SMOKE)) <= 2
-    # cohort: the cohort×offset counts are an eager checkpoint (the window
-    # and its dedup aggregate run in that job), so the returned plan reads
-    # the checkpoint and has no fact exchange left
-    assert fact_hash_exchanges(order_cohort_retention(spark, SF_SMOKE)) == 0
+    # cohort: one window exchange; its dedup aggregate must NOT add another
+    # custkey exchange on the fact path. Both run in the job that
+    # checkpoints the cohort×offset counts (the returned plan reads that
+    # checkpoint), so the pin counts over every plan the query runs.
+    del checkpointed[:]
+    cohort = order_cohort_retention(spark, SF_SMOKE)
+    assert sum(map(fact_hash_exchanges, [cohort, *checkpointed])) == 1
 
 
-def test_quantile_windows_consume_the_histogram(spark):
+def test_quantile_windows_consume_the_histogram(spark, checkpointed):
     """The histogram-rank quantile family's scale argument is that its
     cumulative window runs over the VALUE HISTOGRAM (an aggregate whose
     cardinality is the value grid), never over raw fact rows — the lint
     sweep passes these plans incidentally (their partition keys are
     low-cardinality AND aggregated); this pins the aggregate-input property
     by name so a rework that re-points the window at the fact table fails
-    here."""
+    here. A window that runs in a checkpoint's job is checked on that
+    job's plan."""
     from platform_etl_drug_disease_spark.plan_lint import (
         ordered_windows_over_unaggregated,
     )
@@ -312,7 +323,13 @@ def test_quantile_windows_consume_the_histogram(spark):
     )
 
     for q in (price_quantiles_per_flag, value_quantile_profile, price_mad_stats):
-        bad = ordered_windows_over_unaggregated(q(spark, SF_SMOKE))
+        del checkpointed[:]
+        df = q(spark, SF_SMOKE)
+        bad = [
+            w
+            for frame in [df, *checkpointed]
+            for w in ordered_windows_over_unaggregated(frame)
+        ]
         assert not bad, (
             f"{q.__name__}: cumulative window must consume the aggregated "
             f"histogram, got raw-input windows: {bad}"
@@ -337,36 +354,18 @@ def test_corpus_text_scans_have_compute_partitions(spark):
         assert "REPARTITION_BY" in plan, f"{q.__name__} scan not widened before the token fold"
 
 
-def _executed_plan_stats(df) -> dict:
+def _plan_stats(df) -> dict:
     """Join-strategy and shuffle counts from the ACTUAL executed (AQE-final)
-    plan — a join-strategy and shuffle audit, in-test."""
-    df.foreach(lambda r: None)  # run, so AQE finalizes the plan
+    plan of a frame that has run (here: a frame an eager
+    ``localCheckpoint`` ran) — a join-strategy and shuffle audit, in-test."""
+    import re
+
     plan = (
         df._jdf.queryExecution()
         .executedPlan()
         .toString()
         .split("== Initial Plan ==")[0]
     )
-    return _plan_stats(plan)
-
-
-def _last_checkpoint_plan_stats(spark) -> dict:
-    """:func:`_executed_plan_stats` for the plan of the session's latest
-    eager ``localCheckpoint`` job, read from the SQL status store: an
-    operator that checkpoints its result runs its pipeline in that job."""
-    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
-    for i in range(executions.size() - 1, -1, -1):
-        execution = executions.apply(i)
-        if execution.description().startswith("localCheckpoint"):
-            # the formatted plan: the tree, then one detail block per node
-            tree = execution.physicalPlanDescription().split("\n\n")[0]
-            return _plan_stats(tree.split("== Initial Plan ==")[0])
-    raise AssertionError("no localCheckpoint job in the status store")
-
-
-def _plan_stats(plan: str) -> dict:
-    import re
-
     joins = re.findall(
         r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
         r"|BroadcastNestedLoopJoin|CartesianProduct)",
@@ -408,7 +407,7 @@ def _plan_stats(plan: str) -> dict:
         ),
     ],
 )
-def test_graph_family_plan_shape_pinned(spark, name, expected):
+def test_graph_family_plan_shape_pinned(spark, checkpointed, name, expected):
     """Pin the graph family's executed-plan shape, so any shape change (a
     lost broadcast, an extra shuffle) must fail here instead of surfacing
     as an unexplained bench delta. The
@@ -425,7 +424,7 @@ def test_graph_family_plan_shape_pinned(spark, name, expected):
     # the operators return an eager localCheckpoint of their result, so the
     # iterations and wedge joins run, and are pinned, in that job
     getattr(graph, name)(spark, SF_SMOKE)
-    got = _last_checkpoint_plan_stats(spark)
+    got = _plan_stats(checkpointed[-1])
     assert got["exchanges"] <= expected["exchanges"], (
         f"{name}: exchange count regressed: {got}"
     )
@@ -510,7 +509,7 @@ def test_suffix_round_plan_shape_pinned(spark):
     assert plan.count("Exchange") <= 4  # windows + token-slice join, bounded
 
 
-def test_containment_topk_pipeline_shape_pinned(spark):
+def test_containment_topk_pipeline_shape_pinned(spark, checkpointed):
     """Pin the exact containment top-k pipeline's plan shape (as a
     ceiling): hash joins only (the
     prefix/verify joins broadcast at this scale; a cartesian or nested-loop
@@ -527,13 +526,13 @@ def test_containment_topk_pipeline_shape_pinned(spark):
         (4, " ".join(f"z{i}" for i in range(25)), "en"),
     ]
     df = spark.createDataFrame(docs, "doc_id: long, text: string, lang: string")
-    # the self-built shingle table's pairs are an eager checkpoint, so the
-    # pipeline's plan is that job's plan
+    # the pairs are an eager checkpoint, so the pipeline runs, and is
+    # pinned, in that job
     containment_topk(
         df, "doc_id", "text", shingle_n=3, threshold=0.8, k=3,
         block_col="lang", max_shingle_df=256,
     )
-    got = _last_checkpoint_plan_stats(spark)
+    got = _plan_stats(checkpointed[-1])
     assert got["exchanges"] <= 8, got
     assert "CartesianProduct" not in got["joins"], got
     assert "BroadcastNestedLoopJoin" not in got["joins"], got
