@@ -131,15 +131,16 @@ def test_band_join_is_equi_not_nested_loop(spark):
     )
 
 
-def test_embedding_near_dup_is_bucket_equi_join(spark):
+def test_embedding_near_dup_is_bucket_equi_join(spark, checkpointed):
     """The banded-LSH near-dup must plan as equi-joins — a label-blocked
     all-pairs self-join is a cartesian-class scale-killer."""
     from platform_etl_drug_disease_spark.plans.similarity import embedding_near_dup
 
-    plan = explain_string(embedding_near_dup(spark, SF_SMOKE))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan, (
-        "near-dup candidates must come from the band-key equi-join"
-    )
+    df = embedding_near_dup(spark, SF_SMOKE)
+    for plan in map(explain_string, [df, *checkpointed]):
+        assert "NestedLoop" not in plan and "Cartesian" not in plan, (
+            "near-dup candidates must come from the band-key equi-join"
+        )
 
 
 def test_embedding_near_dup_recall_vs_exact(spark):
@@ -235,25 +236,33 @@ def test_top_customers_rank_is_one_window(spark):
     assert nodes.count("WindowGroupLimit") == 2
 
 
-def test_pagerank_iterations_are_equi_joins(spark):
+def test_pagerank_iterations_are_equi_joins(spark, checkpointed):
     """Each power iteration must be a rank⋈edges equi-join + one hash
     aggregate — never a nested loop; the node-count total is the only
-    (1-row, broadcast) cross product."""
+    (1-row, broadcast) cross product. The iterations run in the job that
+    checkpoints the ranks."""
     from platform_etl_drug_disease_spark.plans.graph import trade_pagerank
 
     plan = explain_string(trade_pagerank(spark, SF_SMOKE))
-    assert "CartesianProduct" not in plan
+    assert checkpointed, "the ranks are an eager checkpoint"
+    for p in [plan, *map(explain_string, checkpointed)]:
+        assert "CartesianProduct" not in p
     assert "TakeOrderedAndProject" in plan  # top-20 without a global sort
 
 
-def test_heavy_hitters_prune_is_broadcast_semi_joins(spark):
+def test_heavy_hitters_prune_is_broadcast_semi_joins(spark, checkpointed):
     """The heavy-cell prune must reach the occurrence stream as broadcast
-    semi-joins (map-side, no shuffle of raw occurrences before the prune)."""
+    semi-joins (map-side, no shuffle of raw occurrences before the prune),
+    in the returned plan and in every plan its checkpoints ran."""
     from platform_etl_drug_disease_spark.plans.quality_lm import heavy_shingle_stats
 
-    plan = explain_string(heavy_shingle_stats(spark, SF_SMOKE))
-    assert "SortMergeJoin" not in plan, "heavy-cell sets must broadcast"
-    assert plan.count("LeftSemi") >= 3, "one semi-join prune per sketch row"
+    df = heavy_shingle_stats(spark, SF_SMOKE)
+    plans = [explain_string(f) for f in [df, *checkpointed]]
+    for plan in plans:
+        assert "SortMergeJoin" not in plan, "heavy-cell sets must broadcast"
+    assert sum(p.count("LeftSemi") for p in plans) >= 3, (
+        "one semi-join prune per sketch row"
+    )
 
 
 def test_training_order_single_shard_shuffle(spark):
